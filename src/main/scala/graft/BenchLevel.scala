@@ -57,10 +57,10 @@ object BenchLevel {
     val blocks = graft.algo.CsrPageRank.loadForBench(spark, blockPath)
     val j0 = jobMs.get()
     val t0 = System.nanoTime()
-    // runPacked: the RDD-loop kernel (identical recurrence; the Dataset loop
-    // pays ~1.4 s/superstep of per-iteration Catalyst planning — see
-    // CsrPageRank.runPacked doc — which is exactly the fixed serial term the
-    // N-vs-4N criterion punishes)
+    // runPacked: the RDD-loop kernel (a Dataset loop would pay ~1.4 s/
+    // superstep of per-iteration Catalyst planning — see CsrPageRank.runPacked
+    // doc — which is exactly the fixed serial term the N-vs-4N criterion
+    // punishes)
     val (_, _, m) = graft.algo.CsrPageRank.runPacked(spark, blocks, tol = 0.0,
       maxIter = warm + iters)
     if (debug) {

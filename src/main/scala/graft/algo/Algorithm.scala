@@ -32,15 +32,3 @@ trait Algorithm {
   def run(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
           store: Option[StateStore] = None): AlgoResult
 }
-
-object Algorithm {
-  /** Persist-swap helper: truncate lineage of `df` — durable snapshot when a
-    * store is given, else an eager localCheckpoint. */
-  def truncate(spark: SparkSession, df: DataFrame, store: Option[StateStore],
-               name: String, iteration: Int, m: SuperstepMetrics): DataFrame =
-    store match {
-      case Some(s) =>
-        s.commit(spark, name, iteration, df, m.deltaL1, m.deltaLinf, m.changed, m.wallMs)
-      case None => df.localCheckpoint(true)
-    }
-}

@@ -3,6 +3,8 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.graph.GraphBuilder
+
 /** BFS frontier expansion — the access-operator family the reference derives
   * GetDiameter from (ParaCOSM/CSM/graph/graph.cpp:181-215: full BFS per
   * vertex, max eccentricity). One superstep per level:
@@ -24,15 +26,9 @@ object Bfs {
     * over the UNDIRECTED view of `edges`, up to `maxDepth` levels. */
   def depths(spark: SparkSession, edges: DataFrame, sources: DataFrame,
              maxDepth: Int = 50): DataFrame = {
-    // one exchange (opt round 6): repartition by src first — hash(src)
-    // satisfies the (src,dst) dedup AND the per-level frontier join key
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val und = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .where(col("src") =!= col("dst"))
-      .repartition(parts, col("src"))
-      .dropDuplicates("src", "dst")
-      .persist()
+    // GraphBuilder.undirected's src partitioning is the per-level frontier
+    // join key: one exchange for the whole loop
+    val und = GraphBuilder.undirected(edges).persist()
     und.count()
 
     var visited = sources.select(col("id")).distinct()
@@ -86,9 +82,7 @@ object Bfs {
         "use eccentricity sampling at scale")
     // all-source BFS in ONE loop: carry (root, id, depth) — |V| roots advance
     // together, so the job count is O(diameter), not O(|V|)
-    val und = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .where(col("src") =!= col("dst")).dropDuplicates("src", "dst").persist()
+    val und = GraphBuilder.undirected(edges).persist()
     und.count()
     var visited = ids.toSeq.toDF("root").withColumn("id", col("root"))
       .withColumn("depth", lit(0L)).localCheckpoint(true)

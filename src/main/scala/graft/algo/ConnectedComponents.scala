@@ -3,6 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.graph.GraphBuilder
 import graft.state.StateStore
 
 /** Connected components by iterative min-label join with pointer jumping.
@@ -62,21 +63,11 @@ final class ConnectedComponents(maxIter: Int = 50,
 
   private def loop(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
                    store: Option[StateStore], init: Option[DataFrame]): AlgoResult = {
-    // Undirected view: propagate along both directions. Repartitioned by
-    // src ONCE (opt round 6, guide §2.4): dropDuplicates leaves (src,dst)
-    // partitioning, which does NOT satisfy the per-superstep neighbor-min
-    // join on src — without this the full undirected table re-exchanged
-    // every superstep (the same fixed cost LabelPropagation/PageRank.prepare
-    // already eliminate).
-    // (repartition FIRST: HashPartitioning(src) satisfies the (src,dst)
-    // dedup's clustering, so the dedup runs in-place — one exchange total)
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val und = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .where(col("src") =!= col("dst"))
-      .repartition(parts, col("src"))
-      .dropDuplicates("src", "dst")
-      .persist()
+    // Undirected view: propagate along both directions. Partitioned by src
+    // ONCE (GraphBuilder.undirected), which satisfies the per-superstep
+    // neighbor-min join on src — the full undirected table never
+    // re-exchanges per superstep.
+    val und = GraphBuilder.undirected(edges).persist()
     // hint joins shuffle_hash only past a size floor (opt round 6): on a
     // fixture-scale graph the forced hint blocks AQE's broadcast choice and
     // costs ~12 needless small shuffles per run; on a big graph it stops

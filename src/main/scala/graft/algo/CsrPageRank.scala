@@ -9,21 +9,22 @@ import org.apache.spark.sql.functions._
   * the north star's "salted, range-partitioned edge Dataset with
   * per-partition CSR blocks".
   *
-  * Layout (all typed Datasets, no RDD API):
+  * Layout (typed Datasets; only the superstep loop drops to RDDs, see
+  * `runPacked`):
   *  - vertices are hash-assigned to P blocks (pid = xxhash64(id) mod P) and
   *    indexed densely within their block (idx = rank of id in block);
   *  - `GraphBlock(pid)` packs the block's out-edges as primitive arrays
   *    (srcIdx, dstPid, dstIdx) SORTED by (dstPid, dstIdx), plus the per-
   *    vertex outDeg array — built once, checkpointed, reused every superstep;
   *  - `RankBlock(pid)` is the superstep state: one double per vertex plus
-  *    the static dangling flags, re-checkpointed per superstep.
+  *    the static dangling flags.
   *
-  * Superstep = joinWith(blocks, state) → flatMap emitting PRE-AGGREGATED
-  * sparse messages (one (idx[], sum[]) pair per destination block — the
-  * dst-sorted edge layout makes per-destination accumulation a streaming
-  * run-length pass, no hash map) → cogroup(state) merging messages into the
-  * next rank vector and computing per-block delta norms + dangling mass in
-  * the same pass.
+  * Superstep = co-partitioned join(blocks, state) → flatMap emitting
+  * PRE-AGGREGATED sparse messages (one (idx[], sum[]) pair per destination
+  * block — the dst-sorted edge layout makes per-destination accumulation a
+  * streaming run-length pass, no hash map) → the message shuffle →
+  * cogroup(state) merging messages into the next rank vector and computing
+  * per-block delta norms + dangling mass in the same pass.
   *
   * Why this beats the row-at-a-time Dataset join at scale: the shuffle
   * carries ≤ one entry per (srcBlock, dst) pair in packed primitive arrays
@@ -31,7 +32,8 @@ import org.apache.spark.sql.functions._
   * and the per-superstep CPU is tight array arithmetic instead of hash-join
   * probes — the same argument the reference makes for CSR adjacency over
   * pointer-chasing (SURVEY.md §1.3). Agreement with the Dataset-join
-  * PageRank within 1e-6 is the cross-implementation oracle (SURVEY.md §5).
+  * PageRank is the cross-implementation oracle (SURVEY.md §5), pinned by
+  * CsrPageRankSpec at several block counts.
   */
 object CsrPageRank {
 
@@ -266,125 +268,6 @@ object CsrPageRank {
       n, p)
   }
 
-  /** Run to convergence (L∞ < tol). Returns (state, iterations, metrics). */
-  def run(spark: SparkSession, blocks: Blocks, damping: Double = 0.85,
-          tol: Double = 1e-6, maxIter: Int = 100): (Dataset[RankBlock], Int, Seq[SuperstepMetrics]) = {
-    import spark.implicits._
-    val n = blocks.n.toDouble
-    var state = blocks.init
-    var danglingMass = state.toDF().agg(sum("danglingMass")).head().getDouble(0)
-    var it = 0
-    var linf = Double.MaxValue
-    val metrics = scala.collection.mutable.ArrayBuffer.empty[SuperstepMetrics]
-
-    var chkPrev: Dataset[RankBlock] = null
-    while (it < maxIter && linf >= tol) {
-      val t0 = System.nanoTime()
-      // LAZY checkpoint: the metrics aggregate below is the superstep's ONE
-      // action — it materializes the checkpoint blocks and computes the
-      // norms/dangling sums in the same job (an eager checkpoint + separate
-      // agg costs a second job per superstep; at bench scale that fixed
-      // overhead was the dominant anti-scaling term)
-      val chk = superstep(spark, blocks.graph, state, danglingMass, damping, n)
-        .localCheckpoint(eager = false)
-      val row = chk.toDF().agg(
-        sum("deltaL1"), max("deltaLinf"), sum("danglingMass")).head()
-      val l1 = row.getDouble(0)
-      linf = row.getDouble(1)
-      danglingMass = row.getDouble(2)
-      val wallMs = (System.nanoTime() - t0) / 1000000L
-      it += 1
-      metrics += SuperstepMetrics(it, wallMs, blocks.n, l1, linf, 0L)
-      if (chkPrev != null) chkPrev.unpersist()
-      chkPrev = chk
-      // Clear the origin stats the checkpoint copies into the LogicalRDD:
-      // the message stream and the merge both derive from state, so the
-      // size-only estimate would otherwise SQUARE per superstep and the
-      // driver melts in BigInteger.multiply by ~iteration 20 (observed
-      // directly via jstack). The shim also preserves the physical
-      // partitioning — cheap insurance even though cogroup's synthesized
-      // grouping key forces its own exchange.
-      state = org.apache.spark.sql.execution.GraftShims
-        .freshStatsPreservePartitioning(chk)
-    }
-    (state, it, metrics.toSeq)
-  }
-
-  /** One superstep over blocks. An alternative "exchange-free" formulation
-    * (state kept hash-partitioned by pid, messages collect_list'ed and
-    * merged via co-partitioned left-outer joins) was measured 37% SLOWER at
-    * every parallelism level — materializing each block's in-messages as
-    * one ~32 MB Tungsten array value costs more than the state exchange it
-    * saves — so the shipped shape is joinWith + cogroup, with the state
-    * shuffle accepted as part of C (it parallelizes; at 80M vertices the
-    * whole state is ~700 MB against a ~2 GB message exchange). */
-  def superstep(spark: SparkSession, graph: Dataset[GraphBlock],
-                state: Dataset[RankBlock], danglingMass: Double,
-                damping: Double, n: Double): Dataset[RankBlock] = {
-    import spark.implicits._
-    val base = (1.0 - damping) / n + damping * danglingMass / n
-
-    val msgs: Dataset[Msg] = graph
-      .joinWith(state, graph("pid") === state("pid"))
-      .flatMap { case (g, r) =>
-        // per-source contribution = rank/outDeg (0 for dangling)
-        val contrib = new Array[Double](g.outDeg.length)
-        var i = 0
-        while (i < contrib.length) {
-          if (g.outDeg(i) > 0) contrib(i) = r.ranks(i) / g.outDeg(i)
-          i += 1
-        }
-        // stream dst-sorted edges: one sparse message per destination block,
-        // consecutive same-dst entries collapse (map-side combine)
-        val out = Vector.newBuilder[Msg]
-        val m = g.edgeSrcIdx.length
-        var e = 0
-        while (e < m) {
-          val dPid = g.edgeDstPid(e)
-          val idxB = Array.newBuilder[Int]
-          val sumB = Array.newBuilder[Double]
-          while (e < m && g.edgeDstPid(e) == dPid) {
-            val dIdx = g.edgeDstIdx(e)
-            var s = 0.0
-            while (e < m && g.edgeDstPid(e) == dPid && g.edgeDstIdx(e) == dIdx) {
-              s += contrib(g.edgeSrcIdx(e))
-              e += 1
-            }
-            idxB += dIdx
-            sumB += s
-          }
-          out += Msg(dPid, g.pid, idxB.result(), sumB.result())
-        }
-        out.result()
-      }
-
-    msgs.groupByKey(_.pid).cogroup(state.groupByKey(_.pid)) { (pid, ms, rs) =>
-      val prev = rs.next()
-      val nV = prev.ranks.length
-      val acc = new Array[Double](nV)
-      // sort in-messages by source block before accumulating: float
-      // addition order is then deterministic across runs AND parallelism
-      // levels (north-rule determinism), not shuffle-arrival order
-      ms.toArray.sortBy(_.srcPid).foreach { msg =>
-        var i = 0
-        while (i < msg.idx.length) { acc(msg.idx(i)) += msg.sums(i); i += 1 }
-      }
-      val ranks = new Array[Double](nV)
-      var dm = 0.0; var l1 = 0.0; var linf = 0.0
-      var i = 0
-      while (i < nV) {
-        val v = base + damping * acc(i)
-        ranks(i) = v
-        if (prev.dangling(i)) dm += v
-        val d = math.abs(v - prev.ranks(i))
-        l1 += d
-        if (d > linf) linf = d
-        i += 1
-      }
-      Iterator.single(RankBlock(pid, ranks, prev.dangling, dm, l1, linf))
-    }
-  }
-
   /** pid-identity partitioner: block pid IS the partition index. */
   private final class PidPartitioner(p: Int) extends org.apache.spark.Partitioner {
     def numPartitions: Int = p
@@ -396,20 +279,20 @@ object CsrPageRank {
     override def hashCode: Int = p
   }
 
-  /** The SAME superstep recurrence with the iteration loop on co-partitioned
-    * RDDs instead of Dataset joins — the one measured place where Catalyst
-    * is a per-iteration cost, not a benefit: with the Dataset loop, each
-    * superstep re-analyzes/optimizes a fresh joinWith+cogroup plan
-    * (new LogicalRDD leaves every iteration), measured at ~1.4 s/superstep
-    * of driver wall (BenchLevel GRAFT_LEVEL_DEBUG: wall−jobMs) — a fixed
-    * serial term that alone caps 2→8-core scaling efficiency at ~0.69 on
-    * the 171M-edge artifact no matter how well the kernel scales. The
-    * north rule's "no RDD unless forced" is met with receipts: the data
-    * model, build, save/load and readback stay Datasets; only the loop
-    * drops to co-partitioned `join`/`cogroup` (both narrow — the ONE
-    * shuffle per superstep is the message exchange, exactly as before) with
-    * the identical per-block kernel, so results agree bit-for-bit with the
-    * Dataset loop (pinned by CsrPageRankSpec).
+  /** Run to convergence (L∞ < tol). Returns (state, iterations, metrics).
+    *
+    * The iteration loop runs on co-partitioned RDDs instead of Dataset
+    * joins — the one measured place where Catalyst is a per-iteration cost,
+    * not a benefit: a Dataset loop re-analyzes/optimizes a fresh
+    * joinWith+cogroup plan every superstep (new LogicalRDD leaves every
+    * iteration), measured at ~1.4 s/superstep of driver wall (BenchLevel
+    * GRAFT_LEVEL_DEBUG: wall−jobMs) — a fixed serial term that alone caps
+    * 2→8-core scaling efficiency at ~0.69 on the 171M-edge artifact no
+    * matter how well the kernel scales. The north rule's "no RDD unless
+    * forced" is met with receipts: the data model, build, save/load and
+    * readback stay Datasets; only the loop drops to co-partitioned
+    * `join`/`cogroup` (both narrow — the ONE shuffle per superstep is the
+    * message exchange).
     *
     * Stats come from ONE `aggregate` action per superstep (materializes the
     * persisted next state and folds dangling/L1/L∞ in the same job — no
@@ -471,8 +354,9 @@ object CsrPageRank {
           val prev = rs.head
           val nV = prev.ranks.length
           val acc = new Array[Double](nV)
-          // deterministic accumulation order (sort by source block), same
-          // as the Dataset loop — floats agree across runs AND loops
+          // deterministic accumulation order (sort by source block): float
+          // addition order is the same across runs AND parallelism levels
+          // (north-rule determinism), not shuffle-arrival order
           ms.toArray.sortBy(_.srcPid).foreach { msg =>
             var i = 0
             while (i < msg.idx.length) { acc(msg.idx(i)) += msg.sums(i); i += 1 }
@@ -517,38 +401,5 @@ object CsrPageRank {
       .flatMap { case (r, v) =>
         v.ids.indices.iterator.map(i => (v.ids(i), r.ranks(i)))
       }.toDF("id", "rank")
-  }
-
-  /** Convenience: full pipeline on (edges, vertices) DataFrames (packed
-    * loop; the Dataset loop stays as the cross-implementation check). */
-  def pagerank(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
-               damping: Double = 0.85, tol: Double = 1e-6, maxIter: Int = 100)
-      : (DataFrame, Int, Seq[SuperstepMetrics]) = {
-    val blocks = build(spark, edges, vertices)
-    val (state, iters, m) = runPacked(spark, blocks, damping, tol, maxIter)
-    (toRows(spark, state, blocks.vertsOrFail), iters, m)
-  }
-
-  /** Size-routed PageRank — the measured CROSSOVER between the two physical
-    * designs (sf0.1 probe, 32 threads, BENCH_r03): on a ~0.6M-edge graph the
-    * CSR path spends ~5.5s building blocks to save ~0.1s/superstep, while on
-    * the 171M-edge bench artifact the packed superstep sustains ~39M edges/s
-    * at 8 pinned cores — far beyond the row-join plan. So: small graphs (or
-    * few iterations) take the Dataset-join plan, big graphs amortize the
-    * block build. The threshold is deliberately coarse; both paths are
-    * oracle-gated to identical results (q_pagerank / q_pagerank_csr share
-    * one DuckDB oracle). */
-  def auto(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
-           damping: Double = 0.85, tol: Double = 1e-6, maxIter: Int = 100,
-           csrThreshold: Long = 20000000L)
-      : (DataFrame, Int, Seq[SuperstepMetrics]) = {
-    val nE = edges.count()
-    if (nE >= csrThreshold) pagerank(spark, edges, vertices, damping, tol, maxIter)
-    else {
-      val r = new PageRank(damping = damping, tol = tol, maxIter = maxIter)
-        .run(spark, edges, vertices)
-      (r.state.select(org.apache.spark.sql.functions.col("id"),
-        org.apache.spark.sql.functions.col("rank")), r.iterations, r.metrics)
-    }
   }
 }

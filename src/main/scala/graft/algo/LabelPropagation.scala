@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.graph.GraphBuilder
 import graft.state.StateStore
 
 /** Synchronous label propagation (community detection).
@@ -30,21 +31,10 @@ final class LabelPropagation(maxIter: Int = 10) extends Algorithm {
 
   override def run(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
                    store: Option[StateStore] = None): AlgoResult = {
-    // repartition by src ONCE (dropDuplicates leaves (src,dst) partitioning,
-    // which does NOT satisfy the per-superstep join on src — the full
-    // undirected table would re-exchange every superstep, the same fixed
-    // cost PageRank.prepare eliminates for adj)
-    // ONE exchange (opt round 6, guide §2.4): repartition by src FIRST —
-    // HashPartitioning(src) satisfies the (src,dst) dedup's clustering
-    // requirement (src ⊆ {src,dst}), so dropDuplicates runs in-place and
-    // the old dedup-exchange + repartition-exchange pair collapses to one.
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val und = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .where(col("src") =!= col("dst"))
-      .repartition(parts, col("src"))
-      .dropDuplicates("src", "dst")
-      .localCheckpoint(true)
+    // partitioned by src ONCE (GraphBuilder.undirected): satisfies the
+    // per-superstep join on src, so the full undirected table never
+    // re-exchanges per superstep
+    val und = GraphBuilder.undirected(edges).localCheckpoint(true)
 
     var state = vertices.select(col("id")).distinct()
       .withColumn("label", col("id")).localCheckpoint(true).persist()

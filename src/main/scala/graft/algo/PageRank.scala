@@ -218,8 +218,8 @@ object PageRank {
     *    signed patch (w = +1 add, −1 delete), compacted so weights stay in
     *    {−1, +1} (a delete of a base edge later re-added nets to 0, etc).
     * `addedEdges`/`deletedEdges` are DIRECTED (src, dst) deltas
-    * (Updates.edgeDeltaDirected); vertex membership changes come as tiny
-    * driver-side id lists. The caller rebuilds via prepare() when the patch
+    * (Updates.edgeDeltaDirectedCollected); vertex membership changes come
+    * as tiny driver-side id lists. The caller rebuilds via prepare() when the patch
     * outgrows its threshold (StreamGraph does this). */
   def updatePrepared(spark: SparkSession, prev: Prepared,
                      addedEdges: DataFrame, deletedEdges: DataFrame,

@@ -3,6 +3,8 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.graph.GraphBuilder
+
 /** Triangle counting — the Q = C₃ instance of the reference's continuous
   * subgraph matching (SURVEY.md §2.4-J1: all CSM enumeration is an n-way
   * self-join of the edge table ordered by selectivity; the 3-cycle unrolls
@@ -31,17 +33,10 @@ object TriangleCount {
     * upstream `edges` is often an expensive derivation (re-running it 3x
     * dominated q_triangles' round-1 cost). */
   def orient(edges: DataFrame): DataFrame = {
-    // one exchange (opt round 6): repartition by src first — hash(src)
-    // satisfies the (src,dst) dedup, the degree groupBy(src), and the
-    // src-side orientation join, so the whole orient pipeline runs on one
-    // partitioning (the deg side is tiny — AQE broadcasts it)
-    val parts = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val und = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .where(col("src") =!= col("dst"))
-      .repartition(parts, col("src"))
-      .dropDuplicates("src", "dst")
-      .localCheckpoint(true)
+    // GraphBuilder.undirected's src partitioning also satisfies the degree
+    // groupBy(src) and the src-side orientation join, so the whole orient
+    // pipeline runs on one exchange (the deg side is tiny — AQE broadcasts it)
+    val und = GraphBuilder.undirected(edges).localCheckpoint(true)
     val deg = und.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     val withDeg = und
       .join(deg.withColumnRenamed("id", "src").withColumnRenamed("deg", "sdeg"), "src")
@@ -53,8 +48,7 @@ object TriangleCount {
   }
 
   /** Oriented edges joined with BOTH endpoints' sorted oriented-out-
-    * neighbor arrays: (src, dst, snbrs, dnbrs). Shared by the count and
-    * per-vertex paths.
+    * neighbor arrays: (src, dst, snbrs, dnbrs).
     *
     * Why adjacency intersection instead of the wedge join + closing
     * semi-join: a triangle a→b→c is an oriented edge (a,b) plus one member
@@ -85,21 +79,5 @@ object TriangleCount {
     withAdjacency(o)
       .agg(coalesce(sum(size(array_intersect(col("snbrs"), col("dnbrs")))), lit(0L))
         .cast("long").as("triangles"))
-  }
-
-  /** Per-vertex triangle participation counts (id, triangles) — every vertex
-    * of each oriented triangle a→b→c gets +1: for edge (a,b) both endpoints
-    * get |N⁺(a) ∩ N⁺(b)| and every closing vertex c gets 1. */
-  def perVertex(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val o = orient(edges).localCheckpoint(true)
-    val withI = withAdjacency(o)
-      .select(col("src"), col("dst"),
-        array_intersect(col("snbrs"), col("dnbrs")).as("ws"))
-      .where(size(col("ws")) > 0)
-    val ends = withI.select(explode(array(col("src"), col("dst"))).as("id"),
-      size(col("ws")).cast("long").as("n"))
-    val closers = withI.select(explode(col("ws")).as("id"), lit(1L).as("n"))
-    ends.unionByName(closers)
-      .groupBy(col("id")).agg(sum(col("n")).as("triangles"))
   }
 }

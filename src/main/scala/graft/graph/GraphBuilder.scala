@@ -123,8 +123,7 @@ object GraphBuilder {
   }
 
   /** Degree table (reference GetDegree, graph.cpp:176-179 — here for the
-    * whole graph at once): id, outDeg, inDeg. Drives degree orientation for
-    * triangle counting and hot-key (hub) detection for salting. */
+    * whole graph at once): id, outDeg, inDeg. */
   def degrees(edges: DataFrame): DataFrame = {
     val out = edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("outDeg"))
     val in  = edges.groupBy(col("dst").as("id")).agg(count(lit(1)).as("inDeg"))
@@ -134,32 +133,23 @@ object GraphBuilder {
         coalesce(col("inDeg"), lit(0L)).as("inDeg"))
   }
 
-  /** Symmetrize a directed edge list (undirected view for CC / LP /
-    * triangles — the reference graph is undirected, graph.h:63). */
-  def undirected(edges: DataFrame): DataFrame = {
-    // one exchange (opt round 6): hash(src) satisfies the (src,dst) dedup
-    // clustering and pre-positions the table for src-keyed consumers
+  /** Symmetrize a directed edge list — the ONE undirected build (CC, LP,
+    * BFS, triangles and the matching relation all read it; the reference
+    * graph is undirected, graph.h:63): both orientations, self-loops
+    * dropped, one row per (src, dst). `carry` columns ride along unchanged
+    * (edge labels, delta flags); of duplicate (src, dst) rows one is kept.
+    * Callers own materialization (persist or localCheckpoint). */
+  def undirected(edges: DataFrame, carry: String*): DataFrame = {
+    // one exchange (opt round 6): repartition by src FIRST — hash(src)
+    // satisfies the (src,dst) dedup's clustering, so dropDuplicates runs
+    // in place, and the result comes out pre-positioned for every
+    // src-keyed consumer (superstep joins, degree groupBy, label joins)
     val parts = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+    val rest = carry.map(col)
+    edges.select(col("src") +: col("dst") +: rest: _*)
+      .union(edges.select(col("dst").as("src") +: col("src").as("dst") +: rest: _*))
       .where(col("src") =!= col("dst"))
       .repartition(parts, col("src"))
       .dropDuplicates("src", "dst")
   }
-
-  /** Hot keys: vertices whose in-degree exceeds `threshold` — the power-law
-    * hubs that would skew a shuffle on dst. Small by construction (top of a
-    * power law), so safe to broadcast. */
-  def hotKeys(degrees: DataFrame, threshold: Long): DataFrame =
-    degrees.where(col("inDeg") > threshold).select(col("id"))
-
-  /** Salt factor for two-phase aggregation over skewed dst keys: rows whose
-    * dst is hot get a salt in [0, k) derived from src (deterministic), so a
-    * hub's incoming sum is computed as k partial sums then re-reduced.
-    * The reference's analogue is work-stealing over an uneven task vector
-    * (parallel_graphflow.cpp:969-985); on Spark the fix is key salting +
-    * partial aggregation (SURVEY.md §4 skew row). */
-  def saltedAggKey(dst: org.apache.spark.sql.Column, src: org.apache.spark.sql.Column,
-                   isHot: org.apache.spark.sql.Column, k: Int): org.apache.spark.sql.Column =
-    when(isHot, pmod(xxhash64(src), lit(k.toLong))).otherwise(lit(0L))
 }

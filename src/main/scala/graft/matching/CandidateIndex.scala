@@ -239,13 +239,4 @@ object CandidateIndex {
     }
     Index(query, per, ids)
   }
-
-  /** Deprecated round-2 surface: shrink-only refresh via full rebuild +
-    * intersect. Kept for API compatibility; prefer refreshAfterDeletes. */
-  def rebuildAfter(spark: SparkSession, query: QueryGraph,
-                   edges: DataFrame, vertices: DataFrame,
-                   prev: Map[String, DataFrame], rounds: Int = 1): Map[String, DataFrame] = {
-    val fresh = build(spark, query, edges, vertices, rounds)
-    fresh.map { case (k, df) => k -> df.join(prev(k), Seq("id"), "left_semi") }
-  }
 }

@@ -102,13 +102,6 @@ object DeltaTriangles {
   def countTouching(spark: SparkSession, edges: DataFrame, delta: DataFrame): Long =
     countTouchingAll(spark, edges, Seq(delta)).head
 
-  /** DataFrame wrapper kept for query surfaces (column `touching`). */
-  def trianglesTouching(spark: SparkSession, edges: DataFrame, delta: DataFrame): DataFrame = {
-    val s2 = spark
-    import s2.implicits._
-    Seq(countTouching(spark, edges, delta)).toDF("touching")
-  }
-
   /** ONE flagged degree-oriented enumeration producing (total triangles of
     * `edges`, triangles containing an add, triangles containing a del) in a
     * single wedge-join job — the right shape when the delta is a sizable

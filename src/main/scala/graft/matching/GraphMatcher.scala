@@ -3,6 +3,8 @@ package graft.matching
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.graph.GraphBuilder
+
 /** General labeled subgraph matching — the reference's core capability
   * (ParaCOSM is a Continuous Subgraph Matching framework; the static search
   * is Graphflow::FindMatches, ParaCOSM/CSM/matching/GraphFlow/graphflow.cpp:
@@ -49,23 +51,17 @@ object GraphMatcher {
   /** Labeled, symmetrized data relation every query edge filters from:
     * (src, dst, elabel, slabel, dlabel). Vertices: (id, vlabel). Edges are
     * undirected (reference graph.h:63) — both orientations materialized so
-    * every join is a plain equi-join on src. */
-  def relation(edges: DataFrame, vertices: DataFrame): DataFrame = {
-    // one exchange (opt round 6): repartition by src first — hash(src)
-    // satisfies the (src,dst) dedup and the src-side label join, and the
-    // materialized relation comes out pre-partitioned on src, the probe key
-    // of every extension join in the match plans
-    val parts = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val und = edges.select(col("src"), col("dst"), col("elabel"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst"), col("elabel")))
-      .where(col("src") =!= col("dst"))
-      .repartition(parts, col("src"))
-      .dropDuplicates("src", "dst")
+    * every join is a plain equi-join on src. `carry` columns (delta flags)
+    * ride through the symmetrization and come last. */
+  def relation(edges: DataFrame, vertices: DataFrame, carry: String*): DataFrame = {
+    // one exchange (GraphBuilder.undirected): hash(src) also satisfies the
+    // src-side label join, and the relation comes out pre-partitioned on
+    // src, the probe key of every extension join in the match plans
     val vl = vertices.select(col("id"), col("vlabel"))
-    und
+    GraphBuilder.undirected(edges, "elabel" +: carry: _*)
       .join(vl.withColumnRenamed("id", "src").withColumnRenamed("vlabel", "slabel"), Seq("src"))
       .join(vl.withColumnRenamed("id", "dst").withColumnRenamed("vlabel", "dlabel"), Seq("dst"))
-      .select(col("src"), col("dst"), col("elabel"), col("slabel"), col("dlabel"))
+      .select((Seq("src", "dst", "elabel", "slabel", "dlabel") ++ carry).map(col): _*)
   }
 
   /** Per-edge filter with `u` matched at src and `v` at dst (rel is
@@ -431,26 +427,13 @@ object GraphMatcher {
                         edges: DataFrame, vertices: DataFrame,
                         homomorphic: Boolean = false): DataFrame = {
     // The isNew flag rides THROUGH the symmetrize+dedup+label pipeline
-    // (opt round 6, guide §2.4): the old shape built the unflagged relation
-    // and then re-joined a separately symmetrized+deduped flag table on
-    // (src,dst) — a second full-relation exchange+join for a column the
-    // input already carried. The relation is also pruned to rows matching
-    // SOME query edge in SOME orientation before the checkpoint
-    // (materializedRelation's forQuery rule — sound for the join plan, and
-    // the any-flag filter only consults rows the plan matched).
-    val parts = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val und = edges.select(col("src"), col("dst"), col("elabel"), col("isNew"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst"),
-        col("elabel"), col("isNew")))
-      .where(col("src") =!= col("dst"))
-      .repartition(parts, col("src"))
-      .dropDuplicates("src", "dst")
-    val vl = vertices.select(col("id"), col("vlabel"))
-    val r0 = und
-      .join(vl.withColumnRenamed("id", "src").withColumnRenamed("vlabel", "slabel"), Seq("src"))
-      .join(vl.withColumnRenamed("id", "dst").withColumnRenamed("vlabel", "dlabel"), Seq("dst"))
-      .select(col("src"), col("dst"), col("elabel"), col("slabel"), col("dlabel"),
-        col("isNew"))
+    // (opt round 6, guide §2.4): re-joining a separately symmetrized flag
+    // table on (src,dst) would cost a second full-relation exchange+join
+    // for a column the input already carries. The relation is also pruned
+    // to rows matching SOME query edge in SOME orientation before the
+    // checkpoint (materializedRelation's forQuery rule — sound for the join
+    // plan, and the any-flag filter only consults rows the plan matched).
+    val r0 = relation(edges, vertices, "isNew")
     val any = query.edges.flatMap(e =>
       Seq(edgeCond(query, e, r0), edgeCond(query, QEdge(e.v, e.u, e.elabel), r0)))
       .reduce(_ || _)
@@ -478,22 +461,7 @@ object GraphMatcher {
                            homomorphic: Boolean = false): Map[String, (Long, Long)] = {
     val todo = work.filter(w => w._3 || w._4)
     if (todo.isEmpty) return Map.empty
-    // relation() with the add/del flags carried through the symmetrization
-    val undParts = flaggedEdges.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    val und = flaggedEdges
-      .select(col("src"), col("dst"), col("elabel"), col("isAdd"), col("isDel"))
-      .union(flaggedEdges.select(col("dst").as("src"), col("src").as("dst"),
-        col("elabel"), col("isAdd"), col("isDel")))
-      .where(col("src") =!= col("dst"))
-      .repartition(undParts, col("src"))
-      .dropDuplicates("src", "dst")
-    val vl = vertices.select(col("id"), col("vlabel"))
-    val relFlagged = und
-      .join(vl.withColumnRenamed("id", "src").withColumnRenamed("vlabel", "slabel"), Seq("src"))
-      .join(vl.withColumnRenamed("id", "dst").withColumnRenamed("vlabel", "dlabel"), Seq("dst"))
-      .select(col("src"), col("dst"), col("elabel"), col("slabel"), col("dlabel"),
-        col("isAdd"), col("isDel"))
+    val relFlagged = relation(flaggedEdges, vertices, "isAdd", "isDel")
       .localCheckpoint(true)
     val aggs = todo.flatMap { case (name, q, runAdds, runDels) =>
       val order = orders(name)

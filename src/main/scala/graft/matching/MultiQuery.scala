@@ -14,7 +14,8 @@ import graft.stream.Updates
   *
   *  1. the micro-batch is applied to the labeled graph (table algebra,
   *     M1-M4) and the exact canonical edge delta is derived from the batch's
-  *     own ops (Updates.edgeDelta — broadcast joins, O(|Δ|) shuffle);
+  *     own ops (Updates.edgeDeltaCollected — broadcast joins, one probe
+  *     action, O(|Δ|) shuffle);
   *  2. ROUTING (F2/J11): a query is affected only if some delta edge's
   *     label signature (srcLabel, dstLabel, elabel) is in its signature set
   *     — one broadcast join over the tiny labeled delta. Unaffected queries
@@ -205,7 +206,7 @@ final class MultiQueryDriver(spark: SparkSession,
     val v0 = vertices
     val e0 = edges
     // PURE-EDGE fast path: one probe of e0 yields the delta AND the after
-    // view (Updates.pureEdgeBatchLocal); V is untouched, so neither rolled
+    // view (Updates.pureEdgeBatchLabeled); V is untouched, so neither rolled
     // nor re-checkpointed. The general path streams E three times in the
     // probe action and copies V per batch.
     val pureEdge = ops.nonEmpty && ops.forall(o => o.op == "e" || o.op == "-e")

@@ -183,7 +183,7 @@ final class StreamGraph(spark: SparkSession,
     val e0 = edges
     val v0 = vertices
 
-    // classification (classifyForCC's rule, labels probed in one action):
+    // classification (labels probed in one action):
     // an edge insert whose endpoints share a CC label is safe; vertex adds
     // are safe; everything else (unknown labels included) is unsafe
     val eIds = ops.filter(_.op == "e").flatMap(u => Seq(u.id1, u.id2)).distinct

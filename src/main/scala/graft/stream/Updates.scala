@@ -1,28 +1,18 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.algo.{AlgoResult, ConnectedComponents}
 import graft.graph.GraphUpdate
 
-/** Update-stream (CDC) application + safe/unsafe classification.
+/** Update-stream (CDC) application and per-batch edge deltas.
   *
   * Reference semantics being reproduced (SURVEY.md §2.2, §2.5-P5, §3.3):
   *  - `InsertUnit {v|-v|e|-e}` records applied in stream order
   *    (ParaCOSM/CSM/utils/types.h:34-42, graph.cpp:251-285);
   *  - mutations are M1-M4 (AddVertex/RemoveVertex/AddEdge/RemoveEdge,
-  *    graph.cpp:23-116) — here pure table algebra: union / dedup /
-  *    anti-join, never in-place mutation;
-  *  - the safe-update mechanism: classify each update with a cheap
-  *    predicate; updates that provably cannot change the result skip the
-  *    expensive recompute (Classify, parallel_graphflow.cpp:1990-2016;
-  *    window protocol BatchUpdates3, main.cpp:253-397). For connected
-  *    components the predicate is: an edge insert whose endpoints already
-  *    share a label is safe; vertex/edge deletes are always unsafe (the
-  *    reference also treats vertex deletes as always-unsafe,
-  *    main.cpp:301-313).
+  *    graph.cpp:23-116) — here pure table algebra: union / anti-join over
+  *    immutable tables, never in-place mutation.
   *
   * Batch compaction: within one micro-batch, the LAST op per key wins
   * (vertex key = id; edge key = (id1,id2)) — standard CDC log compaction.
@@ -31,367 +21,24 @@ import graft.graph.GraphUpdate
   * touch only their own key. A `-v` interacts across keys (it cascades to
   * incident edges), so a batch mixing `-v` with other ops is applied as
   * seq-ordered SEGMENTS split at each vertex delete — exact sequential
-  * semantics at the cost of one table-algebra pass per segment (vertex
-  * deletes are rare in web-crawl CDC, so the common path stays one pass).
+  * semantics at the cost of one table-algebra pass per segment.
+  *
+  * Everything here is DRIVER-LOCAL: a micro-batch is tiny next to the
+  * graph, and each Spark action pays a fixed scheduler + broadcast-build
+  * cost, so the batch is collected once and compaction, segmentation and
+  * delta candidacy are plain Scala over |Δ| rows. The graph tables are
+  * touched only by (a) lazy overlay views whose delta sides are
+  * LocalRelations (broadcast builds run on the driver, zero jobs) and
+  * (b) ONE probe action for the before/after candidate scan. The test
+  * sources pin every function against a sequential interpreter of the
+  * reference's M1-M4 semantics (UpdatesLocalSpec).
   */
 object Updates {
 
-  /** Last-op-per-key compaction of a micro-batch. */
-  def compact(batch: Dataset[GraphUpdate]): DataFrame = {
-    val df = batch.toDF()
-    val isEdge = col("op").isin("e", "-e")
-    val keyed = df.withColumn("kind", when(isEdge, "e").otherwise("v"))
-      .withColumn("k1", col("id1"))
-      .withColumn("k2", when(isEdge, col("id2")).otherwise(lit(0L)))
-    val w = Window.partitionBy(col("kind"), col("k1"), col("k2")).orderBy(col("seq").desc)
-    keyed.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
-      .select(col("seq"), col("op"), col("id1"), col("id2"), col("label"))
-  }
-
-  /** Apply one micro-batch to (vertices, edges) with exact sequential
-    * semantics. Fast path: no `-v` in the batch → one compacted pass.
-    * Hazard path: `-v` mixed with other ops → split at each vertex delete
-    * into seq-ordered segments (see class doc); each segment is itself
-    * hazard-free so compaction within it is sound.
-    * Validation mirrors the reference's hard protocol errors (deleting a
-    * non-existent edge aborts, graph.cpp:98-102) when `strict`. */
-  def applyBatch(spark: SparkSession, vertices: DataFrame, edges: DataFrame,
-                 batch: Dataset[GraphUpdate], strict: Boolean = false): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val vDelSeqs = batch.filter(_.op == "-v").select(col("seq")).as[Long]
-      .collect().sorted
-    val nOps = batch.count()
-    if (vDelSeqs.isEmpty || nOps == vDelSeqs.length)
-      applySegment(spark, vertices, edges, batch, strict)
-    else {
-      // segment boundaries: (-inf, s1], (s1, s2], ..., (sk, +inf) with each
-      // -v as the closing op of its segment — exact stream order
-      val bounds = vDelSeqs.map(Some(_)) :+ None
-      var lo = Long.MinValue
-      var (v, e) = (vertices, edges)
-      bounds.foreach { hi =>
-        val seg = hi match {
-          case Some(s) => batch.filter(u => u.seq > lo && u.seq <= s)
-          case None => batch.filter(u => u.seq > lo)
-        }
-        if (hi.isEmpty || hi.exists(_ > lo)) {
-          val (v1, e1) = applySegment(spark, v, e, seg, strict)
-          v = v1.localCheckpoint(true)
-          e = e1.localCheckpoint(true)
-        }
-        hi.foreach(s => lo = s)
-      }
-      (v, e)
-    }
-  }
-
-  private def applySegment(spark: SparkSession, vertices: DataFrame, edges: DataFrame,
-                           batch: Dataset[GraphUpdate], strict: Boolean): (DataFrame, DataFrame) = {
-    val c = compact(batch).persist()
-
-    val vAdds = c.where(col("op") === "v").select(col("id1").as("id"))
-    val vDels = c.where(col("op") === "-v").select(col("id1").as("id"))
-    val eAdds = c.where(col("op") === "e").select(col("id1").as("src"), col("id2").as("dst"))
-    val eDels = c.where(col("op") === "-e").select(col("id1").as("src"), col("id2").as("dst"))
-
-    if (strict) {
-      val missingDel = eDels.join(edges, Seq("src", "dst"), "left_anti").count()
-      require(missingDel == 0, s"-e for $missingDel non-existent edge(s) (reference aborts, graph.cpp:98-102)")
-      val newVerts = vertices.select(col("id")).union(vAdds)
-      val danglingEnds = eAdds.select(col("src").as("id"))
-        .union(eAdds.select(col("dst").as("id")))
-        .join(newVerts, Seq("id"), "left_anti").count()
-      require(danglingEnds == 0, s"e with $danglingEnds endpoint(s) not present (endpoints must exist first)")
-    }
-
-    // M1 add vertices; M2 remove vertices (and incident edges). Rows ARE
-    // their keys here, so upsert = delete-then-union — broadcast-only (a
-    // whole-table distinct would shuffle V per batch for a |Δ|-sized change)
-    val v1 = vertices.select(col("id"))
-      .join(broadcast(vAdds), Seq("id"), "left_anti").union(vAdds)
-      .join(broadcast(vDels), Seq("id"), "left_anti")
-
-    // M3 add edges (dedup, no self loops); M4 remove edges; cascade -v —
-    // same delete-then-union shape (the previous whole-table dropDuplicates
-    // was an O(|E|) shuffle per micro-batch).
-    // Final select: a USING join (Seq("dst")) reorders columns dst-first,
-    // which would silently swap positional consumers — pin the order.
-    val e1 = edges.select(col("src"), col("dst"))
-      .join(broadcast(eAdds), Seq("src", "dst"), "left_anti")
-      .union(eAdds.where(col("src") =!= col("dst")))
-      .join(broadcast(eDels), Seq("src", "dst"), "left_anti")
-      .join(broadcast(vDels.withColumnRenamed("id", "src")), Seq("src"), "left_anti")
-      .join(broadcast(vDels.withColumnRenamed("id", "dst")), Seq("dst"), "left_anti")
-      .select(col("src"), col("dst"))
-
-    c.unpersist()
-    (v1, e1)
-  }
-
-  /** Exact per-batch edge delta in CANONICAL UNDIRECTED space (lo < hi):
-    * (added, deleted) with added = canon(after) \ canon(before) and deleted
-    * = canon(before) \ canon(after) — but derived from the batch's own ops
-    * via BROADCAST-only joins, never by anti-joining the full before/after
-    * tables (the round-2 shape: two canon+distinct shuffles plus two full
-    * anti-joins of E per micro-batch, O(|E|) shuffle work for an O(|Δ|)
-    * answer — a scale-killer on a continuous stream).
-    *
-    * Candidate keys come from the RAW ops (not the compacted ones: a mid-
-    * batch `-v` cascades deletions even when the vertex's compacted final op
-    * is a re-add). Add/delete candidacy is NON-EXCLUSIVE: an edge is an add
-    * candidate (isA) when it has an `e` op, and a delete candidate (isD)
-    * when it has a `-e` op OR is incident to any `-v` vertex — one edge can
-    * be both (e.g. before has (6,7); batch = [e 6 7, -v 7]: the duplicate
-    * add must not mask the cascade delete). Each full table is scanned ONCE
-    * with the tiny key set broadcast — no ShuffleExchange touches the edge
-    * tables (asserted by UpdatesSpec); at warehouse scale the scan itself
-    * prunes via bucketing/DPP on the key columns. */
-  def edgeDelta(spark: SparkSession, before: DataFrame, after: DataFrame,
-                batch: Dataset[GraphUpdate]): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    def canonKeys(df: DataFrame): DataFrame = df.select(
-      least(col("src"), col("dst")).as("lo"), greatest(col("src"), col("dst")).as("hi"))
-      .where(col("lo") =!= col("hi")).distinct()
-
-    val b = batch.toDF().localCheckpoint(true)
-    val eAddKeys = canonKeys(b.where(col("op") === "e")
-      .select(col("id1").as("src"), col("id2").as("dst")))
-    val eDelKeys = canonKeys(b.where(col("op") === "-e")
-      .select(col("id1").as("src"), col("id2").as("dst")))
-    val vDelIds = b.where(col("op") === "-v").select(col("id1")).distinct()
-      .as[Long].collect().toSeq
-
-    // one row per candidate key carrying both flags (an edge can be an add
-    // AND a delete candidate in the same batch — the flags are independent)
-    val keys = eAddKeys.withColumn("kA", lit(true)).withColumn("kD", lit(false))
-      .unionByName(eDelKeys.withColumn("kA", lit(false)).withColumn("kD", lit(true)))
-      .groupBy(col("lo"), col("hi"))
-      .agg(max(col("kA")).as("kA"), max(col("kD")).as("kD"))
-      .localCheckpoint(true)
-
-    def hits(t: DataFrame): DataFrame = {
-      val s = t.select(least(col("src"), col("dst")).as("lo"),
-          greatest(col("src"), col("dst")).as("hi"))
-        .where(col("lo") =!= col("hi"))
-      val incident =
-        if (vDelIds.isEmpty) lit(false)
-        else col("lo").isin(vDelIds: _*) || col("hi").isin(vDelIds: _*)
-      s.join(broadcast(keys), Seq("lo", "hi"), "left_outer")
-        .withColumn("isA", coalesce(col("kA"), lit(false)))
-        .withColumn("isD", coalesce(col("kD"), lit(false)) || incident)
-        .where(col("isA") || col("isD"))
-        .select(col("lo"), col("hi"), col("isA"), col("isD"))
-        .distinct() // tiny: bounded by |Δ| + deg(deleted vertices)
-    }
-    // no materialization: the hit sets are tiny and keeping them lazy keeps
-    // the WHOLE derivation (scan → broadcast join → distinct-on-tiny →
-    // broadcast anti-join) inspectable in one physical plan — DeltaSpec
-    // asserts no SortMergeJoin/ShuffledHashJoin ever touches the edge tables
-    val hb = hits(before)
-    val ha = hits(after)
-    val added = ha.where(col("isA")).select(col("lo"), col("hi"))
-      .join(broadcast(hb.where(col("isA")).select(col("lo"), col("hi"))),
-        Seq("lo", "hi"), "left_anti")
-      .select(col("lo").as("src"), col("hi").as("dst"))
-    val deleted = hb.where(col("isD")).select(col("lo"), col("hi"))
-      .join(broadcast(ha.where(col("isD")).select(col("lo"), col("hi"))),
-        Seq("lo", "hi"), "left_anti")
-      .select(col("lo").as("src"), col("hi").as("dst"))
-    (added, deleted)
-  }
-
-  /** DIRECTED per-batch edge delta — same broadcast-only derivation and
-    * non-exclusive isA/isD classification as edgeDelta, but keys keep their
-    * (src, dst) orientation (the PageRank maintenance path needs directed
-    * deltas; canonicalizing would flip edges). */
-  def edgeDeltaDirected(spark: SparkSession, before: DataFrame, after: DataFrame,
-                        batch: Dataset[GraphUpdate]): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val b = batch.toDF().localCheckpoint(true)
-    def keysOf(op: String): DataFrame =
-      b.where(col("op") === op)
-        .select(col("id1").as("src"), col("id2").as("dst"))
-        .where(col("src") =!= col("dst")).distinct()
-    val vDelIds = b.where(col("op") === "-v").select(col("id1")).distinct()
-      .as[Long].collect().toSeq
-
-    val keys = keysOf("e").withColumn("kA", lit(true)).withColumn("kD", lit(false))
-      .unionByName(keysOf("-e").withColumn("kA", lit(false)).withColumn("kD", lit(true)))
-      .groupBy(col("src"), col("dst"))
-      .agg(max(col("kA")).as("kA"), max(col("kD")).as("kD"))
-      .localCheckpoint(true)
-
-    def hits(t: DataFrame): DataFrame = {
-      val s = t.select(col("src"), col("dst")).where(col("src") =!= col("dst"))
-      val incident =
-        if (vDelIds.isEmpty) lit(false)
-        else col("src").isin(vDelIds: _*) || col("dst").isin(vDelIds: _*)
-      s.join(broadcast(keys), Seq("src", "dst"), "left_outer")
-        .withColumn("isA", coalesce(col("kA"), lit(false)))
-        .withColumn("isD", coalesce(col("kD"), lit(false)) || incident)
-        .where(col("isA") || col("isD"))
-        .select(col("src"), col("dst"), col("isA"), col("isD"))
-        .distinct()
-    }
-    val hb = hits(before)
-    val ha = hits(after)
-    val added = ha.where(col("isA")).select(col("src"), col("dst"))
-      .join(broadcast(hb.where(col("isA")).select(col("src"), col("dst"))),
-        Seq("src", "dst"), "left_anti")
-      .select(col("src"), col("dst"))
-    val deleted = hb.where(col("isD")).select(col("src"), col("dst"))
-      .join(broadcast(ha.where(col("isD")).select(col("src"), col("dst"))),
-        Seq("src", "dst"), "left_anti")
-      .select(col("src"), col("dst"))
-    (added, deleted)
-  }
-
-  /** applyBatch for LABELED graphs (the matching tier): vertices carry
-    * vlabel, edges carry elabel. Same segmentation protocol as applyBatch;
-    * vertex adds UPSERT the label (reference AddVertex, graph.cpp:23-49),
-    * edge adds keep the existing row on duplicates (sorted-insert dedup,
-    * graph.cpp:63-64). */
-  def applyBatchLabeled(spark: SparkSession, vertices: DataFrame, edges: DataFrame,
-                        batch: Dataset[GraphUpdate]): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val vDelSeqs = batch.filter(_.op == "-v").select(col("seq")).as[Long]
-      .collect().sorted
-    val nOps = batch.count()
-    if (vDelSeqs.isEmpty || nOps == vDelSeqs.length)
-      applySegmentLabeled(spark, vertices, edges, batch)
-    else {
-      val bounds = vDelSeqs.map(Some(_)) :+ None
-      var lo = Long.MinValue
-      var (v, e) = (vertices, edges)
-      bounds.foreach { hi =>
-        val seg = hi match {
-          case Some(s) => batch.filter(u => u.seq > lo && u.seq <= s)
-          case None => batch.filter(u => u.seq > lo)
-        }
-        if (hi.isEmpty || hi.exists(_ > lo)) {
-          val (v1, e1) = applySegmentLabeled(spark, v, e, seg)
-          v = v1.localCheckpoint(true)
-          e = e1.localCheckpoint(true)
-        }
-        hi.foreach(s => lo = s)
-      }
-      (v, e)
-    }
-  }
-
-  private def applySegmentLabeled(spark: SparkSession, vertices: DataFrame,
-                                  edges: DataFrame, batch: Dataset[GraphUpdate])
-      : (DataFrame, DataFrame) = {
-    val c = compact(batch).persist()
-    val vAdds = c.where(col("op") === "v")
-      .select(col("id1").as("id"), col("label").cast("int").as("vlabel"))
-    val vDels = c.where(col("op") === "-v").select(col("id1").as("id"))
-    val eAdds = c.where(col("op") === "e")
-      .select(col("id1").as("src"), col("id2").as("dst"), col("label").cast("int").as("elabel"))
-    val eDels = c.where(col("op") === "-e")
-      .select(col("id1").as("src"), col("id2").as("dst"))
-
-    val v1 = vertices.select(col("id"), col("vlabel"))
-      .join(broadcast(vAdds.select(col("id"))), Seq("id"), "left_anti") // upsert: new label wins
-      .union(vAdds)
-      .join(broadcast(vDels), Seq("id"), "left_anti")
-
-    // "existing row wins on duplicate add" via a delta-sized `present`
-    // probe: a LeftAnti with the big edge table on the right cannot
-    // broadcast-build (BuildRight only) and would silently shuffle E once
-    // past the auto-broadcast threshold — instead stream E once against the
-    // broadcast add keys and anti-join the adds against the tiny result
-    val present = edges.select(col("src"), col("dst"))
-      .join(broadcast(eAdds.select(col("src"), col("dst"))), Seq("src", "dst"), "left_semi")
-    val e1 = edges.select(col("src"), col("dst"), col("elabel"))
-      .union(eAdds.join(broadcast(present), Seq("src", "dst"), "left_anti"))
-      .where(col("src") =!= col("dst"))
-      .join(broadcast(eDels), Seq("src", "dst"), "left_anti")
-      .join(broadcast(vDels.withColumnRenamed("id", "src")), Seq("src"), "left_anti")
-      .join(broadcast(vDels.withColumnRenamed("id", "dst")), Seq("dst"), "left_anti")
-      .select(col("src"), col("dst"), col("elabel")) // USING joins reorder — pin
-
-    c.unpersist()
-    (v1, e1)
-  }
-
-  /** Safe/unsafe classification for connected components: broadcast the
-    * (small) per-batch update set against the label state — the
-    * anti-join-before-heavy-work pattern (F2/F3). Returns the batch with a
-    * `safe` column. */
-  def classifyForCC(ccState: DataFrame, batch: Dataset[GraphUpdate]): DataFrame = {
-    val lbl = ccState.select(col("id"), col("label"))
-    val b = batch.toDF()
-    val withL1 = b.join(lbl.withColumnRenamed("id", "id1").withColumnRenamed("label", "l1"),
-      Seq("id1"), "left_outer")
-    val withL2 = withL1.join(lbl.withColumnRenamed("id", "id2").withColumnRenamed("label", "l2"),
-      Seq("id2"), "left_outer")
-    withL2.withColumn("safe",
-      (col("op") === "e" && col("l1").isNotNull && col("l1") === col("l2")) ||
-        (col("op") === "v"))
-      .select(col("seq"), col("op"), col("id1"), col("id2"), col("label"), col("safe"))
-  }
-
-  /** Incremental CC maintenance over one micro-batch:
-    *  - all updates safe             → labels unchanged (zero supersteps);
-    *  - adds only (some cross-label) → WARM start from previous labels
-    *    (sound: each old label is the min id of its old component, so
-    *    min-propagation from old labels converges to the min id of the
-    *    merged component);
-    *  - any delete                   → COLD recompute (splits invalidate
-    *    old labels — the reference also routes deletes to full search).
-    * Returns (newVertices, newEdges, ccResult, nSafe, nUnsafe). */
-  def incrementalCC(spark: SparkSession, vertices: DataFrame, edges: DataFrame,
-                    ccState: DataFrame, batch: Dataset[GraphUpdate])
-      : (DataFrame, DataFrame, AlgoResult, Long, Long) = {
-    import spark.implicits._
-    val classified = classifyForCC(ccState, batch).persist()
-    val nSafe = classified.where(col("safe")).count()
-    val nUnsafe = classified.where(!col("safe")).count()
-    val (v1, e1) = applyBatch(spark, vertices, edges, batch)
-    val v1c = v1.localCheckpoint(true)
-    val e1c = e1.localCheckpoint(true)
-
-    val hasDelete = classified.where(col("op").isin("-v", "-e")).count() > 0
-    val result =
-      if (nUnsafe == 0) {
-        // state unchanged except brand-new vertices get their own label
-        val newV = v1c.join(ccState.select(col("id")), Seq("id"), "left_anti")
-          .withColumn("label", col("id"))
-        AlgoResult(ccState.union(newV), 0, Seq.empty)
-      } else if (!hasDelete) {
-        val cc = new ConnectedComponents(maxIter = 60)
-        val warmInit = ccState.union(
-          v1c.join(ccState.select(col("id")), Seq("id"), "left_anti")
-            .withColumn("label", col("id")))
-        cc.runFrom(spark, e1c, v1c, warmInit)
-      } else {
-        new ConnectedComponents(maxIter = 60).run(spark, e1c, v1c)
-      }
-    classified.unpersist()
-    (v1c, e1c, result, nSafe, nUnsafe)
-  }
-
-  // ---------------------------------------------------------------------
-  // DRIVER-LOCAL micro-batch fast path (the continuous tier's hot loop).
-  //
-  // A micro-batch is by definition tiny next to the graph, yet the
-  // DataFrame derivations above cost a fixed ~15-20 Spark actions per
-  // batch (each with scheduler + broadcast-build overhead) — measured to
-  // dominate per-batch latency at any realistic window size. These
-  // mirrors compute the SAME results with the batch collected once on the
-  // driver: compaction/segmentation/delta candidacy are plain Scala over
-  // |Δ| rows, the graph tables are touched only by (a) lazy overlay views
-  // whose delta sides are LocalRelations (broadcast builds run on the
-  // driver, zero jobs) and (b) ONE probe action for the before/after
-  // candidate scan. Equivalence with the DataFrame path is test-pinned
-  // (UpdatesLocalSpec).
-  // ---------------------------------------------------------------------
-
-  /** Driver-side mirror of `compact`: last op (max seq) per key. One
-    * mutable-map pass (opt round 6): the old groupBy built a per-key Seq
-    * and ran maxBy over it — measured 1.2s on a 160k-op window, a pure
-    * driver-side term the micro-batch wall pays before any job starts. */
+  /** Last op (max seq) per key, in seq order. One mutable-map pass (opt
+    * round 6): the old groupBy built a per-key Seq and ran maxBy over it —
+    * measured 1.2s on a 160k-op window, a pure driver-side term the
+    * micro-batch wall pays before any job starts. */
   def compactLocal(ops: Seq[GraphUpdate]): Seq[GraphUpdate] = {
     val m = new java.util.HashMap[(Boolean, Long, Long), GraphUpdate](ops.size * 2)
     ops.foreach { u =>
@@ -403,8 +50,7 @@ object Updates {
     m.values().asScala.toSeq.sortBy(_.seq)
   }
 
-  /** Driver-side mirror of `applyBatchLabeled`'s segmentation: seq-ordered
-    * segments split at each `-v` (the -v closes its segment). */
+  /** Seq-ordered segments split at each `-v` (the -v closes its segment). */
   def segmentsLocal(ops: Seq[GraphUpdate]): Seq[Seq[GraphUpdate]] = {
     val sorted = ops.sortBy(_.seq)
     val vDelSeqs = sorted.filter(_.op == "-v").map(_.seq)
@@ -424,11 +70,13 @@ object Updates {
     }
   }
 
-  /** LAZY labeled batch application from a driver-collected batch — the
-    * exact `applyBatchLabeled` algebra (per-segment compaction, upsert
-    * vertex labels, keep-existing edge rows, cascade on -v) with ZERO
-    * Spark actions: every segment delta is a LocalRelation and the result
-    * stays a view over the input tables. The caller owns materialization
+  /** LAZY labeled batch application (the matching tier): vertices carry
+    * vlabel, edges carry elabel. Per-segment compaction; vertex adds UPSERT
+    * the label (reference AddVertex, graph.cpp:23-49), edge adds keep the
+    * existing row on duplicates (sorted-insert dedup, graph.cpp:63-64),
+    * self-loop adds are dropped and a -v cascades to its incident edges.
+    * ZERO Spark actions: every segment delta is a LocalRelation and the
+    * result stays a view over the input tables. The caller owns materialization
     * cadence (compact with localCheckpoint every K batches). */
   def applyBatchLabeledLocal(spark: SparkSession, vertices: DataFrame,
                              edges: DataFrame, ops: Seq[GraphUpdate])
@@ -485,12 +133,10 @@ object Updates {
     (v, e)
   }
 
-  /** Driver-side mirror of `applyBatch` (UNLABELED tier) with ZERO Spark
-    * actions: same segmentation and per-segment algebra, with the
-    * whole-table `distinct`/`dropDuplicates` replaced by the equivalent
-    * anti-join-the-adds form (sound under the maintained no-duplicates
-    * invariant, which `applyBatch` itself establishes). Strict-mode
-    * validation is not mirrored (callers on the hot loop never use it). */
+  /** LAZY UNLABELED batch application with ZERO Spark actions: the same
+    * segmentation and per-segment algebra as `applyBatchLabeledLocal`, with
+    * dedup as anti-join-the-adds (sound under the maintained no-duplicates
+    * invariant, which this function preserves). */
   def applyBatchUnlabeledLocal(spark: SparkSession, vertices: DataFrame,
                                edges: DataFrame, ops: Seq[GraphUpdate])
       : (DataFrame, DataFrame) = {
@@ -542,11 +188,22 @@ object Updates {
     (v, e)
   }
 
-  /** Collected per-batch canonical edge delta + the labeled row slices, in
-    * ONE Spark action. Same derivation as `edgeDelta` (candidate keys from
-    * the RAW ops, non-exclusive isA/isD, `-v` incidence) but the before and
-    * after tables are each scanned exactly once, in the same job, and the
-    * |Δ|-bounded hit rows come back to the driver:
+  /** Collected per-batch edge delta in CANONICAL UNDIRECTED space (lo < hi)
+    * plus the labeled row slices, in ONE Spark action: added = canon(after)
+    * \ canon(before) and deleted = canon(before) \ canon(after), derived
+    * from the batch's own ops with broadcast-only joins — never by
+    * anti-joining the full before/after tables (O(|E|) shuffle work for an
+    * O(|Δ|) answer).
+    *
+    * Candidate keys come from the RAW ops (not the compacted ones: a mid-
+    * batch `-v` cascades deletions even when the vertex's compacted final op
+    * is a re-add). Add/delete candidacy is NON-EXCLUSIVE: an edge is an add
+    * candidate (isA) when it has an `e` op, and a delete candidate (isD)
+    * when it has a `-e` op OR is incident to any `-v` vertex — one edge can
+    * be both (e.g. before has (6,7); batch = [e 6 7, -v 7]: the duplicate
+    * add must not mask the cascade delete). The before and after tables are
+    * each scanned exactly once, in the same job, and the |Δ|-bounded hit
+    * rows come back to the driver:
     *   added     = canon keys isA-hit in after and not in before
     *   deleted   = canon keys isD-hit in before and not in after
     *   addedRows = after rows (directed, labeled) whose key was added
@@ -601,6 +258,18 @@ object Updates {
       rowsOf("f", added), rowsOf("b", deleted))
   }
 
+  // builder-side sub-phase trace (GRAFT_BATCH_TRACE=1), shared format with
+  // MultiQueryDriver/SJTreeState: prints the wall since `t0`, returns the
+  // new mark (the caller keeps it — concurrent batches share no state)
+  private val peTrace: Boolean = sys.env.get("GRAFT_BATCH_TRACE").contains("1")
+  private def petr(phase: String, t0: Long): Long =
+    if (!peTrace) t0
+    else {
+      val now = System.nanoTime()
+      System.err.println(f"    [petrace] $phase%-20s ${(now - t0) / 1e9}%6.3fs")
+      now
+    }
+
   /** ONE-scan fast path for PURE-EDGE batches (every op is e/-e): probes
     * `edges` once with the batch's canonical candidate keys broadcast and
     * derives BOTH the collected delta (exact `edgeDeltaCollected`
@@ -611,36 +280,20 @@ object Updates {
     * and the keep-existing `present` subquery's broadcast build — where one
     * scan determines everything: the after side of every candidate key is
     * driver-computable from the before hits plus the (driver-known) batch.
-    * Returns (afterView, delta); the view's delta sides are LocalRelations
-    * (zero further actions). */
-  def pureEdgeBatchLocal(spark: SparkSession, edges: DataFrame,
-                         ops: Seq[GraphUpdate]): (DataFrame, EdgeDeltaLocal) = {
-    val (e1, d, _) = pureEdgeBatchLabeled(spark, edges, None, ops)
-    (e1, d)
-  }
-
-  /** `pureEdgeBatchLocal` with the endpoint-label probe FOLDED into the
-    * same single action: when `vertices` is given, the probe plan unions
-    * the E candidate-key scan with a V semi-join over every id the batch's
-    * ops mention (a superset of the delta's endpoints — sound, extra
-    * labels are simply unused), and the third return value maps id →
-    * vlabel for every such id present in V. The continuous tier's
-    * pure-edge batches drop from two probe actions to one. */
-  // builder-side sub-phase trace (GRAFT_BATCH_TRACE=1), shared format with
-  // MultiQueryDriver/SJTreeState
-  private val peTrace: Boolean = sys.env.get("GRAFT_BATCH_TRACE").contains("1")
-  private var peT0 = 0L
-  private def petr(phase: String): Unit = if (peTrace) {
-    val now = System.nanoTime()
-    System.err.println(f"    [petrace] $phase%-20s ${(now - peT0) / 1e9}%6.3fs")
-    peT0 = now
-  }
-
+    * The view's delta sides are LocalRelations (zero further actions).
+    *
+    * The endpoint-label probe is FOLDED into the same single action: when
+    * `vertices` is given, the probe plan unions the E candidate-key scan
+    * with a V semi-join over every id the batch's ops mention (a superset
+    * of the delta's endpoints — sound, extra labels are simply unused), and
+    * the third return value maps id → vlabel for every such id present in
+    * V. The continuous tier's pure-edge batches drop from two probe actions
+    * to one. Returns (afterView, delta, labels). */
   def pureEdgeBatchLabeled(spark: SparkSession, edges: DataFrame,
                            vertices: Option[DataFrame], ops: Seq[GraphUpdate])
       : (DataFrame, EdgeDeltaLocal, Map[Long, Int]) = {
     import spark.implicits._
-    peT0 = System.nanoTime()
+    var t = System.nanoTime()
     require(ops.forall(o => o.op == "e" || o.op == "-e"), "pure-edge batches only")
     def canon(s: Long, d: Long): (Long, Long) = if (s < d) (s, d) else (d, s)
     // flags come from the RAW ops (edgeDeltaCollected's candidate sets);
@@ -649,7 +302,7 @@ object Updates {
       .filter(k => k._1 != k._2).toSet
     val rawDelK = ops.filter(_.op == "-e").map(u => canon(u.id1, u.id2))
       .filter(k => k._1 != k._2).toSet
-    petr("raw key sets")
+    t = petr("raw key sets", t)
     val e = edges.select(col("src"), col("dst"), col("elabel"))
     if (rawAddK.isEmpty && rawDelK.isEmpty) {
       // batch held only SELF-LOOP ops: no canonical delta (self-loops never
@@ -668,11 +321,11 @@ object Updates {
     }
 
     val c = compactLocal(ops)
-    petr("compactLocal")
+    t = petr("compactLocal", t)
     val addRows = c.filter(_.op == "e").map(u => (u.id1, u.id2, u.label))
       .filter(t => t._1 != t._2)
     val delDirected = c.filter(_.op == "-e").map(u => (u.id1, u.id2)).toSet
-    petr("add/del rows")
+    t = petr("add/del rows", t)
 
     // the ONE probe action: E rows whose canonical key is a candidate,
     // unioned (when a vertex table rides along) with the V label probe
@@ -694,9 +347,9 @@ object Updates {
         eProbe.unionByName(vProbe)
       case None => eProbe
     }
-    petr("probe plan build")
+    t = petr("probe plan build", t)
     val probeRows = probe.collect()
-    petr("probe collect (action)")
+    t = petr("probe collect (action)", t)
     val hits = probeRows.iterator.filter(!_.getBoolean(0))
       .map(r => (r.getLong(1), r.getLong(2), r.getInt(3))).toSeq
     val labels: Map[Long, Int] = probeRows.iterator.filter(_.getBoolean(0))
@@ -713,7 +366,7 @@ object Updates {
     val deleted = keysOf(hits, rawDelK) -- keysOf(afterHits, rawDelK)
     val addedRows = afterHits.filter(t => added(canon(t._1, t._2)))
     val deletedRows = hits.filter(t => deleted(canon(t._1, t._2)))
-    petr("delta derivation")
+    t = petr("delta derivation", t)
 
     var e1 = if (newRows.isEmpty) e
       else e.union(graft.util.DeltaDF.of(spark, newRows, "src", "dst", "elabel"))
@@ -721,13 +374,12 @@ object Updates {
       e1 = e1.join(broadcast(
           graft.util.DeltaDF.of(spark, delDirected.toSeq, "src", "dst")),
         Seq("src", "dst"), "left_anti")
-    petr("after view build")
+    petr("after view build", t)
     (e1.select(col("src"), col("dst"), col("elabel")),
       EdgeDeltaLocal(added.toSeq, deleted.toSeq, addedRows, deletedRows), labels)
   }
 
-  /** Keys-only collected canonical delta for UNLABELED edge tables — the
-    * `edgeDelta` derivation in one probe action, result collected. */
+  /** Keys-only `edgeDeltaCollected` for UNLABELED edge tables. */
   def edgeDeltaKeysCollected(spark: SparkSession, before: DataFrame, after: DataFrame,
                              ops: Seq[GraphUpdate])
       : (Seq[(Long, Long)], Seq[(Long, Long)]) = {
@@ -737,10 +389,11 @@ object Updates {
     (d.added, d.deleted)
   }
 
-  /** DIRECTED collected delta (the PageRank maintenance path): mirror of
-    * `edgeDeltaDirected` — keys keep orientation, candidacy from the RAW
-    * ops, non-exclusive isA/isD, `-v` incidence — one probe action over
-    * before and after, hits collected. */
+  /** DIRECTED collected delta (the PageRank maintenance path): the
+    * `edgeDeltaCollected` derivation — candidacy from the RAW ops,
+    * non-exclusive isA/isD, `-v` incidence — with keys keeping their
+    * (src, dst) orientation (canonicalizing would flip edges); one probe
+    * action over before and after, hits collected. */
   def edgeDeltaDirectedCollected(spark: SparkSession, before: DataFrame,
                                  after: DataFrame, ops: Seq[GraphUpdate])
       : (Seq[(Long, Long)], Seq[(Long, Long)]) = {

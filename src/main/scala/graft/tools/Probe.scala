@@ -332,21 +332,6 @@ object Probe {
           t(s"csr P=adaptive r$r") { println("[probe] n=" + full(None)) }
           t(s"csr P=4 r$r") { println("[probe] n=" + full(Some(4))) }
         }
-
-      case "csr" =>
-        val e = t("procurement edges") {
-          graft.queries.GraftQueries.procurementEdges(spark, sfDir).localCheckpoint(true)
-        }
-        val verts = e.select(col("src").as("id"))
-          .union(e.select(col("dst").as("id"))).distinct()
-        val blocks = t("build") { graft.algo.CsrPageRank.build(spark, e, verts) }
-        val (state, iters, _) = t("run 10 iters") {
-          graft.algo.CsrPageRank.run(spark, blocks, tol = 0.0, maxIter = 10)
-        }
-        t("toRows+collect") {
-          println("[probe] rows=" + graft.algo.CsrPageRank
-            .toRows(spark, state, blocks.vertsOrFail).count())
-        }
     }
     spark.stop()
   }

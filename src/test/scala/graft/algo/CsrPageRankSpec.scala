@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 import graft.{Oracles, SparkSpec}
 import graft.graph.GraphBuilder
@@ -12,6 +12,17 @@ import graft.pages.PagesFixture
   * match the plain-Scala power iteration. */
 class CsrPageRankSpec extends SparkSpec {
 
+  /** build + runPacked + toRows: (id, rank) rows, iterations, metrics. */
+  private def packed(edges: DataFrame, vertices: DataFrame, tol: Double, maxIter: Int,
+                     blockP: Option[Int] = None) = {
+    val blocks = CsrPageRank.build(spark, edges, vertices, blockP)
+    val (state, iters, m) = CsrPageRank.runPacked(spark, blocks, tol = tol, maxIter = maxIter)
+    (CsrPageRank.toRows(spark, state, blocks.vertsOrFail), iters, m)
+  }
+
+  private def rankMap(df: DataFrame): Map[Long, Double] =
+    df.select("id", "rank").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
   test("CSR PageRank == plain-Scala oracle == Dataset-join PageRank (1e-6)") {
     import spark.implicits._
     val pages = spark.createDataset(PagesFixture.generate(6, 15))
@@ -22,7 +33,7 @@ class CsrPageRankSpec extends SparkSpec {
     val eIds = eDF.select("src", "dst").as[(Long, Long)].collect().toSeq
 
     val want = Oracles.pageRank(vIds, eIds, tol = 1e-12, maxIter = 500)
-    val (rowsDF, iters, metrics) = CsrPageRank.pagerank(spark, eDF, vDF, tol = 1e-8, maxIter = 500)
+    val (rowsDF, iters, metrics) = packed(eDF, vDF, tol = 1e-8, maxIter = 500)
     assert(iters > 3)
     assert(metrics.last.deltaLinf < 1e-8)
     val got = rowsDF.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -57,46 +68,36 @@ class CsrPageRankSpec extends SparkSpec {
     // hub 0 with spokes 1..5 (directed spokes → hub); hub dangles
     val e = (1L to 5L).map(i => (i, 0L)).toDF("src", "dst")
     val v = (0L to 5L).toDF("id")
-    val (rows, _, _) = CsrPageRank.pagerank(spark, e, v, tol = 1e-10, maxIter = 300)
+    val (rows, _, _) = packed(e, v, tol = 1e-10, maxIter = 300)
     val got = rows.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val want = Oracles.pageRank(0L to 5L, (1L to 5L).map(i => (i, 0L)), tol = 1e-12, maxIter = 500)
     (0L to 5L).foreach(i => assert(math.abs(got(i) - want(i)) < 1e-6))
     assert(got(0L) > got(1L) * 3, "hub must concentrate rank")
   }
 
-  test("auto router: small graphs take the row-join plan, results identical") {
-    import spark.implicits._
-    val pages = spark.createDataset(PagesFixture.generate(5, 12))
-    val (v, e) = GraphBuilder.buildVerified(spark, pages)
-    val vDF = v.toDF().localCheckpoint(true)
-    val eDF = e.toDF().localCheckpoint(true)
-    // below the threshold: routes to the Dataset-join plan
-    val (small, _, _) = CsrPageRank.auto(spark, eDF, vDF, tol = 1e-8, maxIter = 200)
-    // forced CSR (threshold 0): same ranks within 1e-6
-    val (csr, _, _) = CsrPageRank.auto(spark, eDF, vDF, tol = 1e-8, maxIter = 200,
-      csrThreshold = 0L)
-    val a = small.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val b = csr.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(a.keySet == b.keySet)
-    a.foreach { case (id, r) => assert(math.abs(r - b(id)) < 1e-6, s"auto rank($id)") }
-  }
-
+  // the standing parity check: block counts 1, 4 and adaptive, all within
+  // 1e-8 of the Dataset-join loop (PageRank) and the plain-Scala oracle
   test("packed RDD loop == Dataset loop == oracle (the scaling kernel)") {
     import spark.implicits._
     val pages = spark.createDataset(PagesFixture.generate(6, 15))
     val (v, e) = GraphBuilder.buildVerified(spark, pages)
     val vDF = v.toDF().localCheckpoint(true)
     val eDF = e.toDF().localCheckpoint(true)
-    val blocks = CsrPageRank.build(spark, eDF, vDF)
-    val (dsState, itersDs, _) = CsrPageRank.run(spark, blocks, tol = 1e-8, maxIter = 300)
-    val (rddState, itersRdd, m) = CsrPageRank.runPacked(spark, blocks, tol = 1e-8, maxIter = 300)
-    assert(itersDs == itersRdd, s"loop iteration counts differ: $itersDs vs $itersRdd")
-    assert(m.last.deltaLinf < 1e-8)
-    val a = CsrPageRank.toRows(spark, dsState, blocks.vertsOrFail)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val b = CsrPageRank.toRows(spark, rddState, blocks.vertsOrFail)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(a.keySet == b.keySet)
-    a.foreach { case (id, r) => assert(r == b(id), s"packed-loop rank($id) differs") }
+    val vIds = vDF.select("id").as[Long].collect().toSeq
+    val eIds = eDF.select("src", "dst").as[(Long, Long)].collect().toSeq
+
+    val want = Oracles.pageRank(vIds, eIds, tol = 1e-13, maxIter = 2000)
+    val dsJoin = rankMap(new PageRank(tol = 1e-10, maxIter = 2000).run(spark, eDF, vDF).state)
+    assert(dsJoin.keySet == vIds.toSet)
+    Seq(Some(1), Some(4), None).foreach { p =>
+      val (rows, _, m) = packed(eDF, vDF, tol = 1e-10, maxIter = 2000, blockP = p)
+      assert(m.last.deltaLinf < 1e-10, s"P=$p did not converge")
+      val got = rankMap(rows)
+      assert(got.keySet == vIds.toSet, s"P=$p vertex set")
+      vIds.foreach { id =>
+        assert(math.abs(got(id) - want(id)) < 1e-8, s"P=$p rank($id) vs oracle")
+        assert(math.abs(got(id) - dsJoin(id)) < 1e-8, s"P=$p rank($id) vs Dataset-join")
+      }
+    }
   }
 }

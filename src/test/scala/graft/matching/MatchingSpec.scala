@@ -177,25 +177,39 @@ class MatchingSpec extends SparkSpec {
   }
 
   test("classifier: signature-miss updates are safe and route to no query") {
-    import spark.implicits._
     val (verts, edges) = randomLabeled(3)
-    val vDF = verts.toSeq.toDF("id", "vlabel")
+    val (eDF, vDF) = toDfs(verts, edges)
     // query listens only to (vlabel 0) -[elabel 1]- (vlabel 1)
     val q = QueryGraph(
       Seq(QVertex("a", Some(0)), QVertex("b", Some(1))),
       Seq(QEdge("a", "b", Some(1))))
-    val v0 = verts.collectFirst { case (v, l) if l == 0 => v }.get
-    val v1 = verts.collectFirst { case (v, l) if l == 1 => v }.get
-    val v2 = verts.collectFirst { case (v, l) if l == 2 => v }.get
-    val ups = Seq(
-      graft.graph.GraphUpdate(1, "e", v0, v1, 1), // hits the signature -> unsafe
-      graft.graph.GraphUpdate(2, "e", v0, v1, 0), // wrong elabel -> safe
-      graft.graph.GraphUpdate(3, "e", v2, v2, 1), // wrong vlabels -> safe
-      graft.graph.GraphUpdate(4, "v", 99, 0, 0), // vertex add -> safe
-      graft.graph.GraphUpdate(5, "-v", v0, 0, 0)) // vertex delete -> unsafe
-    val out = MatchClassifier.classify(spark, Map("q" -> q), vDF, ups.toDS())
-      .select("seq", "safe").as[(Long, Boolean)].collect().toMap
-    assert(out == Map(1L -> false, 2L -> true, 3L -> true, 4L -> true, 5L -> false))
+    val driver = new MultiQueryDriver(spark, Map("q" -> q), vDF, eDF)
+    // a NEW edge (absent in both orientations) between labels la and lb
+    val taken = scala.collection.mutable.Set(edges.toSeq.map(t => (t._1, t._2)): _*)
+    def fresh(la: Int, lb: Int): (Long, Long) = {
+      val (a, b) = (for {
+        a <- verts.keys.toSeq.sorted if verts(a) == la
+        b <- verts.keys.toSeq.sorted if verts(b) == lb && a != b
+        if !taken((a, b)) && !taken((b, a))
+      } yield (a, b)).head
+      taken += ((a, b))
+      (a, b)
+    }
+    var live = edges
+    def run(seq: Long, ab: (Long, Long), el: Int): Int = {
+      live += ((ab._1, ab._2, el))
+      driver.applyBatch(spark.createDataset(Seq(graft.graph.GraphUpdate(seq, "e", ab._1, ab._2, el)))(
+        org.apache.spark.sql.Encoders.product[graft.graph.GraphUpdate]))._1
+    }
+    // wrong elabel and wrong vlabels: routed to no query, search skipped
+    assert(run(1, fresh(0, 1), 0) == 0)
+    assert(run(2, fresh(2, 2), 1) == 0)
+    assert(driver.searchesSkipped == 2 && driver.searchesRun == 0)
+    // the query's own signature runs the delta search
+    assert(run(3, fresh(0, 1), 1) == 1)
+    assert(driver.searchesRun == 1)
+    // skipping stayed sound: the maintained count equals brute force
+    assert(driver.counts("q") == brute(q, verts, live))
   }
 
   test("BFS depths match plain BFS; diameterExact on a path graph") {

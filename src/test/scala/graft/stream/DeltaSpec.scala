@@ -5,8 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.{Oracles => O}
 import graft.graph.GraphUpdate
+import graft.stream.{UpdateInterpreter => I}
 
-/** Round-3 delta machinery: O(|Δ|)-shuffle edge-delta derivation, labeled
+/** Round-3 delta machinery: O(|Δ|)-shuffle edge-delta derivation
+  * (Updates.edgeDeltaKeysCollected / edgeDeltaDirectedCollected), labeled
   * batch application, and the window-free triangle delta plans. */
 class DeltaSpec extends SparkSpec {
 
@@ -14,6 +16,18 @@ class DeltaSpec extends SparkSpec {
     df.select(least(col("src"), col("dst")).as("l"), greatest(col("src"), col("dst")).as("h"))
       .where(col("l") =!= col("h")).distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** Unlabeled apply + collected canonical delta; checks the applied view
+    * against the sequential interpreter. Returns (v1, e1, added, deleted). */
+  private def applyAndDelta(v0: org.apache.spark.sql.DataFrame,
+                            e0: org.apache.spark.sql.DataFrame, ops: Seq[GraphUpdate]) = {
+    val (v1, e1) = Updates.applyBatchUnlabeledLocal(spark, v0, e0, ops)
+    val e1c = e1.localCheckpoint(true)
+    val want = I(I.graphOf(v0, e0), ops)
+    assert(I.edgesOf(e1c).keySet == want.edges.keySet, "applied edges vs interpreter")
+    val (added, deleted) = Updates.edgeDeltaKeysCollected(spark, e0, e1c, ops)
+    (v1, e1c, added.toSet, deleted.toSet)
+  }
 
   test("edgeDelta equals the true before/after diff (re-adds, -e, -v cascade)") {
     import spark.implicits._
@@ -28,15 +42,12 @@ class DeltaSpec extends SparkSpec {
       GraphUpdate(5, "v", 20L, 0L, 0),
       GraphUpdate(6, "-e", 3L, 4L, 0),  // explicit delete
       GraphUpdate(7, "-v", 7L, 0L, 0),  // cascades (6,7) and (7,8)
-      GraphUpdate(8, "e", 4L, 6L, 0)).toDS()
-    val (v1, e1) = Updates.applyBatch(spark, v0, e0, batch)
-    val e1c = e1.localCheckpoint(true)
-
-    val (added, deleted) = Updates.edgeDelta(spark, e0, e1c, batch)
+      GraphUpdate(8, "e", 4L, 6L, 0))
+    val (v1, e1c, added, deleted) = applyAndDelta(v0, e0, batch)
     val wantAdded = canonSet(e1c) -- canonSet(e0)
     val wantDeleted = canonSet(e0) -- canonSet(e1c)
-    assert(canonSet(added) == wantAdded, s"added ${canonSet(added)} vs $wantAdded")
-    assert(canonSet(deleted) == wantDeleted, s"deleted ${canonSet(deleted)} vs $wantDeleted")
+    assert(added == wantAdded, s"added $added vs $wantAdded")
+    assert(deleted == wantDeleted, s"deleted $deleted vs $wantDeleted")
     assert(wantAdded == Set((0L, 2L), (19L, 20L), (4L, 6L)))
     assert(wantDeleted == Set((3L, 4L), (6L, 7L), (7L, 8L)))
     assert(v1.count() == 13) // 12 + 19,20 - 7
@@ -51,14 +62,12 @@ class DeltaSpec extends SparkSpec {
     val e0 = Seq((6L, 7L), (1L, 2L)).toDF("src", "dst")
     val batch = Seq(
       GraphUpdate(1, "e", 6L, 7L, 0),
-      GraphUpdate(2, "-v", 7L, 0L, 0)).toDS()
-    val (_, e1) = Updates.applyBatch(spark, v0, e0, batch)
-    val e1c = e1.localCheckpoint(true)
-    val (added, deleted) = Updates.edgeDelta(spark, e0, e1c, batch)
-    assert(canonSet(added) == (canonSet(e1c) -- canonSet(e0)))
-    assert(canonSet(deleted) == (canonSet(e0) -- canonSet(e1c)))
-    assert(canonSet(deleted) == Set((6L, 7L)), "cascade delete masked by duplicate add")
-    assert(canonSet(added).isEmpty)
+      GraphUpdate(2, "-v", 7L, 0L, 0))
+    val (_, e1c, added, deleted) = applyAndDelta(v0, e0, batch)
+    assert(added == (canonSet(e1c) -- canonSet(e0)))
+    assert(deleted == (canonSet(e0) -- canonSet(e1c)))
+    assert(deleted == Set((6L, 7L)), "cascade delete masked by duplicate add")
+    assert(added.isEmpty)
   }
 
   test("edgeDelta never shuffles the edge tables (broadcast-only joins)") {
@@ -68,21 +77,38 @@ class DeltaSpec extends SparkSpec {
     val batch = Seq(
       GraphUpdate(1, "e", 5L, 500L, 0),
       GraphUpdate(2, "-e", 100L, 101L, 0),
-      GraphUpdate(3, "-v", 1500L, 0L, 0)).toDS()
-    val (_, e1) = Updates.applyBatch(spark, v0, e0, batch)
+      GraphUpdate(3, "-v", 1500L, 0L, 0))
+    val (_, e1) = Updates.applyBatchUnlabeledLocal(spark, v0, e0, batch)
     val e1c = e1.localCheckpoint(true)
-    val (added, deleted) = Updates.edgeDelta(spark, e0, e1c, batch)
-    Seq(added, deleted).foreach { df =>
-      df.collect() // finalize AQE
-      val plan = df.queryExecution.executedPlan.toString
+    // the probe action runs inside edgeDeltaKeysCollected: capture its plan.
+    // Auto-broadcast off, so only the explicitly hinted broadcasts survive
+    // (at warehouse scale the edge tables are over any threshold)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit = { plans.add(qe.executedPlan.toString); () }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.listenerManager.register(listener)
+    val (added, deleted) =
+      try Updates.edgeDeltaKeysCollected(spark, e0, e1c, batch)
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    spark.listenerManager.unregister(listener)
+    assert(!plans.isEmpty, "no probe plan observed")
+    plans.forEach { plan =>
       assert(!plan.contains("SortMergeJoin"), s"full-table sort-merge join in:\n$plan")
       assert(!plan.contains("ShuffledHashJoin"), s"full-table shuffled join in:\n$plan")
       assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
-        "delta derivation should be broadcast-join shaped")
+        s"delta derivation should be broadcast-join shaped:\n$plan")
     }
     // and the values are still right
-    assert(canonSet(added) == Set((5L, 500L)))
-    assert(canonSet(deleted) == Set((100L, 101L), (1499L, 1500L), (1500L, 1501L)))
+    assert(added.toSet == Set((5L, 500L)))
+    assert(deleted.toSet == Set((100L, 101L), (1499L, 1500L), (1500L, 1501L)))
   }
 
   test("applyBatchLabeled: upserted vertex labels, kept-edge semantics, cascade") {
@@ -94,13 +120,13 @@ class DeltaSpec extends SparkSpec {
       GraphUpdate(2, "v", 0L, 0L, 7),   // upsert label of 0
       GraphUpdate(3, "e", 2L, 3L, 9),
       GraphUpdate(4, "e", 0L, 1L, 8),   // duplicate add: existing row (label 5) wins
-      GraphUpdate(5, "-v", 1L, 0L, 0)). // cascades (0,1) and (1,2)
-      toDS()
-    val (v1, e1) = Updates.applyBatchLabeled(spark, v0, e0, batch)
+      GraphUpdate(5, "-v", 1L, 0L, 0))  // cascades (0,1) and (1,2)
+    val (v1, e1) = Updates.applyBatchLabeledLocal(spark, v0, e0, batch)
     val vs = v1.as[(Long, Int)].collect().toSet
     assert(vs == Set((0L, 7), (2L, 2), (3L, 1)))
     val es = e1.as[(Long, Long, Int)].collect().toSet
     assert(es == Set((2L, 3L, 9)))
+    assert(I.graphOf(v1, e1) == I(I.graphOf(v0, e0), batch))
   }
 
   test("edgeDeltaDirected: orientation kept, cascade + dup-add mask covered") {
@@ -112,14 +138,12 @@ class DeltaSpec extends SparkSpec {
       GraphUpdate(2, "e", 2L, 1L, 0),   // re-add of existing 2→1: NO delta
       GraphUpdate(3, "e", 6L, 7L, 0),   // dup add masked by next op's cascade
       GraphUpdate(4, "-v", 7L, 0L, 0),  // cascades 6→7 and 8→7
-      GraphUpdate(5, "-e", 1L, 0L, 0)).toDS()
-    val (_, e1) = Updates.applyBatch(spark, v0, e0, batch)
+      GraphUpdate(5, "-e", 1L, 0L, 0))
+    val (_, e1) = Updates.applyBatchUnlabeledLocal(spark, v0, e0, batch)
     val e1c = e1.localCheckpoint(true)
-    val (added, deleted) = Updates.edgeDeltaDirected(spark, e0, e1c, batch)
-    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs(added) == Set((0L, 2L)))
-    assert(pairs(deleted) == Set((6L, 7L), (8L, 7L), (1L, 0L)))
+    val (added, deleted) = Updates.edgeDeltaDirectedCollected(spark, e0, e1c, batch)
+    assert(added.toSet == Set((0L, 2L)))
+    assert(deleted.toSet == Set((6L, 7L), (8L, 7L), (1L, 0L)))
   }
 
   test("updatePrepared: warm restart == cold, base adj untouched, no extra exchange") {

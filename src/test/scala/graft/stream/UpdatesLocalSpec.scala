@@ -4,11 +4,13 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.graph.GraphUpdate
+import graft.stream.{UpdateInterpreter => I}
 
-/** Equivalence of the driver-local micro-batch fast path with the
-  * DataFrame path it mirrors (compaction, labeled application with -v
-  * segmentation, canonical edge delta with cascade + dup-add cases) —
-  * randomized over many op mixes so the mirrors can't drift. */
+/** The driver-local update path (compaction, labeled and unlabeled
+  * application with -v segmentation, the pure-edge fast path, canonical and
+  * directed edge deltas) against the plain-Scala sequential interpreter of
+  * the reference's M1-M4 semantics — randomized over many op mixes, plus
+  * hand-written self-loop cases. */
 class UpdatesLocalSpec extends SparkSpec {
 
   private def randomBatch(seed: Int, n: Int, ids: Int): Seq[GraphUpdate] = {
@@ -39,32 +41,20 @@ class UpdatesLocalSpec extends SparkSpec {
     (verts.localCheckpoint(true), edges.localCheckpoint(true))
   }
 
-  test("compactLocal equals compact (random batches)") {
-    import spark.implicits._
+  test("compactLocal equals the sequential interpreter's last-op-per-key (random batches)") {
     (0 until 5).foreach { s =>
       val ops = randomBatch(s, 60, 12)
-      val viaDf = Updates.compact(spark.createDataset(ops))
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-        .toSet
-      val local = Updates.compactLocal(ops)
-        .map(u => (u.seq, u.op, u.id1, u.id2)).toSet
-      assert(local == viaDf, s"seed $s")
+      assert(Updates.compactLocal(ops) == I.lastPerKey(ops), s"seed $s")
     }
   }
 
-  test("applyBatchLabeledLocal equals applyBatchLabeled (random, with -v segments)") {
-    import spark.implicits._
+  test("applyBatchLabeledLocal equals the sequential interpreter (random, with -v segments)") {
     (0 until 6).foreach { s =>
       val (v0, e0) = baseGraph(s, 10)
       val ops = randomBatch(s, 40, 10)
-      val (vA, eA) = Updates.applyBatchLabeled(spark, v0, e0, spark.createDataset(ops))
       val (vB, eB) = Updates.applyBatchLabeledLocal(spark, v0, e0, ops)
-      val va = vA.collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-      val vb = vB.collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-      val ea = eA.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      val eb = eB.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      assert(vb == va, s"vertices diverge at seed $s")
-      assert(eb == ea, s"edges diverge at seed $s")
+      val want = I(I.graphOf(v0, e0), ops)
+      assert(I.graphOf(vB, eB) == want, s"diverges at seed $s")
     }
   }
 
@@ -94,13 +84,7 @@ class UpdatesLocalSpec extends SparkSpec {
     val (vL, eL) = Updates.applyBatchLabeledLocal(spark, v0, e0, ops)
     val (vU, eU) = Updates.applyBatchUnlabeledLocal(spark,
       v0.select(col("id")), e0.select(col("src"), col("dst")), ops)
-    // the generic DataFrame paths must hold the same shape (they previously
-    // whole-table-shuffled via dropDuplicates / a big-right LeftAnti)
-    val batch = spark.createDataset(ops)(org.apache.spark.sql.Encoders.product[GraphUpdate])
-    val (vD, eD) = Updates.applyBatch(spark,
-      v0.select(col("id")), e0.select(col("src"), col("dst")), batch)
-    val (vDL, eDL) = Updates.applyBatchLabeled(spark, v0, e0, batch)
-    Seq(vL, eL, vU, eU, vD, eD, vDL, eDL).foreach { df =>
+    Seq(vL, eL, vU, eU).foreach { df =>
       df.collect() // finalize AQE
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("SortMergeJoin"), s"full-table sort-merge join in:\n$plan")
@@ -110,25 +94,22 @@ class UpdatesLocalSpec extends SparkSpec {
     }
   }
 
-  test("applyBatchUnlabeledLocal equals applyBatch (random, with -v segments)") {
-    import spark.implicits._
+  test("applyBatchUnlabeledLocal equals the sequential interpreter (random, with -v segments)") {
     (0 until 6).foreach { s =>
       val (v0l, e0l) = baseGraph(s + 100, 10)
       val v0 = v0l.select(col("id")).localCheckpoint(true)
       val e0 = e0l.select(col("src"), col("dst")).localCheckpoint(true)
       val ops = randomBatch(s + 100, 40, 10)
-      val (vA, eA) = Updates.applyBatch(spark, v0, e0, spark.createDataset(ops))
       val (vB, eB) = Updates.applyBatchUnlabeledLocal(spark, v0, e0, ops)
-      assert(vB.collect().map(_.getLong(0)).toSet == vA.collect().map(_.getLong(0)).toSet,
+      // unlabeled tables carry no labels: compare id sets and key sets
+      val want = I(I.graphOf(v0, e0), ops)
+      assert(vB.collect().map(_.getLong(0)).toSet == want.vertices.keySet,
         s"vertices diverge at seed $s")
-      assert(eB.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
-        eA.collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
-        s"edges diverge at seed $s")
+      assert(I.edgesOf(eB).keySet == want.edges.keySet, s"edges diverge at seed $s")
     }
   }
 
-  test("pureEdgeBatchLocal equals the general composition (random pure-edge batches)") {
-    import spark.implicits._
+  test("pureEdgeBatchLabeled equals the sequential interpreter (random pure-edge batches)") {
     (0 until 8).foreach { s =>
       val (v0, e0) = baseGraph(s + 200, 10)
       // pure-edge mix with dup adds, dels of absent edges, and canon twins
@@ -139,23 +120,22 @@ class UpdatesLocalSpec extends SparkSpec {
         if (rnd.nextInt(10) < 3) GraphUpdate(i.toLong, "-e", a, b, 0)
         else GraphUpdate(i.toLong, "e", a, b, rnd.nextInt(3))
       }
-      val (_, e1g) = Updates.applyBatchLabeledLocal(spark, v0, e0, ops)
-      val e1gc = e1g.localCheckpoint(true)
-      val general = Updates.edgeDeltaCollected(spark, e0, e1gc, ops)
+      val before = I.graphOf(v0, e0)
+      val after = I(before, ops)
+      val want = I.canonicalDelta(before, after)
 
-      val (e1f, fast) = Updates.pureEdgeBatchLocal(spark, e0, ops)
-      assert(e1f.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet ==
-        e1gc.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet,
-        s"after view diverges at seed $s")
-      assert(fast.added.toSet == general.added.toSet, s"added keys diverge at seed $s")
-      assert(fast.deleted.toSet == general.deleted.toSet, s"deleted keys diverge at seed $s")
-      assert(fast.addedRows.toSet == general.addedRows.toSet, s"added rows diverge at seed $s")
-      assert(fast.deletedRows.toSet == general.deletedRows.toSet,
-        s"deleted rows diverge at seed $s")
+      val (e1f, fast, labels) = Updates.pureEdgeBatchLabeled(spark, e0, Some(v0), ops)
+      assert(I.edgesOf(e1f) == after.edges, s"after view diverges at seed $s")
+      assert(fast.added.toSet == want.added, s"added keys diverge at seed $s")
+      assert(fast.deleted.toSet == want.deleted, s"deleted keys diverge at seed $s")
+      assert(fast.addedRows.toSet == want.addedRows, s"added rows diverge at seed $s")
+      assert(fast.deletedRows.toSet == want.deletedRows, s"deleted rows diverge at seed $s")
+      val ids = ops.flatMap(u => Seq(u.id1, u.id2)).toSet
+      assert(labels == before.vertices.filter(kv => ids(kv._1)), s"labels diverge at seed $s")
     }
   }
 
-  test("pureEdgeBatchLocal applies self-loop deletes (incl. self-loop-only batches)") {
+  test("pureEdgeBatchLabeled applies self-loop deletes (incl. self-loop-only batches)") {
     import spark.implicits._
     val v0 = (0L to 5L).map(i => (i, (i % 3).toInt)).toDF("id", "vlabel")
       .localCheckpoint(true)
@@ -163,17 +143,15 @@ class UpdatesLocalSpec extends SparkSpec {
     // creates them, but an initialEdges table may carry them)
     val e0 = Seq((0L, 1L, 0), (1L, 2L, 1), (2L, 2L, 2), (3L, 3L, 0), (4L, 5L, 1))
       .toDF("src", "dst", "elabel").localCheckpoint(true)
+    val before = I.graphOf(v0, e0)
 
     def parity(ops: Seq[GraphUpdate], tag: String): Unit = {
-      val (_, e1g) = Updates.applyBatchLabeledLocal(spark, v0, e0, ops)
-      val e1gc = e1g.localCheckpoint(true)
-      val general = Updates.edgeDeltaCollected(spark, e0, e1gc, ops)
-      val (e1f, fast) = Updates.pureEdgeBatchLocal(spark, e0, ops)
-      assert(e1f.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet ==
-        e1gc.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet,
-        s"$tag: after view diverges")
-      assert(fast.added.toSet == general.added.toSet, s"$tag: added keys diverge")
-      assert(fast.deleted.toSet == general.deleted.toSet, s"$tag: deleted keys diverge")
+      val after = I(before, ops)
+      val want = I.canonicalDelta(before, after)
+      val (e1f, fast, _) = Updates.pureEdgeBatchLabeled(spark, e0, None, ops)
+      assert(I.edgesOf(e1f) == after.edges, s"$tag: after view diverges")
+      assert(fast.added.toSet == want.added, s"$tag: added keys diverge")
+      assert(fast.deleted.toSet == want.deleted, s"$tag: deleted keys diverge")
     }
 
     // ONLY self-loop ops — hits the empty-candidate early return: the '-e 2 2'
@@ -184,37 +162,33 @@ class UpdatesLocalSpec extends SparkSpec {
     parity(Seq(GraphUpdate(1, "e", 0L, 2L, 1), GraphUpdate(2, "-e", 3L, 3L, 0),
       GraphUpdate(3, "-e", 0L, 1L, 0), GraphUpdate(4, "e", 5L, 5L, 1)), "mixed")
     // add-then-delete and delete-then-add on the same self-loop key compact
-    // to the last op, like the labeled path
+    // to the last op
     parity(Seq(GraphUpdate(1, "e", 2L, 2L, 1), GraphUpdate(2, "-e", 2L, 2L, 0)),
       "add-then-del")
     parity(Seq(GraphUpdate(1, "-e", 3L, 3L, 0), GraphUpdate(2, "e", 3L, 3L, 1)),
       "del-then-add")
   }
 
-  test("edgeDeltaCollected equals edgeDelta keys and slices (random)") {
-    import spark.implicits._
+  test("edgeDeltaCollected and edgeDeltaDirectedCollected equal the sequential interpreter's diff (random)") {
     (0 until 6).foreach { s =>
       val (v0, e0) = baseGraph(s + 50, 10)
       val ops = randomBatch(s + 50, 40, 10)
-      val batch = spark.createDataset(ops)
-      val (v1, e1) = Updates.applyBatchLabeled(spark, v0, e0, batch)
+      val before = I.graphOf(v0, e0)
+      val after = I(before, ops)
+      val (_, e1) = Updates.applyBatchLabeledLocal(spark, v0, e0, ops)
       val e1c = e1.localCheckpoint(true)
 
-      val (addDf, delDf) = Updates.edgeDelta(spark, e0, e1c, batch)
-      val addK = addDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val delK = delDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-
+      val want = I.canonicalDelta(before, after)
       val local = Updates.edgeDeltaCollected(spark, e0, e1c, ops)
-      assert(local.added.toSet == addK, s"added keys diverge at seed $s")
-      assert(local.deleted.toSet == delK, s"deleted keys diverge at seed $s")
+      assert(local.added.toSet == want.added, s"added keys diverge at seed $s")
+      assert(local.deleted.toSet == want.deleted, s"deleted keys diverge at seed $s")
+      assert(local.addedRows.toSet == want.addedRows, s"added rows diverge at seed $s")
+      assert(local.deletedRows.toSet == want.deletedRows, s"deleted rows diverge at seed $s")
 
-      // slices: rows of after/before whose canonical key is in the delta
-      def slice(t: org.apache.spark.sql.DataFrame, keys: Set[(Long, Long)]) =
-        t.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-          .filter(r => keys((math.min(r._1, r._2), math.max(r._1, r._2)))).toSet
-      assert(local.addedRows.toSet == slice(e1c, addK), s"added rows diverge at seed $s")
-      assert(local.deletedRows.toSet == slice(e0, delK), s"deleted rows diverge at seed $s")
-      val _ = v1
+      val (wantA, wantD) = I.directedDelta(before, after)
+      val (addD, delD) = Updates.edgeDeltaDirectedCollected(spark, e0, e1c, ops)
+      assert(addD.toSet == wantA, s"directed adds diverge at seed $s")
+      assert(delD.toSet == wantD, s"directed deletes diverge at seed $s")
     }
   }
 }

@@ -9,8 +9,8 @@ import graft.graph.{GraphBuilder, GraphUpdate}
 import graft.pages.PagesFixture
 
 /** CDC replay semantics (FIXTURES.md §4): replaying batches A (safe), B
-  * (cross-site bridge, unsafe merge), C (deletes, always unsafe) from state
-  * must equal recompute-from-scratch on the final graph. */
+  * (cross-site bridge, unsafe merge), C (deletes, always unsafe) through
+  * StreamGraph must equal recompute-from-scratch on the final graph. */
 class UpdatesSpec extends SparkSpec {
 
   private val S = 4
@@ -28,77 +28,60 @@ class UpdatesSpec extends SparkSpec {
     Seq(PagesFixture.url(s, k)).toDF("url").select(xxhash64(col("url"))).head().getLong(0)
   }
 
+  private def labels(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
   test("batch A: intra-component edge inserts are all safe; labels unchanged") {
     import spark.implicits._
     val (v, e) = freshGraph()
-    val cc0 = new ConnectedComponents().run(spark, e, v).state.localCheckpoint(true)
+    val sg = new StreamGraph(spark, v, e)
+    val before = labels(sg.ccState)
     // 10 inserts inside site 0 (already one component)
-    val batchA = spark.createDataset((0 until 10).map(i =>
-      GraphUpdate(i.toLong, "e", id(0, i % P), id(0, (i + 3) % P), 0)))
-    val (_, e1, res, nSafe, nUnsafe) = Updates.incrementalCC(spark, v, e, cc0, batchA)
-    assert(nSafe == 10 && nUnsafe == 0)
-    assert(res.iterations == 0, "all-safe batch must skip supersteps entirely")
-    assert(e1.count() == e.count() + 10 - e.as[(Long, Long)].collect()
+    val batchA = (0 until 10).map(i =>
+      GraphUpdate(i.toLong, "e", id(0, i % P), id(0, (i + 3) % P), 0))
+    sg.applyLocal(batchA)
+    assert(sg.totalSafe == 10 && sg.totalUnsafe == 0)
+    assert(sg.lastCcMetrics.isEmpty, "all-safe batch must skip supersteps entirely")
+    assert(sg.edges.count() == e.count() + 10 - e.as[(Long, Long)].collect()
       .count(x => (0 until 10).exists(i => x == ((id(0, i % P), id(0, (i + 3) % P))))))
-    // labels identical
-    val before = cc0.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val after = res.state.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(before == after)
+    assert(labels(sg.ccState) == before)
   }
 
   test("batch B: cross-component bridge is unsafe; warm merge equals recompute") {
-    import spark.implicits._
     val (v, e) = freshGraph()
-    val cc0 = new ConnectedComponents().run(spark, e, v).state.localCheckpoint(true)
-    val nComp0 = cc0.select("label").distinct().count()
+    val sg = new StreamGraph(spark, v, e)
+    val nComp0 = sg.ccState.select("label").distinct().count()
     // bridge site-pair (0,1) to site-pair (2,3)
-    val batchB = spark.createDataset(Seq(GraphUpdate(100L, "e", id(0, 5), id(2, 5), 0)))
-    val (v1, e1, res, nSafe, nUnsafe) = Updates.incrementalCC(spark, v, e, cc0, batchB)
-    assert(nSafe == 0 && nUnsafe == 1)
-    assert(res.iterations > 0)
-    val scratch = new ConnectedComponents().run(spark, e1, v1).state
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val warm = res.state.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(warm == scratch, "warm-start merge must equal cold recompute")
-    assert(res.state.select("label").distinct().count() == nComp0 - 1)
+    sg.applyLocal(Seq(GraphUpdate(100L, "e", id(0, 5), id(2, 5), 0)))
+    assert(sg.totalSafe == 0 && sg.totalUnsafe == 1)
+    assert(sg.lastCcMetrics.nonEmpty)
+    val scratch = labels(new ConnectedComponents().run(spark, sg.edges, sg.vertices).state)
+    assert(labels(sg.ccState) == scratch, "warm-start merge must equal cold recompute")
+    assert(sg.ccState.select("label").distinct().count() == nComp0 - 1)
   }
 
   test("batch C: deletes are always unsafe; cold recompute; replay == scratch") {
-    import spark.implicits._
     val (v, e) = freshGraph()
-    val cc0 = new ConnectedComponents().run(spark, e, v).state.localCheckpoint(true)
+    val sg = new StreamGraph(spark, v, e)
     // delete the (2,1)→(3,1) bridge edge and vertex (1,1)
-    val batchC = spark.createDataset(Seq(
+    sg.applyLocal(Seq(
       GraphUpdate(200L, "-e", id(2, 1), id(3, 1), 0),
       GraphUpdate(201L, "-v", id(1, 1), 0L, 0)))
-    val (v1, e1, res, nSafe, nUnsafe) = Updates.incrementalCC(spark, v, e, cc0, batchC)
-    assert(nSafe == 0 && nUnsafe == 2)
-    assert(v1.where(col("id") === id(1, 1)).count() == 0)
-    assert(e1.where(col("src") === id(1, 1) || col("dst") === id(1, 1)).count() == 0)
-    val scratch = new ConnectedComponents().run(spark, e1, v1).state
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(res.state.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == scratch)
+    assert(sg.totalSafe == 0 && sg.totalUnsafe == 2)
+    assert(sg.vertices.where(col("id") === id(1, 1)).count() == 0)
+    assert(sg.edges.where(col("src") === id(1, 1) || col("dst") === id(1, 1)).count() == 0)
+    val scratch = labels(new ConnectedComponents().run(spark, sg.edges, sg.vertices).state)
+    assert(labels(sg.ccState) == scratch)
   }
 
   test("compaction: within-batch add-then-delete nets to delete (last op wins)") {
-    import spark.implicits._
     val (v, e) = freshGraph()
     val a = id(0, 0); val b = id(1, 7)
-    val batch = spark.createDataset(Seq(
+    val (_, e1) = Updates.applyBatchUnlabeledLocal(spark, v, e, Seq(
       GraphUpdate(1L, "e", a, b, 0),
       GraphUpdate(2L, "-e", a, b, 0)))
-    val (_, e1) = Updates.applyBatch(spark, v, e, batch)
     assert(e1.where(col("src") === a && col("dst") === b).count() == 0)
     assert(e1.count() == e.count())
-  }
-
-  test("strict mode rejects deleting a non-existent edge (reference aborts)") {
-    import spark.implicits._
-    val (v, e) = freshGraph()
-    val batch = spark.createDataset(Seq(GraphUpdate(1L, "-e", 999999L, 888888L, 0)))
-    assertThrows[IllegalArgumentException] {
-      Updates.applyBatch(spark, v, e, batch, strict = true)
-    }
   }
 
   test("Structured Streaming ingestion: micro-batched updates reach the same state") {

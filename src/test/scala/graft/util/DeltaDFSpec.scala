@@ -65,7 +65,7 @@ class DeltaDFSpec extends SparkSpec {
     val (_, e1g) = Updates.applyBatchLabeledLocal(spark, v0, e0, ops)
     val e1gc = e1g.localCheckpoint(true)
     val general = Updates.edgeDeltaCollected(spark, e0, e1gc, ops)
-    val (e1f, fast) = Updates.pureEdgeBatchLocal(spark, e0, ops)
+    val (e1f, fast, _) = Updates.pureEdgeBatchLabeled(spark, e0, None, ops)
     assert(e1f.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet ==
       e1gc.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet)
     assert(fast.added.toSet == general.added.toSet)
