@@ -20,10 +20,11 @@ final case class AlgoResult(state: DataFrame, iterations: Int, metrics: Seq[Supe
   * interface (ParaCOSM/CSM/matching/matching.h:45-57) re-expressed for
   * join-aggregate supersteps over (edges, vertex-state) tables.
   *
-  * Lineage control: every implementation truncates per iteration, either via
-  * a StateStore commit (durable, resumable — north rule) or
-  * `localCheckpoint` (fast path for benches). Without truncation the
-  * iteration-k plan references all k-1 predecessors (SURVEY.md §7.4-1).
+  * Lineage control: every implementation runs its supersteps through
+  * `Superstep`, which truncates per iteration with `localCheckpoint` and,
+  * given a StateStore, commits each superstep (durable, resumable — north
+  * rule). Without truncation the iteration-k plan references all k-1
+  * predecessors (SURVEY.md §7.4-1).
   */
 trait Algorithm {
   def name: String

@@ -76,17 +76,18 @@ final class ConnectedComponents(maxIter: Int = 50,
     val bigGraph = und.count() > 100000L
     def sh(df: DataFrame): DataFrame = if (bigGraph) df.hint("shuffle_hash") else df
 
-    var state = init.getOrElse(vertices.select(col("id")).distinct()
-      .withColumn("label", col("id"))).localCheckpoint(true).persist()
-    var it = 0
-    var changed = Long.MaxValue
-    var approxLabels = Long.MaxValue // from the previous superstep's agg
-    var rowsPrev = Long.MaxValue
+    val start = init.getOrElse(vertices.select(col("id")).distinct()
+      .withColumn("label", col("id"))).localCheckpoint(true)
     saltedSupersteps = 0
-    val metrics = scala.collection.mutable.ArrayBuffer.empty[SuperstepMetrics]
-
-    while (it < maxIter && changed > 0) {
-      val t0 = System.nanoTime()
+    // `labels` (approx distinct) and `rows` of the previous superstep's
+    // aggregate drive the hot-label probe below
+    val res = Superstep.run(spark, name, start, maxIter,
+      aggs = Seq(
+        sum(when(col("newLabel") =!= col("label"), 1L).otherwise(0L)).as("changed"),
+        count(lit(1)).as("rows"),
+        approx_count_distinct(col("newLabel")).as("labels")),
+      keep = _.select(col("id"), col("newLabel").as("label")),
+      store = store) { (_, state, prev) =>
       // (1) neighbor min: for each dst, min over labels of its in-neighbors.
       // shuffle-hash (opt round 6, guide §3.1): state fits per-partition
       // hash maps; SMJ would re-sort the big und side every superstep.
@@ -103,7 +104,10 @@ final class ConnectedComponents(maxIter: Int = 50,
       // the whole state has fewer — skip the per-superstep hot probe (a
       // full groupBy + checkpoint + count, 2 extra jobs) below that size:
       // small/mid graphs pay zero probes, the 100 TB regime still probes
-      val concentrated = rowsPrev > hotLabelThreshold && approxLabels < rowsPrev / 4
+      val concentrated = prev.exists { r =>
+        val rows = r.getAs[Long]("rows")
+        rows > hotLabelThreshold && r.getAs[Long]("labels") < rows / 4
+      }
       def plainJump(): DataFrame =
         cand.join(sh(ptr), cand("label") === ptr("lid"), "left_outer")
           .select(col("id"), col("label"),
@@ -114,58 +118,30 @@ final class ConnectedComponents(maxIter: Int = 50,
       lazy val hot = state.groupBy(col("label")).agg(count(lit(1)).as("n"))
         .where(col("n") > hotLabelThreshold).select(col("label").as("hl"))
         .localCheckpoint(true)
-      val next =
-        if (!concentrated || hot.limit(1).count() == 0) plainJump()
-        else {
-          saltedSupersteps += 1
-          val candS = cand
-            .join(broadcast(hot), cand("label") === col("hl"), "left_outer")
-            .withColumn("salt",
-              when(col("hl").isNotNull, pmod(xxhash64(col("id")), lit(saltK.toLong)))
-                .otherwise(lit(0L)))
-          // build side: cold rows once at salt 0; hot-label rows replicated
-          // per salt (the broadcast-the-hot-frontier half of the rule)
-          val ptrHot = ptr.join(broadcast(hot), ptr("lid") === col("hl"), "left_semi")
-            .withColumn("psalt", explode(array((0 until saltK).map(s => lit(s.toLong)): _*)))
-          val ptrCold = ptr.join(broadcast(hot), ptr("lid") === col("hl"), "left_anti")
-            .withColumn("psalt", lit(0L))
-          val ptr2 = ptrCold.unionByName(ptrHot)
-          candS.join(ptr2,
-              candS("label") === ptr2("lid") && candS("salt") === ptr2("psalt"),
-              "left_outer")
-            .select(candS("id"), candS("label"),
-              least(col("cand"), coalesce(col("plabel"), col("cand"))).as("newLabel"))
-        }
-
-      // LAZY checkpoint + aggregate = ONE action per superstep (opt round
-      // 6): the agg materializes the checkpoint, and the commit/state reads
-      // the materialized result (no double compute, one fewer job).
-      val nextChk = next.localCheckpoint(false)
-      val agg = nextChk.agg(
-        sum(when(col("newLabel") =!= col("label"), 1L).otherwise(0L)).as("changed"),
-        count(lit(1)).as("rows"),
-        approx_count_distinct(col("newLabel")).as("labels")).head()
-      // sum() over zero rows is null: an EMPTY graph (e.g. a scoped delete
-      // recompute whose touched vertices all died) converges immediately
-      changed = if (agg.isNullAt(0)) 0L else agg.getLong(0)
-      val rows = agg.getLong(1)
-      approxLabels = agg.getLong(2)
-      rowsPrev = rows
-      val wallMs = (System.nanoTime() - t0) / 1000000L
-
-      it += 1
-      val m = SuperstepMetrics(it, wallMs, rows, 0.0, 0.0, changed)
-      metrics += m
-      val newState = nextChk.select(col("id"), col("newLabel").as("label"))
-      val prev = state
-      state = (store match {
-        case Some(s) => s.commit(spark, name, it, newState, 0.0, 0.0, changed, wallMs)
-        case None => newState
-      }).persist()
-      prev.unpersist()
+      if (!concentrated || hot.limit(1).count() == 0) plainJump()
+      else {
+        saltedSupersteps += 1
+        val candS = cand
+          .join(broadcast(hot), cand("label") === col("hl"), "left_outer")
+          .withColumn("salt",
+            when(col("hl").isNotNull, pmod(xxhash64(col("id")), lit(saltK.toLong)))
+              .otherwise(lit(0L)))
+        // build side: cold rows once at salt 0; hot-label rows replicated
+        // per salt (the broadcast-the-hot-frontier half of the rule)
+        val ptrHot = ptr.join(broadcast(hot), ptr("lid") === col("hl"), "left_semi")
+          .withColumn("psalt", explode(array((0 until saltK).map(s => lit(s.toLong)): _*)))
+        val ptrCold = ptr.join(broadcast(hot), ptr("lid") === col("hl"), "left_anti")
+          .withColumn("psalt", lit(0L))
+        val ptr2 = ptrCold.unionByName(ptrHot)
+        candS.join(ptr2,
+            candS("label") === ptr2("lid") && candS("salt") === ptr2("psalt"),
+            "left_outer")
+          .select(candS("id"), candS("label"),
+            least(col("cand"), coalesce(col("plabel"), col("cand"))).as("newLabel"))
+      }
     }
 
     und.unpersist()
-    AlgoResult(state, it, metrics.toSeq)
+    res
   }
 }

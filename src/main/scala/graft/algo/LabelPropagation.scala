@@ -1,7 +1,6 @@
 package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.graph.GraphBuilder
@@ -36,40 +35,16 @@ final class LabelPropagation(maxIter: Int = 10) extends Algorithm {
     // re-exchanges per superstep
     val und = GraphBuilder.undirected(edges).localCheckpoint(true)
 
-    var state = vertices.select(col("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint(true).persist()
-    var it = 0
-    var changed = Long.MaxValue
-    val metrics = scala.collection.mutable.ArrayBuffer.empty[SuperstepMetrics]
-
-    while (it < maxIter && changed > 0) {
-      val t0 = System.nanoTime()
-      val next = step(und, state)
-      // LAZY checkpoint + aggregate = ONE action per superstep (opt round
-      // 6, guide §1.2): the eager checkpoint was a separate job whose rows
-      // the immediately-following agg re-scanned anyway; the agg now
-      // materializes the checkpoint as a side effect (Bfs.depths' fusion).
-      val nextChk = next.localCheckpoint(false)
-      val agg = nextChk.agg(
+    val start = vertices.select(col("id")).distinct()
+      .withColumn("label", col("id")).localCheckpoint(true)
+    val res = Superstep.run(spark, name, start, maxIter,
+      aggs = Seq(
         sum(when(col("newLabel") =!= col("label"), 1L).otherwise(0L)).as("changed"),
-        count(lit(1)).as("rows")).head()
-      changed = agg.getLong(0)
-      val wallMs = (System.nanoTime() - t0) / 1000000L
-
-      it += 1
-      val m = SuperstepMetrics(it, wallMs, agg.getLong(1), 0.0, 0.0, changed)
-      metrics += m
-      val newState = nextChk.select(col("id"), col("newLabel").as("label"))
-      val prev = state
-      state = (store match {
-        case Some(s) => s.commit(spark, name, it, newState, 0.0, 0.0, changed, wallMs)
-        case None => newState
-      }).persist()
-      prev.unpersist()
-    }
-
+        count(lit(1)).as("rows")),
+      keep = _.select(col("id"), col("newLabel").as("label")),
+      store = store) { (_, state, _) => step(und, state) }
     und.unpersist()
-    AlgoResult(state, it, metrics.toSeq)
+    res
   }
 
   /** One synchronous LP superstep: (id, label, newLabel). Exposed for the

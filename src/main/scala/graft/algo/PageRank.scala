@@ -31,9 +31,8 @@ import graft.state.StateStore
   *  - hub in-degree skew is absorbed by map-side partial aggregation (sum is
   *    algebraic) — the reference's thread-local-counter + reduce pattern
   *    (ParaCOSM parallel_graphflow.cpp:988-990) is Spark's default physical agg.
-  *  - lineage is truncated every superstep (StateStore commit or
-  *    localCheckpoint) — mandatory for iterative Catalyst plans
-  *    (SURVEY.md §7.4-1).
+  *  - lineage is truncated every superstep (Superstep's localCheckpoint) —
+  *    mandatory for iterative Catalyst plans (SURVEY.md §7.4-1).
   *
   * Streaming maintenance (the per-batch O(|Δ|) discipline): `Prepared` can
   * carry a signed PATCH overlay (src, dst, w ∈ {−1, +1}) over a FIXED base
@@ -107,7 +106,7 @@ final class PageRank(
                    startRanks: Option[DataFrame], ownPrepared: Boolean): AlgoResult = {
     val n = g.n
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    var ranks = (startRanks match {
+    val start = (startRanks match {
       // seeds/snapshots carry (id, rank); dangling + outDeg come from the
       // prepared vertex state (ids are verts-exact by construction)
       case Some(df) => g.verts.select(col("id"), col("outDeg"), col("dangling"))
@@ -119,43 +118,22 @@ final class PageRank(
       case None => g.verts.select(col("id"), lit(1.0 / n).as("rank"),
         col("dangling"), col("outDeg"))
     }).localCheckpoint(true)
-    var danglingMass = PageRank.danglingMass(ranks)
-
-    var it = startIter
-    var linf = Double.MaxValue
-    val metrics = scala.collection.mutable.ArrayBuffer.empty[SuperstepMetrics]
-
-    while (it < maxIter && linf >= tol) {
-      val t0 = System.nanoTime()
-      val stepped = PageRank.superstep(g, ranks, danglingMass, damping)
+    val dm0 = PageRank.danglingMass(start)
+    // one scan of each fresh state: delta norms + the next dangling mass
+    val res = Superstep.run(spark, name, start, maxIter,
+      aggs = Seq(sum(col("d")).as("l1"), max(col("d")).as("linf"),
+        sum(when(col("dangling"), col("rank")).otherwise(0.0)).as("dm"),
+        count(lit(1)).as("rows")),
+      keep = _.select("id", "rank", "dangling", "outDeg"),
+      halt = _.deltaLinf < tol,
+      store = store, commit = Some(_.select("id", "rank", "dangling")),
+      startIter = startIter) { (_, ranks, prev) =>
+      PageRank.superstep(g, ranks, prev.fold(dm0)(_.getAs[Double]("dm")), damping)
         .withColumn("d", abs(col("rank") - col("prev")))
-      val next = stepped
         .select(col("id"), col("rank"), col("dangling"), col("outDeg"), col("d"))
-        // LAZY: the delta-norm agg below materializes the checkpoint in the
-        // same action (opt round 6 — one job per superstep, not two); prev
-        // is only unpersisted after that agg has run
-        .localCheckpoint(false)
-      // one scan of the fresh state: delta norms + next dangling mass
-      val row = next.agg(
-        sum(col("d")).as("l1"), max(col("d")).as("linf"),
-        sum(when(col("dangling"), col("rank")).otherwise(0.0)).as("dm")).head()
-      val l1 = row.getDouble(0)
-      linf = row.getDouble(1)
-      danglingMass = row.getDouble(2)
-      val wallMs = (System.nanoTime() - t0) / 1000000L
-
-      it += 1
-      val m = SuperstepMetrics(it, wallMs, n.toLong, l1, linf, 0L)
-      metrics += m
-      val prev = ranks
-      store.foreach(_.commit(spark, name, it,
-        next.select("id", "rank", "dangling"), l1, linf, 0L, wallMs))
-      ranks = next.select("id", "rank", "dangling", "outDeg")
-      prev.unpersist()
     }
-
     if (ownPrepared) { g.adj.unpersist(); g.verts.unpersist() }
-    AlgoResult(ranks.select("id", "rank"), it, metrics.toSeq)
+    res.copy(state = res.state.select("id", "rank"))
   }
 }
 
@@ -257,17 +235,7 @@ object PageRank {
     ranks.agg(sum(when(col("dangling"), col("rank")).otherwise(0.0))).head().getDouble(0)
 
   /** One superstep: returns (id, rank, prev, dangling, outDeg) — NOT yet
-    * materialized. Exactly one shuffle (the groupBy(dst) sum).
-    *
-    * Join-shape constraint (hard-won): the state chain must pass through a
-    * LEFT OUTER join, never an inner one. Catalyst's size-only stats
-    * visitor estimates inner-join size as the PRODUCT of the children and
-    * `localCheckpoint` preserves origin stats across the lineage cut — an
-    * inner join of state with itself squares the BigInt sizeInBytes every
-    * superstep, and by iteration ~20 the driver spends seconds per plan in
-    * BigInteger.multiply inside stats estimation. With state as the left
-    * side of one left-outer join (size = sum, not product), the estimate
-    * grows only linearly in the exponent. */
+    * materialized. Exactly one shuffle (the groupBy(dst) sum). */
   def superstep(g: Prepared, ranks: DataFrame, danglingMass: Double,
                 damping: Double): DataFrame = {
     val n = g.n
@@ -319,24 +287,6 @@ object PageRank {
     * unrolls the identical recurrence k times (floating convergence loops
     * can't cross engines; a fixed iteration count can, with rounding). */
   def fixedIterations(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
-                      iters: Int, damping: Double = 0.85): DataFrame = {
-    val g = prepare(spark, edges, vertices)
-    var ranks = g.verts.select(col("id"), lit(1.0 / g.n).as("rank"),
-      col("dangling"), col("outDeg")).localCheckpoint(true)
-    var dm = danglingMass(ranks)
-    for (i <- 1 to iters) {
-      // LAZY checkpoint: the danglingMass agg materializes it in one action
-      // (opt round 6). The LAST iteration stays EAGER — no agg follows it,
-      // and prev.unpersist() below would otherwise drop blocks a still-lazy
-      // plan needs (a truncated-lineage checkpoint cannot recompute).
-      val next = superstep(g, ranks, dm, damping)
-        .select("id", "rank", "dangling", "outDeg").localCheckpoint(i == iters)
-      val prev = ranks
-      ranks = next
-      if (i < iters) dm = danglingMass(ranks)
-      prev.unpersist()
-    }
-    g.adj.unpersist(); g.verts.unpersist()
-    ranks.select("id", "rank")
-  }
+                      iters: Int, damping: Double = 0.85): DataFrame =
+    new PageRank(damping, tol = 0.0, maxIter = iters).run(spark, edges, vertices).state
 }

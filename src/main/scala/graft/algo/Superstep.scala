@@ -1,0 +1,73 @@
+package graft.algo
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, Row, SparkSession}
+
+import graft.state.StateStore
+
+/** The one superstep loop of the Dataset algorithms — Pregelix's iteration
+  * operator (VLDB 2014) over (edges, vertex-state) tables. An algorithm
+  * supplies its `step` plan (message, combine, apply) and its halt rule;
+  * the driver owns the rest:
+  *  - ONE aggregate action per superstep: the step's plan is checkpointed
+  *    lazily and the caller's aggregate columns materialize it, so the
+  *    state is computed once and never re-scanned for convergence (Spark
+  *    still posts the lazy checkpoint as its own SQL execution; under AQE
+  *    it runs the step's shuffle stages);
+  *  - the checkpoint's carried size estimate is capped
+  *    (GraftSqlShims.checkpoint), so state chains may join the state with
+  *    itself without the estimate multiplying every superstep;
+  *  - SuperstepMetrics, read from the aggregate row's `rows`, `l1`, `linf`
+  *    and `changed` fields (absent or null fields are 0);
+  *  - the optional StateStore commit, a side write of `commit(chk)`;
+  *  - releasing each state's checkpoint once its successor is
+  *    materialized — never the caller's `init`.
+  * The loop continues from the checkpoint itself, with a store too: it is
+  * partitioned like the step's output, while a commit re-read is an
+  * unpartitioned parquet scan, and persisting the state again made AQE spend
+  * extra jobs materializing the cache and measured slower for every
+  * algorithm.
+  */
+object Superstep {
+
+  /** Iterate from `init` (caller-owned, materialized) while fewer than
+    * `maxIter` supersteps have run (counting from `startIter`) and the last
+    * one did not `halt`. `step(it, state, prev)` plans superstep `it` from
+    * the current state and the previous superstep's aggregate row (None
+    * before the first); the next state is `keep(checkpoint)`. */
+  def run(spark: SparkSession, name: String, init: DataFrame, maxIter: Int,
+          aggs: Seq[Column], keep: DataFrame => DataFrame,
+          halt: SuperstepMetrics => Boolean = _.changed == 0,
+          store: Option[StateStore] = None,
+          commit: Option[DataFrame => DataFrame] = None,
+          startIter: Int = 0)(
+          step: (Int, DataFrame, Option[Row]) => DataFrame): AlgoResult = {
+    var state = init
+    var stateChk = Option.empty[RDD[_]]
+    var prev = Option.empty[Row]
+    val metrics = scala.collection.mutable.ArrayBuffer.empty[SuperstepMetrics]
+    var it = startIter
+    while (it < maxIter && !metrics.lastOption.exists(halt)) {
+      val t0 = System.nanoTime()
+      val (chk, rdd) = GraftSqlShims.checkpoint(step(it + 1, state, prev))
+      val row = chk.agg(aggs.head, aggs.tail: _*).head()
+      val wallMs = (System.nanoTime() - t0) / 1000000L
+      it += 1
+      val m = SuperstepMetrics(it, wallMs, field(row, "rows", 0L), field(row, "l1", 0.0),
+        field(row, "linf", 0.0), field(row, "changed", 0L))
+      metrics += m
+      store.foreach(_.commit(spark, name, it, commit.getOrElse(keep)(chk),
+        m.deltaL1, m.deltaLinf, m.changed, wallMs))
+      stateChk.foreach(GraftSqlShims.release)
+      stateChk = Some(rdd)
+      state = keep(chk)
+      prev = Some(row)
+    }
+    AlgoResult(state, it, metrics.toSeq)
+  }
+
+  private def field[T](row: Row, name: String, absent: T): T = {
+    val i = row.schema.fieldNames.indexOf(name)
+    if (i < 0 || row.isNullAt(i)) absent else row.getAs[T](i)
+  }
+}

@@ -118,13 +118,6 @@ object CandidateIndex {
     Index(query, per, vertices.select(col("id")).localCheckpoint(true))
   }
 
-  /** Back-compat map view (builds its own relation). */
-  def build(spark: SparkSession, query: QueryGraph,
-            edges: DataFrame, vertices: DataFrame, rounds: Int = 2): Map[String, DataFrame] = {
-    val rel = GraphMatcher.materializedRelation(edges, vertices)
-    buildOnRel(spark, query, rel, vertices, rounds).candidates
-  }
-
   /** What an insert-side refresh produced besides the index: per-round
     * frontier sizes (the O(|delta|)-shape evidence) and the per-round DELTA
     * CANDIDATE SETS (qv, id) — newly-valid candidates only. The delta views

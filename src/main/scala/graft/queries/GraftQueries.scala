@@ -344,18 +344,13 @@ object GraftQueries {
       // round 6, guide §2.6): each is a chain of small jobs over the two
       // checkpointed tables, and the fixture graph is far below the
       // cluster's parallelism — results are unchanged, the driver just
-      // stops serializing ~12 sub-second jobs
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.global
-      val fComps = Future(new ConnectedComponents(maxIter = 60).run(s, eDF, vDF)
-        .state.select("label").distinct().count())
-      val fTris = Future(TriangleCount.countTriangles(s, eDF).head().getLong(0))
-      val fDangling = Future(vDF.join(eDF.select(col("src").as("id")), Seq("id"), "left_anti").count())
-      val (nComps, nTris, nDangling) =
-        (Await.result(fComps, Duration.Inf), Await.result(fTris, Duration.Inf),
-          Await.result(fDangling, Duration.Inf))
+      // stops serializing ~12 sub-second jobs. A failing branch cancels
+      // the others' jobs before its exception surfaces.
+      val Seq(nComps, nTris, nDangling) = graft.util.Limits.all(s, "q_pages_stats")(
+        () => new ConnectedComponents(maxIter = 60).run(s, eDF, vDF)
+          .state.select("label").distinct().count(),
+        () => TriangleCount.countTriangles(s, eDF).head().getLong(0),
+        () => vDF.join(eDF.select(col("src").as("id")), Seq("id"), "left_anti").count())
       Seq((nPages, nEdges, nComps, nTris, nDangling))
         .toDF("n_pages", "n_edges", "n_components", "n_triangles", "n_dangling")
     }),

@@ -1,6 +1,6 @@
 package graft.util
 
-import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit, TimeoutException}
 
 import org.apache.spark.sql.SparkSession
 
@@ -42,6 +42,39 @@ object Limits {
         spark.sparkContext.cancelJobGroup(groupId)
         fut.cancel(true)
         None
+    } finally pool.shutdown()
+  }
+
+  /** Run `bodies` (driver code that launches Spark jobs on `spark`)
+    * concurrently under one fresh job group and return their results in
+    * order. On the first failure — or an interrupt of the calling thread,
+    * e.g. from runWithTimeout — every job of the group, running or not yet
+    * submitted, is cancelled, the other bodies are awaited, and the first
+    * failure is rethrown: no job outlives the call. */
+  def all[T](spark: SparkSession, groupId: String)(bodies: (() => T)*): Seq[T] = {
+    val sc = spark.sparkContext
+    val group = s"$groupId-${java.util.UUID.randomUUID()}"
+    val pool = Executors.newFixedThreadPool(bodies.size, r => {
+      val t = new Thread(r, s"graft-all-$groupId"); t.setDaemon(true); t
+    })
+    val done = new ExecutorCompletionService[T](pool)
+    val futures = bodies.map(body => done.submit(() => {
+      sc.setJobGroup(group, groupId, interruptOnCancel = true)
+      try body() finally sc.clearJobGroup()
+    }))
+    try {
+      bodies.foreach(_ => done.take().get())
+      futures.map(_.get())
+    } catch {
+      case e: Throwable =>
+        sc.cancelJobGroupAndFutureJobs(group)
+        val interrupted = Thread.interrupted()
+        futures.foreach(f => try f.get() catch { case _: Throwable => () })
+        if (interrupted) Thread.currentThread().interrupt()
+        throw (e match {
+          case ee: ExecutionException if ee.getCause != null => ee.getCause
+          case other => other
+        })
     } finally pool.shutdown()
   }
 }

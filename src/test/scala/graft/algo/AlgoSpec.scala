@@ -3,13 +3,19 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.{Seconds, Span}
+
 import graft.{Oracles, SparkSpec}
 import graft.graph.GraphBuilder
 import graft.pages.PagesFixture
+import graft.state.StateStore
 
 /** Algorithm correctness vs plain-Scala oracles on the deterministic pages
   * fixture (FIXTURES.md §6.3-6.5) plus the golden micro-fixtures (§5). */
-class AlgoSpec extends SparkSpec {
+class AlgoSpec extends SparkSpec with TimeLimits {
+
+  private implicit val signaler: Signaler = ThreadSignaler
 
   private val S = 6
   private val P = 15
@@ -145,6 +151,95 @@ class AlgoSpec extends SparkSpec {
     import spark.implicits._
     val e = Seq((0L, 1L), (2L, 1L), (0L, 2L), (2L, 3L)).toDF("src", "dst") // same triangle, mixed dirs
     assert(TriangleCount.countTriangles(spark, e).head().getLong(0) == 1L)
+  }
+
+  // ------------------------------------------------------ superstep driver
+
+  /** SQL executions that `body` posts. */
+  private def executions[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    org.apache.spark.GraftSparkShims.waitListenerBusEmpty(sc)
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            n.incrementAndGet(); ()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.GraftSparkShims.waitListenerBusEmpty(sc)
+      (r, n.get())
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("one aggregate action per superstep: CC, LP, PageRank, fixedIterations, BFS") {
+    // Spark posts two SQL executions per superstep: the lazy checkpoint
+    // (under AQE it runs the step's shuffle stages) and the aggregate
+    // action that materializes it. Setup counts are fixed per algorithm.
+    val (vIds, _, vDF, eDF) = fixture
+    def check(what: String, setup: Int, supersteps: Int, seen: Int): Unit =
+      assert(seen == setup + 2 * supersteps,
+        s"$what: $seen SQL executions for $supersteps supersteps (setup $setup)")
+    val (cc, ccN) = executions(new ConnectedComponents().run(spark, eDF, vDF))
+    // the undirected view's count; the initial labeling's checkpoint
+    check("cc", 2, cc.iterations, ccN)
+    val (lp, lpN) = executions(new LabelPropagation(maxIter = 5).run(spark, eDF, vDF))
+    // checkpoints of the undirected view and of the initial labeling
+    check("lp", 2, lp.iterations, lpN)
+    // prepare: out-degree, adjacency and vertex-state checkpoints, the hub
+    // probe, the |V| count; then the initial ranks and their dangling mass
+    val (pr, prN) = executions(new PageRank(tol = 1e-6).run(spark, eDF, vDF))
+    check("pagerank", 7, pr.iterations, prN)
+    val (_, fiN) = executions(PageRank.fixedIterations(spark, eDF, vDF, iters = 10))
+    check("fixedIterations", 7, 10, fiN)
+    import spark.implicits._
+    val (depths, bfsN) = executions(Bfs.depths(spark, eDF, Seq(vIds.min).toDF("id")))
+    // one level per depth plus the empty level that halts the loop
+    val levels = depths.agg(max("depth")).head().getLong(0).toInt + 1
+    // the undirected view's count; the sources' checkpoint
+    check("bfs", 2, levels, bfsN)
+  }
+
+  test("CC on 64 scrambled 64-vertex rings: exact, size estimate capped") {
+    // ~30 supersteps: without capped checkpoint stats the estimate
+    // multiplies every superstep and planning stalls in BigInteger math
+    import spark.implicits._
+    val perm = new scala.util.Random(17).shuffle((0L until 64L * 64).toVector)
+    val eIds = for (r <- 0 until 64; i <- 0 until 64)
+      yield (perm(r * 64 + i), perm(r * 64 + (i + 1) % 64))
+    failAfter(Span(300, Seconds)) {
+      val res = new ConnectedComponents(maxIter = 60)
+        .run(spark, eIds.toDF("src", "dst"), perm.toDF("id"))
+      val est = res.state.queryExecution.optimizedPlan.stats.sizeInBytes
+      assert(est <= BigInt(Long.MaxValue), s"state size estimate of ${est.bitLength} bits")
+      assert(res.iterations > 20, s"${res.iterations} supersteps")
+      assert(res.state.as[(Long, Long)].collect().toMap == Oracles.components(perm, eIds))
+    }
+  }
+
+  test("CC and LP through a StateStore: one manifest per superstep matching its metrics") {
+    import spark.implicits._
+    val (_, _, vDF, eDF) = fixture
+    def field(json: String, name: String): Long =
+      s""""$name":(\\d+)""".r.findFirstMatchIn(json).get.group(1).toLong
+    for (algo <- Seq(new ConnectedComponents(), new LabelPropagation(maxIter = 5))) {
+      val store = new StateStore(
+        java.nio.file.Files.createTempDirectory("graft-algo-store").toString)
+      val res = algo.run(spark, eDF, vDF, Some(store))
+      assert(res.iterations > 0)
+      assert(store.latestCompleted(algo.name) == res.iterations, algo.name)
+      res.metrics.foreach { m =>
+        val manifest = store.manifestJson(algo.name, m.iteration)
+        assert(field(manifest, "changed") == m.changed, s"${algo.name} it ${m.iteration}")
+        assert(field(manifest, "rowCount") == m.rows, s"${algo.name} it ${m.iteration}")
+      }
+      val last = store.load(spark, algo.name, res.iterations).as[(Long, Long)].collect().toMap
+      assert(last == res.state.as[(Long, Long)].collect().toMap, algo.name)
+    }
   }
 
   // ----------------------------------------------- permutation invariance

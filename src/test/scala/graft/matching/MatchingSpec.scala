@@ -102,7 +102,8 @@ class MatchingSpec extends SparkSpec {
     for ((name, q) <- queries.take(4)) {
       val (verts, edges) = randomLabeled(11)
       val (eDF, vDF) = toDfs(verts, edges)
-      val cand = CandidateIndex.build(spark, q, eDF, vDF, rounds = 2)
+      val cand = CandidateIndex.buildOnRel(spark, q,
+        GraphMatcher.materializedRelation(eDF, vDF), vDF, rounds = 2).candidates
       val withIdx = GraphMatcher.findMatches(spark, q, eDF, vDF,
         candidates = Some(cand)).count()
       val without = GraphMatcher.findMatches(spark, q, eDF, vDF).count()
@@ -220,7 +221,9 @@ class MatchingSpec extends SparkSpec {
     val depths = graft.algo.Bfs.depths(spark, edges, Seq(0L).toDF("id"))
       .as[(Long, Long)].collect().toMap
     assert(depths == (0L to 7L).map(i => i -> i).toMap) // 100/101 unreachable
-    assert(graft.algo.Bfs.eccentricity(spark, edges, 3L) == 4L)
+    val ecc3 = graft.algo.Bfs.depths(spark, edges, Seq(3L).toDF("id"))
+      .agg(max("depth")).head().getLong(0)
+    assert(ecc3 == 4L) // eccentricity of vertex 3
     val verts = ((0L to 7L) ++ Seq(100L, 101L)).toDF("id")
     assert(graft.algo.Bfs.diameterExact(spark, edges, verts) == 7L)
   }
@@ -240,5 +243,35 @@ class MatchingSpec extends SparkSpec {
       spark.range(10).count()
     }
     assert(ok.contains(10L))
+  }
+
+  test("Limits.all: a failing branch surfaces and leaves no sibling job running") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val boom = new IllegalStateException("boom")
+    val t0 = System.nanoTime()
+    val thrown = intercept[IllegalStateException] {
+      graft.util.Limits.all(spark, "all-test")(
+        // a long job that only cancellation ends
+        () => spark.range(1000000000L).as[Long].map { x => Thread.sleep(0, 100); x }
+          .agg(sum(col("value"))).head().getLong(0),
+        // a chain of short jobs: later ones must not start after the cancel
+        () => (1 to 100000).map(i => spark.range(i % 7 + 1).count()).sum,
+        () => { Thread.sleep(1500); throw boom })
+    }
+    val elapsedMs = (System.nanoTime() - t0) / 1000000L
+    assert(thrown eq boom)
+    assert(elapsedMs < 60000, s"cancellation took ${elapsedMs}ms")
+    // a cancelled job's end event reaches the status store just after its
+    // waiter fails; a job that outlived the call would stay active
+    val deadline = System.nanoTime() + 5000000000L
+    while (sc.statusTracker.getActiveJobIds().nonEmpty && System.nanoTime() < deadline) {
+      org.apache.spark.GraftSparkShims.waitListenerBusEmpty(sc)
+      Thread.sleep(50)
+    }
+    assert(sc.statusTracker.getActiveJobIds().isEmpty, "a sibling job outlived the call")
+    // and when every branch succeeds, results come back in order
+    assert(graft.util.Limits.all(spark, "all-ok")(
+      () => spark.range(3).count(), () => spark.range(5).count()) == Seq(3L, 5L))
   }
 }
