@@ -23,7 +23,7 @@ import graft.state.StateStore
   *  - releasing each state's checkpoint once its successor is
   *    materialized — never the caller's `init`.
   * The loop continues from the checkpoint itself, with a store too: it is
-  * partitioned like the step's output, while a commit re-read is an
+  * partitioned like the step's output, while a snapshot `load` is an
   * unpartitioned parquet scan, and persisting the state again made AQE spend
   * extra jobs materializing the cache and measured slower for every
   * algorithm.

@@ -2,8 +2,11 @@ package graft.state
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HadoopPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Per-superstep metrics recorded in the lineage manifest (north rule:
   * partition id, iteration, row counts, delta norms). The reference's
@@ -49,43 +52,64 @@ final class StateStore(val root: String) {
 
   private def dir(name: String, it: Int): Path = Paths.get(root, name, s"it=$it")
 
-  /** Write one superstep snapshot atomically and return the re-read frame
-    * (re-reading truncates Catalyst lineage — without this, iteration k's
-    * plan references all k-1 predecessors and analysis time explodes,
-    * SURVEY.md §7.4-1). */
+  /** Write one superstep snapshot atomically: one Spark job, the parquet
+    * write. The manifest's lineage comes from the footers of the files just
+    * written — one entry per written partition, its id taken from Spark's
+    * `part-NNNNN-…` file name — so it describes the stored snapshot, not
+    * the pre-write plan, without re-reading it. `load` is the only read
+    * path; Catalyst lineage is truncated by Superstep's capped checkpoint,
+    * not by the store. A failed commit leaves no temporary directory. */
   def commit(spark: SparkSession, name: String, iteration: Int, df: DataFrame,
              deltaL1: Double = 0.0, deltaLinf: Double = 0.0, changed: Long = 0L,
-             wallMs: Long = 0L): DataFrame = {
+             wallMs: Long = 0L): Unit = {
     val target = dir(name, iteration)
     val tmp = Paths.get(root, name, s".tmp-it=$iteration-${System.nanoTime()}")
     Files.createDirectories(tmp)
-    val dataTmp = tmp.resolve("data")
-    df.write.mode("overwrite").parquet(dataTmp.toString)
+    try {
+      val dataTmp = tmp.resolve("data")
+      df.write.mode("overwrite").parquet(dataTmp.toString)
 
-    // Lineage from the re-read parquet (one cheap columnless scan) — NOT
-    // from `df`, which would re-run the full upstream plan a second time
-    // (at 100× scale that doubles every committed superstep) and would
-    // describe the pre-write computation rather than the stored snapshot.
-    val perPart = spark.read.parquet(dataTmp.toString)
-      .groupBy(spark_partition_id().as("pid")).count()
-      .collect().map(r => PartitionLineage(r.getInt(0), r.getLong(1)))
-      .sortBy(_.partitionId).toSeq
-    // memory/storage-cost aggregate (reference counters report peak RSS,
-    // utils/utils.h:38-67; here: exact on-disk snapshot bytes)
-    val byteSize = {
-      val s = Files.walk(dataTmp)
-      try s.iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
-      finally s.close()
+      val files = {
+        val s = Files.list(dataTmp)
+        try s.iterator().asScala.toSeq finally s.close()
+      }
+      val conf = spark.sparkContext.hadoopConfiguration
+      // Hadoop's hidden-file rule: `_SUCCESS` and `.crc` are not data
+      val perPart = files.filterNot { f =>
+        val n = f.getFileName.toString
+        n.startsWith("_") || n.startsWith(".")
+      }.map { f =>
+        val pid = f.getFileName.toString match {
+          case StateStore.DataFile(id) => id.toInt
+          case n => throw new IllegalStateException(
+            s"snapshot $name it=$iteration: $n is not a Spark part-NNNNN data file")
+        }
+        pid -> footerRowCount(f, conf)
+      }.groupMapReduce(_._1)(_._2)(_ + _)
+        .map { case (pid, rows) => PartitionLineage(pid, rows) }
+        .toSeq.sortBy(_.partitionId)
+      // memory/storage-cost aggregate (reference counters report peak RSS,
+      // utils/utils.h:38-67; here: exact on-disk snapshot bytes)
+      val byteSize = files.filter(Files.isRegularFile(_)).map(Files.size).sum
+      val manifest = SnapshotManifest(name, iteration, perPart.map(_.rowCount).sum,
+        deltaL1, deltaLinf, changed, wallMs, perPart, byteSize)
+
+      // Commit protocol: data first, manifest last, then atomic dir rename.
+      Files.writeString(tmp.resolve("manifest.json"), manifest.toJson)
+      deleteRecursively(target)
+      Files.createDirectories(target.getParent)
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    } catch {
+      case e: Throwable =>
+        try deleteRecursively(tmp) catch { case c: Throwable => e.addSuppressed(c) }
+        throw e
     }
-    val manifest = SnapshotManifest(name, iteration, perPart.map(_.rowCount).sum,
-      deltaL1, deltaLinf, changed, wallMs, perPart, byteSize)
+  }
 
-    // Commit protocol: data first, manifest last, then atomic dir rename.
-    Files.writeString(tmp.resolve("manifest.json"), manifest.toJson)
-    deleteRecursively(target)
-    Files.createDirectories(target.getParent)
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-    spark.read.parquet(target.resolve("data").toString)
+  private def footerRowCount(file: Path, conf: Configuration): Long = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new HadoopPath(file.toUri), conf))
+    try reader.getRecordCount finally reader.close()
   }
 
   /** Highest iteration with a committed manifest, or -1. Torn snapshots
@@ -112,7 +136,9 @@ final class StateStore(val root: String) {
 
   private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      val s = Files.walk(p)
+      try s.iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      finally s.close()
     }
 
   private implicit class IterScala[T](it: java.util.Iterator[T]) {
@@ -121,4 +147,9 @@ final class StateStore(val root: String) {
       def next(): T = it.next()
     }
   }
+}
+
+object StateStore {
+  /** Spark's data file name: `part-<partition id>-<job uuid>-c<file>.<ext>`. */
+  private val DataFile = """part-(\d+)-.*""".r
 }

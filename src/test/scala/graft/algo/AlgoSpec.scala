@@ -204,6 +204,22 @@ class AlgoSpec extends SparkSpec with TimeLimits {
     check("bfs", 2, levels, bfsN)
   }
 
+  test("one SQL execution per StateStore commit: PageRank and CC") {
+    // the commit's parquet write is its only execution; its lineage comes
+    // from the written footers, so nothing re-reads the snapshot
+    val (_, _, vDF, eDF) = fixture
+    def store() = Some(new StateStore(
+      java.nio.file.Files.createTempDirectory("graft-algo-store").toString))
+    for (algo <- Seq(new PageRank(tol = 1e-6), new ConnectedComponents())) {
+      val (plain, plainN) = executions(algo.run(spark, eDF, vDF))
+      val (stored, storedN) = executions(algo.run(spark, eDF, vDF, store()))
+      assert(stored.iterations == plain.iterations, algo.name)
+      assert(storedN == plainN + stored.iterations,
+        s"${algo.name}: $storedN SQL executions with a store, $plainN without, " +
+          s"${stored.iterations} supersteps")
+    }
+  }
+
   test("CC on 64 scrambled 64-vertex rings: exact, size estimate capped") {
     // ~30 supersteps: without capped checkpoint stats the estimate
     // multiplies every superstep and planning stalls in BigInteger math

@@ -1,7 +1,13 @@
 package graft.state
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.GraftSparkShims
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -13,6 +19,57 @@ class StateStoreSpec extends SparkSpec {
 
   private def tmpDir(): String =
     Files.createTempDirectory("graft-store").toString
+
+  /** Spark jobs that `body` starts. */
+  private def jobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    GraftSparkShims.waitListenerBusEmpty(sc)
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      GraftSparkShims.waitListenerBusEmpty(sc)
+      n.get()
+    } finally sc.removeSparkListener(l)
+  }
+
+  private def manifestParts(json: String): Map[Int, Long] = {
+    val entries = """\{"partitionId":(\d+),"rowCount":(\d+)\}""".r
+      .findAllMatchIn(json).map(m => m.group(1).toInt -> m.group(2).toLong).toSeq
+    assert(entries.map(_._1).distinct.size == entries.size, s"partition ids repeat: $json")
+    entries.toMap
+  }
+
+  /** Row count of each stored data file, keyed by the partition id in its
+    * name, counted by reading the file back. */
+  private def storedParts(root: String, name: String, it: Int): Map[Int, Long] = {
+    val data = Paths.get(root, name, s"it=$it", "data")
+    listNames(data).filter(_.startsWith("part-")).map { f =>
+      f.stripPrefix("part-").takeWhile(_ != '-').toInt ->
+        spark.read.parquet(data.resolve(f).toString).count()
+    }.groupMapReduce(_._1)(_._2)(_ + _)
+  }
+
+  private def listNames(dir: Path): Seq[String] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.map(_.getFileName.toString).toSeq finally s.close()
+  }
+
+  private def commitOneJob(df: DataFrame, rows: Long): Unit = {
+    val root = tmpDir()
+    val store = new StateStore(root)
+    assert(jobs(store.commit(spark, "s", 1, df)) == 1)
+    val m = store.manifestJson("s", 1)
+    val parts = manifestParts(m)
+    assert(parts.nonEmpty && parts == storedParts(root, "s", 1), m)
+    assert(parts.values.sum == rows && m.contains(s""""rowCount":$rows,"""), m)
+    val back = store.load(spark, "s", 1)
+    assert(back.schema.map(f => f.name -> f.dataType) == df.schema.map(f => f.name -> f.dataType))
+    assert(back.count() == rows)
+  }
 
   test("commit → latestCompleted → load roundtrip; manifest has lineage") {
     import spark.implicits._
@@ -72,5 +129,37 @@ class StateStoreSpec extends SparkSpec {
     }
     // delta norms must be monotonically shrinking-ish: last < first
     assert(res.metrics.last.deltaLinf < res.metrics.head.deltaLinf)
+  }
+
+  test("commit is one Spark job; lineage from the written footers, one entry per written partition") {
+    import spark.implicits._
+    // partitions 0 and 2 empty: Spark still writes partition 0's file
+    val rdd = spark.sparkContext.parallelize(Seq(Seq.empty[Long], Seq(1L, 2L, 3L),
+      Seq.empty[Long], Seq(4L, 5L)), 4).flatMap(identity)
+    val fourParts = rdd.toDF("id").withColumn("rank", $"id" * 0.5)
+    assert(fourParts.rdd.getNumPartitions == 4)
+    commitOneJob(fourParts, 5L)
+    commitOneJob(Seq.empty[(Long, Double)].toDF("id", "rank"), 0L)
+  }
+
+  test("a failed commit rethrows, leaves no tmp directory and keeps latestCompleted") {
+    import spark.implicits._
+    val root = tmpDir()
+    val store = new StateStore(root)
+    store.commit(spark, "pr", 1, Seq((1L, 1.0)).toDF("id", "rank"))
+    val boom = udf { (id: Long) =>
+      if (id >= 0) throw new IllegalArgumentException(s"boom $id"); id.toDouble }
+    // one task, so no sibling task is still writing when the commit cleans up
+    val bad = Seq(1L, 2L).toDF("id").coalesce(1).select($"id", boom($"id").as("rank"))
+    val e = intercept[Exception](store.commit(spark, "pr", 2, bad))
+    // the write's own exception, not one raised by the clean-up
+    val direct = intercept[Exception](bad.write.parquet(tmpDir() + "/direct"))
+    assert(e.getClass == direct.getClass, e)
+    def causes(t: Throwable): Seq[Throwable] = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes(e).exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.startsWith("boom")), e)
+    assert(store.latestCompleted("pr") == 1)
+    val left = listNames(Paths.get(root, "pr"))
+    assert(!left.exists(_.startsWith(".tmp-")), left)
   }
 }
