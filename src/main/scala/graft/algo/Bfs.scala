@@ -60,7 +60,9 @@ object Bfs {
   private def levels(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
                      keys: Seq[String], maxDepth: Int): AlgoResult = {
     // GraphBuilder.undirected's src partitioning is the per-level frontier
-    // join key: one exchange for the whole loop
+    // join key, and the persisted scan reports it: the undirected table is
+    // exchanged once for the whole loop (the frontier, read from the
+    // checkpointed state, is exchanged every level)
     val und = GraphBuilder.undirected(edges).persist()
     und.count()
     val res = Superstep.run(spark, "bfs", seeds.localCheckpoint(true), maxDepth,

@@ -64,9 +64,11 @@ final class ConnectedComponents(maxIter: Int = 50,
   private def loop(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
                    store: Option[StateStore], init: Option[DataFrame]): AlgoResult = {
     // Undirected view: propagate along both directions. Partitioned by src
-    // ONCE (GraphBuilder.undirected), which satisfies the per-superstep
-    // neighbor-min join on src — the full undirected table never
-    // re-exchanges per superstep.
+    // ONCE (GraphBuilder.undirected) and persisted: the cached scan reports
+    // that partitioning, which satisfies the per-superstep neighbor-min
+    // join on src, so the full undirected table does not re-exchange per
+    // superstep. The state side does: it is a checkpoint leaf, which under
+    // AQE reports UnknownPartitioning.
     val und = GraphBuilder.undirected(edges).persist()
     // hint joins shuffle_hash only past a size floor (opt round 6): on a
     // fixture-scale graph the forced hint blocks AQE's broadcast choice and

@@ -30,9 +30,9 @@ final class LabelPropagation(maxIter: Int = 10) extends Algorithm {
 
   override def run(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
                    store: Option[StateStore] = None): AlgoResult = {
-    // partitioned by src ONCE (GraphBuilder.undirected): satisfies the
-    // per-superstep join on src, so the full undirected table never
-    // re-exchanges per superstep
+    // partitioned by src ONCE (GraphBuilder.undirected), but under AQE a
+    // checkpoint leaf reports UnknownPartitioning, so the per-superstep join
+    // on src re-exchanges the full undirected table every superstep
     val und = GraphBuilder.undirected(edges).localCheckpoint(true)
 
     val start = vertices.select(col("id")).distinct()

@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.state.StateStore
@@ -12,20 +12,22 @@ import graft.state.StateStore
   * where danglingMass = Σ r(u) over vertices with outDeg(u)=0. Convergence:
   * L∞(r' − r) < tol.
   *
-  * Physical shape — ONE shuffle per superstep (the groupBy(dst) partial+final
-  * sum), everything else co-partitioned:
+  * Physical shape — under AQE, FOUR exchanges per superstep: the
+  * groupBy(dst) partial+final sum, and both sides of the adj ⋈ ranks join
+  * and the ranks side of the final ranks ⋈ contribs join. A checkpoint leaf
+  * of an adaptive plan reports UnknownPartitioning (AdaptiveSparkPlanExec
+  * does not expose its final partitioning), so the hash partitioning that
+  * `adj` and the state are built with is not visible to the next plan:
   *  - `adj` (src, dst, salt) is hash-partitioned by src ONCE and
-  *    checkpointed; `localCheckpoint` preserves outputPartitioning, so the
-  *    per-iteration adj ⋈ ranks join needs no exchange on the adj side.
+  *    checkpointed, yet the per-iteration adj ⋈ ranks join re-exchanges
+  *    the full adjacency every superstep.
   *  - the r(u)/outDeg(u) division happens on the RANK side (state carries
   *    outDeg), so adjacency rows are degree-free and IMMUTABLE — which is
   *    what makes the streaming tier's base+patch maintenance possible
   *    (updatePrepared): out-degree changes touch only the vertex state.
-  *  - `ranks` carries HashPartitioning(id) out of the previous groupBy/join,
-  *    matching both the adj join (src=id) and the verts join (id=id).
   *  - the state carries a precomputed `dangling` flag, so the next
-  *    iteration's dangling mass and the delta norms come from ONE scan of
-  *    the just-checkpointed state — no extra semi-join job.
+  *    iteration's dangling mass and the delta norms are observed on the
+  *    superstep's own checkpoint (Superstep) — no extra scan or job.
   *  - joins take shuffle-hash hints: state fits per-partition hash maps and
   *    avoids re-sorting 10⁷-row inputs every superstep (SMJ would).
   *  - hub in-degree skew is absorbed by map-side partial aggregation (sum is
@@ -36,8 +38,8 @@ import graft.state.StateStore
   *
   * Streaming maintenance (the per-batch O(|Δ|) discipline): `Prepared` can
   * carry a signed PATCH overlay (src, dst, w ∈ {−1, +1}) over a FIXED base
-  * adjacency. A superstep then sums base contributions (co-partitioned join,
-  * untouched) plus w-weighted patch contributions (broadcast of the tiny
+  * adjacency. A superstep then sums base contributions (the adj ⋈ ranks
+  * join, untouched) plus w-weighted patch contributions (broadcast of the tiny
   * patch) — deleted base edges cancel exactly, added edges contribute once.
   * `updatePrepared` maintains the vertex/out-degree state by pure arithmetic
   * on the delta (never rescanning E) and compacts the patch; the stream
@@ -91,11 +93,10 @@ final class PageRank(
 
   private def seeded(spark: SparkSession, g: PageRank.Prepared,
                      prevRanks: DataFrame, ownPrepared: Boolean): AlgoResult = {
-    val joined = g.verts.select(col("id"))
+    val (joined, total) = PageRank.checkpointObserving(g.verts.select(col("id"))
       .join(prevRanks.select(col("id"), col("rank")), Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("rank"), lit(1.0 / g.n)).as("rank"))
-      .localCheckpoint(true)
-    val total = joined.agg(sum(col("rank"))).head().getDouble(0)
+      .select(col("id"), coalesce(col("rank"), lit(1.0 / g.n)).as("rank")),
+      sum(col("rank")))
     loop(spark, g, None, startIter = 0,
       startRanks = Some(joined.select(col("id"), (col("rank") / total).as("rank"))),
       ownPrepared = ownPrepared)
@@ -106,7 +107,7 @@ final class PageRank(
                    startRanks: Option[DataFrame], ownPrepared: Boolean): AlgoResult = {
     val n = g.n
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val start = (startRanks match {
+    val (start, dm0) = PageRank.checkpointObserving(startRanks match {
       // seeds/snapshots carry (id, rank); dangling + outDeg come from the
       // prepared vertex state (ids are verts-exact by construction)
       case Some(df) => g.verts.select(col("id"), col("outDeg"), col("dangling"))
@@ -117,12 +118,11 @@ final class PageRank(
           col("dangling"), col("outDeg"))
       case None => g.verts.select(col("id"), lit(1.0 / n).as("rank"),
         col("dangling"), col("outDeg"))
-    }).localCheckpoint(true)
-    val dm0 = PageRank.danglingMass(start)
+    }, PageRank.danglingSum)
     // one scan of each fresh state: delta norms + the next dangling mass
     val res = Superstep.run(spark, name, start, maxIter,
       aggs = Seq(sum(col("d")).as("l1"), max(col("d")).as("linf"),
-        sum(when(col("dangling"), col("rank")).otherwise(0.0)).as("dm"),
+        PageRank.danglingSum.as("dm"),
         count(lit(1)).as("rows")),
       keep = _.select("id", "rank", "dangling", "outDeg"),
       halt = _.deltaLinf < tol,
@@ -139,7 +139,7 @@ final class PageRank(
 
 object PageRank {
 
-  /** Prepared graph: co-partitioned, checkpointed inputs reused by every
+  /** Prepared graph: hash-partitioned, checkpointed inputs reused by every
     * superstep. `adj` is degree-free (src, dst, salt); `verts` carries
     * (id, outDeg, dangling). `hotIds` is Some(tiny table of hub ids) iff
     * some vertex's out-degree exceeds the skew threshold — then `adj`
@@ -176,13 +176,12 @@ object PageRank {
     val adj = (if (hasHot) adjBase.repartition(parts, col("src"), col("salt"))
                else adjBase.repartition(parts, col("src")))
       .localCheckpoint(true)
-    val verts = vertices.select(col("id")).distinct()
+    val (verts, n) = checkpointObserving(vertices.select(col("id")).distinct()
       .join(outDeg.hint("shuffle_hash"), Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("outDeg"), lit(0L)).as("outDeg"),
         col("outDeg").isNull.as("dangling"))
-      .repartition(parts, col("id"))
-      .localCheckpoint(true)
-    val n = verts.count().toDouble
+      .repartition(parts, col("id")),
+      count(lit(1)).cast("double"))
     require(n > 0, "empty vertex set")
     Prepared(adj, verts, n,
       if (hasHot) Some(hot.localCheckpoint(true)) else None, saltK)
@@ -231,11 +230,22 @@ object PageRank {
     prev.copy(verts = verts, n = verts.count().toDouble, patch = Some(patch))
   }
 
-  def danglingMass(ranks: DataFrame): Double =
-    ranks.agg(sum(when(col("dangling"), col("rank")).otherwise(0.0))).head().getDouble(0)
+  def danglingMass(ranks: DataFrame): Double = ranks.agg(danglingSum).head().getDouble(0)
+
+  private def danglingSum: Column = sum(when(col("dangling"), col("rank")).otherwise(0.0))
+
+  /** Eager local checkpoint of `df` and the value of `agg` over it, from
+    * ONE SQL execution: `agg` is observed at the plan's root, so it is
+    * accumulated in the checkpoint's own result stage (see Superstep). */
+  private def checkpointObserving(df: DataFrame, agg: Column): (DataFrame, Double) = {
+    val observed = df.observe("setup", agg.as("v"))
+    val chk = observed.localCheckpoint(true)
+    (chk, observed.queryExecution.observedMetrics("setup").getDouble(0))
+  }
 
   /** One superstep: returns (id, rank, prev, dangling, outDeg) — NOT yet
-    * materialized. Exactly one shuffle (the groupBy(dst) sum). */
+    * materialized. Four exchanges under AQE over checkpointed inputs (see
+    * the class doc); one, the groupBy(dst) sum, with visible partitioning. */
   def superstep(g: Prepared, ranks: DataFrame, danglingMass: Double,
                 damping: Double): DataFrame = {
     val n = g.n
@@ -247,12 +257,12 @@ object PageRank {
       when(col("outDeg") > 0, col("rank") / col("outDeg")).otherwise(lit(0.0)).as("rod"))
     val joined = g.hotIds match {
       case None =>
-        // hub-free: keep the join key = src alone so adj's one-time
-        // repartition(src) still satisfies it (no per-superstep exchange)
+        // hub-free: the join key is src alone, adj's one-time partitioning
+        // (it would satisfy the join if the checkpoint leaf reported it)
         g.adj.join(rod.hint("shuffle_hash"), g.adj("src") === rod("id"))
       case Some(hot) =>
         // broadcast the hot-vertex frontier: hub rank rows replicated per
-        // salt, join key (src, salt) matches adj's (src, salt) partitioning
+        // salt, join key (src, salt) is adj's (src, salt) partitioning key
         val rHot = rod.join(broadcast(hot), Seq("id"), "left_semi")
           .withColumn("rsalt", explode(array((0 until g.saltK).map(s => lit(s.toLong)): _*)))
         val rCold = rod.join(broadcast(hot), Seq("id"), "left_anti")

@@ -9,31 +9,39 @@ import graft.state.StateStore
   * operator (VLDB 2014) over (edges, vertex-state) tables. An algorithm
   * supplies its `step` plan (message, combine, apply) and its halt rule;
   * the driver owns the rest:
-  *  - ONE aggregate action per superstep: the step's plan is checkpointed
-  *    lazily and the caller's aggregate columns materialize it, so the
-  *    state is computed once and never re-scanned for convergence (Spark
-  *    still posts the lazy checkpoint as its own SQL execution; under AQE
-  *    it runs the step's shuffle stages);
+  *  - ONE SQL execution per superstep: the caller's aggregate columns are
+  *    observed at the root of the step's plan (`Dataset.observe`) and the
+  *    plan is checkpointed eagerly, so the convergence row is accumulated
+  *    in the checkpoint's own result stage — the state is computed once
+  *    and never re-scanned for convergence. Like Pregelix's per-superstep
+  *    statistics, they come out of the superstep's dataflow, not a second
+  *    pass over its result. The observation must stay at the root: result
+  *    tasks apply their accumulator updates once per partition, map tasks
+  *    below an exchange may apply them again on a stage retry;
   *  - the checkpoint's carried size estimate is capped
   *    (GraftSqlShims.checkpoint), so state chains may join the state with
   *    itself without the estimate multiplying every superstep;
-  *  - SuperstepMetrics, read from the aggregate row's `rows`, `l1`, `linf`
-  *    and `changed` fields (absent or null fields are 0);
+  *  - SuperstepMetrics, read from the observed row's `rows`, `l1`, `linf`
+  *    and `changed` fields (absent or null fields are 0, as on a step that
+  *    returns no rows);
   *  - the optional StateStore commit, a side write of `commit(chk)`;
   *  - releasing each state's checkpoint once its successor is
   *    materialized — never the caller's `init`.
-  * The loop continues from the checkpoint itself, with a store too: it is
-  * partitioned like the step's output, while a snapshot `load` is an
-  * unpartitioned parquet scan, and persisting the state again made AQE spend
-  * extra jobs materializing the cache and measured slower for every
-  * algorithm.
+  * The loop continues from the checkpoint itself, with a store too. Under
+  * AQE the checkpoint leaf reports UnknownPartitioning (the adaptive plan
+  * does not expose its final partitioning), so the next step re-exchanges
+  * the state as a snapshot `load` would; persisting the state again made
+  * AQE spend extra jobs materializing the cache and measured slower for
+  * every algorithm.
   */
 object Superstep {
+
+  private val Observed = "superstep"
 
   /** Iterate from `init` (caller-owned, materialized) while fewer than
     * `maxIter` supersteps have run (counting from `startIter`) and the last
     * one did not `halt`. `step(it, state, prev)` plans superstep `it` from
-    * the current state and the previous superstep's aggregate row (None
+    * the current state and the previous superstep's observed row (None
     * before the first); the next state is `keep(checkpoint)`. */
   def run(spark: SparkSession, name: String, init: DataFrame, maxIter: Int,
           aggs: Seq[Column], keep: DataFrame => DataFrame,
@@ -49,8 +57,9 @@ object Superstep {
     var it = startIter
     while (it < maxIter && !metrics.lastOption.exists(halt)) {
       val t0 = System.nanoTime()
-      val (chk, rdd) = GraftSqlShims.checkpoint(step(it + 1, state, prev))
-      val row = chk.agg(aggs.head, aggs.tail: _*).head()
+      val planned = step(it + 1, state, prev).observe(Observed, aggs.head, aggs.tail: _*)
+      val (chk, rdd) = GraftSqlShims.checkpoint(planned)
+      val row = planned.queryExecution.observedMetrics(Observed)
       val wallMs = (System.nanoTime() - t0) / 1000000L
       it += 1
       val m = SuperstepMetrics(it, wallMs, field(row, "rows", 0L), field(row, "l1", 0.0),

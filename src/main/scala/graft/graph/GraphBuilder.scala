@@ -143,7 +143,10 @@ object GraphBuilder {
     // one exchange (opt round 6): repartition by src FIRST — hash(src)
     // satisfies the (src,dst) dedup's clustering, so dropDuplicates runs
     // in place, and the result comes out pre-positioned for every
-    // src-keyed consumer (superstep joins, degree groupBy, label joins)
+    // src-keyed consumer (superstep joins, degree groupBy, label joins) that
+    // reads it through `persist`. A `localCheckpoint` of it under AQE
+    // reports UnknownPartitioning, so a consumer of the checkpoint
+    // re-exchanges it
     val parts = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val rest = carry.map(col)
     edges.select(col("src") +: col("dst") +: rest: _*)

@@ -39,10 +39,13 @@ object GraftSqlShims {
     (spark.internalCreateDataFrame(rdd, cdf.schema), rdd)
   }
 
-  /** Lazy `localCheckpoint` of `df` whose size statistics are capped at
+  /** Eager `localCheckpoint` of `df` whose size statistics are capped at
     * Long.MaxValue, plus the checkpoint's RDD (the caller releases it).
+    * Eager: the checkpoint is the plan's one SQL execution, so metrics
+    * observed at `df`'s root are in `df.queryExecution.observedMetrics`
+    * when this returns.
     *
-    * Why: the checkpoint's `LogicalRDD` carries the origin plan's
+    * Why the cap: the checkpoint's `LogicalRDD` carries the origin plan's
     * statistics, and Catalyst's size-only estimate of a join is the
     * PRODUCT of its children. A state chain that joins the state with
     * itself therefore multiplies the BigInt estimate every superstep, and
@@ -50,10 +53,11 @@ object GraftSqlShims {
     * BigInteger.multiply. An estimate above Long.MaxValue already rules
     * out every broadcast, so the cap changes no join choice; estimates
     * below it are untouched.
-    * `copy` keeps the leaf's RDD and outputPartitioning — a fresh RDD
-    * Dataset would drop the partitioning and re-exchange the state. */
+    * `copy` keeps the leaf's RDD and outputPartitioning. Under AQE that
+    * partitioning is UnknownPartitioning: the adaptive plan does not report
+    * its final partitioning, so consumers re-exchange the state. */
   def checkpoint(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
-    val chk = df.localCheckpoint(false).asInstanceOf[CDataFrame]
+    val chk = df.localCheckpoint(true).asInstanceOf[CDataFrame]
     val leaf = chk.logicalPlan.asInstanceOf[LogicalRDD]
     val stats = leaf.computeStats()
     val cap = BigInt(Long.MaxValue)
