@@ -67,8 +67,8 @@ final class ConnectedComponents(maxIter: Int = 50,
     // ONCE (GraphBuilder.undirected) and persisted: the cached scan reports
     // that partitioning, which satisfies the per-superstep neighbor-min
     // join on src, so the full undirected table does not re-exchange per
-    // superstep. The state side does: it is a checkpoint leaf, which under
-    // AQE reports UnknownPartitioning.
+    // superstep. The state side does, unless its checkpoint leaf kept an
+    // id partitioning (GraftSqlShims.checkpoint).
     val und = GraphBuilder.undirected(edges).persist()
     // hint joins shuffle_hash only past a size floor (opt round 6): on a
     // fixture-scale graph the forced hint blocks AQE's broadcast choice and

@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.graph.GraphBuilder
@@ -30,20 +30,20 @@ final class LabelPropagation(maxIter: Int = 10) extends Algorithm {
 
   override def run(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
                    store: Option[StateStore] = None): AlgoResult = {
-    // partitioned by src ONCE (GraphBuilder.undirected), but under AQE a
-    // checkpoint leaf reports UnknownPartitioning, so the per-superstep join
-    // on src re-exchanges the full undirected table every superstep
-    val und = GraphBuilder.undirected(edges).localCheckpoint(true)
+    // partitioned by src ONCE (GraphBuilder.undirected); the checkpoint
+    // leaf keeps that partitioning, so the per-superstep join on src
+    // exchanges only the state side and the undirected table stays put
+    val (und, undRdd) = GraftSqlShims.checkpoint(GraphBuilder.undirected(edges))
 
-    val start = vertices.select(col("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint(true)
+    val (start, _) = GraftSqlShims.checkpoint(vertices.select(col("id")).distinct()
+      .withColumn("label", col("id")))
     val res = Superstep.run(spark, name, start, maxIter,
       aggs = Seq(
         sum(when(col("newLabel") =!= col("label"), 1L).otherwise(0L)).as("changed"),
         count(lit(1)).as("rows")),
       keep = _.select(col("id"), col("newLabel").as("label")),
       store = store) { (_, state, _) => step(und, state) }
-    und.unpersist()
+    GraftSqlShims.release(undRdd)
     res
   }
 

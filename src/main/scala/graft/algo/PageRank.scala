@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.state.StateStore
@@ -12,15 +12,16 @@ import graft.state.StateStore
   * where danglingMass = Σ r(u) over vertices with outDeg(u)=0. Convergence:
   * L∞(r' − r) < tol.
   *
-  * Physical shape — under AQE, FOUR exchanges per superstep: the
-  * groupBy(dst) partial+final sum, and both sides of the adj ⋈ ranks join
-  * and the ranks side of the final ranks ⋈ contribs join. A checkpoint leaf
-  * of an adaptive plan reports UnknownPartitioning (AdaptiveSparkPlanExec
-  * does not expose its final partitioning), so the hash partitioning that
-  * `adj` and the state are built with is not visible to the next plan:
+  * Physical shape — ONE exchange per hub-free superstep, the groupBy(dst)
+  * partial+final sum: the messages. Like Pregelix's (VLDB 2014), the edges
+  * and the vertex state are partitioned by vertex id once and stay put.
+  * Every checkpoint here is GraftSqlShims.checkpoint, whose leaf keeps the
+  * hash partitioning it was built with:
   *  - `adj` (src, dst, salt) is hash-partitioned by src ONCE and
-  *    checkpointed, yet the per-iteration adj ⋈ ranks join re-exchanges
-  *    the full adjacency every superstep.
+  *    checkpointed; the state is hash-partitioned by id (`verts`, and every
+  *    superstep's state inherits the ranks side's partitioning), with the
+  *    same count. So the adj ⋈ ranks join and the ranks ⋈ contribs join run
+  *    in place, and the state keeps spark.sql.shuffle.partitions partitions.
   *  - the r(u)/outDeg(u) division happens on the RANK side (state carries
   *    outDeg), so adjacency rows are degree-free and IMMUTABLE — which is
   *    what makes the streaming tier's base+patch maintenance possible
@@ -33,7 +34,7 @@ import graft.state.StateStore
   *  - hub in-degree skew is absorbed by map-side partial aggregation (sum is
   *    algebraic) — the reference's thread-local-counter + reduce pattern
   *    (ParaCOSM parallel_graphflow.cpp:988-990) is Spark's default physical agg.
-  *  - lineage is truncated every superstep (Superstep's localCheckpoint) —
+  *  - lineage is truncated every superstep (Superstep's checkpoint) —
   *    mandatory for iterative Catalyst plans (SURVEY.md §7.4-1).
   *
   * Streaming maintenance (the per-batch O(|Δ|) discipline): `Prepared` can
@@ -160,10 +161,12 @@ object PageRank {
   def prepare(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
               hotDegThreshold: Long = 2000000L, saltK: Int = 16): Prepared = {
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val outDeg = edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("outDeg"))
-      .localCheckpoint(true)
+    // the hub probe is observed on the out-degree checkpoint: no second job
+    val (outDeg, maxOutDeg) = checkpointObserving(
+      edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("outDeg")),
+      coalesce(max(col("outDeg")), lit(0L)).cast("double"))
+    val hasHot = maxOutDeg > hotDegThreshold
     val hot = outDeg.where(col("outDeg") > hotDegThreshold).select(col("id"))
-    val hasHot = hot.limit(1).count() > 0
     val adjBase =
       if (hasHot)
         edges.select(col("src"), col("dst"))
@@ -173,9 +176,9 @@ object PageRank {
             when(col("isHot"),
               pmod(xxhash64(col("dst")), lit(saltK.toLong))).otherwise(lit(0L)).as("salt"))
       else edges.select(col("src"), col("dst"), lit(0L).as("salt"))
-    val adj = (if (hasHot) adjBase.repartition(parts, col("src"), col("salt"))
-               else adjBase.repartition(parts, col("src")))
-      .localCheckpoint(true)
+    val adj = checkpoint(
+      if (hasHot) adjBase.repartition(parts, col("src"), col("salt"))
+      else adjBase.repartition(parts, col("src")))
     val (verts, n) = checkpointObserving(vertices.select(col("id")).distinct()
       .join(outDeg.hint("shuffle_hash"), Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("outDeg"), lit(0L)).as("outDeg"),
@@ -184,13 +187,15 @@ object PageRank {
       count(lit(1)).cast("double"))
     require(n > 0, "empty vertex set")
     Prepared(adj, verts, n,
-      if (hasHot) Some(hot.localCheckpoint(true)) else None, saltK)
+      if (hasHot) Some(checkpoint(hot)) else None, saltK)
   }
 
   /** Incremental Prepared maintenance for the streaming tier — O(|Δ|)
     * compute, ZERO scans or shuffles of the edge table:
     *  - vertex/out-degree state updated by pure arithmetic on the per-src
-    *    delta counts (broadcast join against the old verts);
+    *    delta counts (broadcast join against the old verts), hash-partitioned
+    *    by id like prepare()'s, so the warm supersteps keep their single
+    *    exchange; |V| is observed on its checkpoint;
     *  - the base adjacency is reused UNCHANGED; the delta folds into the
     *    signed patch (w = +1 add, −1 delete), compacted so weights stay in
     *    {−1, +1} (a delete of a base edge later re-added nets to 0, etc).
@@ -204,10 +209,9 @@ object PageRank {
                      deletedVertexIds: Seq[Long] = Seq.empty): Prepared = {
     import spark.implicits._
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val dd = addedEdges.select(col("src").as("id"), lit(1L).as("d"))
+    val dd = checkpoint(addedEdges.select(col("src").as("id"), lit(1L).as("d"))
       .unionByName(deletedEdges.select(col("src").as("id"), lit(-1L).as("d")))
-      .groupBy(col("id")).agg(sum(col("d")).as("dd"))
-      .localCheckpoint(true)
+      .groupBy(col("id")).agg(sum(col("d")).as("dd")))
     val survivors =
       if (deletedVertexIds.isEmpty) prev.verts
       else prev.verts.where(!col("id").isin(deletedVertexIds: _*))
@@ -217,35 +221,40 @@ object PageRank {
     val fresh = newVertexIds.toDF("id")
       .join(dd, Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("dd"), lit(0L)).as("outDeg"))
-    val verts = updated.unionByName(fresh)
+    val (verts, n) = checkpointObserving(updated.unionByName(fresh)
       .select(col("id"), col("outDeg"), (col("outDeg") === 0L).as("dangling"))
-      .repartition(parts, col("id"))
-      .localCheckpoint(true)
+      .repartition(parts, col("id")),
+      count(lit(1)).cast("double"))
     val deltas = addedEdges.select(col("src"), col("dst"), lit(1L).as("w"))
       .unionByName(deletedEdges.select(col("src"), col("dst"), lit(-1L).as("w")))
-    val patch = prev.patch.map(_.unionByName(deltas)).getOrElse(deltas)
+    val patch = checkpoint(prev.patch.map(_.unionByName(deltas)).getOrElse(deltas)
       .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-      .where(col("w") =!= 0L)
-      .localCheckpoint(true)
-    prev.copy(verts = verts, n = verts.count().toDouble, patch = Some(patch))
+      .where(col("w") =!= 0L))
+    prev.copy(verts = verts, n = n, patch = Some(patch))
   }
 
   def danglingMass(ranks: DataFrame): Double = ranks.agg(danglingSum).head().getDouble(0)
 
   private def danglingSum: Column = sum(when(col("dangling"), col("rank")).otherwise(0.0))
 
-  /** Eager local checkpoint of `df` and the value of `agg` over it, from
-    * ONE SQL execution: `agg` is observed at the plan's root, so it is
-    * accumulated in the checkpoint's own result stage (see Superstep). */
+  /** Eager, partition-keeping checkpoint of `df` (GraftSqlShims.checkpoint).
+    * Its blocks are left to the context cleaner. */
+  private def checkpoint(df: DataFrame): DataFrame = GraftSqlShims.checkpoint(df)._1
+
+  /** `checkpoint(df)` and the value of `agg` over it, from ONE SQL
+    * execution: `agg` is observed at the plan's root, so it is accumulated
+    * in the checkpoint's own result stage (see Superstep). */
   private def checkpointObserving(df: DataFrame, agg: Column): (DataFrame, Double) = {
     val observed = df.observe("setup", agg.as("v"))
-    val chk = observed.localCheckpoint(true)
+    val chk = checkpoint(observed)
     (chk, observed.queryExecution.observedMetrics("setup").getDouble(0))
   }
 
   /** One superstep: returns (id, rank, prev, dangling, outDeg) — NOT yet
-    * materialized. Four exchanges under AQE over checkpointed inputs (see
-    * the class doc); one, the groupBy(dst) sum, with visible partitioning. */
+    * materialized. Over checkpointed inputs `adj` (hash by src) and `ranks`
+    * (hash by id, same count) a hub-free superstep runs ONE exchange, the
+    * groupBy(dst) sum; both joins run in place (see the class doc). The
+    * salted hub join and the patch overlay add their own exchanges. */
   def superstep(g: Prepared, ranks: DataFrame, danglingMass: Double,
                 damping: Double): DataFrame = {
     val n = g.n
@@ -257,8 +266,8 @@ object PageRank {
       when(col("outDeg") > 0, col("rank") / col("outDeg")).otherwise(lit(0.0)).as("rod"))
     val joined = g.hotIds match {
       case None =>
-        // hub-free: the join key is src alone, adj's one-time partitioning
-        // (it would satisfy the join if the checkpoint leaf reported it)
+        // hub-free: the join key is src alone, adj's one-time partitioning,
+        // co-partitioned with the ranks side — no exchange
         g.adj.join(rod.hint("shuffle_hash"), g.adj("src") === rod("id"))
       case Some(hot) =>
         // broadcast the hot-vertex frontier: hub rank rows replicated per

@@ -18,21 +18,24 @@ import graft.state.StateStore
   *    pass over its result. The observation must stay at the root: result
   *    tasks apply their accumulator updates once per partition, map tasks
   *    below an exchange may apply them again on a stage retry;
-  *  - the checkpoint's carried size estimate is capped
-  *    (GraftSqlShims.checkpoint), so state chains may join the state with
-  *    itself without the estimate multiplying every superstep;
+  *  - the checkpoint (GraftSqlShims.checkpoint) keeps the step's final
+  *    hash partitioning and caps its carried size estimate, so state chains
+  *    may join the state with itself without the estimate multiplying
+  *    every superstep;
   *  - SuperstepMetrics, read from the observed row's `rows`, `l1`, `linf`
   *    and `changed` fields (absent or null fields are 0, as on a step that
   *    returns no rows);
   *  - the optional StateStore commit, a side write of `commit(chk)`;
   *  - releasing each state's checkpoint once its successor is
   *    materialized — never the caller's `init`.
-  * The loop continues from the checkpoint itself, with a store too. Under
-  * AQE the checkpoint leaf reports UnknownPartitioning (the adaptive plan
-  * does not expose its final partitioning), so the next step re-exchanges
-  * the state as a snapshot `load` would; persisting the state again made
-  * AQE spend extra jobs materializing the cache and measured slower for
-  * every algorithm.
+  * The loop continues from the checkpoint itself, with a store too. The
+  * checkpoint leaf reports the hash partitioning the step left the state
+  * in when it is an exchange's own layout (not an AQE-coalesced one), so
+  * the next step joins a state partitioned like its edge table in place —
+  * Pregelix's once-partitioned vertex state; otherwise the next step
+  * re-exchanges it, as a snapshot `load` would. Persisting the state
+  * instead made AQE spend extra jobs materializing the cache and measured
+  * slower for every algorithm.
   */
 object Superstep {
 

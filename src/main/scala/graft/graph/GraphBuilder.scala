@@ -138,15 +138,15 @@ object GraphBuilder {
     * graph is undirected, graph.h:63): both orientations, self-loops
     * dropped, one row per (src, dst). `carry` columns ride along unchanged
     * (edge labels, delta flags); of duplicate (src, dst) rows one is kept.
-    * Callers own materialization (persist or localCheckpoint). */
+    * Callers own materialization (persist or GraftSqlShims.checkpoint). */
   def undirected(edges: DataFrame, carry: String*): DataFrame = {
     // one exchange (opt round 6): repartition by src FIRST — hash(src)
     // satisfies the (src,dst) dedup's clustering, so dropDuplicates runs
     // in place, and the result comes out pre-positioned for every
     // src-keyed consumer (superstep joins, degree groupBy, label joins) that
-    // reads it through `persist`. A `localCheckpoint` of it under AQE
-    // reports UnknownPartitioning, so a consumer of the checkpoint
-    // re-exchanges it
+    // reads it through `persist` or GraftSqlShims.checkpoint (both report
+    // the partitioning; a plain `localCheckpoint` under AQE does not, so
+    // its consumers re-exchange it)
     val parts = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val rest = carry.map(col)
     edges.select(col("src") +: col("dst") +: rest: _*)

@@ -3,7 +3,11 @@ package org.apache.spark.sql
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic.{DataFrame => CDataFrame, Dataset => CDataset, SparkSession => CSparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, AttributeSet}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, HashPartitioningLike, Partitioning, PartitioningCollection}
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, ExchangeQueryStageExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.storage.StorageLevel
 
 /** private[sql] access for graft's plan leaves. */
@@ -39,11 +43,22 @@ object GraftSqlShims {
     (spark.internalCreateDataFrame(rdd, cdf.schema), rdd)
   }
 
-  /** Eager `localCheckpoint` of `df` whose size statistics are capped at
-    * Long.MaxValue, plus the checkpoint's RDD (the caller releases it).
+  /** Eager `localCheckpoint` of `df` that keeps the hash partitioning it
+    * was built with and whose size statistics are capped at Long.MaxValue,
+    * plus the checkpoint's RDD (the caller releases it). The one checkpoint
+    * of the Dataset algorithms.
     * Eager: the checkpoint is the plan's one SQL execution, so metrics
     * observed at `df`'s root are in `df.queryExecution.observedMetrics`
     * when this returns.
+    *
+    * Why the partitioning: under AQE the leaf of a plain `localCheckpoint`
+    * reports UnknownPartitioning (AdaptiveSparkPlanExec does not expose its
+    * final partitioning), so every plan that reads it re-exchanges it —
+    * PageRank's adjacency and state and LP's undirected table, every
+    * superstep. Here the leaf reports the final adaptive plan's
+    * partitioning when that is a hash layout a fresh exchange of the same
+    * count would reproduce (see `hashLayout`); then a join against
+    * another input hash-partitioned on the same key runs in place.
     *
     * Why the cap: the checkpoint's `LogicalRDD` carries the origin plan's
     * statistics, and Catalyst's size-only estimate of a join is the
@@ -52,23 +67,66 @@ object GraftSqlShims {
     * after ~20 CC supersteps the driver spends minutes in
     * BigInteger.multiply. An estimate above Long.MaxValue already rules
     * out every broadcast, so the cap changes no join choice; estimates
-    * below it are untouched.
-    * `copy` keeps the leaf's RDD and outputPartitioning. Under AQE that
-    * partitioning is UnknownPartitioning: the adaptive plan does not report
-    * its final partitioning, so consumers re-exchange the state. */
+    * below it are untouched. */
   def checkpoint(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
-    val chk = df.localCheckpoint(true).asInstanceOf[CDataFrame]
+    val cdf = df.asInstanceOf[CDataFrame]
+    val chk = cdf.localCheckpoint(true).asInstanceOf[CDataFrame]
     val leaf = chk.logicalPlan.asInstanceOf[LogicalRDD]
+    val partitioning = cdf.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec if a.isFinalPlan =>
+        hashLayout(a.executedPlan, leaf.output, leaf.rdd.getNumPartitions)
+          .getOrElse(leaf.outputPartitioning)
+      case _ => leaf.outputPartitioning
+    }
     val stats = leaf.computeStats()
     val cap = BigInt(Long.MaxValue)
-    if (stats.sizeInBytes <= cap && stats.rowCount.forall(_ <= cap)) (chk, leaf.rdd)
+    if (partitioning == leaf.outputPartitioning &&
+        stats.sizeInBytes <= cap && stats.rowCount.forall(_ <= cap)) (chk, leaf.rdd)
     else {
       val capped = stats.copy(sizeInBytes = stats.sizeInBytes.min(cap),
         rowCount = stats.rowCount.map(_.min(cap)))
       val spark = chk.sparkSession
-      (CDataset.ofRows(spark, leaf.copy()(spark, Some(capped), Some(leaf.constraints))),
-        leaf.rdd)
+      (CDataset.ofRows(spark, leaf.copy(outputPartitioning = partitioning)(
+        spark, Some(capped), Some(leaf.constraints))), leaf.rdd)
     }
+  }
+
+  /** The hash partitioning over `output` that the rows of `plan`, an
+    * executed adaptive plan with `parts` partitions, are laid out in, if
+    * any. Claimed only when partition i holds exactly the keys with
+    * pmod(hash, parts) = i, the layout a fresh exchange of `parts`
+    * partitions produces and a join takes as co-partitioned: a single
+    * partition, or a partitioning that comes from an uncoalesced exchange
+    * (`followsHash`). A coalesced AQE read also reports a hash
+    * partitioning of its keys, but its partitions are ranges of the
+    * exchange's buckets: claimed, a join against a fresh exchange of the
+    * coalesced count would pair the wrong rows. */
+  private def hashLayout(plan: SparkPlan, output: Seq[Attribute],
+                         parts: Int): Option[HashPartitioning] = {
+    def leaves(p: Partitioning): Seq[Partitioning] = p match {
+      case PartitioningCollection(ps) => ps.flatMap(leaves)
+      case p => Seq(p)
+    }
+    val byId = AttributeMap(output.map(a => a -> a))
+    leaves(plan.outputPartitioning).collectFirst {
+      case h: HashPartitioningLike if h.numPartitions == parts &&
+          h.references.subsetOf(AttributeSet(output)) &&
+          (parts == 1 || followsHash(plan)) =>
+        HashPartitioning(h.expressions.map(_.transform { case a: Attribute => byId(a) }), parts)
+    }
+  }
+
+  /** True when no AQE shuffle read (coalesced, skew-split or local) sits
+    * between `plan`'s root and the exchanges or scans it reads: then every
+    * hash partitioning it reports is an exchange's own. Exchange stages are
+    * exchanges already run; the result stage that wraps the final plan is
+    * looked through; a scan reports only what its source guarantees — for
+    * checkpoint leaves, what `hashLayout` accepted. */
+  private def followsHash(plan: SparkPlan): Boolean = plan match {
+    case _: AQEShuffleReadExec => false
+    case _: ExchangeQueryStageExec | _: ShuffleExchangeLike => true
+    case s: QueryStageExec => followsHash(s.plan)
+    case p => p.children.forall(followsHash)
   }
 
   /** Drop a checkpoint's blocks once nothing reads them. `RDD.unpersist`

@@ -1,7 +1,12 @@
 package graft.algo
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.{Seconds, Span}
@@ -190,19 +195,71 @@ class AlgoSpec extends SparkSpec with TimeLimits {
     val (lp, lpN) = executions(new LabelPropagation(maxIter = 5).run(spark, eDF, vDF))
     // checkpoints of the undirected view and of the initial labeling
     check("lp", 2, lp.iterations, lpN)
-    // prepare: out-degree, adjacency and vertex-state checkpoints (|V| is
-    // observed on the last), the hub probe; then the initial ranks'
-    // checkpoint (their dangling mass observed on it)
+    // prepare: out-degree, adjacency and vertex-state checkpoints (the max
+    // out-degree hub probe is observed on the first, |V| on the last); then
+    // the initial ranks' checkpoint (their dangling mass observed on it)
     val (pr, prN) = executions(new PageRank(tol = 1e-6).run(spark, eDF, vDF))
-    check("pagerank", 5, pr.iterations, prN)
+    check("pagerank", 4, pr.iterations, prN)
     val (_, fiN) = executions(PageRank.fixedIterations(spark, eDF, vDF, iters = 10))
-    check("fixedIterations", 5, 10, fiN)
+    check("fixedIterations", 4, 10, fiN)
     import spark.implicits._
     val (depths, bfsN) = executions(Bfs.depths(spark, eDF, Seq(vIds.min).toDF("id")))
     // one level per depth plus the empty level that halts the loop
     val levels = depths.agg(max("depth")).head().getLong(0).toInt + 1
     // the undirected view's count; the sources' checkpoint
     check("bfs", 2, levels, bfsN)
+  }
+
+  /** Final adaptive plans of the superstep checkpoints that `body` runs, in
+    * superstep order. */
+  private def superstepPlans[T](body: => T): (T, Seq[SparkPlan]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val l = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.observedMetrics.contains("superstep")) { plans.add(qe.executedPlan); () }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      val r = body
+      org.apache.spark.GraftSparkShims.waitListenerBusEmpty(spark.sparkContext)
+      (r, plans.toArray(Array.empty[SparkPlan]).toSeq)
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  /** The shuffle exchanges that ran for `plan`, query stages included. */
+  private def shuffles(plan: SparkPlan): Seq[ShuffleExchangeLike] = plan match {
+    case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+    case s: QueryStageExec => shuffles(s.plan)
+    case e: ShuffleExchangeLike => e +: e.children.flatMap(shuffles)
+    case p => p.children.flatMap(shuffles)
+  }
+
+  test("checkpoints keep their hash partitioning: one exchange per PageRank superstep") {
+    // adj (hash by src) and the rank state (hash by id) are co-partitioned:
+    // only the contributions' groupBy(dst) shuffles — the messages
+    val (vIds, eIds, vDF, eDF) = fixture
+    val (pr, prPlans) = superstepPlans(new PageRank(tol = 1e-10, maxIter = 500).run(spark, eDF, vDF))
+    assert(prPlans.size == pr.iterations && pr.iterations > 3)
+    prPlans.zipWithIndex.drop(1).foreach { case (plan, k) =>
+      assert(shuffles(plan).size == 1, s"superstep ${k + 1}:\n$plan")
+    }
+    val want = Oracles.pageRank(vIds, eIds, tol = 1e-12, maxIter = 500)
+    val got = pr.state.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(got.size == vIds.size)
+    vIds.foreach(v => assert(math.abs(got(v) - want(v)) < 1e-8, s"rank($v)"))
+
+    // LP exchanges the state and its messages, never the undirected table
+    // (the src side of its src ⋈ id join)
+    val (lp, lpPlans) = superstepPlans(new LabelPropagation(maxIter = 5).run(spark, eDF, vDF))
+    assert(lpPlans.size == lp.iterations)
+    for ((plan, k) <- lpPlans.zipWithIndex; e <- shuffles(plan)) {
+      val keys = e.outputPartitioning match {
+        case h: HashPartitioning => h.references.map(_.name).toSet
+        case _ => Set.empty[String]
+      }
+      assert(!keys.contains("src"), s"LP superstep ${k + 1} re-exchanges und:\n$plan")
+    }
   }
 
   test("one SQL execution per StateStore commit: PageRank and CC") {
@@ -253,6 +310,16 @@ class AlgoSpec extends SparkSpec with TimeLimits {
       assert(m.rows == after.size, s"pagerank rows at ${m.iteration}")
       assert(math.abs(m.deltaLinf - d.max) <= 1e-12, s"pagerank linf at ${m.iteration}")
       assert(math.abs(m.deltaL1 - d.sum) <= 1e-12, s"pagerank l1 at ${m.iteration}")
+      // the state keeps its shuffle partitions: one lineage entry per
+      // written partition file, summing to the manifest's row count
+      val manifest = prStore.manifestJson("pagerank", m.iteration)
+      val entries = """"partitionId":(\d+),"rowCount":(\d+)""".r.findAllMatchIn(manifest)
+        .map(e => e.group(1).toInt -> e.group(2).toLong).toSeq
+      val files = new java.io.File(
+        s"${prStore.root}/pagerank/it=${m.iteration}/data").list().count(_.startsWith("part-"))
+      assert(entries.size == 4 && entries.size == files, manifest)
+      assert(entries.map(_._2).sum == m.rows && m.rows ==
+        """"rowCount":(\d+)""".r.findFirstMatchIn(manifest).get.group(1).toLong, manifest)
     }
   }
 
