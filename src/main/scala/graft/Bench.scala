@@ -248,7 +248,8 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
     // iteration aids (unset in driver runs): SPARK_GRAFT_ONLY=q1,q2 limits
-    // the query set; SPARK_GRAFT_SKIP_SCALING=1 skips the scaling matrix
+    // the query set (set but empty: no query, so the scaling section runs
+    // alone); SPARK_GRAFT_SKIP_SCALING=1 skips the scaling matrix
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val skipScaling = sys.env.get("SPARK_GRAFT_SKIP_SCALING").contains("1")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One parallelism level of the scaling protocol, run as its OWN JVM
-  * (spawned under `taskset -c 0..k-1` by Bench/BenchScalingOnly) so that
+  * (spawned under `taskset -c 0..k-1` by Bench) so that
   * EVERYTHING — task threads, GC, JIT, shuffle IO — is confined to k cores,
   * the way a k-core executor is on a real cluster. Measuring all levels
   * inside one 32-core JVM lets GC/JIT threads of a `local[2]` session run
@@ -34,40 +34,13 @@ object BenchLevel {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // GRAFT_LEVEL_DEBUG=1: report executor-job time vs driver wall per
-    // superstep (isolates the fixed driver-side term: Catalyst planning,
-    // scheduling, shim surgery)
-    val debug = sys.env.get("GRAFT_LEVEL_DEBUG").contains("1")
-    val jobMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    if (debug) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        // boxed Long, NOT scala Long: remove() must yield null (skip) when
-        // no start was recorded — a primitive map would unbox null to 0 and
-        // add the raw epoch timestamp to jobMs, corrupting the diagnostic
-        private val starts =
-          new java.util.concurrent.ConcurrentHashMap[Integer, java.lang.Long]()
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          starts.put(j.jobId, java.lang.Long.valueOf(j.time)); ()
-        }
-        override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val s = starts.remove(Integer.valueOf(j.jobId))
-          if (s != null) { jobMs.addAndGet(j.time - s.longValue()); () }
-        }
-      })
-    val blocks = graft.algo.CsrPageRank.loadForBench(spark, blockPath)
-    val j0 = jobMs.get()
-    val t0 = System.nanoTime()
+    val blocks = graft.algo.CsrPageRank.load(spark, blockPath)
     // runPacked: the RDD-loop kernel (a Dataset loop would pay ~1.4 s/
     // superstep of per-iteration Catalyst planning — see CsrPageRank.runPacked
     // doc — which is exactly the fixed serial term the N-vs-4N criterion
     // punishes)
     val (_, _, m) = graft.algo.CsrPageRank.runPacked(spark, blocks, tol = 0.0,
       maxIter = warm + iters)
-    if (debug) {
-      val wall = (System.nanoTime() - t0) / 1000000L
-      System.err.println(s"LEVEL_DEBUG wallMs=$wall jobMs=${jobMs.get() - j0} " +
-        s"perStep=${m.map(_.wallMs).mkString(",")}")
-    }
     spark.stop()
     // clean the tmpfs dir (RAM is the scarce resource it occupies)
     val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(shuffleDir))

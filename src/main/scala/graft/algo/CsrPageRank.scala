@@ -58,11 +58,11 @@ object CsrPageRank {
 
   final case class Blocks(graph: Dataset[GraphBlock], verts: Option[Dataset[VertsBlock]],
                           init: Dataset[RankBlock], n: Long, p: Int) {
-    /** Fail-fast accessor: a bench-path load (loadForBench) carries no
-      * vertex-id arrays — silently joining an empty verts table would
-      * produce an empty result instead of an error (round-3 advice). */
+    /** Fail-fast accessor: blocks read back by `load` carry no vertex-id
+      * arrays — silently joining an empty verts table would produce an
+      * empty result instead of an error (round-3 advice). */
     def vertsOrFail: Dataset[VertsBlock] = verts.getOrElse(throw new IllegalStateException(
-      "Blocks were loaded without vertex ids (loadForBench) — toRows/save need load()/build()"))
+      "Blocks were loaded without vertex ids (load) — toRows needs build()/buildDense() blocks"))
   }
 
   /** One-time build: index vertices, pack edges into blocks. Three shuffles
@@ -234,25 +234,19 @@ object CsrPageRank {
 
   /** Persist built blocks (packed parquet) so the same input can be re-run
     * at several parallelism levels — the cluster-size comparison reads one
-    * artifact, like a real N-vs-4N executor test reads one table. */
+    * artifact, like a real N-vs-4N executor test reads one table. Only what
+    * the superstep kernel reads is written: the vertex-id arrays stay out. */
   def save(blocks: Blocks, path: String): Unit = {
     blocks.graph.write.mode("overwrite").parquet(s"$path/graph")
-    blocks.vertsOrFail.write.mode("overwrite").parquet(s"$path/verts")
     blocks.init.write.mode("overwrite").parquet(s"$path/init")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path, "meta.json"),
       s"""{"n":${blocks.n},"p":${blocks.p}}""")
   }
 
-  def load(spark: SparkSession, path: String): Blocks =
-    loadImpl(spark, path, withVerts = true)
-
-  /** Bench-path load: the superstep kernel never touches the vertex-id
-    * arrays, and materializing them is ~1/3 of a level session's load time
-    * at low core counts. */
-  def loadForBench(spark: SparkSession, path: String): Blocks =
-    loadImpl(spark, path, withVerts = false)
-
-  private def loadImpl(spark: SparkSession, path: String, withVerts: Boolean): Blocks = {
+  /** Read a saved artifact back for `runPacked`. The blocks carry no vertex
+    * ids (`verts` is None): materializing them was ~1/3 of a level
+    * session's load time at low core counts, and the kernel never reads them. */
+  def load(spark: SparkSession, path: String): Blocks = {
     import spark.implicits._
     val meta = java.nio.file.Files.readString(java.nio.file.Paths.get(path, "meta.json"))
     val n = """"n":(\d+)""".r.findFirstMatchIn(meta).get.group(1).toLong
@@ -260,9 +254,7 @@ object CsrPageRank {
     Blocks(
       spark.read.parquet(s"$path/graph").as[GraphBlock]
         .repartition(p, col("pid")).localCheckpoint(true),
-      if (withVerts) Some(spark.read.parquet(s"$path/verts").as[VertsBlock]
-        .repartition(p, col("pid")).localCheckpoint(true))
-      else None,
+      None,
       spark.read.parquet(s"$path/init").as[RankBlock]
         .repartition(p, col("pid")).localCheckpoint(true),
       n, p)
@@ -285,12 +277,12 @@ object CsrPageRank {
     * joins — the one measured place where Catalyst is a per-iteration cost,
     * not a benefit: a Dataset loop re-analyzes/optimizes a fresh
     * joinWith+cogroup plan every superstep (new LogicalRDD leaves every
-    * iteration), measured at ~1.4 s/superstep of driver wall (BenchLevel
-    * GRAFT_LEVEL_DEBUG: wall−jobMs) — a fixed serial term that alone caps
-    * 2→8-core scaling efficiency at ~0.69 on the 171M-edge artifact no
-    * matter how well the kernel scales. The north rule's "no RDD unless
-    * forced" is met with receipts: the data model, build, save/load and
-    * readback stay Datasets; only the loop drops to co-partitioned
+    * iteration), measured at ~1.4 s/superstep of driver wall (a level
+    * session's wall minus its Spark job time) — a fixed serial term that
+    * alone caps 2→8-core scaling efficiency at ~0.69 on the 171M-edge
+    * artifact no matter how well the kernel scales. The north rule's "no
+    * RDD unless forced" is met with receipts: the data model, build,
+    * save/load and readback stay Datasets; only the loop drops to co-partitioned
     * `join`/`cogroup` (both narrow — the ONE shuffle per superstep is the
     * message exchange).
     *

@@ -102,7 +102,6 @@ final class MultiQueryDriver(spark: SparkSession,
       n -> GraphMatcher.countMatches(spark, q, edges, vertices).head().getLong(0)
     }.toSeq: _*)
 
-  var batchesSeen: Long = 0L
   var searchesRun: Long = 0L      // (query, batch) pairs that paid a delta join
   var searchesSkipped: Long = 0L  // (query, batch) pairs skipped by routing
   var fullRecomputes: Long = 0L   // relabel hazard fallbacks
@@ -189,20 +188,8 @@ final class MultiQueryDriver(spark: SparkSession,
   def applyBatchLocal(ops: Seq[GraphUpdate]): (Int, Long, Long) =
     graft.util.BatchConf.withStaticPlan(spark)(applyBatchLocalImpl(ops))
 
-  // builder-side phase trace (GRAFT_BATCH_TRACE=1): driver wall per phase,
-  // to separate Spark action time from Catalyst analysis / local work
-  private val trace = sys.env.get("GRAFT_BATCH_TRACE").contains("1")
-  private var traceT0 = 0L
-  private def tr(phase: String): Unit = if (trace) {
-    val now = System.nanoTime()
-    System.err.println(f"  [trace] $phase%-22s ${(now - traceT0) / 1e9}%6.3fs")
-    traceT0 = now
-  }
-
   private def applyBatchLocalImpl(ops: Seq[GraphUpdate]): (Int, Long, Long) = {
     import spark.implicits._
-    traceT0 = System.nanoTime()
-    batchesSeen += 1
     val v0 = vertices
     val e0 = edges
     // PURE-EDGE fast path: one probe of e0 yields the delta AND the after
@@ -219,7 +206,6 @@ final class MultiQueryDriver(spark: SparkSession,
         val (v1g, e1g) = Updates.applyBatchLabeledLocal(spark, v0, e0, ops)
         (v1g, e1g, None, None)
       }
-    tr("applyBatch views (+probe)")
 
     // relabel hazard: an existing vertex whose label changed (driver-side
     // candidates; one tiny semi-join probe of V only when v-ops exist)
@@ -244,7 +230,6 @@ final class MultiQueryDriver(spark: SparkSession,
         (compacted.filter(_.op == "v").map(_.id1).filterNot(vOpOldLabels.contains),
           compacted.filter(_.op == "-v").map(_.id1))
       }
-    tr("relabel+compact")
 
     if (pureEdge) {
       edges = edgeRoller.roll(Seq(e1)).head
@@ -266,7 +251,6 @@ final class MultiQueryDriver(spark: SparkSession,
     }
     val v1c = vertices
     val e1c = edges
-    tr("roll/compact")
 
     if (relabeled) {
       fullRecomputes += 1
@@ -288,10 +272,6 @@ final class MultiQueryDriver(spark: SparkSession,
     // ONE action: before/after candidate probe → the exact canonical delta
     // plus its labeled row slices, all collected (|Δ|-bounded)
     val delta = fastDelta.getOrElse(Updates.edgeDeltaCollected(spark, e0, e1c, ops))
-    // when the pure-edge fast path already produced the delta, the probe ran
-    // inside "applyBatch views (+probe)" — label this phase honestly so
-    // GRAFT_BATCH_TRACE profiles don't attribute ~0s to a phantom action
-    tr(if (fastDelta.isDefined) "delta (reused from probe)" else "delta probe (action)")
     val nAdd = delta.added.size.toLong
     val nDel = delta.deleted.size.toLong
     if (nAdd == 0 && nDel == 0) {
@@ -311,7 +291,6 @@ final class MultiQueryDriver(spark: SparkSession,
       case Some(lbl) =>
         // pure-edge: labels already collected inside the one probe action
         // (a superset of the delta's endpoints; no -v ops ⇒ no ghosts)
-        tr("labels (reused from probe)")
         (lbl, Map.empty[Long, Int])
       case None =>
         val endpointIds = (delta.addedRows ++ delta.deletedRows)
@@ -327,7 +306,6 @@ final class MultiQueryDriver(spark: SparkSession,
                 .select(lit("o").as("w"), col("id"), col("vlabel")))
           probe.collect()
         }
-        tr("label probe (action)")
         (labelRows.filter(_.getString(0) == "n")
           .map(r => r.getLong(1) -> r.getInt(2)).toMap,
           labelRows.filter(_.getString(0) == "o")
@@ -394,7 +372,6 @@ final class MultiQueryDriver(spark: SparkSession,
           .select(ra("src"), ra("dst"), ra("elabel"), ra("slabel"), ra("dlabel"))
         (ra, rf, addRows)
       }
-    tr("routing+rel overlay")
     def commitRel(): Unit = {
       rel = relRoller.roll(Seq(relFinal)).head
       relBatchesSinceCompact += 1
@@ -421,17 +398,13 @@ final class MultiQueryDriver(spark: SparkSession,
             addedRelRows, deletedRelRows, hasAdds = nAdd > 0, hasDels = nDel > 0)
         }
       }
-      tr("applyDelta plans")
       if (aggs.nonEmpty) {
         // one exchange for every query's pos+neg counts: the tagged
         // per-match rows union and a single (q, side) grouped count
         // (map-side partial agg keeps the shuffled rows ≤ 2·N_queries)
         val countPlan = aggs.reduce(_ unionByName _)
           .groupBy(col("q"), col("side")).agg(count(lit(1)).as("c"))
-        if (sys.env.get("GRAFT_BATCH_EXPLAIN").contains("1") && batchesSeen <= 2)
-          countPlan.explain("formatted")
         val rows = countPlan.collect()
-        tr("count action")
         val bySide = rows.map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
         affected.foreach { name =>
           states(name).commitCounts(bySide.getOrElse((name, "pos"), 0L),
@@ -440,12 +413,10 @@ final class MultiQueryDriver(spark: SparkSession,
         }
       }
       commitRel()
-      tr("commit+counts")
       // every query's seed stage re-anchors on the committed rel (content is
       // unchanged for unaffected queries — routing guarantees it — but the
       // anchor keeps seed lineage at the maintained base, not the overlay)
       states.values.foreach(_.anchorSeed(rel))
-      tr("anchorSeed")
       return (affected.size, nAdd, nDel)
     }
 

@@ -204,7 +204,6 @@ final class SJTreeState(spark: SparkSession, val query: QueryGraph,
     require(hasAdds || hasDels, "empty delta — skip applyDelta entirely")
     lastName = name
     val k = order.size
-    SJTreeState.trStart()
 
     // All per-batch derivations stay LAZY — zero driver actions here (a
     // per-stage localCheckpoint, even a lazy one, posts a Dataset action
@@ -247,28 +246,20 @@ final class SJTreeState(spark: SparkSession, val query: QueryGraph,
       if (!hasAdds) (stages.toVector, None)
       else {
         val dPrev0 = seed(addedRel)
-        SJTreeState.tr("pos seed build")
         val dPrev0p =
           if (localBacked(addedRel)) { val x = dPrev0.persist(storage); cached += x; x }
           else dPrev0
-        SJTreeState.tr("pos seed persist")
         var dPrev = dPrev0p
         var acc = Vector(stages(0).unionByName(dPrev))
         (1 until k).foreach { i =>
           val t1 = step(i, dPrev, relNew, tinyLeft = true)
-          SJTreeState.tr(s"pos t1 [$i]")
           val t2 = step(i, stages(i - 1), addedRel, tinyLeft = false)
-          SJTreeState.tr(s"pos t2 [$i]")
-          val u = t1.unionByName(t2)
-          SJTreeState.tr(s"pos union [$i]")
-          dPrev = u.persist(storage)
-          SJTreeState.tr(s"pos persist [$i]")
+          dPrev = t1.unionByName(t2).persist(storage)
           cached += dPrev
           acc = acc :+ stages(i).unionByName(dPrev)
         }
         (acc, Some(dPrev))
       }
-    SJTreeState.tr("pos pass")
 
     // negative pass over A (prefix-deleted ∪ clean-prefix-edge-deleted)
     val (negD, negLast) =
@@ -291,7 +282,6 @@ final class SJTreeState(spark: SparkSession, val query: QueryGraph,
         }
         (acc, Some(nPrev))
       }
-    SJTreeState.tr("neg pass")
 
     // New stages = (old ∪ Δ⁺) ∖ D. Each materialized stage (>= 1) is
     // TRUNCATED to a LogicalRDD leaf (plan → RDD → fresh Dataset, no job,
@@ -324,7 +314,6 @@ final class SJTreeState(spark: SparkSession, val query: QueryGraph,
         leaf
       }
     }.toVector
-    SJTreeState.tr("new stages")
     posLast.foreach { d => cached -= d; pinned += d }
     negLast.foreach { d => cached -= d; pinned += d }
     deltaGens.enqueue(cached.toSeq); cached.clear()
@@ -333,7 +322,6 @@ final class SJTreeState(spark: SparkSession, val query: QueryGraph,
 
     val out = posLast.map(_.select(lit(name).as("q"), lit("pos").as("side"))).toSeq ++
       negLast.map(_.select(lit(name).as("q"), lit("neg").as("side"))).toSeq
-    SJTreeState.tr("tag plans")
     out
   }
 
@@ -379,17 +367,4 @@ final class SJTreeState(spark: SparkSession, val query: QueryGraph,
 
   /** The maintained final-stage match relation (for tests / sinks). */
   def matches: DataFrame = stages.last
-}
-
-private[matching] object SJTreeState {
-  // sub-phase trace shared with MultiQueryDriver's GRAFT_BATCH_TRACE=1
-  val trace: Boolean = sys.env.get("GRAFT_BATCH_TRACE").contains("1")
-  private val t0 = new ThreadLocal[java.lang.Long] { override def initialValue = 0L }
-  def tr(phase: String): Unit = if (trace) {
-    val now = System.nanoTime()
-    if (t0.get != 0L)
-      System.err.println(f"    [sjtrace] $phase%-20s ${(now - t0.get) / 1e9}%6.3fs")
-    t0.set(now)
-  }
-  def trStart(): Unit = if (trace) t0.set(System.nanoTime())
 }

@@ -61,8 +61,7 @@ final class StreamGraph(spark: SparkSession,
     * measurable payoff of incremental maintenance vs recompute. */
   @volatile var prRanks: DataFrame =
     if (!maintainPageRank) null
-    else new graft.algo.PageRank(tol = prTol).runOnPrepared(spark, prPrepared)
-      .state.localCheckpoint(true)
+    else new graft.algo.PageRank(tol = prTol).runOnPrepared(spark, prPrepared).state
   @volatile var prIterations: Seq[Int] = Seq.empty
   @volatile var prIterationsSum: Long = 0L
   @volatile var prRebuilds: Long = 0L
@@ -72,9 +71,12 @@ final class StreamGraph(spark: SparkSession,
     * worst slightly early, never late) and saves the per-batch count job the
     * old exact probe paid — the tier's 4-actions-per-batch discipline. */
   @volatile private var prPatchBound: Long = 0L
+  /** Connected-component labels (id, label), kept as each refresh returns
+    * them: a checkpoint leaf already (the `Superstep` state, or
+    * `scopedCcDelete`'s merged copy), never copied into a second one. The
+    * same holds for `prRanks`. */
   @volatile var ccState: DataFrame =
-    new graft.algo.ConnectedComponents(maxIter = 60)
-      .run(spark, edges, vertices).state.localCheckpoint(true)
+    new graft.algo.ConnectedComponents(maxIter = 60).run(spark, edges, vertices).state
   @volatile var totalSafe: Long = 0L
   @volatile var totalUnsafe: Long = 0L
   @volatile var batchesSeen: Long = 0L
@@ -215,7 +217,8 @@ final class StreamGraph(spark: SparkSession,
       if (nUnsafe == 0) {
         val newV = vertices.join(ccState.select(col("id")), Seq("id"), "left_anti")
           .withColumn("label", col("id"))
-        AlgoResult(ccState.union(newV), 0, Seq.empty)
+        // the only lazy state: it still reads the rolled `vertices`
+        AlgoResult(ccState.union(newV).localCheckpoint(true), 0, Seq.empty)
       } else if (!hasDelete) {
         val cc = new graft.algo.ConnectedComponents(maxIter = 60)
         val warmInit = ccState.union(
@@ -225,7 +228,7 @@ final class StreamGraph(spark: SparkSession,
       } else {
         scopedCcDelete(ops)
       }
-    ccState = res.state.localCheckpoint(true)
+    ccState = res.state
     lastCcMetrics = res.metrics
     totalSafe += nSafe
     totalUnsafe += nUnsafe
@@ -286,7 +289,7 @@ final class StreamGraph(spark: SparkSession,
       }
       val prRes = new graft.algo.PageRank(tol = prTol)
         .runFromPrepared(spark, prPrepared, prRanks)
-      prRanks = prRes.state.localCheckpoint(true)
+      prRanks = prRes.state
       prIterationsSum += prRes.iterations
       // bounded history (long streams): the sum above keeps the average
       // derivable after the per-batch list stops growing

@@ -258,18 +258,6 @@ object Updates {
       rowsOf("f", added), rowsOf("b", deleted))
   }
 
-  // builder-side sub-phase trace (GRAFT_BATCH_TRACE=1), shared format with
-  // MultiQueryDriver/SJTreeState: prints the wall since `t0`, returns the
-  // new mark (the caller keeps it — concurrent batches share no state)
-  private val peTrace: Boolean = sys.env.get("GRAFT_BATCH_TRACE").contains("1")
-  private def petr(phase: String, t0: Long): Long =
-    if (!peTrace) t0
-    else {
-      val now = System.nanoTime()
-      System.err.println(f"    [petrace] $phase%-20s ${(now - t0) / 1e9}%6.3fs")
-      now
-    }
-
   /** ONE-scan fast path for PURE-EDGE batches (every op is e/-e): probes
     * `edges` once with the batch's canonical candidate keys broadcast and
     * derives BOTH the collected delta (exact `edgeDeltaCollected`
@@ -293,7 +281,6 @@ object Updates {
                            vertices: Option[DataFrame], ops: Seq[GraphUpdate])
       : (DataFrame, EdgeDeltaLocal, Map[Long, Int]) = {
     import spark.implicits._
-    var t = System.nanoTime()
     require(ops.forall(o => o.op == "e" || o.op == "-e"), "pure-edge batches only")
     def canon(s: Long, d: Long): (Long, Long) = if (s < d) (s, d) else (d, s)
     // flags come from the RAW ops (edgeDeltaCollected's candidate sets);
@@ -302,7 +289,6 @@ object Updates {
       .filter(k => k._1 != k._2).toSet
     val rawDelK = ops.filter(_.op == "-e").map(u => canon(u.id1, u.id2))
       .filter(k => k._1 != k._2).toSet
-    t = petr("raw key sets", t)
     val e = edges.select(col("src"), col("dst"), col("elabel"))
     if (rawAddK.isEmpty && rawDelK.isEmpty) {
       // batch held only SELF-LOOP ops: no canonical delta (self-loops never
@@ -321,11 +307,9 @@ object Updates {
     }
 
     val c = compactLocal(ops)
-    t = petr("compactLocal", t)
     val addRows = c.filter(_.op == "e").map(u => (u.id1, u.id2, u.label))
       .filter(t => t._1 != t._2)
     val delDirected = c.filter(_.op == "-e").map(u => (u.id1, u.id2)).toSet
-    t = petr("add/del rows", t)
 
     // the ONE probe action: E rows whose canonical key is a candidate,
     // unioned (when a vertex table rides along) with the V label probe
@@ -347,9 +331,7 @@ object Updates {
         eProbe.unionByName(vProbe)
       case None => eProbe
     }
-    t = petr("probe plan build", t)
     val probeRows = probe.collect()
-    t = petr("probe collect (action)", t)
     val hits = probeRows.iterator.filter(!_.getBoolean(0))
       .map(r => (r.getLong(1), r.getLong(2), r.getInt(3))).toSeq
     val labels: Map[Long, Int] = probeRows.iterator.filter(_.getBoolean(0))
@@ -366,7 +348,6 @@ object Updates {
     val deleted = keysOf(hits, rawDelK) -- keysOf(afterHits, rawDelK)
     val addedRows = afterHits.filter(t => added(canon(t._1, t._2)))
     val deletedRows = hits.filter(t => deleted(canon(t._1, t._2)))
-    t = petr("delta derivation", t)
 
     var e1 = if (newRows.isEmpty) e
       else e.union(graft.util.DeltaDF.of(spark, newRows, "src", "dst", "elabel"))
@@ -374,7 +355,6 @@ object Updates {
       e1 = e1.join(broadcast(
           graft.util.DeltaDF.of(spark, delDirected.toSeq, "src", "dst")),
         Seq("src", "dst"), "left_anti")
-    petr("after view build", t)
     (e1.select(col("src"), col("dst"), col("elabel")),
       EdgeDeltaLocal(added.toSeq, deleted.toSeq, addedRows, deletedRows), labels)
   }

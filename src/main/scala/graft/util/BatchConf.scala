@@ -47,20 +47,18 @@ object BatchConf {
     * 3.6s 'applyDelta plans' phase. Excluded, those subtrees run as
     * LocalTableScan + codegen'd Filter inside the single count job, in
     * parallel, exactly once. */
-  def withStaticPlan[T](spark: SparkSession)(f: => T): T =
-    if (sys.env.get("GRAFT_KEEP_AQE").contains("1")) f
-    else {
-      val prev = spark.conf.get(Key, "true")
-      val prevEx = spark.conf.get(ExcludeKey, "")
-      spark.conf.set(Key, "false")
-      spark.conf.set(ExcludeKey,
-        if (prevEx.isEmpty) LocalFold
-        else if (prevEx.contains(LocalFold)) prevEx
-        else s"$prevEx,$LocalFold")
-      try f finally {
-        spark.conf.set(Key, prev)
-        if (prevEx.isEmpty) spark.conf.unset(ExcludeKey)
-        else spark.conf.set(ExcludeKey, prevEx)
-      }
+  def withStaticPlan[T](spark: SparkSession)(f: => T): T = {
+    val prev = spark.conf.get(Key, "true")
+    val prevEx = spark.conf.get(ExcludeKey, "")
+    spark.conf.set(Key, "false")
+    spark.conf.set(ExcludeKey,
+      if (prevEx.isEmpty) LocalFold
+      else if (prevEx.contains(LocalFold)) prevEx
+      else s"$prevEx,$LocalFold")
+    try f finally {
+      spark.conf.set(Key, prev)
+      if (prevEx.isEmpty) spark.conf.unset(ExcludeKey)
+      else spark.conf.set(ExcludeKey, prevEx)
     }
+  }
 }

@@ -100,4 +100,33 @@ class CsrPageRankSpec extends SparkSpec {
       }
     }
   }
+
+  // the artifact path of Bench's scaling section: build → save → load feeds
+  // runPacked exactly the blocks it was built with, minus the vertex ids
+  test("save → load → runPacked: bit-identical ranks; loaded blocks carry no ids") {
+    import spark.implicits._
+    val pages = spark.createDataset(PagesFixture.generate(4, 12))
+    val (v, e) = GraphBuilder.buildVerified(spark, pages)
+    // one block: every float sum then has a fixed order (with several, the
+    // dangling mass is merged in task-completion order)
+    val built = CsrPageRank.build(spark, e.toDF(), v.toDF(), Some(1))
+    val dir = java.nio.file.Files.createTempDirectory("graft-csr-artifact").toString
+    CsrPageRank.save(built, dir)
+    val loaded = CsrPageRank.load(spark, dir)
+    assert((loaded.n, loaded.p) == ((built.n, built.p)))
+    def ranks(b: CsrPageRank.Blocks) = {
+      val (state, iters, _) = CsrPageRank.runPacked(spark, b, tol = 1e-10, maxIter = 500)
+      (rankMap(CsrPageRank.toRows(spark, state, built.vertsOrFail)), iters)
+    }
+    val (want, wantIters) = ranks(built)
+    val (got, gotIters) = ranks(loaded)
+    assert(gotIters == wantIters && wantIters > 3)
+    assert(got.size == v.count())
+    assert(got.keySet == want.keySet)
+    got.foreach { case (id, r) =>
+      assert(java.lang.Double.doubleToRawLongBits(r) ==
+        java.lang.Double.doubleToRawLongBits(want(id)), s"rank($id): $r vs ${want(id)}")
+    }
+    intercept[IllegalStateException](loaded.vertsOrFail)
+  }
 }
