@@ -183,7 +183,7 @@ object Bench {
   /** Streaming continuous-matching bench (the number to set against the
     * reference's headline updates/s, BASELINE.md "Incremental Matching"):
     * replay a deterministic update stream — written and re-parsed in the
-    * reference's text format (S2) — through the J6 materialized-state
+    * reference's text format (S2) — through the SJ-tree (J6)
     * multi-query driver over the sf-scale labeled co-purchase graph.
     * Returns (updates, batches, seconds, safeFraction, updatesPerSec).
     * Honest framing: a Spark micro-batch pays a fixed driver/coordination
@@ -204,7 +204,7 @@ object Bench {
     val qs = Map(
       "p012" -> QueryGraph.path(Seq(Some(0), Some(1), Some(2)), Seq(Some(1), Some(2))),
       "p123" -> QueryGraph.path(Seq(Some(1), Some(2), Some(3)), Seq(Some(0), Some(1))))
-    val driver = new MultiQueryDriver(spark, qs, v, e, materializeState = true)
+    val driver = new MultiQueryDriver(spark, qs, v, e)
 
     // deterministic stream in the reference text format, then re-parsed
     // through the TextGraph loader (same grammar as graph.cpp:251-285)

@@ -8,15 +8,9 @@ package graft.graph
   */
 final case class Edge(src: Long, dst: Long)
 
-final case class LabeledEdge(src: Long, dst: Long, elabel: Int)
-
 final case class Vertex(id: Long, url: String, lang: String)
 
 /** CDC record mirroring the reference's InsertUnit (utils/types.h:34-42):
   * op ∈ {"v","-v","e","-e"}; `seq` is the strict stream order the reference
   * gets implicitly from its FIFO queue (graph.cpp:251-285). */
 final case class GraphUpdate(seq: Long, op: String, id1: Long, id2: Long, label: Int)
-
-final case class RankRow(id: Long, rank: Double)
-
-final case class LabelRow(id: Long, label: Long)

@@ -23,40 +23,8 @@ import org.apache.spark.sql.functions._
   * groupBy-count aggregation and ONE checkpoint; the relation is built once
   * by the caller and shared with the join plan (GraphMatcher
   * .findMatchesIndexed).
-  *
-  * Incremental maintenance (X3, the reference's InsertionTopDown/BottomUp
-  * counter propagation, symbi.cpp:404-468):
-  *  - edge ADDS (`refreshAfterAdds`): candidacy is MONOTONE under adds, and
-  *    a vertex can join round-r candidacy only if its round-(r-1) support
-  *    changed — i.e. it touches a delta edge, is a new vertex, or neighbors
-  *    a round-(r-1) gainer. So evaluating only the propagating FRONTIER
-  *    (endpoints of delta, then neighbors of gainers) against the stored
-  *    per-round sets reproduces the full rebuild EXACTLY while touching
-  *    O(|delta| * deg^rounds) vertices instead of |V|.
-  *  - edge/vertex DELETES (`refreshAfterDeletes`): candidacy only shrinks;
-  *    re-prune the previous sets against the post-delete relation (cost
-  *    proportional to the index, not the graph).
   */
 object CandidateIndex {
-
-  /** Per-round candidate tables, each a (qv: String, id: Long) DataFrame
-    * (round 0 = label base, last = the index GraphMatcher consumes).
-    * `vertexIds` is the FULL vertex-id set the index was built/refreshed
-    * against — round 0 is label-filtered, so "is this vertex new?" must be
-    * answered against this set, never against round-0 membership (a
-    * non-matching-label vertex would otherwise be re-seeded every refresh,
-    * growing the frontier to O(|V|) per batch). */
-  final case class Index(query: QueryGraph, perRound: Vector[DataFrame],
-                         vertexIds: DataFrame) {
-    def rounds: Int = perRound.size - 1
-    def candidates: Map[String, DataFrame] = query.vertices.map { v =>
-      v.name -> perRound.last.where(col("qv") === v.name).select(col("id"))
-    }.toMap
-    /** (qv -> size) of the final round — one aggregate job. */
-    def sizes: Map[String, Long] =
-      perRound.last.groupBy(col("qv")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-  }
 
   /** Directed incidences (u, other, elabel, tag) of the query graph. */
   private def incidences(q: QueryGraph): Seq[(String, String, Option[Int], Int)] =
@@ -74,18 +42,12 @@ object CandidateIndex {
       base.select(lit(qv.name).as("qv"), col("id"))
     }.reduce(_ union _)
 
-  /** One pruning round: survivors of `evalSet` (qv, id) against `prev`,
-    * using only edges whose src is in `srcScope` (None = whole relation).
-    * Returns (qv, id) rows whose every incident query edge has support. */
-  private def pruneRound(q: QueryGraph, rel: DataFrame, prev: DataFrame,
-                         evalSet: DataFrame, srcScope: Option[DataFrame]): DataFrame = {
-    val relScoped = srcScope match {
-      case Some(s) => rel.join(s.select(col("id").as("src")), Seq("src"), "left_semi")
-      case None => rel
-    }
+  /** One pruning round over the (qv, id) table `prev`: the rows whose every
+    * incident query edge has support in `prev`. */
+  private def pruneRound(q: QueryGraph, rel: DataFrame, prev: DataFrame): DataFrame = {
     val supports = incidences(q).map { case (u, other, elabel, tag) =>
       val el = elabel.map(l => col("elabel") === l).getOrElse(lit(true))
-      relScoped.where(el)
+      rel.where(el)
         .join(prev.where(col("qv") === other).select(col("id").as("dst")),
           Seq("dst"), "left_semi")
         .select(col("src").as("id"), lit(u).as("qv"), lit(tag).as("etag"))
@@ -95,7 +57,7 @@ object CandidateIndex {
     import spark.implicits._
     val req = broadcast(reqDf.toDF("qv", "req"))
     supports
-      .join(evalSet.select(col("qv"), col("id")), Seq("qv", "id"), "left_semi")
+      .join(prev.select(col("qv"), col("id")), Seq("qv", "id"), "left_semi")
       .groupBy(col("qv"), col("id"))
       .agg(countDistinct(col("etag")).as("nsup"))
       .join(req, Seq("qv"))
@@ -103,133 +65,16 @@ object CandidateIndex {
       .select(col("qv"), col("id"))
   }
 
-  /** Build over a pre-materialized relation (share it with the join plan!). */
+  /** Build over a pre-materialized relation (share it with the join plan!):
+    * the last round's candidate ids per query vertex, for GraphMatcher's
+    * `candidates`. */
   def buildOnRel(spark: SparkSession, query: QueryGraph, rel: DataFrame,
-                 vertices: DataFrame, rounds: Int = 2): Index = {
-    val base = labelBase(query, vertices).localCheckpoint(true)
-    var per = Vector(base)
-    var round = 0
-    while (round < rounds) {
-      val prev = per.last
-      val next = pruneRound(query, rel, prev, prev, None).localCheckpoint(true)
-      per = per :+ next
-      round += 1
+                 vertices: DataFrame, rounds: Int = 2): Map[String, DataFrame] = {
+    val last = (1 to rounds).foldLeft(labelBase(query, vertices).localCheckpoint(true)) {
+      (prev, _) => pruneRound(query, rel, prev).localCheckpoint(true)
     }
-    Index(query, per, vertices.select(col("id")).localCheckpoint(true))
-  }
-
-  /** What an insert-side refresh produced besides the index: per-round
-    * frontier sizes (the O(|delta|)-shape evidence) and the per-round DELTA
-    * CANDIDATE SETS (qv, id) — newly-valid candidates only. The delta views
-    * are the reference's IEDyn X5 surface (DCS_CD_delta_, iedyn.cpp:516-548):
-    * delta enumeration may seed from new candidates instead of rescanning
-    * the full sets. */
-  final case class RefreshStats(frontierSizes: Seq[Long], deltaSets: Vector[DataFrame])
-
-  /** EXACT incremental refresh after edge adds (and optional new vertices):
-    * equals buildOnRel on the post-add graph, but only the propagating
-    * frontier is re-evaluated. `relNew` must be the post-add materialized
-    * relation; `verticesNew` the post-add vertex set; `addedEdges` the
-    * (src, dst) delta. */
-  def refreshAfterAdds(spark: SparkSession, query: QueryGraph, relNew: DataFrame,
-                       verticesNew: DataFrame, prev: Index,
-                       addedEdges: DataFrame,
-                       newVertexIdsLocal: Option[Seq[Long]] = None): (Index, RefreshStats) = {
-    import spark.implicits._
-    val endpoints = addedEdges.select(col("src").as("id"))
-      .union(addedEdges.select(col("dst").as("id"))).distinct()
-    // genuinely-new = not in the PRIOR FULL vertex set (round 0 is label-
-    // filtered, so anti-joining it would re-seed every non-matching-label
-    // vertex each refresh — an O(|V|) frontier; round-3 advice finding).
-    // A driver that knows the batch (the continuous tier always does) passes
-    // the new ids LOCALLY — the big-vs-big anti-join per refresh disappears.
-    val newVerts = newVertexIdsLocal match {
-      case Some(ids) => ids.toDF("id")
-      case None => verticesNew.select(col("id"))
-        .join(prev.vertexIds, Seq("id"), "left_anti")
-    }
-    val seedIds = endpoints.union(newVerts).distinct().localCheckpoint(true)
-
-    // round 0: label base only grows by genuinely new vertices.
-    // (explicit select: USING joins put the join columns first, and a
-    // positional union downstream would silently swap qv/id)
-    val baseDiff = labelBase(query, verticesNew)
-      .join(seedIds, Seq("id"), "left_semi")
-      .join(prev.perRound(0), Seq("qv", "id"), "left_anti")
-      .select(col("qv"), col("id"))
-      .localCheckpoint(true)
-    var per = Vector(prev.perRound(0).union(baseDiff).localCheckpoint(true))
-    var frontierIds = seedIds
-    val frontierSizes = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var diffs = Vector(baseDiff)
-
-    (1 to prev.rounds).foreach { r =>
-      frontierSizes += frontierIds.count()
-      // evaluate every (qv, frontier id) from scratch against round r-1
-      val evalPairs = query.vertices.map(v => frontierIds.select(lit(v.name).as("qv"), col("id")))
-        .reduce(_ union _)
-      val survivors = pruneRound(query, relNew, per(r - 1), evalPairs,
-          srcScope = Some(frontierIds))
-        .join(per.head, Seq("qv", "id"), "left_semi") // label check (round 0)
-      val diff = survivors.join(prev.perRound(r), Seq("qv", "id"), "left_anti")
-        .select(col("qv"), col("id"))
-        .localCheckpoint(true)
-      per = per :+ prev.perRound(r).union(diff).localCheckpoint(true)
-      diffs = diffs :+ diff
-      // next frontier: whoever neighbors a gainer (plus the seeds again —
-      // a seed may gain candidacy only at a later round)
-      val gainerIds = diff.select(col("id")).distinct()
-      frontierIds = relNew
-        .join(gainerIds.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-        .select(col("src").as("id"))
-        .union(seedIds).distinct().localCheckpoint(true)
-    }
-    // the maintained full-id set: a per-refresh |V| checkpoint copy is only
-    // needed on the generic path; with local new ids it's a tiny overlay
-    val idsNew = newVertexIdsLocal match {
-      case Some(ids) if ids.isEmpty => prev.vertexIds
-      case Some(ids) => prev.vertexIds.union(ids.toDF("id")).localCheckpoint(true)
-      case None => verticesNew.select(col("id")).localCheckpoint(true)
-    }
-    (Index(query, per, idsNew), RefreshStats(frontierSizes.toSeq, diffs))
-  }
-
-  /** Shrink-only refresh after deletes: re-prune the previous per-round sets
-    * against the post-delete relation (sound: deletes only remove support,
-    * and intersecting with the old sets keeps the rounds monotone). */
-  def refreshAfterDeletes(spark: SparkSession, query: QueryGraph, relNew: DataFrame,
-                          verticesNew: DataFrame, prev: Index,
-                          deletedVertexIdsLocal: Option[Seq[Long]] = None): Index = {
-    import spark.implicits._
-    // liveness filter: a semi-join against the FULL live vertex set puts the
-    // big table on the build side (cannot broadcast at scale); a driver that
-    // knows the batch passes the DEAD ids locally (must already exclude
-    // same-batch re-adds) and the filter becomes a broadcast anti
-    def keepLive(df: DataFrame): DataFrame = deletedVertexIdsLocal match {
-      case Some(dead) =>
-        if (dead.isEmpty) df
-        else df.join(broadcast(dead.toDF("id")), Seq("id"), "left_anti")
-      case None => df.join(verticesNew.select(col("id")), Seq("id"), "left_semi")
-    }
-    var per = Vector(keepLive(prev.perRound(0))
-      .select(col("qv"), col("id"))
-      .localCheckpoint(true))
-    (1 to prev.rounds).foreach { r =>
-      val evalSet = keepLive(prev.perRound(r))
-        .select(col("qv"), col("id"))
-      val next = pruneRound(query, relNew, per(r - 1), evalSet, None)
-        .join(evalSet, Seq("qv", "id"), "left_semi")
-        .select(col("qv"), col("id"))
-        .localCheckpoint(true)
-      per = per :+ next
-    }
-    val ids = deletedVertexIdsLocal match {
-      case Some(dead) if dead.isEmpty => prev.vertexIds
-      case Some(dead) => prev.vertexIds
-        .join(broadcast(dead.toDF("id")), Seq("id"), "left_anti")
-        .localCheckpoint(true)
-      case None => verticesNew.select(col("id")).localCheckpoint(true)
-    }
-    Index(query, per, ids)
+    query.vertices.map { v =>
+      v.name -> last.where(col("qv") === v.name).select(col("id"))
+    }.toMap
   }
 }

@@ -93,17 +93,6 @@ object GraphMatcher {
     }.toMap
   }
 
-  /** Back-compat frequency view (X1 alone). */
-  def edgeFrequencies(query: QueryGraph, rel: DataFrame): Map[QEdge, Long] = {
-    val aggs = query.edges.zipWithIndex.map { case (e, i) =>
-      sum(when(edgeCond(query, e, rel), 1L).otherwise(0L)).as(s"f$i")
-    }
-    val row = rel.agg(aggs.head, aggs.tail: _*).head()
-    query.edges.zipWithIndex.map { case (e, i) =>
-      e -> (if (row.isNullAt(i)) 0L else row.getLong(i))
-    }.toMap
-  }
-
   /** Greedy selectivity order (X1): rarest edge first, then always the
     * min-frequency edge touching the bound set (left-deep; closing edges
     * are picked as soon as both endpoints are bound — they only shrink). */
@@ -236,9 +225,9 @@ object GraphMatcher {
                          rounds: Int = 2,
                          homomorphic: Boolean = false): DataFrame = {
     val rel = materializedRelation(edges, vertices, Some(query))
-    val idx = CandidateIndex.buildOnRel(spark, query, rel, vertices, rounds)
+    val cands = CandidateIndex.buildOnRel(spark, query, rel, vertices, rounds)
     findMatches(spark, query, edges, vertices, homomorphic,
-      candidates = Some(idx.candidates), preRel = Some(rel))
+      candidates = Some(cands), preRel = Some(rel))
   }
 
   /** Count of matches as a 1-row DataFrame (count-only late
@@ -442,164 +431,6 @@ object GraphMatcher {
     val matches = plan(query, rel, order, homomorphic, carryFlag = true, None)
     val anyNew = (0 until query.edges.size).map(i => col(s"_f$i")).reduce(_ || _)
     matches.where(anyNew).agg(count(lit(1)).as("delta_matches"))
-  }
-
-  /** Batched continuous maintenance — J3/J4 for MANY queries in ONE Spark
-    * action (the reference amortizes per-update work across its query set
-    * the same way, newSP.h:12-100; round 3 ran up to two driver-blocking
-    * jobs per affected query per micro-batch). `flaggedEdges` carry
-    * isAdd/isDel; the flagged symmetric relation is built ONCE, every
-    * requested (query, side) count plan is unioned, and one collect returns
-    * them all. `orders` supplies each query's precomputed matching order
-    * (compute it at registration — per-batch statistics jobs would defeat
-    * the batching). Returns name -> (posCount, negCount). */
-  def countDeltaMatchesAll(spark: SparkSession,
-                           work: Seq[(String, QueryGraph, Boolean, Boolean)],
-                           orders: Map[String, Seq[QEdge]],
-                           flaggedEdges: DataFrame,
-                           vertices: DataFrame,
-                           homomorphic: Boolean = false): Map[String, (Long, Long)] = {
-    val todo = work.filter(w => w._3 || w._4)
-    if (todo.isEmpty) return Map.empty
-    val relFlagged = relation(flaggedEdges, vertices, "isAdd", "isDel")
-      .localCheckpoint(true)
-    val aggs = todo.flatMap { case (name, q, runAdds, runDels) =>
-      val order = orders(name)
-      def one(side: String, flag: String): DataFrame = {
-        val rel = relFlagged.withColumn("isNew", col(flag))
-        val matches = plan(q, rel, order, homomorphic, carryFlag = true, None)
-        val anyNew = (0 until q.edges.size).map(i => col(s"_f$i")).reduce(_ || _)
-        matches.where(anyNew).agg(count(lit(1)).as("c"))
-          .select(lit(name).as("q"), lit(side).as("side"), col("c"))
-      }
-      (if (runAdds) Seq(one("pos", "isAdd")) else Seq.empty) ++
-        (if (runDels) Seq(one("neg", "isDel")) else Seq.empty)
-    }
-    val rows = aggs.reduce(_ unionByName _).collect()
-    val bySide = rows.map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    todo.map { case (name, _, _, _) =>
-      name -> (bySide.getOrElse((name, "pos"), 0L), bySide.getOrElse((name, "neg"), 0L))
-    }.toMap
-  }
-
-  /** Pruning-funnel diagnostics (G3): partial-match cardinality after each
-    * join stage of the given (or default) order — the reference's per-stage
-    * counter report, as a small driver-side table. One count job per stage,
-    * so this is a DEBUG surface, not a hot path.
-    * Rows: (stage, edge, kind, rows). */
-  def matchingFunnel(spark: SparkSession, query: QueryGraph,
-                     edges: DataFrame, vertices: DataFrame,
-                     homomorphic: Boolean = false,
-                     orderOverride: Option[Seq[QEdge]] = None): Seq[(Int, String, String, Long)] = {
-    val rel = materializedRelation(edges, vertices, Some(query))
-    val order = orderOverride.getOrElse(
-      matchingOrderByCost(query, edgeStatistics(query, rel)))
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var bound = Vector(order.head.u, order.head.v)
-    for (k <- 1 to order.size) {
-      val prefix = order.take(k)
-      val kind =
-        if (k == 1) "seed"
-        else if (bound.contains(prefix.last.u) && bound.contains(prefix.last.v)) "closing"
-        else "extend"
-      if (k > 1 && kind == "extend")
-        bound = bound :+ (if (bound.contains(prefix.last.u)) prefix.last.v else prefix.last.u)
-      val n = plan(query, rel, prefix, homomorphic, carryFlag = false, None).count()
-      out += ((k, s"${prefix.last.u}-${prefix.last.v}", kind, n))
-    }
-    out.toSeq
-  }
-
-  /** Count matches whose image CONTAINS the single edge (a, b) — the
-    * reference's per-update delta search seeded from the new/deleted edge
-    * (Graphflow::AddEdge binds the update edge to every compatible query
-    * edge in both orientations and extends from there,
-    * graphflow.cpp:311-351). Exact: under an injective vertex mapping no
-    * two query edges can map to the same data edge, so the per-position
-    * counts are disjoint and their sum is the total. Injective only — a
-    * homomorphism may map several query edges onto the seeded data edge,
-    * which this sum would double count. */
-  def countMatchesThrough(spark: SparkSession, query: QueryGraph,
-                          edges: DataFrame, vertices: DataFrame,
-                          a: Long, b: Long,
-                          homomorphic: Boolean = false): Long = {
-    require(!homomorphic,
-      "countMatchesThrough is injective-only: per-query-edge seeded counts " +
-        "are disjoint only under injective mappings")
-    val rel = relation(edges, vertices).persist()
-    rel.count()
-    val freq = edgeFrequencies(query, rel)
-    var total = 0L
-    query.edges.foreach { qe =>
-      // force qe first in the order, then greedy as usual over the rest
-      val rest = matchingOrder(
-        QueryGraph(query.vertices, Seq(qe) ++ query.edges.filterNot(_ == qe)),
-        freq + (qe -> -1L)) // -1 pins qe as the unconditional first pick
-      Seq((a, b), (b, a)).foreach { case (s, d) =>
-        val seeded = rel.where(col("src") === s && col("dst") === d)
-        val relSeeded = rel // closing/extension edges still scan the graph
-        total += planSeeded(query, relSeeded, seeded, rest, homomorphic)
-          .agg(count(lit(1)).as("n")).head().getLong(0)
-      }
-    }
-    rel.unpersist()
-    total
-  }
-
-  /** plan() with the first edge's relation replaced by the seeded slice. */
-  private def planSeeded(query: QueryGraph, rel: DataFrame, seed: DataFrame,
-                         order: Seq[QEdge], homomorphic: Boolean): DataFrame = {
-    val e0 = order.head
-    val cond = {
-      val el = e0.elabel.map(l => seed("elabel") === l).getOrElse(lit(true))
-      val sl = query.byName(e0.u).vlabel.map(l => seed("slabel") === l).getOrElse(lit(true))
-      val dl = query.byName(e0.v).vlabel.map(l => seed("dlabel") === l).getOrElse(lit(true))
-      el && sl && dl
-    }
-    val first = seed.where(cond)
-      .select(col("src").as(e0.u), col("dst").as(e0.v))
-    continuePlan(query, rel, first, Vector(e0.u, e0.v), order.tail, homomorphic)
-  }
-
-  /** Extend a partial-match relation through the remaining ordered edges
-    * (no flags/candidates — the seeded path). */
-  private def continuePlan(query: QueryGraph, rel: DataFrame, partial0: DataFrame,
-                           bound0: Vector[String], rest: Seq[QEdge],
-                           homomorphic: Boolean): DataFrame = {
-    var partial = if (homomorphic) partial0
-      else partial0.where(col(bound0(0)) =!= col(bound0(1)))
-    var bound = bound0
-    var i = 0
-    rest.foreach { e =>
-      val alias = s"s$i"
-      val r = {
-        val el = e.elabel.map(l => rel("elabel") === l).getOrElse(lit(true))
-        val sl = query.byName(e.u).vlabel.map(l => rel("slabel") === l).getOrElse(lit(true))
-        val dl = query.byName(e.v).vlabel.map(l => rel("dlabel") === l).getOrElse(lit(true))
-        // orient the filter to however this edge joins below
-        if (bound.contains(e.u)) rel.where(el && sl && dl).as(alias)
-        else rel.select(col("dst").as("src"), col("src").as("dst"),
-          col("elabel"), col("dlabel").as("slabel"), col("slabel").as("dlabel"))
-          .where(el && sl && dl).as(alias)
-      }
-      if (bound.contains(e.u) && bound.contains(e.v)) {
-        partial = partial.join(r,
-          partial(e.u) === col(s"$alias.src") && partial(e.v) === col(s"$alias.dst"),
-          "left_semi")
-      } else {
-        val (known, newV) = if (bound.contains(e.u)) (e.u, e.v) else (e.v, e.u)
-        val joined = partial.join(r, partial(known) === col(s"$alias.src"))
-        val inj =
-          if (homomorphic) joined
-          else joined.where(bound.map(b => col(s"$alias.dst") =!= partial(b))
-            .reduce(_ && _))
-        partial = inj.select(
-          bound.map(partial(_)) :+ col(s"$alias.dst").as(newV): _*)
-        bound = bound :+ newV
-      }
-      i += 1
-    }
-    partial
   }
 
   /** The left-deep join plan over an ordered edge list. `ltConstraints` are

@@ -18,89 +18,56 @@ import graft.stream.Updates
   *     action, O(|Δ|) shuffle);
   *  2. ROUTING (F2/J11): a query is affected only if some delta edge's
   *     label signature (srcLabel, dstLabel, elabel) is in its signature set
-  *     — one broadcast join over the tiny labeled delta. Unaffected queries
+  *     — checked driver-side over the tiny labeled delta. Unaffected queries
   *     skip search entirely (the reference measures ~90% of updates safe);
-  *  3. for each affected query, positive/negative DELTA JOINS (J3/J4)
-  *     seeded by the flagged delta maintain the count:
-  *     cnt' = cnt + |matches of A using an added edge|
-  *                − |matches of A using a deleted edge|,
-  *     where A = before ∪ added (adds applied first, deletes second — the
-  *     same decomposition DeltaTriangles.maintain uses, generalized to any
-  *     query graph via GraphMatcher.countDeltaMatchesAll). EVERY affected
-  *     query's pos+neg counts run in ONE Spark action (the flagged relation
-  *     is built once and all count plans are unioned) — per-batch job count
-  *     is independent of the number of registered queries.
+  *  3. every query keeps its SJ-Tree partial-match stage relations
+  *     (SJTreeState, J6), maintained by the exact two-term delta rule over
+  *     the symmetric labeled relation, which is itself maintained by delta
+  *     union/anti-join (never rebuilt). Non-seed join stages probe STORED
+  *     state instead of re-deriving the prefix from E, and counts fall out
+  *     of the maintained final stage:
+  *     cnt' = cnt + |new final-stage rows| − |deleted final-stage rows|.
+  *     EVERY affected query's pos+neg counts run in ONE Spark action (the
+  *     tagged per-match rows are unioned under one grouped count), so the
+  *     per-batch job count is independent of the number of registered
+  *     queries.
   *
   * Restriction (documented): re-labeling an EXISTING vertex changes match
-  * sets with no edge delta; such batches trigger a full recompute of every
-  * query (the reference's streams never relabel — `v` ops only introduce
-  * vertices, README.md:67-83).
+  * sets with no edge delta; such batches rebuild the relation and every
+  * query's stages (the reference's streams never relabel — `v` ops only
+  * introduce vertices, README.md:67-83).
   *
-  * `useCandidateIndex = true` adds the reference's INDEX-AWARE classify (F3,
-  * SymBi's Prune 2/3: enumerate only if the update edge's endpoints are
-  * d2-valid candidates, symbi.cpp:770-771; parrallel_symbi.cpp:3071-3127):
-  * each query keeps a candidate index that is maintained INCREMENTALLY per
-  * batch (insert-side frontier propagation, delete-side shrink — X3), the
-  * symmetric labeled relation is maintained by delta union/anti-join (never
-  * rebuilt), and a label-routed query is still skipped when no delta edge
-  * lands inside adjacent candidate sets — checked for ALL affected queries
-  * in ONE job (tagged candidate union ⋈ the tiny delta; round 3 ran up to
-  * 2·|E(Q)| limit-1 jobs per query per batch). Unaffected queries' indexes
-  * drift only toward SUPERSETS (new round-0 vertices are reconciled on
-  * their next refresh), which keeps pruning sound.
-  *
-  * `materializeState = true` is the full J6: per-query SJ-Tree partial-match
-  * stage relations (SJTreeState) maintained by the exact two-term delta
-  * rule — non-seed join stages probe STORED state instead of re-deriving
-  * the prefix from E, and counts fall out of the maintained final stage.
+  * `materializeState` names the one mode (J6). It remains a parameter only
+  * for callers that pass `materializeState = true` by name; `false` is
+  * refused.
   */
 final class MultiQueryDriver(spark: SparkSession,
                              val queries: Map[String, QueryGraph],
                              initialVertices: DataFrame, // (id, vlabel)
                              initialEdges: DataFrame,    // (src, dst, elabel)
-                             useCandidateIndex: Boolean = false,
-                             indexRounds: Int = 2,
-                             materializeState: Boolean = false,
+                             materializeState: Boolean = true,
                              stateCompactEvery: Int = 8) {
-  require(!(useCandidateIndex && materializeState),
-    "pick one acceleration: candidate index (F3) or materialized state (J6)")
+  require(materializeState,
+    "MultiQueryDriver maintains the SJ-tree stage state (J6); there is no other mode")
 
   var vertices: DataFrame = initialVertices.localCheckpoint(true)
   var edges: DataFrame = initialEdges.localCheckpoint(true)
 
-  private val maintainRel = useCandidateIndex || materializeState
+  /** Maintained symmetric labeled relation. */
+  private var rel: DataFrame = GraphMatcher.materializedRelation(edges, vertices)
 
-  /** Maintained symmetric labeled relation (index/state modes). */
-  private var rel: DataFrame =
-    if (maintainRel) GraphMatcher.materializedRelation(edges, vertices) else null
-  private val indexes = scala.collection.mutable.Map.empty[String, CandidateIndex.Index]
-  if (useCandidateIndex) queries.foreach { case (n, q) =>
-    indexes(n) = CandidateIndex.buildOnRel(spark, q, rel, vertices, indexRounds)
-  }
-  var indexSkips: Long = 0L // label-routed but candidate-refuted (query, batch) pairs
-
-  /** Per-query matching orders, fixed at registration (per-batch statistics
-    * jobs would defeat the one-action batching). */
-  private val orders: Map[String, Seq[QEdge]] = {
-    val r = if (maintainRel) rel else GraphMatcher.materializedRelation(edges, vertices)
-    queries.map { case (n, q) => n -> GraphMatcher.chooseOrder(q, r) }
-  }
-
-  /** J6 stage state per query (materializeState mode). */
-  private val states = scala.collection.mutable.Map.empty[String, SJTreeState]
-  if (materializeState) queries.foreach { case (n, q) =>
-    val st = new SJTreeState(spark, q, orders(n), compactEvery = stateCompactEvery)
+  /** J6 stage state per query. Matching orders are fixed at registration
+    * (per-batch statistics jobs would defeat the one-action batching). */
+  private val states: Map[String, SJTreeState] = queries.map { case (n, q) =>
+    val st = new SJTreeState(spark, q, GraphMatcher.chooseOrder(q, rel),
+      compactEvery = stateCompactEvery)
     st.init(rel)
-    states(n) = st
+    n -> st
   }
 
   /** Maintained per-query match counts (G2's counters). */
   val counts: scala.collection.mutable.Map[String, Long] =
-    if (materializeState)
-      scala.collection.mutable.Map(states.map { case (n, st) => n -> st.matchCount }.toSeq: _*)
-    else scala.collection.mutable.Map(queries.map { case (n, q) =>
-      n -> GraphMatcher.countMatches(spark, q, edges, vertices).head().getLong(0)
-    }.toSeq: _*)
+    scala.collection.mutable.Map(states.map { case (n, st) => n -> st.matchCount }.toSeq: _*)
 
   var searchesRun: Long = 0L      // (query, batch) pairs that paid a delta join
   var searchesSkipped: Long = 0L  // (query, batch) pairs skipped by routing
@@ -122,43 +89,6 @@ final class MultiQueryDriver(spark: SparkSession,
     * untouched; re-checkpointing an unchanged V would copy it per window) */
   private var verticesDirty = false
 
-  /** ONE-job index-aware hit detection for ALL affected queries: every
-    * query's final candidate round is tagged (qname, qv) and unioned, the
-    * per-query-edge orientation specs are a tiny broadcast, and the labeled
-    * delta joins the union ONCE per side. Returns the (qname, side) pairs
-    * with at least one delta edge inside adjacent candidate sets. */
-  private def indexHitsAll(affected: Set[String],
-                           idxs: Map[String, CandidateIndex.Index],
-                           dAdd: DataFrame, dDel: DataFrame): Set[(String, String)] = {
-    import spark.implicits._
-    if (affected.isEmpty) return Set.empty
-    val specs = queries.toSeq.filter(kv => affected(kv._1)).flatMap { case (n, q) =>
-      q.edges.flatMap { e =>
-        Seq((n, e.u, e.v, e.elabel.getOrElse(-1)),
-          (n, e.v, e.u, e.elabel.getOrElse(-1)))
-      }
-    }.toDF("qname", "qu", "qvv", "qel")
-    val allCands = affected.toSeq.sorted.map { n =>
-      idxs(n).perRound.last.select(lit(n).as("qname"), col("qv"), col("id"))
-    }.reduce(_ unionByName _)
-    val delta = dAdd.select(col("src"), col("dst"), col("elabel"))
-      .withColumn("side", lit("a"))
-      .unionByName(dDel.select(col("src"), col("dst"), col("elabel"))
-        .withColumn("side", lit("d")))
-    // delta × specs is tiny (|Δ| · Σ|E(Q)|); the candidate union streams once
-    val probes = delta.join(broadcast(specs),
-      specs("qel") === lit(-1) || specs("qel") === delta("elabel")).as("p")
-    val cu = allCands.as("cu")
-    val cv = allCands.as("cv")
-    probes
-      .join(cu, col("p.qname") === col("cu.qname") &&
-        col("p.qu") === col("cu.qv") && col("p.src") === col("cu.id"))
-      .join(cv, col("p.qname") === col("cv.qname") &&
-        col("p.qvv") === col("cv.qv") && col("p.dst") === col("cv.id"))
-      .select(col("p.qname"), col("p.side")).distinct()
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-  }
-
   /** Apply one micro-batch; returns (nAffectedQueries, addedCount, deletedCount).
     * The batch is collected ONCE (it is |Δ|-sized by definition) and the whole
     * per-batch protocol runs on the driver-local fast path — see
@@ -175,13 +105,13 @@ final class MultiQueryDriver(spark: SparkSession,
     * pays a fixed scheduler + broadcast-build cost that dominated the old
     * 20-action protocol), so everything |Δ|-bounded happens in plain Scala:
     * segmentation/compaction, the relabel hazard check's candidate set,
-    * routing signatures, the vUnion ghost rows, and the relation delta rows.
+    * routing signatures and the relation delta rows.
     * The remaining actions per batch:
     *   1. the relabel probe over V          (only when the batch has v-ops)
     *   2. the before/after candidate probe  (one job; for PURE-EDGE batches
     *      the endpoint-label probe over V rides in the SAME action)
     *   3. the endpoint-label probe over V   (one job, mixed batches only)
-    *   4. the per-query delta-count union   (one job, J6 state mode)
+    *   4. the per-query delta-count union   (one job)
     *   5. amortized: graph/rel/stage compaction every stateCompactEvery
     * — independent of query count AND of graph size in job count; the
     * probes stream V/E once with delta-sized broadcasts (no shuffle). */
@@ -210,26 +140,13 @@ final class MultiQueryDriver(spark: SparkSession,
     // relabel hazard: an existing vertex whose label changed (driver-side
     // candidates; one tiny semi-join probe of V only when v-ops exist)
     val vOps = ops.filter(_.op == "v")
-    val vOpOldLabels: Map[Long, Int] =
-      if (vOps.isEmpty) Map.empty
-      else v0.join(broadcast(vOps.map(_.id1).distinct.toDF("id")), Seq("id"), "left_semi")
+    val relabeled = vOps.nonEmpty && {
+      val oldL = v0.join(broadcast(vOps.map(_.id1).distinct.toDF("id")), Seq("id"), "left_semi")
         .select(col("id"), col("vlabel")).collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val relabeled = vOps.nonEmpty && {
       val newL = vOps.groupBy(_.id1).map { case (id, us) => id -> us.maxBy(_.seq).label }
-      newL.exists { case (id, l) => vOpOldLabels.get(id).exists(_ != l) }
+      newL.exists { case (id, l) => oldL.get(id).exists(_ != l) }
     }
-    // batch-derived vertex membership deltas (labeled tier: only v-ops
-    // create vertex rows; final compacted op decides survival). Pure-edge
-    // batches have no v/-v ops at all — skip the whole compaction pass
-    // (opt round 6: it re-ran the |Δ| compaction the fast path already did)
-    val (newVertexIds, deadVertexIds) =
-      if (pureEdge) (Seq.empty[Long], Seq.empty[Long])
-      else {
-        val compacted = Updates.compactLocal(ops)
-        (compacted.filter(_.op == "v").map(_.id1).filterNot(vOpOldLabels.contains),
-          compacted.filter(_.op == "-v").map(_.id1))
-      }
 
     if (pureEdge) {
       edges = edgeRoller.roll(Seq(e1)).head
@@ -255,16 +172,10 @@ final class MultiQueryDriver(spark: SparkSession,
     if (relabeled) {
       fullRecomputes += 1
       relRoller.clear()
-      if (maintainRel) rel = GraphMatcher.materializedRelation(e1c, v1c)
-      if (useCandidateIndex) queries.foreach { case (n, q) =>
-        indexes(n) = CandidateIndex.buildOnRel(spark, q, rel, v1c, indexRounds)
-      }
-      if (materializeState) queries.foreach { case (n, _) =>
-        states(n).init(rel)
-        counts(n) = states(n).matchCount
-      }
-      else queries.foreach { case (n, q) =>
-        counts(n) = GraphMatcher.countMatches(spark, q, e1c, v1c).head().getLong(0)
+      rel = GraphMatcher.materializedRelation(e1c, v1c)
+      states.foreach { case (n, st) =>
+        st.init(rel)
+        counts(n) = st.matchCount
       }
       return (queries.size, -1L, -1L)
     }
@@ -278,21 +189,17 @@ final class MultiQueryDriver(spark: SparkSession,
       searchesSkipped += queries.size
       return (0, 0L, 0L)
     }
-    val addedK = graft.util.DeltaDF.of(spark, delta.added, "lo", "hi")
-    val deletedK = graft.util.DeltaDF.of(spark, delta.deleted, "lo", "hi")
-    val addedLabeled = graft.util.DeltaDF.of(spark, delta.addedRows, "src", "dst", "elabel")
-    val deletedLabeled = graft.util.DeltaDF.of(spark, delta.deletedRows, "src", "dst", "elabel")
 
     // Endpoint labels, ONE probe action: v1 labels for every delta endpoint
-    // plus v0 ghost labels for the batch's -v ids (vUnion semantics: deleted
-    // endpoints keep old labels unless re-added in the same batch).
-    val vDelIds = ops.filter(_.op == "-v").map(_.id1).distinct
+    // plus v0 ghost labels for the batch's -v ids (deleted endpoints keep
+    // their old labels unless re-added in the same batch).
     val (newLabels, oldLabels) = fastLabels match {
       case Some(lbl) =>
         // pure-edge: labels already collected inside the one probe action
         // (a superset of the delta's endpoints; no -v ops ⇒ no ghosts)
         (lbl, Map.empty[Long, Int])
       case None =>
+        val vDelIds = ops.filter(_.op == "-v").map(_.id1).distinct
         val endpointIds = (delta.addedRows ++ delta.deletedRows)
           .flatMap(r => Seq(r._1, r._2)).distinct
         val labelRows = {
@@ -313,15 +220,9 @@ final class MultiQueryDriver(spark: SparkSession,
     }
     def labelOf(id: Long): Option[Int] = newLabels.get(id).orElse(oldLabels.get(id))
 
-    // vUnion as a LAZY view (ghost rows are driver-known)
-    val ghostRows = vDelIds.filterNot(newLabels.contains)
-      .flatMap(id => oldLabels.get(id).map(l => (id, l)))
-    val vUnion = if (ghostRows.isEmpty) v1c
-      else v1c.union(ghostRows.toDF("id", "vlabel"))
-
     // ROUTING, driver-side: which queries listen to any delta edge's label
-    // signature? (exact mirror of the old broadcast-join: endpoints with
-    // unknown labels can match no labeled relation row and are dropped)
+    // signature? (endpoints with unknown labels can match no labeled
+    // relation row and are dropped)
     val sigsLocal: Map[String, Seq[(Int, Int, Int)]] = queries.map { case (n, q) =>
       n -> q.edges.map { qe =>
         val lu = q.byName(qe.u).vlabel.getOrElse(-1)
@@ -344,11 +245,13 @@ final class MultiQueryDriver(spark: SparkSession,
 
     // maintain the symmetric relation by delta (union the added rows,
     // anti-join the deleted keys — never rebuilt). LAZY overlay views over
-    // the checkpointed base with LOCAL delta sides: the added relation rows
-    // are |Δ|-bounded and label-resolved on the driver (exact mirror of
-    // GraphMatcher.relation over the added slice: both orientations, inner
+    // the checkpointed base with LOCAL delta sides: the relation rows are
+    // |Δ|-bounded and label-resolved on the driver (exact mirror of
+    // GraphMatcher.relation over the delta slice: both orientations, inner
     // label join, dedup on (src,dst)), so the overlay costs ZERO actions.
-    def relRowsLocal(rows: Seq[(Long, Long, Int)]): Seq[(Long, Long, Int, Int, Int)] = {
+    // The deleted rows' labels are the stored ones: the relation's label
+    // copies are immutable, as relabels take the rebuild path above.
+    def relRowsLocal(rows: Seq[(Long, Long, Int)]): DataFrame = {
       val seen = scala.collection.mutable.Set.empty[(Long, Long)]
       val out = Seq.newBuilder[(Long, Long, Int, Int, Int)]
       rows.foreach { case (s, d, el) =>
@@ -357,136 +260,58 @@ final class MultiQueryDriver(spark: SparkSession,
           if (seen.add((d, s))) out += ((d, s, el, ld, ls))
         }
       }
-      out.result()
+      graft.util.DeltaDF.of(spark, out.result(), "src", "dst", "elabel", "slabel", "dlabel")
     }
-    val (relAfterAdds, relFinal, addedRelRows) =
-      if (!maintainRel) (null: DataFrame, null: DataFrame, null: DataFrame)
+    val addedRelRows = relRowsLocal(delta.addedRows)
+    val deletedRelRows = relRowsLocal(delta.deletedRows)
+    val relAfterAdds = rel.union(addedRelRows)
+    val delK = graft.util.DeltaDF.of(spark, delta.deleted, "lo", "hi")
+    val relFinal = relAfterAdds.join(broadcast(delK),
+        least(relAfterAdds("src"), relAfterAdds("dst")) === delK("lo") &&
+          greatest(relAfterAdds("src"), relAfterAdds("dst")) === delK("hi"), "left_anti")
+      .select(relAfterAdds("src"), relAfterAdds("dst"), relAfterAdds("elabel"),
+        relAfterAdds("slabel"), relAfterAdds("dlabel"))
+
+    // feed the delta through every affected query's stored stages; collect
+    // ALL pos/neg counts in one action
+    val aggs = queries.keys.toSeq.sorted.flatMap { name =>
+      if (!affected(name)) { searchesSkipped += 1; Seq.empty }
       else {
-        val addRows = graft.util.DeltaDF.of(spark, relRowsLocal(delta.addedRows),
-          "src", "dst", "elabel", "slabel", "dlabel")
-        val ra = rel.union(addRows)
-        val delK = deletedK
-        val rf = ra.join(broadcast(delK),
-            least(ra("src"), ra("dst")) === delK("lo") &&
-              greatest(ra("src"), ra("dst")) === delK("hi"), "left_anti")
-          .select(ra("src"), ra("dst"), ra("elabel"), ra("slabel"), ra("dlabel"))
-        (ra, rf, addRows)
-      }
-    def commitRel(): Unit = {
-      rel = relRoller.roll(Seq(relFinal)).head
-      relBatchesSinceCompact += 1
-      if (relBatchesSinceCompact >= stateCompactEvery) {
-        rel = rel.localCheckpoint(true)
-        relRoller.clear()
-        relBatchesSinceCompact = 0
+        searchesRun += 1
+        states(name).applyDelta(name, relAfterAdds,
+          addedRelRows, deletedRelRows, hasAdds = nAdd > 0, hasDels = nDel > 0)
       }
     }
-
-    if (materializeState) {
-      // J6: feed the delta through every affected query's stored stages;
-      // collect ALL pos/neg counts in one action. The deleted relation rows
-      // are driver-built (the maintained rel's label copies are immutable —
-      // relabels route to the rebuild path above — so current labels ARE
-      // the stored labels).
-      val deletedRelRows = graft.util.DeltaDF.of(spark, relRowsLocal(delta.deletedRows),
-        "src", "dst", "elabel", "slabel", "dlabel")
-      val aggs = queries.toSeq.sortBy(_._1).flatMap { case (name, _) =>
-        if (!affected(name)) { searchesSkipped += 1; Seq.empty }
-        else {
-          searchesRun += 1
-          states(name).applyDelta(name, relAfterAdds,
-            addedRelRows, deletedRelRows, hasAdds = nAdd > 0, hasDels = nDel > 0)
-        }
+    if (aggs.nonEmpty) {
+      // one exchange for every query's pos+neg counts: the tagged
+      // per-match rows union and a single (q, side) grouped count
+      // (map-side partial agg keeps the shuffled rows ≤ 2·N_queries)
+      val countPlan = aggs.reduce(_ unionByName _)
+        .groupBy(col("q"), col("side")).agg(count(lit(1)).as("c"))
+      val bySide = countPlan.collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      affected.foreach { name =>
+        states(name).commitCounts(bySide.getOrElse((name, "pos"), 0L),
+          bySide.getOrElse((name, "neg"), 0L))
+        counts(name) = states(name).matchCount
       }
-      if (aggs.nonEmpty) {
-        // one exchange for every query's pos+neg counts: the tagged
-        // per-match rows union and a single (q, side) grouped count
-        // (map-side partial agg keeps the shuffled rows ≤ 2·N_queries)
-        val countPlan = aggs.reduce(_ unionByName _)
-          .groupBy(col("q"), col("side")).agg(count(lit(1)).as("c"))
-        val rows = countPlan.collect()
-        val bySide = rows.map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-        affected.foreach { name =>
-          states(name).commitCounts(bySide.getOrElse((name, "pos"), 0L),
-            bySide.getOrElse((name, "neg"), 0L))
-          counts(name) = states(name).matchCount
-        }
-      }
-      commitRel()
-      // every query's seed stage re-anchors on the committed rel (content is
-      // unchanged for unaffected queries — routing guarantees it — but the
-      // anchor keeps seed lineage at the maintained base, not the overlay)
-      states.values.foreach(_.anchorSeed(rel))
-      return (affected.size, nAdd, nDel)
     }
-
-    // delta graph A = e0 ∪ added, flagged with add/del membership; the
-    // vertex table must keep deleted vertices' old labels (their edges are
-    // still in A as negatives)
-    val a = e0.select(col("src"), col("dst"), col("elabel"))
-      .withColumn("isAdd", lit(false))
-      .union(addedLabeled.select(col("src"), col("dst"), col("elabel"))
-        .withColumn("isAdd", lit(true)))
-    val aFlagged = a
-      .join(broadcast(deletedK.withColumn("isDel", lit(true))),
-        least(a("src"), a("dst")) === deletedK("lo") &&
-          greatest(a("src"), a("dst")) === deletedK("hi"), "left_outer")
-      .select(a("src"), a("dst"), a("elabel"), a("isAdd"),
-        coalesce(col("isDel"), lit(false)).as("isDel"))
-      .localCheckpoint(true)
-
-    // F3 index machinery: refresh each affected query's index insert-side
-    // FIRST (SymBi applies InsertionTopDown before enumerating), consult it
-    // in ONE job, shrink after.
-    val idxAfterAdds: Map[String, CandidateIndex.Index] =
-      if (!useCandidateIndex) Map.empty
-      else queries.keys.toSeq.map { name =>
-        name -> (if (affected(name) && nAdd > 0) {
-          val (i2, _) = CandidateIndex.refreshAfterAdds(spark, queries(name),
-            relAfterAdds, vUnion, indexes(name),
-            addedK.select(col("lo").as("src"), col("hi").as("dst")),
-            newVertexIdsLocal = Some(newVertexIds))
-          i2
-        } else indexes(name))
-      }.toMap
-    val hits: Set[(String, String)] =
-      if (!useCandidateIndex) Set.empty
-      else indexHitsAll(affected, idxAfterAdds, addedLabeled, deletedLabeled)
-
-    val work = queries.toSeq.sortBy(_._1).map { case (name, q) =>
-      val (runAdds, runDels) =
-        if (!affected(name)) (false, false)
-        else if (!useCandidateIndex) (nAdd > 0, nDel > 0)
-        else (nAdd > 0 && hits((name, "a")), nDel > 0 && hits((name, "d")))
-      if (runAdds || runDels) searchesRun += 1
-      else {
-        if (affected(name)) indexSkips += 1
-        searchesSkipped += 1
-      }
-      (name, q, runAdds, runDels)
+    rel = relRoller.roll(Seq(relFinal)).head
+    relBatchesSinceCompact += 1
+    if (relBatchesSinceCompact >= stateCompactEvery) {
+      rel = rel.localCheckpoint(true)
+      relRoller.clear()
+      relBatchesSinceCompact = 0
     }
-
-    // ONE action for every (query, side) delta count
-    val results = GraphMatcher.countDeltaMatchesAll(spark, work, orders,
-      aFlagged, vUnion)
-    results.foreach { case (name, (pos, neg)) =>
-      counts(name) = counts(name) + pos - neg
-    }
-
-    if (useCandidateIndex) {
-      queries.foreach { case (name, q) =>
-        if (affected(name))
-          indexes(name) = CandidateIndex.refreshAfterDeletes(spark, q, relFinal,
-            v1c, idxAfterAdds(name), deletedVertexIdsLocal = Some(deadVertexIds))
-        else indexes(name) = idxAfterAdds(name)
-      }
-      commitRel()
-    }
+    // every query's seed stage re-anchors on the committed rel (content is
+    // unchanged for unaffected queries — routing guarantees it — but the
+    // anchor keeps seed lineage at the maintained base, not the overlay)
+    states.values.foreach(_.anchorSeed(rel))
     (affected.size, nAdd, nDel)
   }
 
-  /** The maintained SJ-Tree state for a query (materializeState mode). */
-  def stateOf(name: String): Option[SJTreeState] = states.get(name)
+  /** The maintained SJ-Tree state for a query. */
+  def stateOf(name: String): SJTreeState = states(name)
 
   /** Fraction of (query, batch) pairs that skipped search — the reference's
     * headline safe-update statistic (~90% on its Amazon stream). */

@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   * Memory note: like the reference's SJ-tree (its documented weakness —
   * README.md's intermediate-result blowup discussion), stage relations can
   * be large for low-selectivity prefixes; the order is chosen
-  * smallest-first (X4) and callers opt in per query.
+  * smallest-first (X4), and compaction logs the stage sizes.
   */
 final class SJTreeState(spark: SparkSession, val query: QueryGraph,
                         val order: Seq[QEdge],
@@ -354,8 +354,8 @@ final class SJTreeState(spark: SparkSession, val query: QueryGraph,
         stageWarnings += 1
         System.err.println(s"[sjtree] WARN query=$lastName stage=$i rows=$n " +
           s"> threshold=$stageWarnThreshold — low-selectivity prefix is " +
-          "inflating stored state; consider a different order or " +
-          "materializeState=false for this query")
+          "inflating stored state; a more label-selective query keeps " +
+          "its stages smaller")
       }
     } else {
       // rolling release: keep the newest delta generation (feeding the

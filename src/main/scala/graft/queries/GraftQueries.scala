@@ -219,7 +219,7 @@ object GraftQueries {
         // 3 stages incl. a CLOSING edge: the stored-state delta rule's
         // semi-join step form is oracle-exercised, not just path extensions
         "tri1" -> QueryGraph.clique(3, Some(1)))
-      val driver = new MultiQueryDriver(s, qs, v, eInit, materializeState = true)
+      val driver = new MultiQueryDriver(s, qs, v, eInit)
       val adds = e.where(h === 7 || h === 8)
         .select(col("src"), col("dst"), col("elabel")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sortBy(t => (t._1, t._2))

@@ -1,17 +1,17 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.algo.AlgoResult
 import graft.graph.GraphUpdate
 
-/** Structured-Streaming ingestion of the update stream — the realized form
-  * of the reference's aspirational Flink-style dataflow sketch
+/** The label-free continuous tier over the update stream — the realized
+  * form of the reference's aspirational Flink-style dataflow sketch
   * (ParaCOSM/Stream/main.cpp:16-30: addDataGraphSource /
   * addUpdateGraphSource / execute) and of its shipped micro-batch window
-  * protocol (BatchUpdates3, main.cpp:253-397): each micro-batch is
+  * protocol (BatchUpdates3, main.cpp:253-397): each micro-batch (from
+  * Structured Streaming through `Updates.attach`, or replayed) is
   * classified (safe/unsafe), safe updates fold into state without
   * recompute, unsafe ones trigger the incremental algorithm.
   *
@@ -22,8 +22,11 @@ import graft.graph.GraphUpdate
   *    reference's positive/negative result counters
   *    (graphflow.cpp:289-416), never a from-scratch recount. This is
   *    continuous subgraph matching for Q = C₃ on the stream;
-  *  - PAGERANK via warm restarts (PageRank.runFrom): carried ranks converge
-  *    to the cold fixpoint in a handful of supersteps on small deltas.
+  *  - PAGERANK via warm restarts (PageRank.runFromPrepared from the carried
+  *    ranks), which reach the cold fixpoint. On small deltas they do not yet
+  *    save supersteps: one cross-component bridge on the 4-site × 10-page
+  *    UpdatesSpec fixture took 42 warm supersteps against 41 cold (a delta
+  *    PageRank is ROADMAP item 3).
   *
   * State lives in driver-held DataFrames that are localCheckpoint'd per
   * batch (single-process tier); on a cluster the same code commits per-batch
@@ -56,9 +59,8 @@ final class StreamGraph(spark: SparkSession,
   /** Patch-size threshold before a base rebuild (absolute + relative). */
   private def patchLimit: Long = 1000L + prBaseEdges / 20L
 
-  /** Maintained (id, rank) and the supersteps each refresh took — warm
-    * starts converge in a handful of iterations on small deltas, the
-    * measurable payoff of incremental maintenance vs recompute. */
+  /** Maintained (id, rank) and the supersteps each refresh took (a warm
+    * start does not yet beat a cold run on small deltas; see above). */
   @volatile var prRanks: DataFrame =
     if (!maintainPageRank) null
     else new graft.algo.PageRank(tol = prTol).runOnPrepared(spark, prPrepared).state
@@ -101,21 +103,6 @@ final class StreamGraph(spark: SparkSession,
   /** Scope sizes above this take the full recompute: a near-full scope's
     * semi-joins would broadcast a huge id set for no savings. */
   var ccScopeBroadcastLimit: Long = 2000000L
-
-  /** Attach to a streaming Dataset[GraphUpdate]; every micro-batch runs the
-    * classify → apply → (maybe) recompute protocol. */
-  def start(updates: Dataset[GraphUpdate], trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery = {
-    updates.writeStream
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[GraphUpdate], _: Long) =>
-        val ops = batch.collect().toSeq.sortBy(_.seq)
-        if (ops.nonEmpty) applyLocal(ops)
-        ()
-      }
-      .start()
-  }
 
   /** One micro-batch via the driver-local fast path (the same discipline as
     * MultiQueryDriver.applyBatchLocal): the |Δ|-sized batch is driver-held,

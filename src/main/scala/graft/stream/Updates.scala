@@ -1,7 +1,8 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.graph.GraphUpdate
 
@@ -34,6 +35,22 @@ import graft.graph.GraphUpdate
   * reference's M1-M4 semantics (UpdatesLocalSpec).
   */
 object Updates {
+
+  /** Structured Streaming ingestion: attach `apply` to a streaming update
+    * source. Each micro-batch is collected once (it is |Δ|-sized), sorted
+    * into stream order and, when non-empty, handed to `apply` — for
+    * example `StreamGraph.applyLocal` or `MultiQueryDriver.applyBatchLocal`,
+    * whose state lives across batches on the driver. */
+  def attach(updates: Dataset[GraphUpdate], trigger: Trigger = Trigger.AvailableNow())(
+      apply: Seq[GraphUpdate] => Unit): StreamingQuery =
+    updates.writeStream
+      .trigger(trigger)
+      .outputMode("append")
+      .foreachBatch { (batch: Dataset[GraphUpdate], _: Long) =>
+        val ops = batch.collect().toSeq.sortBy(_.seq)
+        if (ops.nonEmpty) apply(ops)
+      }
+      .start()
 
   /** Last op (max seq) per key, in seq order. One mutable-map pass (opt
     * round 6): the old groupBy built a per-key Seq and ran maxBy over it —

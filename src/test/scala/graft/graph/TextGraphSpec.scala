@@ -79,7 +79,7 @@ class TextGraphSpec extends SparkSpec {
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[GraphUpdate]
     mem.addData(ups.collect().toSeq) // before start: AvailableNow snapshots
-    val q = sg.start(mem.toDS())
+    val q = graft.stream.Updates.attach(mem.toDS())(sg.applyLocal)
     q.awaitTermination(120000)
 
     // oracle: recompute on the final edge set

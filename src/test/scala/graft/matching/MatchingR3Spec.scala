@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Round-3 matching features: automorphism breaking (J10 family), shell
-  * combinatorial counting (J10/G6), cost-weighted ordering (X4), the
-  * shared-relation candidate index and its incremental maintenance (X3). All
-  * pinned against the brute-force plain-Scala matcher. */
+  * combinatorial counting (J10/G6), cost-weighted ordering (X4) and the
+  * shared-relation candidate index. All pinned against the brute-force
+  * plain-Scala matcher. */
 object MatchFixtures {
   /** Brute-force injective (or homomorphic) labeled match counter. */
   def brute(q: QueryGraph, verts: Map[Long, Int],
@@ -156,15 +156,21 @@ class MatchingR3Spec extends SparkSpec {
     val q = QueryGraph.path(Seq(Some(0), Some(1), Some(2), Some(3)), Seq(None, None, None))
 
     val rel = GraphMatcher.materializedRelation(eDF, vDF)
-    val greedy = GraphMatcher.matchingOrder(q, GraphMatcher.edgeFrequencies(q, rel))
-    val cost = GraphMatcher.matchingOrderByCost(q, GraphMatcher.edgeStatistics(q, rel))
+    val stats = GraphMatcher.edgeStatistics(q, rel)
+    val greedy = GraphMatcher.matchingOrder(q, stats.map { case (e, st) => e -> st.cnt })
+    val cost = GraphMatcher.matchingOrderByCost(q, stats)
     assert(greedy.head == QEdge("u1", "u2"), "greedy seeds the min-frequency edge")
     assert(cost.head == QEdge("u3", "u4"), "cost order seeds the low-fan-out chain")
 
-    val fGreedy = GraphMatcher.matchingFunnel(spark, q, eDF, vDF,
-      orderOverride = Some(greedy)).map(_._4)
-    val fCost = GraphMatcher.matchingFunnel(spark, q, eDF, vDF,
-      orderOverride = Some(cost)).map(_._4)
+    // the join plan's intermediate rows after stage k are the injective
+    // matches of the order's k-edge prefix subgraph, counted here in plain Scala
+    def funnel(order: Seq[QEdge]): Seq[Long] = (1 to order.size).map { k =>
+      val prefix = order.take(k)
+      val bound = prefix.flatMap(e => Seq(e.u, e.v)).toSet
+      brute(QueryGraph(q.vertices.filter(v => bound(v.name)), prefix), verts, edges)
+    }
+    val fGreedy = funnel(greedy)
+    val fCost = funnel(cost)
     assert(fGreedy.last == fCost.last, "same final match count")
     assert(fCost.sum < fGreedy.sum,
       s"cost order total intermediate rows ${fCost.sum} !< greedy ${fGreedy.sum}")
@@ -184,94 +190,6 @@ class MatchingR3Spec extends SparkSpec {
       val withIdx = GraphMatcher.findMatchesIndexed(spark, q, eDF, vDF, rounds = 2).count()
       val without = GraphMatcher.findMatches(spark, q, eDF, vDF).count()
       assert(withIdx == without)
-    }
-  }
-
-  private def candSets(idx: CandidateIndex.Index): Map[String, Set[Long]] =
-    idx.candidates.map { case (k, df) =>
-      k -> df.collect().map(_.getLong(0)).toSet
-    }
-
-  test("refreshAfterAdds == full rebuild, touching only the delta frontier (X3)") {
-    import spark.implicits._
-    // long labeled ring (sparse, so the frontier stays local): 400 vertices,
-    // labels i%3, ring edges; delta = 3 chords
-    val n = 400
-    val verts = (0L until n.toLong).map(v => v -> (v % 3).toInt).toMap
-    val ring = (0L until n.toLong).map(v => (v, (v + 1) % n, (v % 2).toInt)).toSet
-    val chords = Set((10L, 200L, 1), (50L, 300L, 0), (120L, 340L, 1))
-    val vDF = verts.toSeq.toDF("id", "vlabel")
-    val baseDF = ring.toSeq.toDF("src", "dst", "elabel")
-    val allDF = (ring ++ chords).toSeq.toDF("src", "dst", "elabel")
-    val addsDF = chords.toSeq.map(c => (c._1, c._2)).toDF("src", "dst")
-    val q = QueryGraph.path(Seq(Some(0), Some(1), Some(2)), Seq(Some(1), Some(0)))
-
-    val relOld = GraphMatcher.materializedRelation(baseDF, vDF)
-    val relNew = GraphMatcher.materializedRelation(allDF, vDF)
-    val idx0 = CandidateIndex.buildOnRel(spark, q, relOld, vDF, rounds = 2)
-    val (refreshed, stats) =
-      CandidateIndex.refreshAfterAdds(spark, q, relNew, vDF, idx0, addsDF)
-    val rebuilt = CandidateIndex.buildOnRel(spark, q, relNew, vDF, rounds = 2)
-    assert(candSets(refreshed) == candSets(rebuilt),
-      "incremental refresh must equal the from-scratch rebuild")
-    assert(stats.frontierSizes.nonEmpty && stats.frontierSizes.forall(_ <= 60L),
-      s"frontier sizes ${stats.frontierSizes} should be O(|delta| * deg^r), not O(|V|=$n)")
-    // X5: the delta candidate views are exactly rebuild-minus-old, per round
-    (0 to idx0.rounds).foreach { r =>
-      val want = rebuilt.perRound(r).collect().map(x => (x.getString(0), x.getLong(1))).toSet --
-        idx0.perRound(r).collect().map(x => (x.getString(0), x.getLong(1))).toSet
-      val got = stats.deltaSets(r).collect().map(x => (x.getString(0), x.getLong(1))).toSet
-      assert(got == want, s"delta candidate set round $r")
-    }
-  }
-
-  test("refreshAfterAdds frontier ignores pre-existing non-matching-label vertices") {
-    import spark.implicits._
-    // 400 vertices but 3/4 carry label 9, which no query vertex matches —
-    // round 0 excludes them, so an anti-join against round 0 would call them
-    // all "new" every refresh (round-3 advice finding: O(|V|) frontier).
-    val n = 400
-    val verts = (0L until n.toLong)
-      .map(v => v -> (if (v % 4 == 0L) (v % 3).toInt else 9)).toMap
-    val ring = (0L until n.toLong).map(v => (v, (v + 1) % n, (v % 2).toInt)).toSet
-    val chords = Set((16L, 200L, 1), (48L, 300L, 0))
-    val vDF = verts.toSeq.toDF("id", "vlabel")
-    val baseDF = ring.toSeq.toDF("src", "dst", "elabel")
-    val allDF = (ring ++ chords).toSeq.toDF("src", "dst", "elabel")
-    val addsDF = chords.toSeq.map(c => (c._1, c._2)).toDF("src", "dst")
-    val q = QueryGraph.path(Seq(Some(0), Some(1), Some(2)), Seq(Some(1), Some(0)))
-
-    val relOld = GraphMatcher.materializedRelation(baseDF, vDF)
-    val relNew = GraphMatcher.materializedRelation(allDF, vDF)
-    val idx0 = CandidateIndex.buildOnRel(spark, q, relOld, vDF, rounds = 2)
-    val (refreshed, stats) =
-      CandidateIndex.refreshAfterAdds(spark, q, relNew, vDF, idx0, addsDF)
-    val rebuilt = CandidateIndex.buildOnRel(spark, q, relNew, vDF, rounds = 2)
-    assert(candSets(refreshed) == candSets(rebuilt))
-    assert(stats.frontierSizes.forall(_ <= 40L),
-      s"frontier ${stats.frontierSizes} must stay O(|delta|*deg^r); " +
-        s"non-matching-label vertices (300 of $n) must not be re-seeded")
-  }
-
-  test("refreshAfterDeletes: shrink-only refresh stays result-preserving") {
-    val (verts, edges) = randomLabeled(17, n = 16, m = 40)
-    val dels = edges.take(6)
-    val remaining = edges -- dels
-    val (allDF, vDF) = toDfs(verts, edges)
-    val (remDF, _) = toDfs(verts, remaining)
-    val q = QueryGraph.path(Seq(Some(0), Some(1), Some(2)), Seq(Some(1), Some(0)))
-    val relOld = GraphMatcher.materializedRelation(allDF, vDF)
-    val relNew = GraphMatcher.materializedRelation(remDF, vDF)
-    val idx0 = CandidateIndex.buildOnRel(spark, q, relOld, vDF, rounds = 2)
-    val refreshed = CandidateIndex.refreshAfterDeletes(spark, q, relNew, vDF, idx0)
-    val withIdx = GraphMatcher.findMatches(spark, q, remDF, vDF,
-      candidates = Some(refreshed.candidates)).count()
-    val without = GraphMatcher.findMatches(spark, q, remDF, vDF).count()
-    assert(withIdx == without)
-    // and it can only have shrunk
-    val before = candSets(idx0)
-    candSets(refreshed).foreach { case (k, s) =>
-      assert(s.subsetOf(before(k)), s"$k grew on delete")
     }
   }
 }

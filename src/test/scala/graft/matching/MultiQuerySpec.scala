@@ -6,9 +6,9 @@ import graft.matching.MatchFixtures.brute
 
 /** The reference's flagship composition (J11 end-to-end): N query graphs
   * over ONE replayed update stream, per-query counts MAINTAINED by routed
-  * delta joins — validated against from-scratch recomputation after every
-  * batch (the reference's own oracle: maintained counters equal recompute,
-  * BatchUpdates3 + cross-algorithm agreement). */
+  * delta rules over stored SJ-tree stages — validated against from-scratch
+  * recomputation after every batch (the reference's own oracle: maintained
+  * counters equal recompute, BatchUpdates3 + cross-algorithm agreement). */
 class MultiQuerySpec extends SparkSpec {
 
   private val queries = Map(
@@ -18,21 +18,36 @@ class MultiQuerySpec extends SparkSpec {
       Seq(QVertex("c", Some(1)), QVertex("l1", Some(0)), QVertex("l2", Some(0))),
       Seq(QEdge("c", "l1"), QEdge("c", "l2"))))
 
-  test("multi-query driver: maintained counts equal recompute after every batch") {
+  /** Every query's stored final-stage relation equals a from-scratch
+    * enumeration of the oracle graph. */
+  private def assertStoredRows(driver: MultiQueryDriver, verts: Map[Long, Int],
+                               edges: Set[(Long, Long, Int)], at: String): Unit = {
+    import spark.implicits._
+    val vDF = verts.toSeq.toDF("id", "vlabel")
+    val eDF = edges.toSeq.toDF("src", "dst", "elabel")
+    driver.queries.foreach { case (n, q) =>
+      val st = driver.stateOf(n)
+      val stored = st.matches
+        .collect().map(_.toSeq.map(_.asInstanceOf[Long])).toSet
+      val fresh = GraphMatcher.findMatches(spark, q, eDF, vDF)
+        .select(st.boundAt.last.map(org.apache.spark.sql.functions.col): _*)
+        .collect().map(_.toSeq.map(_.asInstanceOf[Long])).toSet
+      assert(stored == fresh, s"$at, query $n stored rows drifted")
+    }
+  }
+
+  test("materialized-state driver (J6): counts AND stored match rows equal recompute") {
     import spark.implicits._
     val rnd = new scala.util.Random(42)
     var verts = (0L until 14L).map(v => v -> rnd.nextInt(3)).toMap
     var edges = Set((0L, 1L, 0), (1L, 2L, 1), (2L, 0L, 0), (3L, 4L, 1),
       (4L, 5L, 0), (5L, 3L, 1), (6L, 7L, 0), (8L, 9L, 1), (10L, 11L, 0))
-
     val driver = new MultiQueryDriver(spark, queries,
-      verts.toSeq.toDF("id", "vlabel"), edges.toSeq.toDF("src", "dst", "elabel"))
-
-    // initial counts match brute force
+      verts.toSeq.toDF("id", "vlabel"), edges.toSeq.toDF("src", "dst", "elabel"),
+      stateCompactEvery = 2) // compaction mid-suite
     queries.foreach { case (n, q) =>
       assert(driver.counts(n) == brute(q, verts, edges), s"initial $n")
     }
-
     val batches: Seq[Seq[GraphUpdate]] = Seq(
       // batch 1: adds only (one closes a triangle, one is label-noise)
       Seq(GraphUpdate(1, "e", 6L, 8L, 0), GraphUpdate(2, "e", 7L, 8L, 1),
@@ -45,7 +60,6 @@ class MultiQuerySpec extends SparkSpec {
       // batch 4: mixed adds and deletes in one window
       Seq(GraphUpdate(9, "e", 9L, 10L, 1), GraphUpdate(10, "-e", 6L, 7L, 0),
         GraphUpdate(11, "e", 11L, 12L, 2)))
-
     def applyOracle(batch: Seq[GraphUpdate]): Unit = batch.foreach { u =>
       u.op match {
         case "v" => verts += (u.id1 -> u.label)
@@ -60,7 +74,6 @@ class MultiQuerySpec extends SparkSpec {
           edges = edges.filterNot(e => e._1 == a && e._2 == b)
       }
     }
-
     batches.zipWithIndex.foreach { case (b, i) =>
       driver.applyBatch(b.toDS())
       applyOracle(b)
@@ -69,6 +82,7 @@ class MultiQuerySpec extends SparkSpec {
         assert(driver.counts(n) == want,
           s"batch ${i + 1}, query $n: maintained ${driver.counts(n)} vs recompute $want")
       }
+      assertStoredRows(driver, verts, edges, s"batch ${i + 1}")
     }
 
     // routing skipped at least some (query, batch) searches, and ran some
@@ -78,134 +92,6 @@ class MultiQuerySpec extends SparkSpec {
     assert(driver.fullRecomputes == 0)
     info(f"safe fraction: ${driver.safeFraction}%.2f " +
       s"(${driver.searchesSkipped} skipped / ${driver.searchesRun} run)")
-  }
-
-  test("index-aware driver (F3): same maintained counts, label-routed batches refuted by candidates skip") {
-    import spark.implicits._
-    // component A: a genuine (0)-(1)-(2) path; far away: isolated 10(l0), 11(l1)
-    val verts = Map(0L -> 0, 1L -> 1, 2L -> 2, 10L -> 0, 11L -> 1)
-    val edges = Set((0L, 1L, 0), (1L, 2L, 0))
-    val qs = Map("path" -> QueryGraph.path(Seq(Some(0), Some(1), Some(2)), Seq(None, None)))
-    val driver = new MultiQueryDriver(spark, qs,
-      verts.toSeq.toDF("id", "vlabel"), edges.toSeq.toDF("src", "dst", "elabel"),
-      useCandidateIndex = true)
-    assert(driver.counts("path") == brute(qs("path"), verts, edges))
-
-    // add (10,11): signature (0,1,*) label-routes to the query, but after the
-    // insert-side index refresh neither endpoint is a candidate (11 has no
-    // label-2 neighbor), so the delta join is skipped entirely
-    driver.applyBatch(Seq(GraphUpdate(1, "e", 10L, 11L, 0)).toDS())
-    val edges2 = edges + ((10L, 11L, 0))
-    assert(driver.indexSkips == 1L, "candidate consult should refute this batch")
-    assert(driver.counts("path") == brute(qs("path"), verts, edges2))
-
-    // add (11,12) with l2 vertex 12: NOW a real path 10-11-12 appears and the
-    // index must let the search run (refresh makes 10/11/12 candidates)
-    driver.applyBatch(Seq(GraphUpdate(2, "v", 12L, 0L, 2),
-      GraphUpdate(3, "e", 11L, 12L, 0)).toDS())
-    val verts3 = verts + (12L -> 2)
-    val edges3 = edges2 + ((11L, 12L, 0))
-    assert(driver.counts("path") == brute(qs("path"), verts3, edges3))
-    assert(driver.searchesRun >= 1L)
-
-    // delete the far path again — index-aware delete side stays exact
-    driver.applyBatch(Seq(GraphUpdate(4, "-e", 10L, 11L, 0)).toDS())
-    val edges4 = edges3 - ((10L, 11L, 0))
-    assert(driver.counts("path") == brute(qs("path"), verts3, edges4))
-  }
-
-  test("index-aware driver matches the plain driver across the full batch suite") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    var verts = (0L until 12L).map(v => v -> rnd.nextInt(3)).toMap
-    var edges = Set((0L, 1L, 0), (1L, 2L, 1), (2L, 0L, 0), (3L, 4L, 1),
-      (4L, 5L, 0), (6L, 7L, 0), (8L, 9L, 1))
-    val driver = new MultiQueryDriver(spark, queries,
-      verts.toSeq.toDF("id", "vlabel"), edges.toSeq.toDF("src", "dst", "elabel"),
-      useCandidateIndex = true)
-    val batches = Seq(
-      Seq(GraphUpdate(1, "e", 5L, 3L, 0), GraphUpdate(2, "e", 7L, 8L, 1)),
-      Seq(GraphUpdate(3, "-e", 1L, 2L, 0), GraphUpdate(4, "e", 9L, 0L, 0)),
-      Seq(GraphUpdate(5, "-v", 4L, 0L, 0), GraphUpdate(6, "e", 6L, 8L, 2)))
-    def applyOracle(batch: Seq[GraphUpdate]): Unit = batch.foreach { u =>
-      u.op match {
-        case "v" => verts += (u.id1 -> u.label)
-        case "-v" =>
-          verts -= u.id1
-          edges = edges.filterNot(e => e._1 == u.id1 || e._2 == u.id1)
-        case "e" =>
-          val (a, b) = (math.min(u.id1, u.id2), math.max(u.id1, u.id2))
-          if (!edges.exists(e => e._1 == a && e._2 == b)) edges += ((a, b, u.label))
-        case "-e" =>
-          val (a, b) = (math.min(u.id1, u.id2), math.max(u.id1, u.id2))
-          edges = edges.filterNot(e => e._1 == a && e._2 == b)
-      }
-    }
-    batches.zipWithIndex.foreach { case (b, i) =>
-      driver.applyBatch(b.toDS())
-      applyOracle(b)
-      queries.foreach { case (n, q) =>
-        assert(driver.counts(n) == brute(q, verts, edges),
-          s"indexed driver batch ${i + 1} query $n")
-      }
-    }
-  }
-
-  test("materialized-state driver (J6): counts AND stored match rows equal recompute") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(42)
-    var verts = (0L until 14L).map(v => v -> rnd.nextInt(3)).toMap
-    var edges = Set((0L, 1L, 0), (1L, 2L, 1), (2L, 0L, 0), (3L, 4L, 1),
-      (4L, 5L, 0), (5L, 3L, 1), (6L, 7L, 0), (8L, 9L, 1), (10L, 11L, 0))
-    val driver = new MultiQueryDriver(spark, queries,
-      verts.toSeq.toDF("id", "vlabel"), edges.toSeq.toDF("src", "dst", "elabel"),
-      materializeState = true, stateCompactEvery = 2) // compaction mid-suite
-    queries.foreach { case (n, q) =>
-      assert(driver.counts(n) == brute(q, verts, edges), s"initial $n")
-    }
-    val batches: Seq[Seq[GraphUpdate]] = Seq(
-      Seq(GraphUpdate(1, "e", 6L, 8L, 0), GraphUpdate(2, "e", 7L, 8L, 1),
-        GraphUpdate(3, "e", 6L, 9L, 0)),
-      Seq(GraphUpdate(4, "v", 20L, 0L, 1), GraphUpdate(5, "e", 20L, 0L, 2),
-        GraphUpdate(6, "e", 20L, 10L, 0)),
-      Seq(GraphUpdate(7, "-e", 0L, 1L, 0), GraphUpdate(8, "-v", 4L, 0L, 0)),
-      Seq(GraphUpdate(9, "e", 9L, 10L, 1), GraphUpdate(10, "-e", 6L, 7L, 0),
-        GraphUpdate(11, "e", 11L, 12L, 2)))
-    def applyOracle(batch: Seq[GraphUpdate]): Unit = batch.foreach { u =>
-      u.op match {
-        case "v" => verts += (u.id1 -> u.label)
-        case "-v" =>
-          verts -= u.id1
-          edges = edges.filterNot(e => e._1 == u.id1 || e._2 == u.id1)
-        case "e" =>
-          val (a, b) = (math.min(u.id1, u.id2), math.max(u.id1, u.id2))
-          if (!edges.exists(e => e._1 == a && e._2 == b)) edges += ((a, b, u.label))
-        case "-e" =>
-          val (a, b) = (math.min(u.id1, u.id2), math.max(u.id1, u.id2))
-          edges = edges.filterNot(e => e._1 == a && e._2 == b)
-      }
-    }
-    batches.zipWithIndex.foreach { case (b, i) =>
-      driver.applyBatch(b.toDS())
-      applyOracle(b)
-      queries.foreach { case (n, q) =>
-        val want = brute(q, verts, edges)
-        assert(driver.counts(n) == want,
-          s"batch ${i + 1}, query $n: maintained ${driver.counts(n)} vs recompute $want")
-      }
-      // the stored final-stage relation equals a from-scratch enumeration
-      val vDF = verts.toSeq.toDF("id", "vlabel")
-      val eDF = edges.toSeq.toDF("src", "dst", "elabel")
-      queries.foreach { case (n, q) =>
-        val stored = driver.stateOf(n).get.matches
-          .collect().map(_.toSeq.map(_.asInstanceOf[Long])).toSet
-        val fresh = GraphMatcher.findMatches(spark, q, eDF, vDF)
-          .select(driver.stateOf(n).get.boundAt.last.map(
-            org.apache.spark.sql.functions.col): _*)
-          .collect().map(_.toSeq.map(_.asInstanceOf[Long])).toSet
-        assert(stored == fresh, s"batch ${i + 1}, query $n stored rows drifted")
-      }
-    }
   }
 
   test("materialized-state driver: per-batch driver actions independent of query count") {
@@ -223,8 +109,7 @@ class MultiQuerySpec extends SparkSpec {
     val batch = Seq(GraphUpdate(1, "e", 2L, 10L, 0), GraphUpdate(2, "-e", 5L, 6L, 1))
     def actionsForOneBatch(qs: Map[String, QueryGraph]): Int = {
       val driver = new MultiQueryDriver(spark, qs,
-        verts.toSeq.toDF("id", "vlabel"), edges.toSeq.toDF("src", "dst", "elabel"),
-        materializeState = true)
+        verts.toSeq.toDF("id", "vlabel"), edges.toSeq.toDF("src", "dst", "elabel"))
       val counter = new java.util.concurrent.atomic.AtomicInteger
       val l = new org.apache.spark.scheduler.SparkListener {
         override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
@@ -270,5 +155,7 @@ class MultiQuerySpec extends SparkSpec {
     val verts2 = verts + (3L -> 2)
     assert(driver.fullRecomputes == 1)
     assert(driver.counts("path") == brute(qs("path"), verts2, edges))
+    // the rebuilt stages hold exactly the relabeled graph's matches
+    assertStoredRows(driver, verts2, edges, "after the relabel")
   }
 }

@@ -53,9 +53,7 @@ class RandomStreamSpec extends SparkSpec {
       val rnd = new scala.util.Random(seed)
       var (verts, edges) = randomGraph(rnd, 12, 24)
       val driver = new MultiQueryDriver(spark, qs,
-        verts.toSeq.toDF("id", "vlabel"), edges.toSeq.toDF("src", "dst", "elabel"),
-        useCandidateIndex = seed == 8,   // plain (3) / index-aware (8) /
-        materializeState = seed == 5)    // materialized SJ-tree state (5)
+        verts.toSeq.toDF("id", "vlabel"), edges.toSeq.toDF("src", "dst", "elabel"))
       var nextId = 100L
       var seq = 0L
       (1 to 4).foreach { _ =>

@@ -24,8 +24,8 @@ class SJTreeFunnelSpec extends SparkSpec {
     val qs = Map("p3" -> QueryGraph.path(Seq(None, None, None), Seq(None, None)))
     val driver = new MultiQueryDriver(spark, qs,
       verts.toSeq.toDF("id", "vlabel"), edges.toSeq.toDF("src", "dst", "elabel"),
-      materializeState = true, stateCompactEvery = 1) // compact every batch
-    val st = driver.stateOf("p3").get
+      stateCompactEvery = 1) // compact every batch
+    val st = driver.stateOf("p3")
     st.stageWarnThreshold = 1L // any stored stage with > 1 row warns
 
     // a fresh pair (not in the random initial set, so the delta is nonempty)

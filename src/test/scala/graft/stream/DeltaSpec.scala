@@ -218,7 +218,7 @@ class DeltaSpec extends SparkSpec {
     val mem = MemoryStream[GraphUpdate]
     mem.addData(GraphUpdate(1, "e", 10L, 30L, 0), GraphUpdate(2, "e", 2L, 12L, 0),
       GraphUpdate(3, "e", 7L, 37L, 0), GraphUpdate(4, "-e", 5L, 25L, 0))
-    val q = g.start(mem.toDS())
+    val q = Updates.attach(mem.toDS())(g.applyLocal)
     q.awaitTermination(120000)
 
     val cold = new graft.algo.PageRank(tol = 1e-9).run(spark, g.edges, g.vertices)

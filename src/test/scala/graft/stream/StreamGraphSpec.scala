@@ -11,7 +11,8 @@ import graft.pages.PagesFixture
 
 /** StreamGraph's per-batch SQL executions. A CC or PageRank refresh already
   * returns a checkpoint leaf (`Superstep`'s state, or the scoped delete's
-  * merged copy), so a batch must not copy it into a second checkpoint. */
+  * merged copy), so a batch must not copy it into a second checkpoint. And
+  * its streamed triangle counters against a recount. */
 class StreamGraphSpec extends SparkSpec {
 
   // the UpdatesSpec fixture: 4 sites × 10 pages
@@ -86,4 +87,30 @@ class StreamGraphSpec extends SparkSpec {
 
   private val WarmAdd = 9
   private val Delete = 13
+
+  test("streaming triangle maintenance: delta-join counters track recompute") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.Trigger
+    implicit val sqlCtx = spark.sqlContext
+    // start: path 1-2-3-4; batch A closes two triangles; batch B deletes one
+    val v0 = Seq(1L, 2L, 3L, 4L).toDF("id")
+    val e0 = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
+    val g = new StreamGraph(spark, v0, e0, maintainTriangles = true)
+    assert(g.triangleCount == 0L)
+    val stream = MemoryStream[GraphUpdate]
+    stream.addData(
+      GraphUpdate(1, "e", 1, 3, 0), GraphUpdate(2, "e", 2, 4, 0)) // two triangles
+    val q = Updates.attach(stream.toDS(), Trigger.AvailableNow())(g.applyLocal)
+    q.awaitTermination(120000)
+    assert(g.triangleCount == 2L && g.trianglePositive == 2L)
+    stream.addData(GraphUpdate(3, "-e", 2, 3, 0)) // kills both triangles
+    val q2 = Updates.attach(stream.toDS(), Trigger.AvailableNow())(g.applyLocal)
+    q2.awaitTermination(120000)
+    assert(g.triangleCount == 0L && g.triangleNegative == 2L)
+    // matches from-scratch recount of the final state
+    val scratch = graft.algo.TriangleCount.countTriangles(spark, g.edges)
+      .head().getLong(0)
+    assert(g.triangleCount == scratch)
+  }
 }

@@ -3,16 +3,15 @@ package graft.stream
 import graft.SparkSpec
 import graft.graph.GraphUpdate
 import graft.matching.MatchFixtures.brute
-import graft.matching.QueryGraph
+import graft.matching.{MultiQueryDriver, QueryGraph}
 
-/** Continuous subgraph matching over Structured Streaming: per-micro-batch
-  * maintained counts equal from-scratch recompute on the final state, in
-  * every driver mode reachable from the streaming surface (plain delta,
-  * candidate-index F3/J7, materialized SJ-tree state J6). */
+/** Continuous subgraph matching over Structured Streaming: the
+  * MultiQueryDriver attached to a stream through `Updates.attach` keeps
+  * per-micro-batch maintained counts equal to a from-scratch recompute on
+  * the final state. */
 class StreamMatcherSpec extends SparkSpec {
 
-  private def scenario(mkMatcher: (Map[Long, Int], Set[(Long, Long, Int)],
-                                   Map[String, QueryGraph]) => StreamMatcher): Unit = {
+  test("streamed CSM: materialized SJ-tree state mode tracks the stream") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
@@ -22,56 +21,26 @@ class StreamMatcherSpec extends SparkSpec {
     val qs = Map(
       "path" -> QueryGraph.path(Seq(Some(0), Some(1), Some(2)), Seq(None, None)),
       "tri" -> QueryGraph.triangle)
-    val sm = mkMatcher(verts0, edges0, qs)
+    val driver = new MultiQueryDriver(spark, qs,
+      verts0.toSeq.toDF("id", "vlabel"), edges0.toSeq.toDF("src", "dst", "elabel"))
 
     val mem = MemoryStream[GraphUpdate]
     mem.addData(
       GraphUpdate(1, "e", 3L, 4L, 0), GraphUpdate(2, "e", 4L, 2L, 0), // new path 3-4-2
       GraphUpdate(3, "e", 0L, 2L, 0))                                 // triangle 0-1-2
-    val q1 = sm.start(mem.toDS())
+    val q1 = Updates.attach(mem.toDS())(driver.applyBatchLocal)
     q1.awaitTermination(120000)
 
-    val verts1 = verts0
     val edges1 = edges0 ++ Set((3L, 4L, 0), (2L, 4L, 0), (0L, 2L, 0))
-    assert(sm.counts("path") == brute(qs("path"), verts1, edges1))
-    assert(sm.counts("tri") == brute(qs("tri"), verts1, edges1))
-    assert(sm.counts("tri") == 6L) // one triangle, ordered embeddings
+    assert(driver.counts("path") == brute(qs("path"), verts0, edges1))
+    assert(driver.counts("tri") == brute(qs("tri"), verts0, edges1))
+    assert(driver.counts("tri") == 6L) // one triangle, ordered embeddings
 
     mem.addData(GraphUpdate(4, "-e", 1L, 2L, 0)) // kills the triangle + a path
-    val q2 = sm.start(mem.toDS())
+    val q2 = Updates.attach(mem.toDS())(driver.applyBatchLocal)
     q2.awaitTermination(120000)
     val edges2 = edges1 - ((1L, 2L, 0))
-    assert(sm.counts("path") == brute(qs("path"), verts1, edges2))
-    assert(sm.counts("tri") == 0L)
-  }
-
-  test("streamed CSM: maintained multi-query counts track the stream") {
-    import spark.implicits._
-    scenario((v, e, qs) => new StreamMatcher(spark, qs,
-      v.toSeq.toDF("id", "vlabel"), e.toSeq.toDF("src", "dst", "elabel")))
-  }
-
-  test("streamed CSM: candidate-index mode tracks the stream") {
-    import spark.implicits._
-    scenario((v, e, qs) => new StreamMatcher(spark, qs,
-      v.toSeq.toDF("id", "vlabel"), e.toSeq.toDF("src", "dst", "elabel"),
-      useCandidateIndex = true))
-  }
-
-  test("streamed CSM: materialized SJ-tree state mode tracks the stream") {
-    import spark.implicits._
-    scenario((v, e, qs) => new StreamMatcher(spark, qs,
-      v.toSeq.toDF("id", "vlabel"), e.toSeq.toDF("src", "dst", "elabel"),
-      materializeState = true))
-  }
-
-  test("streamed CSM: index + state modes are mutually exclusive") {
-    import spark.implicits._
-    val v = Seq((0L, 0)).toDF("id", "vlabel")
-    val e = Seq((0L, 0L, 0)).toDF("src", "dst", "elabel").limit(0)
-    assertThrows[IllegalArgumentException] {
-      new StreamMatcher(spark, Map("t" -> QueryGraph.triangle), v, e,
-        useCandidateIndex = true, materializeState = true)
-    }
+    assert(driver.counts("path") == brute(qs("path"), verts0, edges2))
+    assert(driver.counts("tri") == 0L)
   }
 }

@@ -93,7 +93,7 @@ class UpdatesSpec extends SparkSpec {
     // batch A (safe adds), then batch B (bridge)
     mem.addData((0 until 5).map(i => GraphUpdate(i.toLong, "e", id(0, i), id(0, (i + 4) % P), 0)))
     mem.addData(Seq(GraphUpdate(50L, "e", id(0, 2), id(2, 2), 0)))
-    val q = sg.start(mem.toDS())
+    val q = Updates.attach(mem.toDS())(sg.applyLocal)
     q.processAllAvailable()
     q.stop()
     assert(sg.batchesSeen >= 1)

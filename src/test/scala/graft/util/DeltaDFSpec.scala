@@ -92,8 +92,7 @@ class DeltaDFSpec extends SparkSpec {
       "p" -> QueryGraph.path(Seq(Some(0), Some(1), Some(2)), Seq(None, None)),
       "t" -> QueryGraph.triangle)
     val driver = new MultiQueryDriver(spark, qs,
-      verts.toSeq.toDF("id", "vlabel"), e0.toSeq.toDF("src", "dst", "elabel"),
-      materializeState = true)
+      verts.toSeq.toDF("id", "vlabel"), e0.toSeq.toDF("src", "dst", "elabel"))
     // one big pure-edge batch (adds + deletes) above the leaf threshold
     val live = scala.collection.mutable.Set(e0.toSeq.map(t => (t._1, t._2)): _*)
     val ops = scala.collection.mutable.ArrayBuffer.empty[GraphUpdate]
