@@ -21,7 +21,7 @@ final case class AlgoResult(state: DataFrame, iterations: Int, metrics: Seq[Supe
   * join-aggregate supersteps over (edges, vertex-state) tables.
   *
   * Lineage control: every implementation runs its supersteps through
-  * `Superstep`, which truncates per iteration with `localCheckpoint` and,
+  * `Superstep`, which truncates per iteration (GraftSqlShims.checkpoint) and,
   * given a StateStore, commits each superstep (durable, resumable — north
   * rule). Without truncation the iteration-k plan references all k-1
   * predecessors (SURVEY.md §7.4-1).

@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.graph.GraphBuilder
@@ -40,7 +40,7 @@ object Bfs {
     // checkpointed state, is exchanged every level)
     val und = GraphBuilder.undirected(edges).persist()
     und.count()
-    val res = Superstep.run(spark, "bfs", seeds.localCheckpoint(true), maxDepth,
+    val res = Superstep.run(spark, "bfs", GraftSqlShims.checkpoint(seeds), maxDepth,
       aggs = Seq(count(lit(1)).as("rows"),
         sum(when(col("fresh"), 1L).otherwise(0L)).as("changed")),
       keep = _.drop("fresh")) { (level, visited, _) =>

@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.graph.GraphBuilder
@@ -78,9 +78,11 @@ final class ConnectedComponents(maxIter: Int = 50,
     val bigGraph = und.count() > 100000L
     def sh(df: DataFrame): DataFrame = if (bigGraph) df.hint("shuffle_hash") else df
 
-    val start = init.getOrElse(vertices.select(col("id")).distinct()
-      .withColumn("label", col("id"))).localCheckpoint(true)
+    val start = GraftSqlShims.checkpoint(init.getOrElse(vertices.select(col("id")).distinct()
+      .withColumn("label", col("id"))))
     saltedSupersteps = 0
+    // the last hot-label table, released once its superstep materialized
+    var hotChk = Option.empty[DataFrame]
     // `labels` (approx distinct) and `rows` of the previous superstep's
     // aggregate drive the hot-label probe below
     val res = Superstep.run(spark, name, start, maxIter,
@@ -90,6 +92,7 @@ final class ConnectedComponents(maxIter: Int = 50,
         approx_count_distinct(col("newLabel")).as("labels")),
       keep = _.select(col("id"), col("newLabel").as("label")),
       store = store) { (_, state, prev) =>
+      hotChk.foreach(GraftSqlShims.release)
       // (1) neighbor min: for each dst, min over labels of its in-neighbors.
       // shuffle-hash (opt round 6, guide §3.1): state fits per-partition
       // hash maps; SMJ would re-sort the big und side every superstep.
@@ -117,11 +120,12 @@ final class ConnectedComponents(maxIter: Int = 50,
       // hot labels by algebraic count (partial agg absorbs the hot key);
       // only probed in the concentrated regime, and the salted plan only
       // replaces the plain one when a label actually exceeds the threshold
-      lazy val hot = state.groupBy(col("label")).agg(count(lit(1)).as("n"))
-        .where(col("n") > hotLabelThreshold).select(col("label").as("hl"))
-        .localCheckpoint(true)
-      if (!concentrated || hot.limit(1).count() == 0) plainJump()
+      hotChk = if (!concentrated) None else Some(GraftSqlShims.checkpoint(
+        state.groupBy(col("label")).agg(count(lit(1)).as("n"))
+          .where(col("n") > hotLabelThreshold).select(col("label").as("hl"))))
+      if (hotChk.forall(_.limit(1).count() == 0)) plainJump()
       else {
+        val hot = hotChk.get
         saltedSupersteps += 1
         val candS = cand
           .join(broadcast(hot), cand("label") === col("hl"), "left_outer")
@@ -143,6 +147,7 @@ final class ConnectedComponents(maxIter: Int = 50,
       }
     }
 
+    hotChk.foreach(GraftSqlShims.release)
     und.unpersist()
     res
   }

@@ -1,6 +1,7 @@
 package graft.algo
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.GraftSqlShims.checkpoint
 import org.apache.spark.sql.functions._
 
 /** PageRank over per-partition CSR blocks — the reference's packed
@@ -73,7 +74,7 @@ object CsrPageRank {
     import spark.implicits._
     val maxP = spark.conf.get("spark.sql.shuffle.partitions").toInt
 
-    val vDistinct = vertices.select(col("id")).distinct().localCheckpoint(true)
+    val vDistinct = checkpoint(vertices.select(col("id")).distinct())
     val nVerts = vDistinct.count()
     // SCALE-ADAPTIVE block count (opt round 6, guide §2: derive partitioning
     // from input size, not a constant): ~64k vertices per block, capped at
@@ -96,10 +97,9 @@ object CsrPageRank {
     // (id, pid, idx): dense index within block, ordered by id for determinism
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("pid")).orderBy(col("id"))
-    val vIdx = vDistinct
+    val vIdx = checkpoint(vDistinct
       .withColumn("pid", pmod(xxhash64(col("id")), lit(p.toLong)).cast("int"))
-      .withColumn("idx", (row_number().over(w) - 1).cast("int"))
-      .localCheckpoint(true)
+      .withColumn("idx", (row_number().over(w) - 1).cast("int")))
     val n = nVerts
 
     val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).cast("int").as("deg"))
@@ -109,12 +109,12 @@ object CsrPageRank {
       .select(col("pid"), col("idx"), col("id"), coalesce(col("deg"), lit(0)).as("deg"))
       .repartition(p, col("pid"))
       .sortWithinPartitions("pid", "idx")
-    val verts = vertRows.select("pid", "idx", "id", "deg")
+    val verts = checkpoint(vertRows.select("pid", "idx", "id", "deg")
       .as[(Int, Int, Long, Int)]
       .mapPartitions { rows =>
         packRuns(rows.map { case (pid, _, id, deg) => (pid, (id, deg)) })
           .map { case (pid, xs) => (pid, xs.map(_._1).toArray, xs.map(_._2).toArray) }
-      }.localCheckpoint(true)
+      })
 
     // edges with both endpoints resolved to (pid, idx)
     val srcRef = vIdx.select(col("id").as("src"), col("pid").as("srcPid"), col("idx").as("srcIdx"))
@@ -138,7 +138,7 @@ object CsrPageRank {
     // have no edges → left_outer from verts)
     val vDF = verts.toDF("pid", "ids", "degs")
     val eDF2 = edgeBlocks.toDF("pid", "eSrcIdx", "eDstPid", "eDstIdx")
-    val graph = vDF.join(eDF2, Seq("pid"), "left_outer")
+    val graph = checkpoint(vDF.join(eDF2, Seq("pid"), "left_outer")
       .select(col("pid"), col("degs"), col("eSrcIdx"), col("eDstPid"), col("eDstIdx"))
       .as[(Int, Array[Int], Option[Array[Int]], Option[Array[Int]], Option[Array[Int]])]
       .map { case (pid, degs, si, dp, di) =>
@@ -147,19 +147,17 @@ object CsrPageRank {
           dp.getOrElse(Array.emptyIntArray),
           di.getOrElse(Array.emptyIntArray))
       }
-      .repartition(p, col("pid"))
-      .localCheckpoint(true)
+      .repartition(p, col("pid")))
 
     val n0 = n.toDouble
-    val init = verts.map { case (pid, ids, degs) =>
+    val init = checkpoint(verts.map { case (pid, ids, degs) =>
       val ranks = Array.fill(ids.length)(1.0 / n0)
       val dang = degs.map(_ == 0)
       val dm = dang.count(identity) * (1.0 / n0)
       RankBlock(pid, ranks, dang, dm, 0.0, 0.0)
-    }.repartition(p, col("pid")).localCheckpoint(true)
+    }.repartition(p, col("pid")))
 
-    val vertsDs = verts.map { case (pid, ids, _) => VertsBlock(pid, ids) }
-      .localCheckpoint(true)
+    val vertsDs = checkpoint(verts.map { case (pid, ids, _) => VertsBlock(pid, ids) })
 
     Blocks(graph, Some(vertsDs), init, n, p)
   }
@@ -196,25 +194,25 @@ object CsrPageRank {
       }
     // blocks with no out-edges at all still need rows (all-dangling)
     val allPids = spark.range(0, p).select(col("id").cast("int").as("pid"))
-    val graphAll = allPids.joinWith(graph, allPids("pid") === graph("pid"), "left_outer")
+    val graphAll = checkpoint(allPids.joinWith(graph, allPids("pid") === graph("pid"), "left_outer")
       .map { case (row, g) =>
         val pid = row.getInt(0)
         if (g != null) g
         else GraphBlock(pid, new Array[Int](nVertsOf(pid)),
           Array.emptyIntArray, Array.emptyIntArray, Array.emptyIntArray)
       }
-      .repartition(p, col("pid")).localCheckpoint(true)
+      .repartition(p, col("pid")))
 
-    val init = graphAll.map { g =>
+    val init = checkpoint(graphAll.map { g =>
       val nV = g.outDeg.length
       val ranks = Array.fill(nV)(1.0 / n0)
       val dang = g.outDeg.map(_ == 0)
       RankBlock(g.pid, ranks, dang, dang.count(identity) * (1.0 / n0), 0.0, 0.0)
-    }.repartition(p, col("pid")).localCheckpoint(true)
+    }.repartition(p, col("pid")))
 
-    val verts = graphAll.map { g =>
+    val verts = checkpoint(graphAll.map { g =>
       VertsBlock(g.pid, Array.tabulate(g.outDeg.length)(i => i.toLong * p + g.pid))
-    }.localCheckpoint(true)
+    })
 
     Blocks(graphAll, Some(verts), init, nVerts, p)
   }
@@ -252,11 +250,9 @@ object CsrPageRank {
     val n = """"n":(\d+)""".r.findFirstMatchIn(meta).get.group(1).toLong
     val p = """"p":(\d+)""".r.findFirstMatchIn(meta).get.group(1).toInt
     Blocks(
-      spark.read.parquet(s"$path/graph").as[GraphBlock]
-        .repartition(p, col("pid")).localCheckpoint(true),
+      checkpoint(spark.read.parquet(s"$path/graph").as[GraphBlock].repartition(p, col("pid"))),
       None,
-      spark.read.parquet(s"$path/init").as[RankBlock]
-        .repartition(p, col("pid")).localCheckpoint(true),
+      checkpoint(spark.read.parquet(s"$path/init").as[RankBlock].repartition(p, col("pid"))),
       n, p)
   }
 

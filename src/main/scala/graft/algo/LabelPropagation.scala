@@ -33,9 +33,8 @@ final class LabelPropagation(maxIter: Int = 10) extends Algorithm {
     // partitioned by src ONCE (GraphBuilder.undirected); the checkpoint
     // leaf keeps that partitioning, so the per-superstep join on src
     // exchanges only the state side and the undirected table stays put
-    val (und, undRdd) = GraftSqlShims.checkpoint(GraphBuilder.undirected(edges))
-
-    val (start, _) = GraftSqlShims.checkpoint(vertices.select(col("id")).distinct()
+    val und = GraftSqlShims.checkpoint(GraphBuilder.undirected(edges))
+    val start = GraftSqlShims.checkpoint(vertices.select(col("id")).distinct()
       .withColumn("label", col("id")))
     val res = Superstep.run(spark, name, start, maxIter,
       aggs = Seq(
@@ -43,7 +42,7 @@ final class LabelPropagation(maxIter: Int = 10) extends Algorithm {
         count(lit(1)).as("rows")),
       keep = _.select(col("id"), col("newLabel").as("label")),
       store = store) { (_, state, _) => step(und, state) }
-    GraftSqlShims.release(undRdd)
+    GraftSqlShims.release(und)
     res
   }
 

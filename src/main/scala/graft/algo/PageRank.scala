@@ -1,6 +1,7 @@
 package graft.algo
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, SparkSession}
+import org.apache.spark.sql.GraftSqlShims.{checkpoint, release}
 import org.apache.spark.sql.functions._
 
 import graft.state.StateStore
@@ -81,7 +82,7 @@ final class PageRank(
       ownPrepared = true)
 
   /** Cold run over a caller-owned Prepared (base+patch): the streaming
-    * tier's initializer. The Prepared is NOT unpersisted. */
+    * tier's initializer. The Prepared is NOT released. */
   def runOnPrepared(spark: SparkSession, g: PageRank.Prepared): AlgoResult =
     loop(spark, g, None, startIter = 0, startRanks = None, ownPrepared = false)
 
@@ -98,9 +99,11 @@ final class PageRank(
       .join(prevRanks.select(col("id"), col("rank")), Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("rank"), lit(1.0 / g.n)).as("rank")),
       sum(col("rank")))
-    loop(spark, g, None, startIter = 0,
+    val res = loop(spark, g, None, startIter = 0,
       startRanks = Some(joined.select(col("id"), (col("rank") / total).as("rank"))),
       ownPrepared = ownPrepared)
+    release(joined)
+    res
   }
 
   private def loop(spark: SparkSession, g: PageRank.Prepared,
@@ -133,7 +136,7 @@ final class PageRank(
         .withColumn("d", abs(col("rank") - col("prev")))
         .select(col("id"), col("rank"), col("dangling"), col("outDeg"), col("d"))
     }
-    if (ownPrepared) { g.adj.unpersist(); g.verts.unpersist() }
+    if (ownPrepared) g.release()
     res.copy(state = res.state.select("id", "rank"))
   }
 }
@@ -148,7 +151,10 @@ object PageRank {
     * superstep). `patch` is the streaming tier's signed delta overlay. */
   final case class Prepared(adj: DataFrame, verts: DataFrame, n: Double,
                             hotIds: Option[DataFrame] = None, saltK: Int = 16,
-                            patch: Option[DataFrame] = None)
+                            patch: Option[DataFrame] = None) {
+    /** Drop the blocks of every checkpoint this Prepared holds. */
+    def release(): Unit = (Seq(adj, verts) ++ hotIds ++ patch).foreach(GraftSqlShims.release)
+  }
 
   /** Hub skew handling (north rule): a vertex with out-degree >
     * `hotDegThreshold` concentrates that many rows on one `src` shuffle key
@@ -186,8 +192,9 @@ object PageRank {
       .repartition(parts, col("id")),
       count(lit(1)).cast("double"))
     require(n > 0, "empty vertex set")
-    Prepared(adj, verts, n,
-      if (hasHot) Some(checkpoint(hot)) else None, saltK)
+    val g = Prepared(adj, verts, n, if (hasHot) Some(checkpoint(hot)) else None, saltK)
+    release(outDeg)
+    g
   }
 
   /** Incremental Prepared maintenance for the streaming tier — O(|Δ|)
@@ -225,6 +232,7 @@ object PageRank {
       .select(col("id"), col("outDeg"), (col("outDeg") === 0L).as("dangling"))
       .repartition(parts, col("id")),
       count(lit(1)).cast("double"))
+    release(dd)
     val deltas = addedEdges.select(col("src"), col("dst"), lit(1L).as("w"))
       .unionByName(deletedEdges.select(col("src"), col("dst"), lit(-1L).as("w")))
     val patch = checkpoint(prev.patch.map(_.unionByName(deltas)).getOrElse(deltas)
@@ -236,10 +244,6 @@ object PageRank {
   def danglingMass(ranks: DataFrame): Double = ranks.agg(danglingSum).head().getDouble(0)
 
   private def danglingSum: Column = sum(when(col("dangling"), col("rank")).otherwise(0.0))
-
-  /** Eager, partition-keeping checkpoint of `df` (GraftSqlShims.checkpoint).
-    * Its blocks are left to the context cleaner. */
-  private def checkpoint(df: DataFrame): DataFrame = GraftSqlShims.checkpoint(df)._1
 
   /** `checkpoint(df)` and the value of `agg` over it, from ONE SQL
     * execution: `agg` is observed at the plan's root, so it is accumulated

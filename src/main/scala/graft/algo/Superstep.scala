@@ -1,6 +1,5 @@
 package graft.algo
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, Row, SparkSession}
 
 import graft.state.StateStore
@@ -26,8 +25,8 @@ import graft.state.StateStore
   *    and `changed` fields (absent or null fields are 0, as on a step that
   *    returns no rows);
   *  - the optional StateStore commit, a side write of `commit(chk)`;
-  *  - releasing each state's checkpoint once its successor is
-  *    materialized — never the caller's `init`.
+  *  - releasing each state's checkpoint, the caller's `init` included,
+  *    once its successor is materialized (GraftSqlShims.release).
   * The loop continues from the checkpoint itself, with a store too. The
   * checkpoint leaf reports the hash partitioning the step left the state
   * in when it is an exchange's own layout (not an AQE-coalesced one), so
@@ -41,11 +40,12 @@ object Superstep {
 
   private val Observed = "superstep"
 
-  /** Iterate from `init` (caller-owned, materialized) while fewer than
-    * `maxIter` supersteps have run (counting from `startIter`) and the last
+  /** Iterate from `init` (materialized) while fewer than `maxIter`
+    * supersteps have run (counting from `startIter`) and the last
     * one did not `halt`. `step(it, state, prev)` plans superstep `it` from
     * the current state and the previous superstep's observed row (None
-    * before the first); the next state is `keep(checkpoint)`. */
+    * before the first); the next state is `keep(checkpoint)`. `init` is
+    * handed over: a checkpoint the loop releases like its own. */
   def run(spark: SparkSession, name: String, init: DataFrame, maxIter: Int,
           aggs: Seq[Column], keep: DataFrame => DataFrame,
           halt: SuperstepMetrics => Boolean = _.changed == 0,
@@ -54,14 +54,13 @@ object Superstep {
           startIter: Int = 0)(
           step: (Int, DataFrame, Option[Row]) => DataFrame): AlgoResult = {
     var state = init
-    var stateChk = Option.empty[RDD[_]]
     var prev = Option.empty[Row]
     val metrics = scala.collection.mutable.ArrayBuffer.empty[SuperstepMetrics]
     var it = startIter
     while (it < maxIter && !metrics.lastOption.exists(halt)) {
       val t0 = System.nanoTime()
       val planned = step(it + 1, state, prev).observe(Observed, aggs.head, aggs.tail: _*)
-      val (chk, rdd) = GraftSqlShims.checkpoint(planned)
+      val chk = GraftSqlShims.checkpoint(planned)
       val row = planned.queryExecution.observedMetrics(Observed)
       val wallMs = (System.nanoTime() - t0) / 1000000L
       it += 1
@@ -70,8 +69,7 @@ object Superstep {
       metrics += m
       store.foreach(_.commit(spark, name, it, commit.getOrElse(keep)(chk),
         m.deltaL1, m.deltaLinf, m.changed, wallMs))
-      stateChk.foreach(GraftSqlShims.release)
-      stateChk = Some(rdd)
+      GraftSqlShims.release(state)
       state = keep(chk)
       prev = Some(row)
     }

@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.graph.GraphBuilder
@@ -26,17 +26,12 @@ import graft.graph.GraphBuilder
   */
 object TriangleCount {
 
-  /** Canonically-oriented edge set: src precedes dst in (degree, id) order.
-    * `und` is materialized (localCheckpoint, GC-cleaned — a bare persist
-    * would live in the session CacheManager forever, a leak on streaming
-    * callers) — the degree pass and the orientation join both read it, and
-    * upstream `edges` is often an expensive derivation (re-running it 3x
-    * dominated q_triangles' round-1 cost). */
-  def orient(edges: DataFrame): DataFrame = {
-    // GraphBuilder.undirected's src partitioning also satisfies the degree
-    // groupBy(src) and the src-side orientation join, so the whole orient
-    // pipeline runs on one exchange (the deg side is tiny — AQE broadcasts it)
-    val und = GraphBuilder.undirected(edges).localCheckpoint(true)
+  /** Canonically-oriented edge set of the undirected table `und`: src
+    * precedes dst in (degree, id) order. GraphBuilder.undirected's src
+    * partitioning also satisfies the degree groupBy(src) and the src-side
+    * orientation join, so the whole orient pipeline runs on one exchange
+    * (the deg side is tiny — AQE broadcasts it). */
+  private def orient(und: DataFrame): DataFrame = {
     val deg = und.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     val withDeg = und
       .join(deg.withColumnRenamed("id", "src").withColumnRenamed("deg", "sdeg"), "src")
@@ -73,9 +68,14 @@ object TriangleCount {
         coalesce(col("dnbrs"), array()).as("dnbrs"))
   }
 
-  /** Total triangle count (scalar DataFrame with one column `triangles`). */
+  /** Total triangle count (scalar DataFrame with one column `triangles`).
+    * `und` is checkpointed — the degree pass and the orientation join both
+    * read it, and re-running an expensive `edges` 3x dominated q_triangles'
+    * round-1 cost — and released once the oriented table is. */
   def countTriangles(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val o = orient(edges).localCheckpoint(true)
+    val und = GraftSqlShims.checkpoint(GraphBuilder.undirected(edges))
+    val o = GraftSqlShims.checkpoint(orient(und))
+    GraftSqlShims.release(und)
     withAdjacency(o)
       .agg(coalesce(sum(size(array_intersect(col("snbrs"), col("dnbrs")))), lit(0L))
         .cast("long").as("triangles"))

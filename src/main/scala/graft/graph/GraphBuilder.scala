@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pages.{Extract, Page}
@@ -86,15 +86,14 @@ object GraphBuilder {
   def buildDense(spark: SparkSession, pages: Dataset[Page])
       : (Dataset[Vertex], Dataset[Edge]) = {
     import spark.implicits._
-    val links = pages.flatMap { p =>
+    val links = GraftSqlShims.checkpoint(pages.flatMap { p =>
       Extract.extractLinks(p.html, p.url).map(t => (p.url, t))
-    }.toDF("src_url", "dst_url").localCheckpoint(true)
+    }.toDF("src_url", "dst_url"))
     val urls = pages.select(col("url"))
       .union(links.select(col("src_url").as("url")))
       .union(links.select(col("dst_url").as("url")))
       .distinct()
-    val dict = urls.as[String].rdd.zipWithUniqueId()
-      .toDF("url", "id").localCheckpoint(true)
+    val dict = GraftSqlShims.checkpoint(urls.as[String].rdd.zipWithUniqueId().toDF("url", "id"))
     val verts = pages.select(col("url"), col("lang"))
       .join(dict, Seq("url"))
       .select(col("id"), col("url"), col("lang")).as[Vertex]
@@ -145,8 +144,7 @@ object GraphBuilder {
     // in place, and the result comes out pre-positioned for every
     // src-keyed consumer (superstep joins, degree groupBy, label joins) that
     // reads it through `persist` or GraftSqlShims.checkpoint (both report
-    // the partitioning; a plain `localCheckpoint` under AQE does not, so
-    // its consumers re-exchange it)
+    // the partitioning)
     val parts = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val rest = carry.map(col)
     edges.select(col("src") +: col("dst") +: rest: _*)

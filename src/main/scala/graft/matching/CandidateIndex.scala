@@ -1,6 +1,7 @@
 package graft.matching
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftSqlShims.{checkpoint, release}
 import org.apache.spark.sql.functions._
 
 /** Candidate-pruning index: the DCS-family semi-join reduction (reference
@@ -70,8 +71,10 @@ object CandidateIndex {
     * `candidates`. */
   def buildOnRel(spark: SparkSession, query: QueryGraph, rel: DataFrame,
                  vertices: DataFrame, rounds: Int = 2): Map[String, DataFrame] = {
-    val last = (1 to rounds).foldLeft(labelBase(query, vertices).localCheckpoint(true)) {
-      (prev, _) => pruneRound(query, rel, prev).localCheckpoint(true)
+    val last = (1 to rounds).foldLeft(checkpoint(labelBase(query, vertices))) { (prev, _) =>
+      val next = checkpoint(pruneRound(query, rel, prev))
+      release(prev)
+      next
     }
     query.vertices.map { v =>
       v.name -> last.where(col("qv") === v.name).select(col("id"))

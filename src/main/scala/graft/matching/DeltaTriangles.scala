@@ -1,6 +1,6 @@
 package graft.matching
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental (delta-join) triangle count maintenance — J3/J4: the
@@ -120,7 +120,7 @@ object DeltaTriangles {
     def c(df: DataFrame): DataFrame = df.select(
       least(col("src"), col("dst")).as("lo"), greatest(col("src"), col("dst")).as("hi"))
       .where(col("lo") =!= col("hi"))
-    val e = c(edges).select(col("lo"), col("hi"),
+    val e = GraftSqlShims.checkpoint(c(edges).select(col("lo"), col("hi"),
         lit(true).as("isE"), lit(false).as("isA"), lit(false).as("isD"))
       .union(c(adds).select(col("lo"), col("hi"),
         lit(false).as("isE"), lit(true).as("isA"), lit(false).as("isD")))
@@ -129,19 +129,18 @@ object DeltaTriangles {
       .groupBy(col("lo"), col("hi"))
       .agg(max(col("isE")).as("isE"), max(col("isA")).as("isA"), max(col("isD")).as("isD"))
       .where(col("isE"))
-      .select(col("lo"), col("hi"), col("isA"), col("isD"))
-      .localCheckpoint(true)
+      .select(col("lo"), col("hi"), col("isA"), col("isD")))
     // degree orientation (TriangleCount.orient with flags carried)
     val und = e.select(col("lo").as("src"), col("hi").as("dst"), col("isA"), col("isD"))
       .union(e.select(col("hi").as("src"), col("lo").as("dst"), col("isA"), col("isD")))
     val deg = und.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-    val o = und
+    val o = GraftSqlShims.checkpoint(und
       .join(deg.withColumnRenamed("id", "src").withColumnRenamed("deg", "sdeg"), "src")
       .join(deg.withColumnRenamed("id", "dst").withColumnRenamed("deg", "ddeg"), "dst")
       .where(col("sdeg") < col("ddeg") ||
         (col("sdeg") === col("ddeg") && col("src") < col("dst")))
-      .select(col("src"), col("dst"), col("isA"), col("isD"))
-      .localCheckpoint(true)
+      .select(col("src"), col("dst"), col("isA"), col("isD")))
+    GraftSqlShims.release(e)
     // Flag-aware triangle enumeration (opt round 6 rewrite, guide §2.3 —
     // shuffle/carry fewer bytes): the old shape collected THREE adjacency
     // arrays per vertex (nb + flag-restricted nbA/nbD) and dragged all six
@@ -177,6 +176,7 @@ object DeltaTriangles {
         coalesce(col("bcA"), lit(false)), 1L).otherwise(0L)), lit(0L)).as("p"),
       coalesce(sum(when(col("isD") || coalesce(col("acD"), lit(false)) ||
         coalesce(col("bcD"), lit(false)), 1L).otherwise(0L)), lit(0L)).as("n")).head()
+    GraftSqlShims.release(o)
     (row.getLong(0), row.getLong(1), row.getLong(2))
   }
 

@@ -1,6 +1,6 @@
 package graft.matching
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.graph.GraphBuilder
@@ -42,9 +42,11 @@ import graft.graph.GraphBuilder
   * Scale shape: every extension is an equi-join partial(u) = rel(src) — the
   * shuffle key is a vertex id, so AQE skew-join handles power-law hubs; the
   * per-edge label filters reach the scan as pushed predicates; the rel table
-  * is built once per run (localCheckpoint — materialized, lineage-truncated,
-  * GC-cleaned, NOT a CacheManager entry that would leak on streaming
-  * callers) and reused by every join.
+  * is built once per run (GraftSqlShims.checkpoint — materialized,
+  * lineage-truncated, NOT a CacheManager entry that would leak on streaming
+  * callers) and reused by every join. The returned frames read it, so its
+  * blocks go when the garbage collector finds them unreachable; a caller
+  * that replaces its relation releases it (MultiQueryDriver).
   */
 object GraphMatcher {
 
@@ -167,7 +169,8 @@ object GraphMatcher {
   }
 
   /** Materialized relation shared by stats, index build and the join plan
-    * (localCheckpoint: eager, lineage-truncated, GC-cleaned).
+    * (GraftSqlShims.checkpoint: eager, lineage-truncated; see the object
+    * doc for its release).
     *
     * `forQuery`: prune the materialization to rows matching SOME query edge
     * in SOME orientation before checkpointing — for label-selective queries
@@ -188,7 +191,7 @@ object GraphMatcher {
         r.where(any)
       case None => r
     }
-    pruned.localCheckpoint(true)
+    GraftSqlShims.checkpoint(pruned)
   }
 
   /** Join-order selection with the tiny-query fast path: for ≤ 2 query
@@ -426,7 +429,7 @@ object GraphMatcher {
     val any = query.edges.flatMap(e =>
       Seq(edgeCond(query, e, r0), edgeCond(query, QEdge(e.v, e.u, e.elabel), r0)))
       .reduce(_ || _)
-    val rel = r0.where(any).localCheckpoint(true)
+    val rel = GraftSqlShims.checkpoint(r0.where(any))
     val order = chooseOrder(query, rel)
     val matches = plan(query, rel, order, homomorphic, carryFlag = true, None)
     val anyNew = (0 until query.edges.size).map(i => col(s"_f$i")).reduce(_ || _)

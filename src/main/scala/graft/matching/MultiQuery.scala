@@ -1,10 +1,11 @@
 package graft.matching
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.graph.GraphUpdate
 import graft.stream.Updates
+import graft.util.Generations
 
 /** Multi-query CONTINUOUS matching driver — the reference's flagship
   * composition (NewSP's updateEdgeFindQuery routing, newSP.h:12-100, glued
@@ -50,11 +51,15 @@ final class MultiQueryDriver(spark: SparkSession,
   require(materializeState,
     "MultiQueryDriver maintains the SJ-tree stage state (J6); there is no other mode")
 
-  var vertices: DataFrame = initialVertices.localCheckpoint(true)
-  var edges: DataFrame = initialEdges.localCheckpoint(true)
+  var vertices: DataFrame = GraftSqlShims.checkpoint(initialVertices)
+  var edges: DataFrame = GraftSqlShims.checkpoint(initialEdges)
 
-  /** Maintained symmetric labeled relation. */
-  private var rel: DataFrame = GraphMatcher.materializedRelation(edges, vertices)
+  /** Maintained symmetric labeled relation, built here and on a relabel.
+    * The narrow coalesce keeps its leaf from claiming a hash partitioning,
+    * which the SJ-tree's delta caches would miss (GraftSqlShims.checkpoint). */
+  private def relationOf(e: DataFrame, v: DataFrame): DataFrame = GraftSqlShims.checkpoint(
+    GraphMatcher.relation(e, v).coalesce(spark.sessionState.conf.numShufflePartitions))
+  private var rel: DataFrame = relationOf(edges, vertices)
 
   /** J6 stage state per query. Matching orders are fixed at registration
     * (per-batch statistics jobs would defeat the one-action batching). */
@@ -72,22 +77,16 @@ final class MultiQueryDriver(spark: SparkSession,
   var searchesRun: Long = 0L      // (query, batch) pairs that paid a delta join
   var searchesSkipped: Long = 0L  // (query, batch) pairs skipped by routing
   var fullRecomputes: Long = 0L   // relabel hazard fallbacks
-  private var relBatchesSinceCompact = 0
-  private var graphBatchesSinceCompact = 0
 
-  /** Rolling persisted-RDD generations for the maintained state tables
-    * (vertices, edges, rel): each batch's state is the previous generation
-    * plus a LocalRelation-sized overlay, truncated to a persisted leaf (no
-    * tracked action, no full Catalyst checkpoint copy). Generation b feeds
-    * generation b+1's pipeline, so releasing all but the newest two is
-    * safe once a batch commits. The localCheckpoint compaction cadence
-    * stays as the lineage/debt bound. */
-  private val vertexRoller = new graft.util.StateRoller
-  private val edgeRoller = new graft.util.StateRoller
-  private val relRoller = new graft.util.StateRoller
-  /** false ⇒ `vertices` is an eager checkpoint (pure-edge batches leave V
-    * untouched; re-checkpointing an unchanged V would copy it per window) */
-  private var verticesDirty = false
+  /** Rolling generations of the maintained state tables (Generations): each
+    * batch rolls vertices (on batches with vertex ops), edges and rel to
+    * persisted leaves; every `stateCompactEvery` rolls (graph: counted on
+    * the edge table) an eager checkpoint bounds their lineage. Vertices
+    * with no roll since the last one are that checkpoint already: copying
+    * an unchanged V again would cost a full copy per window. */
+  private val vertexGens = new Generations(stateCompactEvery)
+  private val edgeGens = new Generations(stateCompactEvery)
+  private val relGens = new Generations(stateCompactEvery)
 
   /** Apply one micro-batch; returns (nAffectedQueries, addedCount, deletedCount).
     * The batch is collected ONCE (it is |Δ|-sized by definition) and the whole
@@ -148,31 +147,20 @@ final class MultiQueryDriver(spark: SparkSession,
       newL.exists { case (id, l) => oldL.get(id).exists(_ != l) }
     }
 
-    if (pureEdge) {
-      edges = edgeRoller.roll(Seq(e1)).head
-    } else {
-      vertices = vertexRoller.roll(Seq(v1)).head
-      edges = edgeRoller.roll(Seq(e1)).head
-      verticesDirty = true
-    }
-    graphBatchesSinceCompact += 1
-    if (graphBatchesSinceCompact >= stateCompactEvery || relabeled) {
-      if (verticesDirty || relabeled) {
-        vertices = vertices.localCheckpoint(true)
-        verticesDirty = false
-      }
-      edges = edges.localCheckpoint(true)
-      vertexRoller.clear()
-      edgeRoller.clear()
-      graphBatchesSinceCompact = 0
+    if (!pureEdge) vertices = vertexGens.roll(v1).head
+    edges = edgeGens.roll(e1).head
+    if (edgeGens.due || relabeled) {
+      // a relabel has v-ops, so its vertices have rolled
+      if (vertexGens.rolledSinceCompact) vertices = vertexGens.compact(vertices).head
+      edges = edgeGens.compact(edges).head
     }
     val v1c = vertices
     val e1c = edges
 
     if (relabeled) {
       fullRecomputes += 1
-      relRoller.clear()
-      rel = GraphMatcher.materializedRelation(e1c, v1c)
+      relGens.clear()
+      rel = relationOf(e1c, v1c)
       states.foreach { case (n, st) =>
         st.init(rel)
         counts(n) = st.matchCount
@@ -296,13 +284,8 @@ final class MultiQueryDriver(spark: SparkSession,
         counts(name) = states(name).matchCount
       }
     }
-    rel = relRoller.roll(Seq(relFinal)).head
-    relBatchesSinceCompact += 1
-    if (relBatchesSinceCompact >= stateCompactEvery) {
-      rel = rel.localCheckpoint(true)
-      relRoller.clear()
-      relBatchesSinceCompact = 0
-    }
+    rel = relGens.roll(relFinal).head
+    if (relGens.due) rel = relGens.compact(rel).head
     // every query's seed stage re-anchors on the committed rel (content is
     // unchanged for unaffected queries — routing guarantees it — but the
     // anchor keeps seed lineage at the maintained base, not the overlay)

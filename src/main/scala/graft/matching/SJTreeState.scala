@@ -1,6 +1,6 @@
 package graft.matching
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** SJ-Tree materialized partial-match state — the full J6 (reference
@@ -29,12 +29,12 @@ import org.apache.spark.sql.functions._
   * or the stored stages; at warehouse scale the stage/relation scans prune
   * further via bucketing on the probe keys. Stage 0 is only a label filter
   * over the maintained relation and stays a VIEW re-anchored on it each
-  * batch (anchorSeed); join stages (>= 1) are rebuilt per batch as
-  * persisted-RDD leaves over cached per-batch deltas (rolling generations)
-  * and eagerly checkpointed every `compactEvery` batches as the lineage
-  * bound — the Spark rendering of the reference's in-place hash-state
-  * mutation, with the delta caches playing the role of the freshly-inserted
-  * hash entries.
+  * batch (anchorSeed); the probed join stages roll per batch to persisted
+  * leaves over cached per-batch deltas (graft.util.Generations), and every
+  * join stage is eagerly checkpointed every `compactEvery` batches as the
+  * lineage bound — the Spark rendering of the reference's in-place
+  * hash-state mutation, with the delta caches playing the role of the
+  * freshly-inserted hash entries.
   *
   * Memory note: like the reference's SJ-tree (its documented weakness —
   * README.md's intermediate-result blowup discussion), stage relations can
@@ -58,12 +58,14 @@ final class SJTreeState(spark: SparkSession, val query: QueryGraph,
   }
 
   private var stages: Vector[DataFrame] = Vector.empty
-  private var batchesSinceCompact = 0
+  /** The probed interior stages' rolled generations. They roll on the
+    * batches between compactions, one fewer than `compactEvery`. */
+  private val gens = new graft.util.Generations(compactEvery - 1)
   private val storage = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   /** Per-batch delta caches embedded in the current stage views. A batch's
     * deltas materialize inside ITS count action and are last read when the
-    * NEXT batch's action materializes the stage RDDs that embed them —
-    * released one commit later (rolling generations, see commitCounts). */
+    * NEXT batch's action materializes the stage leaves that embed them —
+    * released one commit later (see commitCounts). */
   private val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
   private val deltaGens =
     scala.collection.mutable.Queue.empty[Seq[DataFrame]]
@@ -73,17 +75,11 @@ final class SJTreeState(spark: SparkSession, val query: QueryGraph,
     * materializes inside its own batch's count action (posD/negD.last ARE
     * the counted relations) and the chain costs zero per-batch work. */
   private val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-  /** Persisted stage RDDs per batch. Batch b's stage RDDs are inputs of
-    * batch b+1's (persisted) stages, so generation b is releasable once
-    * generation b+1 has materialized — keep the latest two. */
-  private val rddGens = scala.collection.mutable.Queue
-    .empty[Seq[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]]
 
-  private def releaseAll(): Unit = {
+  private def releaseDeltas(): Unit = {
     cached.foreach(_.unpersist(false)); cached.clear()
     pinned.foreach(_.unpersist(false)); pinned.clear()
     deltaGens.foreach(_.foreach(_.unpersist(false))); deltaGens.clear()
-    rddGens.foreach(_.foreach(_.unpersist(false))); rddGens.clear()
   }
 
   /** Maintained |S_k| (G1's counter). */
@@ -160,7 +156,8 @@ final class SJTreeState(spark: SparkSession, val query: QueryGraph,
   /** Build all stages from scratch over the materialized relation (query
     * registration, or the relabel-hazard fallback). */
   def init(rel: DataFrame): Unit = {
-    releaseAll()
+    releaseDeltas()
+    gens.clear()
     // Stage 0 is ONLY a label filter over the maintained relation — stored
     // as a VIEW anchored on the caller's (checkpointed) rel, never copied:
     // materializing it would re-write a relation-sized table at every
@@ -170,12 +167,11 @@ final class SJTreeState(spark: SparkSession, val query: QueryGraph,
     val built = Vector.newBuilder[DataFrame]
     built += s
     (1 until order.size).foreach { i =>
-      s = cols(step(i, s, rel, tinyLeft = false), i).localCheckpoint(true)
+      s = GraftSqlShims.checkpoint(cols(step(i, s, rel, tinyLeft = false), i))
       built += s
     }
     stages = built.result()
     matchCount = stages.last.count()
-    batchesSinceCompact = 0
   }
 
   /** Re-anchor the seed-stage view on the CURRENT maintained relation (the
@@ -283,63 +279,52 @@ final class SJTreeState(spark: SparkSession, val query: QueryGraph,
         (acc, Some(nPrev))
       }
 
-    // New stages = (old ∪ Δ⁺) ∖ D. Each materialized stage (>= 1) is
-    // TRUNCATED to a LogicalRDD leaf (plan → RDD → fresh Dataset, no job,
-    // no copy): the overlay's logical tree references the previous stage
-    // and this batch's deltas in several subtrees, so left as a view the
-    // analyzed tree grows ~3× per batch (cache substitution happens only
-    // after analysis — measured super-linear driver cost within a
-    // compaction window). The wrap keeps analysis depth constant; the RDD
-    // pipeline re-runs at most `compactEvery` cached-delta overlays per
-    // scan until the eager checkpoint resets lineage.
-    val newRdds =
-      Seq.newBuilder[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]
+    // New stages = (old ∪ Δ⁺) ∖ D, as views until commitCounts rolls or
+    // compacts them.
     stages = (0 until k).map { i =>
-      val view =
-        if (!hasDels) sA(i)
-        else sA(i).join(broadcast(negD(i)), boundAt(i), "left_anti")
-      // Only the PROBED interior stages (1..k-2) are truncated to persisted
-      // leaves — they stream through the next batch's t2/clean terms, which
-      // is what materializes their cache. The FINAL stage is probed by
-      // nothing until the compaction checkpoint, so a persisted leaf there
-      // never materializes and the checkpoint would re-execute the whole
-      // since-checkpoint chain of copies (measured: compaction cost grew
-      // linearly with the cadence). It stays a lazy chain over the PINNED
-      // last-level delta caches instead — zero per-batch work, and the
-      // compaction executes one pass over base + cached deltas.
-      if (i == 0 || i == k - 1) view
-      else {
-        val (leaf, r) = org.apache.spark.sql.GraftSqlShims.truncated(view, storage)
-        newRdds += r
-        leaf
-      }
+      if (!hasDels) sA(i)
+      else sA(i).join(broadcast(negD(i)), boundAt(i), "left_anti")
     }.toVector
     posLast.foreach { d => cached -= d; pinned += d }
     negLast.foreach { d => cached -= d; pinned += d }
     deltaGens.enqueue(cached.toSeq); cached.clear()
-    rddGens.enqueue(newRdds.result())
-    batchesSinceCompact += 1
 
     val out = posLast.map(_.select(lit(name).as("q"), lit("pos").as("side"))).toSeq ++
       negLast.map(_.select(lit(name).as("q"), lit("neg").as("side"))).toSeq
     out
   }
 
-  /** Commit the collected delta counts, then (on cadence) compact the stage
-    * overlays. Compaction MUST run here — after the caller's count action —
-    * so the eager checkpoints read this batch's now-materialized delta
-    * caches instead of re-executing (and then dropping) their plans. */
+  /** Commit the collected delta counts, then roll the probed stages or (on
+    * cadence) compact every join stage — after the caller's count action,
+    * so the checkpoints read this batch's materialized delta caches and the
+    * roll releases the generation before last once the last has
+    * materialized in that action.
+    *
+    * Only the PROBED interior stages (1..k-2) roll to persisted leaves: the
+    * overlay's logical tree references the previous stage and this batch's
+    * deltas in several subtrees, so left as a view the analyzed tree grows
+    * ~3× per batch (measured super-linear driver cost within a compaction
+    * window). The next batch's t2/clean terms materialize them. The FINAL
+    * stage is probed by nothing until the compaction checkpoint, so a
+    * persisted leaf there never materializes and the checkpoint would
+    * re-execute the whole chain of copies (measured: compaction cost grew
+    * linearly with the cadence). It stays a lazy chain over the PINNED
+    * last-level delta caches: zero per-batch work, and the compaction
+    * executes one pass over base + cached deltas. */
   def commitCounts(pos: Long, neg: Long): Unit = {
     matchCount = matchCount + pos - neg
-    if (batchesSinceCompact >= compactEvery) {
+    val k = stages.size
+    if (!gens.due) {
+      val rolled = gens.roll(stages.slice(1, k - 1): _*)
+      stages = stages.take(1) ++ rolled ++ stages.drop(1).takeRight(1)
+      // keep the newest delta generation (feeding the just-rolled stages)
+      while (deltaGens.size > 1) deltaGens.dequeue().foreach(_.unpersist(false))
+    } else {
       // stage 0 is excluded: anchorSeed re-derives it from the compacted
       // rel. The final stage's checkpoint executes its pinned-delta chain
       // (one pass over the previous checkpoint plus cached deltas).
-      stages = stages.zipWithIndex.map { case (s, i) =>
-        if (i == 0) s else s.localCheckpoint(true)
-      }
-      releaseAll()
-      batchesSinceCompact = 0
+      stages = stages.take(1) ++ gens.compact(stages.drop(1): _*)
+      releaseDeltas()
       // stage-size funnel: one union-count job over the just-checkpointed
       // stages (in-memory scans; amortized 1/compactEvery per batch)
       val stored = stages.zipWithIndex.drop(1) // empty for single-edge queries
@@ -357,11 +342,6 @@ final class SJTreeState(spark: SparkSession, val query: QueryGraph,
           "inflating stored state; a more label-selective query keeps " +
           "its stages smaller")
       }
-    } else {
-      // rolling release: keep the newest delta generation (feeding the
-      // just-built stage RDDs) and the newest two stage-RDD generations
-      while (deltaGens.size > 1) deltaGens.dequeue().foreach(_.unpersist(false))
-      while (rddGens.size > 2) rddGens.dequeue().foreach(_.unpersist(false))
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftSqlShims.checkpoint
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -70,7 +71,7 @@ object Dedup {
     * only lower recall for pairs that share ONLY ubiquitous grams. */
   def jaccardPairs(docs: DataFrame, n: Int, threshold: Double,
                    maxShingleFreq: Long = 1000L): DataFrame = {
-    val sh = shingles(docs, n).localCheckpoint(true)
+    val sh = checkpoint(shingles(docs, n))
     val freq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
     val kept = sh.join(freq.where(col("df") <= maxShingleFreq), Seq("shingle"), "left_semi")
     // sizes from the FILTERED universe too, so the value is the exact Jaccard
@@ -183,9 +184,8 @@ object Dedup {
     // materialize the bucket table ONCE: the signature pipeline above it is
     // the expensive part (numPerm hash-min aggregates per shingle), and the
     // cap scan + both self-join sides would otherwise re-evaluate it 3x
-    val raw = sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bh").as("bh"))
-      .localCheckpoint(true)
+    val raw = checkpoint(sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
+      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bh").as("bh")))
     val buckets = capBucketsLogged(raw, Seq("band", "bh"), maxBucketSize, "minhash-lsh bands")
     buckets.as("x").join(buckets.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
@@ -206,7 +206,7 @@ object Dedup {
     // one materialized shingle table feeds BOTH the signature pipeline and
     // the exact-Jaccard verification (the expensive tokenize+distinct pass
     // runs once)
-    val sh = shingles(docs, n).localCheckpoint(true)
+    val sh = checkpoint(shingles(docs, n))
     val cands = lshCandidates(signaturesFromShingles(sh, numPerm, shingleHash),
       bands, rowsPerBand, bandHash, maxBucketSize)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
@@ -256,7 +256,7 @@ object Dedup {
   def simhashNearDups(docs: DataFrame, maxDist: Int = 3,
                       tokHash: Column => Column = xxhash64(_),
                       maxBucketSize: Long = 100000L): DataFrame = {
-    val sigs = simhash(docs, tokHash = tokHash).localCheckpoint(true)
+    val sigs = checkpoint(simhash(docs, tokHash = tokHash))
     val raw = sigs.select(col("doc_id"), col("simhash"),
       explode(array((0 until 4).map(c =>
         struct(lit(c).as("c"),

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftSqlShims.checkpoint
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -94,9 +95,8 @@ object Similarity {
     // nTables x nBits dot products per vector ran in a single task
     val parts = corpus.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val cb = Dedup.capBucketsLogged(
-      buckets(corpus.select(col(idCol).as("nid"), col(vecCol).as("nvec"))
-          .repartition(parts, col("nid")), "nid", "nvec")
-        .localCheckpoint(true),
+      checkpoint(buckets(corpus.select(col(idCol).as("nid"), col(vecCol).as("nvec"))
+        .repartition(parts, col("nid")), "nid", "nvec")),
       Seq("tbl", "bkt"), maxBucketSize, "sign-lsh topk corpus")
     val cands = qb.join(cb, Seq("tbl", "bkt"))
       .where(col("qid") =!= col("nid"))
@@ -245,12 +245,11 @@ object Similarity {
     // sketches materialized once (cap scan + both self-join sides reuse);
     // spread over the cluster first (opt round 6 — single-split corpus)
     val parts = corpus.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val raw = corpus.select(col(idCol), col(vecCol))
+    val raw = checkpoint(corpus.select(col(idCol), col(vecCol))
       .repartition(parts, col(idCol))
       .select(col(idCol).as("id"), col(vecCol).as("vec"),
         explode(array(tableCols: _*)).as("tb"))
-      .select(col("id"), col("vec"), col("tb.tbl").as("tbl"), col("tb.bkt").as("bkt"))
-      .localCheckpoint(true)
+      .select(col("id"), col("vec"), col("tb.tbl").as("tbl"), col("tb.bkt").as("bkt")))
     val bk = Dedup.capBucketsLogged(raw, Seq("tbl", "bkt"), maxBucketSize, "sign-lsh near-dup")
     bk.as("x").join(bk.as("y"),
         col("x.tbl") === col("y.tbl") && col("x.bkt") === col("y.bkt") &&

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftSqlShims.checkpoint
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -289,7 +290,7 @@ object GraftQueries {
     // counters; the oracle recomputes all three graph versions from scratch
     "q_tri_delta" -> ((s, d) => {
       import graft.matching.DeltaTriangles
-      val all = copurchaseEdges(s, d).localCheckpoint(true)
+      val all = checkpoint(copurchaseEdges(s, d))
       val adds = all.where((col("src") + col("dst")) % 10 === 0)
       val base = all.join(adds, Seq("src", "dst"), "left_anti")
       val dels = all.where((col("src") + col("dst")) % 10 === 5)
@@ -336,8 +337,8 @@ object GraftQueries {
       import s.implicits._
       val pages = s.createDataset(graft.pages.PagesFixture.generate(20, 50))
       val (v, e) = GraphBuilder.buildVerified(s, pages)
-      val vDF = v.toDF().localCheckpoint(true)
-      val eDF = e.toDF().localCheckpoint(true)
+      val vDF = checkpoint(v.toDF())
+      val eDF = checkpoint(e.toDF())
       val nPages = vDF.count()
       val nEdges = eDF.count()
       // the three independent statistics overlap as concurrent jobs (opt

@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.algo.AlgoResult
@@ -28,9 +28,11 @@ import graft.graph.GraphUpdate
   *    UpdatesSpec fixture took 42 warm supersteps against 41 cold (a delta
   *    PageRank is ROADMAP item 3).
   *
-  * State lives in driver-held DataFrames that are localCheckpoint'd per
-  * batch (single-process tier); on a cluster the same code commits per-batch
-  * snapshots through StateStore instead — same call shape.
+  * State lives in driver-held DataFrames (single-process tier): the graph
+  * rolls through graft.util.Generations, and each refreshed result is a
+  * GraftSqlShims checkpoint that releases its predecessor once it has
+  * materialized; on a cluster the same code commits per-batch snapshots
+  * through StateStore instead — same call shape.
   */
 final class StreamGraph(spark: SparkSession,
                         initialVertices: DataFrame,
@@ -40,10 +42,9 @@ final class StreamGraph(spark: SparkSession,
                         prTol: Double = 1e-6,
                         compactEvery: Int = 8) {
 
-  @volatile var vertices: DataFrame = initialVertices.localCheckpoint(true)
-  @volatile var edges: DataFrame = initialEdges.localCheckpoint(true)
-  private val roller = new graft.util.StateRoller
-  private var rollsSinceCompact = 0
+  @volatile var vertices: DataFrame = GraftSqlShims.checkpoint(initialVertices)
+  @volatile var edges: DataFrame = GraftSqlShims.checkpoint(initialEdges)
+  private val generations = new graft.util.Generations(compactEvery)
 
   /** Incrementally-maintained prepared PageRank inputs: a FIXED
     * co-partitioned base adjacency plus a tiny signed patch, vertex state
@@ -108,7 +109,7 @@ final class StreamGraph(spark: SparkSession,
     * MultiQueryDriver.applyBatchLocal): the |Δ|-sized batch is driver-held,
     * so classification, the two delta derivations, and the vertex
     * membership diff cost one probe action each; graph state rolls through
-    * persisted leaves (StateRoller) instead of per-batch full checkpoints. */
+    * persisted leaves (Generations) instead of per-batch full checkpoints. */
   def applyLocal(ops: Seq[GraphUpdate]): Unit =
     graft.util.BatchConf.withStaticPlan(spark)(applyLocalImpl(ops))
 
@@ -142,14 +143,12 @@ final class StreamGraph(spark: SparkSession,
     val affected = tRows.map(_.getLong(1)).distinct.toSeq
     val newIds = (touched.toSet -- tRows.map(_.getLong(0))).toSeq
     val affDf = broadcast(affected.toDF("label"))
-    val scopeIds = ccState.join(affDf, Seq("label"), "left_semi").select(col("id"))
-      .union(newIds.toDF("id"))
-      .localCheckpoint(true)
+    val scopeIds = GraftSqlShims.checkpoint(ccState.join(affDf, Seq("label"), "left_semi")
+      .select(col("id")).union(newIds.toDF("id")))
     val scopeN = scopeIds.count()
     lastCcScopeVertices = scopeN
-    if (scopeN > ccScopeBroadcastLimit) {
+    val res = if (scopeN > ccScopeBroadcastLimit) {
       ccFullRecomputes += 1
-      scopeIds.unpersist(false)
       new graft.algo.ConnectedComponents(maxIter = 60).run(spark, edges, vertices)
     } else {
       ccScopedRecomputes += 1
@@ -159,12 +158,12 @@ final class StreamGraph(spark: SparkSession,
       val sub = new graft.algo.ConnectedComponents(maxIter = 60).run(spark, subE, subV)
       val kept = ccState.join(affDf, Seq("label"), "left_anti")
         .select(col("id"), col("label"))
-      val merged = kept.union(sub.state.select(col("id"), col("label")))
-        .localCheckpoint(true)
-      sub.state.unpersist(false)
-      scopeIds.unpersist(false)
+      val merged = GraftSqlShims.checkpoint(kept.union(sub.state.select(col("id"), col("label"))))
+      GraftSqlShims.release(sub.state)
       AlgoResult(merged, sub.iterations, sub.metrics)
     }
+    GraftSqlShims.release(scopeIds)
+    res
   }
 
   private def applyLocalImpl(ops: Seq[GraphUpdate]): Unit = {
@@ -188,16 +187,10 @@ final class StreamGraph(spark: SparkSession,
     val nUnsafe = ops.size - nSafe
 
     val (v1v, e1v) = Updates.applyBatchUnlabeledLocal(spark, v0, e0, ops)
-    val Seq(v1, e1) = roller.roll(Seq(v1v, e1v))
+    val rolled = generations.roll(v1v, e1v)
+    val Seq(v1, e1) = if (generations.due) generations.compact(rolled: _*) else rolled
     vertices = v1
     edges = e1
-    rollsSinceCompact += 1
-    if (rollsSinceCompact >= compactEvery) {
-      vertices = vertices.localCheckpoint(true)
-      edges = edges.localCheckpoint(true)
-      roller.clear()
-      rollsSinceCompact = 0
-    }
 
     val hasDelete = ops.exists(u => u.op == "-v" || u.op == "-e")
     val res =
@@ -205,7 +198,7 @@ final class StreamGraph(spark: SparkSession,
         val newV = vertices.join(ccState.select(col("id")), Seq("id"), "left_anti")
           .withColumn("label", col("id"))
         // the only lazy state: it still reads the rolled `vertices`
-        AlgoResult(ccState.union(newV).localCheckpoint(true), 0, Seq.empty)
+        AlgoResult(GraftSqlShims.checkpoint(ccState.union(newV)), 0, Seq.empty)
       } else if (!hasDelete) {
         val cc = new graft.algo.ConnectedComponents(maxIter = 60)
         val warmInit = ccState.union(
@@ -215,6 +208,7 @@ final class StreamGraph(spark: SparkSession,
       } else {
         scopedCcDelete(ops)
       }
+    GraftSqlShims.release(ccState)
     ccState = res.state
     lastCcMetrics = res.metrics
     totalSafe += nSafe
@@ -260,15 +254,19 @@ final class StreamGraph(spark: SparkSession,
           val inNew = rows.filter(_.getString(0) == "n").map(_.getLong(1)).toSet
           ((inNew -- inPrev).toSeq, (inPrev -- inNew).toSeq)
         }
+      val prev = prPrepared
       prPrepared = graft.algo.PageRank.updatePrepared(
-        spark, prPrepared, graft.util.DeltaDF.of(spark, addD, "src", "dst"),
+        spark, prev, graft.util.DeltaDF.of(spark, addD, "src", "dst"),
         graft.util.DeltaDF.of(spark, delD, "src", "dst"),
         newIds, delIds)
+      // the base adjacency and hub table carry over; the rest is replaced
+      (prev.verts +: prev.patch.toSeq).foreach(GraftSqlShims.release)
       // rebuild decision from the driver-maintained patch-size BOUND — the
       // exact post-compaction row count isn't worth a per-batch count job
       // (the old probe was the protocol's one action the tier didn't need)
       prPatchBound += addD.size + delD.size
       if (prPatchBound > patchLimit) {
+        prPrepared.release()
         prPrepared = graft.algo.PageRank.prepare(spark, edges, vertices)
         prBaseEdges = prPrepared.adj.count()
         prRebuilds += 1
@@ -276,6 +274,7 @@ final class StreamGraph(spark: SparkSession,
       }
       val prRes = new graft.algo.PageRank(tol = prTol)
         .runFromPrepared(spark, prPrepared, prRanks)
+      GraftSqlShims.release(prRanks)
       prRanks = prRes.state
       prIterationsSum += prRes.iterations
       // bounded history (long streams): the sum above keeps the average

@@ -94,7 +94,7 @@ object Updates {
     * self-loop adds are dropped and a -v cascades to its incident edges.
     * ZERO Spark actions: every segment delta is a LocalRelation and the
     * result stays a view over the input tables. The caller owns materialization
-    * cadence (compact with localCheckpoint every K batches). */
+    * cadence (graft.util.Generations: roll per batch, compact every K). */
   def applyBatchLabeledLocal(spark: SparkSession, vertices: DataFrame,
                              edges: DataFrame, ops: Seq[GraphUpdate])
       : (DataFrame, DataFrame) = {

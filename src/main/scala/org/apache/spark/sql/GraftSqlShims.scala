@@ -1,8 +1,6 @@
 package org.apache.spark.sql
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.classic.{DataFrame => CDataFrame, Dataset => CDataset, SparkSession => CSparkSession}
+import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, AttributeSet}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, HashPartitioningLike, Partitioning, PartitioningCollection}
 import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
@@ -10,45 +8,18 @@ import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSpar
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.storage.StorageLevel
 
-/** private[sql] access for graft's plan leaves. */
+/** The one state-management layer of the engine's Dataset plans (private[sql]
+  * access for the leaves): `checkpoint` cuts lineage eagerly, `roll` lazily
+  * (the continuous tier's per-batch state, graft.util.Generations), and
+  * `release` frees the blocks of either leaf. `Dataset.unpersist` frees
+  * neither: they are no CacheManager entries. A leaf nothing releases keeps
+  * its blocks until the garbage collector finds it unreachable. */
 object GraftSqlShims {
 
-  /** Plan → lazily persisted InternalRow RDD + leaf DataFrame over it.
-    * Materializes on first downstream scan (inside the caller's next
-    * action); the caller owns unpersist of the returned RDD.
-    *
-    * Why: the continuous tier's maintained state tables (graph, symmetric
-    * relation, SJ-tree stages) are updated per micro-batch by tiny
-    * overlays. Left as Catalyst views, every batch adds a full-stream pass
-    * per scan (and the analyzed tree re-expands per reference);
-    * `localCheckpoint` truncates but posts a tracked Dataset action per
-    * call — per-state-table per-batch actions would scale with the number
-    * of registered queries. `queryExecution.toRdd` +
-    * `internalCreateDataFrame` performs the same truncation with ZERO
-    * tracked actions and no Row<->InternalRow double conversion; the copy()
-    * is mandatory (operators reuse UnsafeRow instances within a partition —
-    * caching uncopied rows aliases them). */
-  def truncated(df: DataFrame,
-                level: StorageLevel = StorageLevel.MEMORY_AND_DISK)
-      : (DataFrame, RDD[InternalRow]) = {
-    val cdf = df.asInstanceOf[CDataFrame]
-    val spark = cdf.sparkSession.asInstanceOf[CSparkSession]
-    // coalesce (narrow) to the session's shuffle parallelism: the overlay
-    // plans UNION the previous leaf with per-batch deltas, so without it
-    // every roll ADDS partitions and per-scan task count grows without
-    // bound (measured: 546 → 3 681 cached partitions over 6 batches)
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val rdd = cdf.queryExecution.toRdd.map(_.copy())
-      .coalesce(parts).persist(level)
-    (spark.internalCreateDataFrame(rdd, cdf.schema), rdd)
-  }
-
-  /** Eager `localCheckpoint` of `df` that keeps the hash partitioning it
-    * was built with and whose size statistics are capped at Long.MaxValue,
-    * plus the checkpoint's RDD (the caller releases it). The one checkpoint
-    * of the Dataset algorithms.
+  /** Eager `localCheckpoint` of `ds` that keeps the hash partitioning it
+    * was built with and whose size statistics are capped at Long.MaxValue.
     * Eager: the checkpoint is the plan's one SQL execution, so metrics
-    * observed at `df`'s root are in `df.queryExecution.observedMetrics`
+    * observed at `ds`'s root are in `ds.queryExecution.observedMetrics`
     * when this returns.
     *
     * Why the partitioning: under AQE the leaf of a plain `localCheckpoint`
@@ -58,7 +29,9 @@ object GraftSqlShims {
     * superstep. Here the leaf reports the final adaptive plan's
     * partitioning when that is a hash layout a fresh exchange of the same
     * count would reproduce (see `hashLayout`); then a join against
-    * another input hash-partitioned on the same key runs in place.
+    * another input hash-partitioned on the same key runs in place. The
+    * claim keeps its attribute ids when Catalyst canonicalizes the leaf, so
+    * a plan reading a renamed copy of it misses a Dataset cache over it.
     *
     * Why the cap: the checkpoint's `LogicalRDD` carries the origin plan's
     * statistics, and Catalyst's size-only estimate of a join is the
@@ -68,11 +41,11 @@ object GraftSqlShims {
     * BigInteger.multiply. An estimate above Long.MaxValue already rules
     * out every broadcast, so the cap changes no join choice; estimates
     * below it are untouched. */
-  def checkpoint(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
-    val cdf = df.asInstanceOf[CDataFrame]
-    val chk = cdf.localCheckpoint(true).asInstanceOf[CDataFrame]
+  def checkpoint[T](ds: Dataset[T]): Dataset[T] = {
+    val cds = ds.asInstanceOf[CDataset[T]]
+    val chk = cds.localCheckpoint(true).asInstanceOf[CDataset[T]]
     val leaf = chk.logicalPlan.asInstanceOf[LogicalRDD]
-    val partitioning = cdf.queryExecution.executedPlan match {
+    val partitioning = cds.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec if a.isFinalPlan =>
         hashLayout(a.executedPlan, leaf.output, leaf.rdd.getNumPartitions)
           .getOrElse(leaf.outputPartitioning)
@@ -81,14 +54,52 @@ object GraftSqlShims {
     val stats = leaf.computeStats()
     val cap = BigInt(Long.MaxValue)
     if (partitioning == leaf.outputPartitioning &&
-        stats.sizeInBytes <= cap && stats.rowCount.forall(_ <= cap)) (chk, leaf.rdd)
+        stats.sizeInBytes <= cap && stats.rowCount.forall(_ <= cap)) chk
     else {
       val capped = stats.copy(sizeInBytes = stats.sizeInBytes.min(cap),
         rowCount = stats.rowCount.map(_.min(cap)))
       val spark = chk.sparkSession
-      (CDataset.ofRows(spark, leaf.copy(outputPartitioning = partitioning)(
-        spark, Some(capped), Some(leaf.constraints))), leaf.rdd)
+      CDataset[T](spark, leaf.copy(outputPartitioning = partitioning)(
+        spark, Some(capped), Some(leaf.constraints)))(cds.encoder)
     }
+  }
+
+  /** `df` as a lazily persisted leaf, materialized by the first downstream
+    * scan. The continuous tier's state tables are updated per micro-batch
+    * by tiny overlays: left as views, every batch adds a full-stream pass
+    * per scan, and a `localCheckpoint` per table and batch would post
+    * tracked actions that scale with the registered queries. `toRdd` +
+    * `internalCreateDataFrame` cuts the same lineage with ZERO tracked
+    * actions and no Row<->InternalRow conversion; the copy() is mandatory
+    * (operators reuse UnsafeRow instances — cached uncopied rows alias). */
+  def roll(df: DataFrame): DataFrame = {
+    val cdf = df.asInstanceOf[CDataset[Row]]
+    val spark = cdf.sparkSession.asInstanceOf[CSparkSession]
+    // coalesce (narrow) to the session's shuffle parallelism: the overlay
+    // plans UNION the previous leaf with per-batch deltas, so without it
+    // every roll ADDS partitions and per-scan task count grows without
+    // bound (measured: 546 → 3 681 cached partitions over 6 batches)
+    val parts = spark.sessionState.conf.numShufflePartitions
+    val rdd = cdf.queryExecution.toRdd.map(_.copy())
+      .coalesce(parts).persist(StorageLevel.MEMORY_AND_DISK)
+    spark.internalCreateDataFrame(rdd, cdf.schema)
+  }
+
+  /** Drop the blocks of the one checkpoint or roll leaf `ds` reads, also
+    * through projections (Superstep's `keep(chk)`), once nothing reads it
+    * again: a released checkpoint cannot be recomputed (so it skips
+    * `RDD.unpersist`, which warns about that), a released roll leaf is
+    * recomputed uncached. Throws when `ds` reads none or several — a
+    * release must not silently free nothing. */
+  def release(ds: Dataset[_]): Unit = {
+    val leaves = ds.asInstanceOf[CDataset[_]].logicalPlan.collect {
+      case l: LogicalRDD if l.rdd.getStorageLevel != StorageLevel.NONE => l.rdd
+    }.distinctBy(_.id)
+    require(leaves.size == 1,
+      s"release needs a frame over one checkpoint or roll leaf; it reads ${leaves.size}")
+    leaves.foreach(r =>
+      if (r.isCheckpointed) r.sparkContext.unpersistRDD(r.id, blocking = false)
+      else r.unpersist(blocking = false))
   }
 
   /** The hash partitioning over `output` that the rows of `plan`, an
@@ -128,8 +139,4 @@ object GraftSqlShims {
     case s: QueryStageExec => followsHash(s.plan)
     case p => p.children.forall(followsHash)
   }
-
-  /** Drop a checkpoint's blocks once nothing reads them. `RDD.unpersist`
-    * does the same but logs a warning for every locally checkpointed RDD. */
-  def release(rdd: RDD[_]): Unit = rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Every top-level type in the engine is used by the engine, the benchmark
   * or the build. A type that only tests reach is main code that measures
   * and ships nothing; it fails here. Objects with a `def main` are entry
-  * points and are exempt. */
+  * points and are exempt. And every Dataset checkpoint goes through
+  * GraftSqlShims. */
 class MainSurfaceSpec extends AnyFunSuite {
 
   /** A top-level (column 0) object, class or trait declaration. */
@@ -40,9 +41,10 @@ class MainSurfaceSpec extends AnyFunSuite {
       finally walk.close()
     }
 
+  private def read(f: Path) = stripComments(new String(Files.readAllBytes(f), "UTF-8"))
+
   test("every top-level type in src/main is referenced outside its own declaration") {
     val r = root
-    def read(f: Path) = stripComments(new String(Files.readAllBytes(f), "UTF-8"))
     val main = scalaFiles(r.resolve("src/main/scala")).map(f => f -> read(f))
     val others = (scalaFiles(r.resolve("perfbench/src")) :+ r.resolve("build.sbt"))
       .filter(Files.exists(_)).map(read)
@@ -69,5 +71,30 @@ class MainSurfaceSpec extends AnyFunSuite {
     if (unused.nonEmpty)
       fail(s"${unused.size} top-level types with no reference in src/main, perfbench/src or build.sbt: " +
         unused.map { case (f, kind, name, _, _) => s"$kind $name (${r.relativize(f)})" }.mkString(", "))
+  }
+
+  /** Raw lineage cuts allowed outside GraftSqlShims: (file, code) -> why. */
+  private val RawCuts = Map(
+    ("graft/algo/CsrPageRank.scala", "newState.localCheckpoint()") ->
+      ("runPacked's RDD lineage cut every 25 supersteps: the packed loop " +
+        "runs on RDDs, and a Dataset checkpoint has no RDD to cut"))
+
+  test("every Dataset checkpoint in src/main goes through GraftSqlShims") {
+    // a raw localCheckpoint claims no partitioning, carries uncapped
+    // statistics and can only be released by the garbage collector
+    val dir = root.resolve("src/main/scala")
+    val lines = scalaFiles(dir).filterNot(_.endsWith("GraftSqlShims.scala")).flatMap { f =>
+      val rel = dir.relativize(f).toString.replace('\\', '/')
+      read(f).split("\n", -1).zipWithIndex.collect {
+        case (line, i) if line.contains("localCheckpoint(") => (rel, i + 1, line.trim)
+      }
+    }
+    val allowed = lines.filter { case (rel, _, line) =>
+      RawCuts.keys.exists { case (f, code) => f == rel && line.contains(code) } }
+    assert(allowed.size == RawCuts.size, s"allowed raw cuts missing: $RawCuts, found $allowed")
+    val raw = lines.diff(allowed)
+    if (raw.nonEmpty)
+      fail(s"${raw.size} raw localCheckpoint calls outside GraftSqlShims: " +
+        raw.map { case (rel, n, _) => s"$rel:$n" }.mkString(", "))
   }
 }

@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -210,6 +210,28 @@ class AlgoSpec extends SparkSpec with TimeLimits {
     check("bfs", 2, levels, bfsN)
   }
 
+  test("a run leaves no checkpoint but its result's: PageRank, CC, LP, BFS") {
+    // the setup tables, the initial state and every superstep but the last
+    // are released by the algorithm; the caller releases the result
+    val (vIds, _, vDF, eDF) = fixture
+    import spark.implicits._
+    val runs = Seq[(String, () => DataFrame)](
+      "pagerank" -> (() => new PageRank().run(spark, eDF, vDF).state),
+      "cc" -> (() => new ConnectedComponents().run(spark, eDF, vDF).state),
+      "lp" -> (() => new LabelPropagation().run(spark, eDF, vDF).state),
+      "bfs" -> (() => Bfs.depths(spark, eDF, Seq(vIds.min).toDF("id"))))
+    for ((what, run) <- runs) {
+      // held strongly: the context holds persisted RDDs weakly, so one that
+      // is unreachable could otherwise vanish between the two reads
+      val before = spark.sparkContext.getPersistentRDDs.toMap
+      val state = run()
+      assert(state.count() > 0, what)
+      GraftSqlShims.release(state)
+      val after = spark.sparkContext.getPersistentRDDs.keySet
+      assert(after == before.keySet, s"$what left ${after -- before.keySet}")
+    }
+  }
+
   /** Final adaptive plans of the superstep checkpoints that `body` runs, in
     * superstep order. */
   private def superstepPlans[T](body: => T): (T, Seq[SparkPlan]) = {
@@ -325,13 +347,14 @@ class AlgoSpec extends SparkSpec with TimeLimits {
 
   test("a superstep whose step returns no rows observes zero metrics") {
     import spark.implicits._
-    val init = (1L to 8L).toDF("id").localCheckpoint(true)
     val aggs = Seq(count(lit(1)).as("rows"), sum(col("id")).as("changed"),
       sum(col("id").cast("double")).as("l1"), max(col("id").cast("double")).as("linf"))
     // pruned by the optimizer, and empty only at run time
     for ((what, empty) <- Seq[(String, DataFrame => DataFrame)](
            "pruned" -> (_.where(lit(false))),
            "runtime" -> (_.where(col("id") > 100L)))) {
+      // the loop takes over (and releases) its init: one per run
+      val init = (1L to 8L).toDF("id").localCheckpoint(true)
       val res = Superstep.run(spark, "empty", init, maxIter = 3, aggs = aggs,
         keep = identity) { (_, state, _) => empty(state) }
       assert(res.iterations == 1, what)

@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.SparkSpec
 import graft.algo.ConnectedComponents
@@ -11,19 +11,9 @@ import graft.graph.GraphUpdate
   * rows carry over and its edges never enter the CC superstep loop (pinned
   * via the scoped run's per-superstep row counts). */
 class ScopedCcDeleteSpec extends SparkSpec {
+  import ScopedCcDeleteSpec.{GiantN, SmallN}
 
-  private val GiantN = 60L // ring 0..59: one component, diameter-heavy
-  private val SmallN = 4L  // path 100-101-102-103
-
-  private def graph(): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val giantV = (0L until GiantN).map(i => (i, 0))
-    val smallV = (100L to 103L).map(i => (i, 0))
-    val giantE = (0L until GiantN).map(i => (i, (i + 1) % GiantN, 0))
-    val smallE = Seq((100L, 101L, 0), (101L, 102L, 0), (102L, 103L, 0))
-    ((giantV ++ smallV).toDF("id", "vlabel").localCheckpoint(true),
-      (giantE ++ smallE).toDF("src", "dst", "elabel").localCheckpoint(true))
-  }
+  private def graph(): (DataFrame, DataFrame) = ScopedCcDeleteSpec.graph(spark)
 
   private def scratch(sg: StreamGraph): Set[(Long, Long)] =
     new ConnectedComponents().run(spark, sg.edges, sg.vertices).state
@@ -86,5 +76,20 @@ class ScopedCcDeleteSpec extends SparkSpec {
       GraphUpdate(1, "e", 200L, 201L, 0),
       GraphUpdate(2, "-e", 200L, 201L, 0)))
     assert(state(sg) == scratch(sg))
+  }
+}
+
+object ScopedCcDeleteSpec {
+  val GiantN = 60L // ring 0..59: one component, diameter-heavy
+  val SmallN = 4L  // path 100-101-102-103
+
+  def graph(spark: SparkSession): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val giantV = (0L until GiantN).map(i => (i, 0))
+    val smallV = (100L to 103L).map(i => (i, 0))
+    val giantE = (0L until GiantN).map(i => (i, (i + 1) % GiantN, 0))
+    val smallE = Seq((100L, 101L, 0), (101L, 102L, 0), (102L, 103L, 0))
+    ((giantV ++ smallV).toDF("id", "vlabel").localCheckpoint(true),
+      (giantE ++ smallE).toDF("src", "dst", "elabel").localCheckpoint(true))
   }
 }

@@ -88,6 +88,30 @@ class StreamGraphSpec extends SparkSpec {
   private val WarmAdd = 9
   private val Delete = 13
 
+  test("persisted RDDs do not grow with the batch count: 6 delete batches hold what 2 do") {
+    // the ScopedCcDeleteSpec fixture; each batch cuts one ring edge and
+    // restores the one cut before, so every batch takes the scoped delete
+    val (v, e) = ScopedCcDeleteSpec.graph(spark)
+    val sg = new StreamGraph(spark, v, e)
+    def batch(j: Long): Unit =
+      sg.applyLocal(GraphUpdate(2 * j, "-e", j, j + 1, 0) +:
+        (if (j == 0) Nil else Seq(GraphUpdate(2 * j + 1, "e", j - 1, j, 0))))
+    // held strongly: the context holds persisted RDDs weakly, so one that
+    // is unreachable could otherwise vanish between the two reads
+    def persisted() = spark.sparkContext.getPersistentRDDs.toMap
+    (0L until 2L).foreach(batch)
+    val afterTwo = persisted()
+    (2L until 6L).foreach(batch)
+    val afterSix = persisted()
+    assert(sg.ccScopedRecomputes == 6)
+    assert(afterSix.size == afterTwo.size,
+      s"${afterSix.size - afterTwo.size} more persisted RDDs after 6 batches than after 2")
+    val ids = sg.vertices.select("id").collect().map(_.getLong(0)).toSeq
+    val es = sg.edges.select("src", "dst").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(sg.ccState.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      graft.Oracles.components(ids, es))
+  }
+
   test("streaming triangle maintenance: delta-join counters track recompute") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

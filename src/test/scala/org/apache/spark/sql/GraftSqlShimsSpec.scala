@@ -1,7 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** GraftSqlShims.checkpoint's leaf claims a hash partitioning only where a
-  * fresh exchange of the same count would lay the rows out the same way. */
+  * fresh exchange of the same count would lay the rows out the same way,
+  * and `release` drops exactly the leaf a frame reads. */
 class GraftSqlShimsSpec extends SparkSpec {
 
   /** 400 keys; the keys of hash bucket 0 (of 4) carry 40 rows each, the
@@ -40,7 +41,7 @@ class GraftSqlShimsSpec extends SparkSpec {
   }
 
   test("checkpoint of an uncoalesced exchange keeps its hash partitioning") {
-    val (chk, rdd) = GraftSqlShims.checkpoint(skewed.repartition(4, col("key")))
+    val chk = GraftSqlShims.checkpoint(skewed.repartition(4, col("key")))
     chk.queryExecution.executedPlan.outputPartitioning match {
       case h: HashPartitioning =>
         assert(h.numPartitions == 4 && h.references.map(_.name).toSeq == Seq("key"))
@@ -56,11 +57,11 @@ class GraftSqlShimsSpec extends SparkSpec {
       // the leaf joins in place: the only exchange is the other side's
       assert(shuffles(joined.queryExecution.executedPlan) == 1)
     }
-    GraftSqlShims.release(rdd)
+    GraftSqlShims.release(chk)
   }
 
   test("a checkpoint of an AQE-coalesced read claims no hash partitioning") {
-    val (chk, rdd) = withConf(
+    val chk = withConf(
         "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
         "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8000") {
@@ -68,7 +69,8 @@ class GraftSqlShimsSpec extends SparkSpec {
       GraftSqlShims.checkpoint(skewed.repartition(col("key")))
     }
     // bucket 0 stays alone, buckets 1-3 merge: partition 1 is not pmod(hash, 2) = 1
-    assert(rdd.getNumPartitions == 2, "AQE did not coalesce 4 -> 2; the test needs it")
+    assert(chk.queryExecution.toRdd.getNumPartitions == 2,
+      "AQE did not coalesce 4 -> 2; the test needs it")
     chk.queryExecution.executedPlan.outputPartitioning match {
       case h: HashPartitioning => fail(s"coalesced leaf claims $h")
       case _ =>
@@ -81,6 +83,36 @@ class GraftSqlShimsSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
       assert(got == keyPairs(skewed).map { case (k, i) => (k, i, k * 2) }.sorted)
     }
-    GraftSqlShims.release(rdd)
+    GraftSqlShims.release(chk)
+  }
+
+  /** The ids of the persisted RDDs, held strongly: the context keeps them
+    * weakly, so an unreachable one could vanish between two reads. */
+  private def persisted(): Map[Int, org.apache.spark.rdd.RDD[_]] =
+    spark.sparkContext.getPersistentRDDs.toMap
+
+  test("release drops exactly the checkpoint or roll leaf a frame reads") {
+    def leafId(df: DataFrame): Int =
+      df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd.id }.get
+    val before = persisted()
+    val chk = GraftSqlShims.checkpoint(skewed.repartition(4, col("key")))
+    val rolled = GraftSqlShims.roll(skewed.where(col("i") === 1))
+    assert(rolled.count() == 400)
+    assert(persisted().keySet == before.keySet + leafId(chk) + leafId(rolled))
+    // through a filter and a projection, like Superstep's keep(chk)
+    GraftSqlShims.release(chk.where(col("i") > 1).select(col("key")))
+    assert(persisted().keySet == before.keySet + leafId(rolled))
+    GraftSqlShims.release(rolled)
+    assert(persisted().keySet == before.keySet)
+  }
+
+  test("release of a frame over no checkpoint or roll leaf, or over two, throws") {
+    val a = GraftSqlShims.checkpoint(skewed)
+    val b = GraftSqlShims.checkpoint(skewed)
+    intercept[IllegalArgumentException](GraftSqlShims.release(skewed))
+    intercept[IllegalArgumentException](GraftSqlShims.release(spark.range(3).toDF()))
+    intercept[IllegalArgumentException](GraftSqlShims.release(a.union(b)))
+    GraftSqlShims.release(a)
+    GraftSqlShims.release(b)
   }
 }
