@@ -12,8 +12,12 @@ import graft.graph.GraphBuilder
   *   next = (frontier ⋈ edges).select(dst).distinct  ANTI-JOIN  visited
   *
   * — the template SURVEY.md §2.3-A5 names for all our supersteps. Scale
-  * shape: the frontier join shuffles on vertex id (AQE absorbs hub skew);
-  * `visited` grows monotonically and is lineage-truncated per level.
+  * shape (Superstep's partition-stable layout): the undirected table is
+  * checkpointed hash-partitioned by src and `visited` by id, with the same
+  * count, so the frontier join, the anti-join against `visited` and the
+  * union run in place; the one exchange per level is the `distinct` of the
+  * found ids by id — the messages. `visited` grows monotonically and is
+  * lineage-truncated per level.
   *
   * The reference's GetDiameter runs |V| BFS passes — fine row-at-a-time on
   * one box, catastrophic as |V| Spark jobs. We expose single/multi-source
@@ -25,7 +29,8 @@ object Bfs {
     * over the UNDIRECTED view of `edges`, up to `maxDepth` levels. */
   def depths(spark: SparkSession, edges: DataFrame, sources: DataFrame,
              maxDepth: Int = 50): DataFrame = {
-    val seeds = sources.select(col("id")).distinct().withColumn("depth", lit(0L))
+    val seeds = Superstep.placed(sources.select(col("id"))).distinct()
+      .withColumn("depth", lit(0L))
     levels(spark, edges, seeds, maxDepth).state
   }
 
@@ -34,24 +39,19 @@ object Bfs {
     * level, so the loop halts on the first empty level. */
   private def levels(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
                      maxDepth: Int): AlgoResult = {
-    // GraphBuilder.undirected's src partitioning is the per-level frontier
-    // join key, and the persisted scan reports it: the undirected table is
-    // exchanged once for the whole loop (the frontier, read from the
-    // checkpointed state, is exchanged every level)
-    val und = GraphBuilder.undirected(edges).persist()
-    und.count()
+    val und = GraftSqlShims.checkpoint(GraphBuilder.undirected(edges))
     val res = Superstep.run(spark, "bfs", GraftSqlShims.checkpoint(seeds), maxDepth,
       aggs = Seq(count(lit(1)).as("rows"),
         sum(when(col("fresh"), 1L).otherwise(0L)).as("changed")),
       keep = _.drop("fresh")) { (level, visited, _) =>
       val frontier = visited.where(col("depth") === level - 1)
-      val next = frontier.join(und, frontier("id") === und("src"))
+      val next = und.join(frontier.hint("shuffle_hash"), und("src") === frontier("id"))
         .select(und("dst").as("id")).distinct()
-        .join(visited, Seq("id"), "left_anti")
+        .join(visited.hint("shuffle_hash"), Seq("id"), "left_anti")
       visited.withColumn("fresh", lit(false))
         .union(next.withColumn("depth", lit(level.toLong)).withColumn("fresh", lit(true)))
     }
-    und.unpersist()
+    GraftSqlShims.release(und)
     res
   }
 }

@@ -21,22 +21,35 @@ import graft.state.StateStore
   * ⇒ label = component-min id (exact, as the north rule requires — not
   * approximate).
   *
-  * Scale notes: two shuffles per superstep (neighbor groupBy-min + the jump
-  * join on label). The neighbor min is algebraic ⇒ partial aggregation
-  * absorbs hub skew. The JUMP join is the skew hazard: its key is `label`,
-  * whose distribution collapses toward one hot key per component as
-  * convergence approaches — on a web graph (one giant component) that is a
-  * single key carrying O(|V|) rows. Mitigation (north rule "key salting +
-  * broadcast of the hot frontier"): once the label distribution concentrates
-  * (approx distinct labels ≪ rows, tracked for free in the per-superstep
-  * aggregate), labels with count > `hotLabelThreshold` are detected by an
-  * algebraic groupBy (itself skew-free), the probe side gets a deterministic
-  * salt in [0, saltK) from xxhash64(id), and the tiny hot slice of the
-  * (unique-key) build side is broadcast-replicated once per salt — per-key
-  * shuffle rows are bounded by max(hotLabelThreshold, rows/saltK).
+  * Scale notes (Superstep's partition-stable layout): the undirected table
+  * is checkpointed hash-partitioned by src and the state by id, with the
+  * same count, and stay put. A superstep exchanges only messages: the
+  * state by `label`, as jump edges label(v) → v that join the state in
+  * place together with und (one join sends both message kinds), then the
+  * messages themselves, ONE min per id. That min is algebraic ⇒
+  * partial aggregation absorbs hub skew, and the state ⋈ min join reads the
+  * state leaf, so the next state keeps hash(id). The JUMP join is the skew
+  * hazard: its probe key is `label`, whose distribution collapses toward
+  * one hot key per component as convergence approaches — on a web graph
+  * (one giant component) that is a single key carrying O(|V|) rows.
+  * Mitigation (north rule "key salting + broadcast of the hot frontier"):
+  * once the label distribution concentrates (approx distinct labels ≪
+  * rows, tracked for free in the per-superstep aggregate), labels with
+  * count > `hotLabelThreshold` are detected by an algebraic groupBy (itself
+  * skew-free), the probe side gets a deterministic salt in [0, saltK) from
+  * xxhash64(id), and the tiny hot slice of the (unique-key) build side is
+  * broadcast-replicated once per salt — per-key shuffle rows are bounded by
+  * max(hotLabelThreshold, rows/saltK). The salted messages join the same
+  * union, so the superstep still ends in the in-place state ⋈ min join.
   *
-  * The edge table is persisted once; state is lineage-truncated per
-  * superstep. This is the tabular form of union-find — the reference has no
+  * Join hints, the same rule in LP and BFS: a shuffle-hash build side is
+  * always unique-key and placed by id — the state, its frontier slice or
+  * the per-id aggregate of the messages — so at most |V|/partitions rows
+  * per task; a hub or a giant component concentrates the probe side, never
+  * a hash build. The hint on the state ⋈ min join keeps it in place
+  * without AQE's broadcast job. No size gate: the rule holds at any |E|.
+  *
+  * This is the tabular form of union-find — the reference has no
   * CC, but its iterative index-propagation loops (SymBi InsertionTopDown
   * queues, symbi.cpp:404-468) are the same propagate-until-no-change shape.
   */
@@ -63,23 +76,11 @@ final class ConnectedComponents(maxIter: Int = 50,
 
   private def loop(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
                    store: Option[StateStore], init: Option[DataFrame]): AlgoResult = {
-    // Undirected view: propagate along both directions. Partitioned by src
-    // ONCE (GraphBuilder.undirected) and persisted: the cached scan reports
-    // that partitioning, which satisfies the per-superstep neighbor-min
-    // join on src, so the full undirected table does not re-exchange per
-    // superstep. The state side does, unless its checkpoint leaf kept an
-    // id partitioning (GraftSqlShims.checkpoint).
-    val und = GraphBuilder.undirected(edges).persist()
-    // hint joins shuffle_hash only past a size floor (opt round 6): on a
-    // fixture-scale graph the forced hint blocks AQE's broadcast choice and
-    // costs ~12 needless small shuffles per run; on a big graph it stops
-    // SMJ re-sorting the edge table every superstep. The count is free —
-    // it materializes the persist either way.
-    val bigGraph = und.count() > 100000L
-    def sh(df: DataFrame): DataFrame = if (bigGraph) df.hint("shuffle_hash") else df
-
-    val start = GraftSqlShims.checkpoint(init.getOrElse(vertices.select(col("id")).distinct()
-      .withColumn("label", col("id"))))
+    // undirected view, hash-partitioned by src (GraphBuilder.undirected);
+    // the initial state by id with the same count (Superstep.placed)
+    val und = GraftSqlShims.checkpoint(GraphBuilder.undirected(edges))
+    val start = GraftSqlShims.checkpoint(init.map(Superstep.placed(_)).getOrElse(
+      Superstep.placed(vertices.select(col("id"))).distinct().withColumn("label", col("id"))))
     saltedSupersteps = 0
     // the last hot-label table, released once its superstep materialized
     var hotChk = Option.empty[DataFrame]
@@ -93,18 +94,11 @@ final class ConnectedComponents(maxIter: Int = 50,
       keep = _.select(col("id"), col("newLabel").as("label")),
       store = store) { (_, state, prev) =>
       hotChk.foreach(GraftSqlShims.release)
-      // (1) neighbor min: for each dst, min over labels of its in-neighbors.
-      // shuffle-hash (opt round 6, guide §3.1): state fits per-partition
-      // hash maps; SMJ would re-sort the big und side every superstep.
-      val nbrMin = und.join(sh(state), und("src") === state("id"))
-        .groupBy(und("dst").as("id")).agg(min(col("label")).as("nbrMin"))
-      val cand = state.join(sh(nbrMin), Seq("id"), "left_outer")
-        .select(col("id"), col("label"),
-          least(col("label"), coalesce(col("nbrMin"), col("label"))).as("cand"))
-      // (2) pointer jump: label(label(v)) — compresses label chains. Probe
-      // key = `label` (concentrates as components merge); build side is
-      // unique-key. Salted once the distribution is provably concentrated.
-      val ptr = state.select(col("id").as("lid"), col("label").as("plabel"))
+      // every message is a vertex's label sent along an edge (src → dst),
+      // joined with the state in place: edge tables sit placed by src
+      def send(edges: DataFrame): DataFrame =
+        edges.join(state.hint("shuffle_hash"), col("src") === col("id"))
+          .select(col("dst").as("id"), col("label").as("m"))
       // a hot label needs > hotLabelThreshold member rows, impossible when
       // the whole state has fewer — skip the per-superstep hot probe (a
       // full groupBy + checkpoint + count, 2 extra jobs) below that size:
@@ -113,42 +107,52 @@ final class ConnectedComponents(maxIter: Int = 50,
         val rows = r.getAs[Long]("rows")
         rows > hotLabelThreshold && r.getAs[Long]("labels") < rows / 4
       }
-      def plainJump(): DataFrame =
-        cand.join(sh(ptr), cand("label") === ptr("lid"), "left_outer")
-          .select(col("id"), col("label"),
-            least(col("cand"), coalesce(col("plabel"), col("cand"))).as("newLabel"))
       // hot labels by algebraic count (partial agg absorbs the hot key);
       // only probed in the concentrated regime, and the salted plan only
       // replaces the plain one when a label actually exceeds the threshold
       hotChk = if (!concentrated) None else Some(GraftSqlShims.checkpoint(
         state.groupBy(col("label")).agg(count(lit(1)).as("n"))
           .where(col("n") > hotLabelThreshold).select(col("label").as("hl"))))
-      if (hotChk.forall(_.limit(1).count() == 0)) plainJump()
-      else {
-        val hot = hotChk.get
-        saltedSupersteps += 1
-        val candS = cand
-          .join(broadcast(hot), cand("label") === col("hl"), "left_outer")
-          .withColumn("salt",
-            when(col("hl").isNotNull, pmod(xxhash64(col("id")), lit(saltK.toLong)))
-              .otherwise(lit(0L)))
-        // build side: cold rows once at salt 0; hot-label rows replicated
-        // per salt (the broadcast-the-hot-frontier half of the rule)
-        val ptrHot = ptr.join(broadcast(hot), ptr("lid") === col("hl"), "left_semi")
-          .withColumn("psalt", explode(array((0 until saltK).map(s => lit(s.toLong)): _*)))
-        val ptrCold = ptr.join(broadcast(hot), ptr("lid") === col("hl"), "left_anti")
-          .withColumn("psalt", lit(0L))
-        val ptr2 = ptrCold.unionByName(ptrHot)
-        candS.join(ptr2,
-            candS("label") === ptr2("lid") && candS("salt") === ptr2("psalt"),
-            "left_outer")
-          .select(candS("id"), candS("label"),
-            least(col("cand"), coalesce(col("plabel"), col("cand"))).as("newLabel"))
-      }
+      val msgs =
+        if (hotChk.forall(_.limit(1).count() == 0)) {
+          // (1) neighbour messages along und, and (2) the pointer jump
+          // label(label(v)) as messages along the edges label(v) → v:
+          // the state exchanged by label is the only row movement before
+          // the send, and both edge kinds share one in-place join
+          val jumps = Superstep.placed(
+            state.select(col("label"), col("id").as("dst")), "label")
+          send(und.select(col("src"), col("dst")).union(jumps))
+        } else {
+          // the salted jump: the probe side is the state keyed by label,
+          // salted from xxhash64(id) for hot labels; the build side `ptr`
+          // (the state by id) has cold rows once at salt 0 and hot-label
+          // rows replicated per salt (the broadcast-the-hot-frontier half
+          // of the rule)
+          val hot = hotChk.get
+          saltedSupersteps += 1
+          val ptr = state.select(col("id").as("lid"), col("label").as("plabel"))
+          val stateS = state
+            .join(broadcast(hot), state("label") === col("hl"), "left_outer")
+            .withColumn("salt",
+              when(col("hl").isNotNull, pmod(xxhash64(col("id")), lit(saltK.toLong)))
+                .otherwise(lit(0L)))
+          val ptrHot = ptr.join(broadcast(hot), ptr("lid") === col("hl"), "left_semi")
+            .withColumn("psalt", explode(array((0 until saltK).map(s => lit(s.toLong)): _*)))
+          val ptrCold = ptr.join(broadcast(hot), ptr("lid") === col("hl"), "left_anti")
+            .withColumn("psalt", lit(0L))
+          val ptr2 = ptrCold.unionByName(ptrHot)
+          send(und).unionByName(stateS.join(ptr2,
+              stateS("label") === ptr2("lid") && stateS("salt") === ptr2("psalt"))
+            .select(stateS("id"), col("plabel").as("m")))
+        }
+      val msgMin = msgs.groupBy(col("id")).agg(min(col("m")).as("m"))
+      state.join(msgMin.hint("shuffle_hash"), Seq("id"), "left_outer")
+        .select(col("id"), col("label"),
+          least(col("label"), coalesce(col("m"), col("label"))).as("newLabel"))
     }
 
     hotChk.foreach(GraftSqlShims.release)
-    und.unpersist()
+    GraftSqlShims.release(und)
     res
   }
 }

@@ -97,9 +97,14 @@ object CsrPageRank {
     // (id, pid, idx): dense index within block, ordered by id for determinism
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("pid")).orderBy(col("id"))
+    // the narrow coalesce leaves the leaf no claimed layout: its hash(pid)
+    // serves no join here, and a claim keeps its attribute ids when the
+    // leaf is canonicalized, so the two renamed reads below (srcRef,
+    // dstRef) would each run their own exchange instead of sharing one
     val vIdx = checkpoint(vDistinct
       .withColumn("pid", pmod(xxhash64(col("id")), lit(p.toLong)).cast("int"))
-      .withColumn("idx", (row_number().over(w) - 1).cast("int")))
+      .withColumn("idx", (row_number().over(w) - 1).cast("int"))
+      .coalesce(maxP))
     val n = nVerts
 
     val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).cast("int").as("deg"))

@@ -16,13 +16,16 @@ import graft.state.StateStore
   * bipartite-ish structures, so the loop stops at `maxIter` even when not
   * stable — again deterministically.
   *
-  * Shape per superstep: groupBy(dst, label).count → per-dst argmax as a
-  * SECOND algebraic aggregate — max over struct(n, -label, label), whose
-  * lexicographic order encodes the (count desc, label asc) tie-break. Both
-  * aggregates are partial-agg (map-side combined), so hub fan-in AND the
-  * argmax are skew-free; no sort-based window anywhere (a per-vertex
-  * row_number window costs a sort per partition and was the dominant
-  * superstep term at bench scale).
+  * Shape per superstep (Superstep's partition-stable layout): the
+  * undirected table sits hash-partitioned by src and the state by id, with
+  * the same count, so the und ⋈ state join runs in place; ONE id-keyed
+  * aggregate, `mode(label, deterministic = true)` (most frequent label,
+  * smallest on ties), takes the neighbour labels, so the messages are the
+  * superstep's one exchange (its partial aggregate combines them map-side);
+  * the state ⋈ mode join reads the state leaf on id and runs in place, so
+  * the next superstep's state keeps hash(id). No sort-based window anywhere
+  * (a per-vertex row_number window costs a sort per partition and was the
+  * dominant superstep term at bench scale).
   */
 final class LabelPropagation(maxIter: Int = 10) extends Algorithm {
 
@@ -30,11 +33,8 @@ final class LabelPropagation(maxIter: Int = 10) extends Algorithm {
 
   override def run(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
                    store: Option[StateStore] = None): AlgoResult = {
-    // partitioned by src ONCE (GraphBuilder.undirected); the checkpoint
-    // leaf keeps that partitioning, so the per-superstep join on src
-    // exchanges only the state side and the undirected table stays put
     val und = GraftSqlShims.checkpoint(GraphBuilder.undirected(edges))
-    val start = GraftSqlShims.checkpoint(vertices.select(col("id")).distinct()
+    val start = GraftSqlShims.checkpoint(Superstep.placed(vertices.select(col("id"))).distinct()
       .withColumn("label", col("id")))
     val res = Superstep.run(spark, name, start, maxIter,
       aggs = Seq(
@@ -49,17 +49,10 @@ final class LabelPropagation(maxIter: Int = 10) extends Algorithm {
   /** One synchronous LP superstep: (id, label, newLabel). Exposed for the
     * single-step DuckDB-oracle query. */
   def step(und: DataFrame, state: DataFrame): DataFrame = {
-    // shuffle-hash: the state side fits per-partition hash maps; SMJ would
-    // re-sort the big und side every superstep
-    val nbrLabels = und.join(state.hint("shuffle_hash"), und("src") === state("id"))
-      .select(und("dst").as("id"), col("label"))
-    val counts = nbrLabels.groupBy(col("id"), col("label")).agg(count(lit(1)).as("n"))
-    // argmax by (n desc, label asc): max of struct(n, -label, label) —
-    // lexicographic struct comparison, algebraic, no window/sort
-    val mode = counts.groupBy(col("id"))
-      .agg(max(struct(col("n"), (-col("label")).as("negl"), col("label"))).as("m"))
-      .select(col("id"), col("m.label").as("modeLabel"))
-    state.join(mode, Seq("id"), "left_outer")
+    val modes = und.join(state.hint("shuffle_hash"), und("src") === state("id"))
+      .groupBy(und("dst").as("id"))
+      .agg(mode(col("label"), deterministic = true).as("modeLabel"))
+    state.join(modes.hint("shuffle_hash"), Seq("id"), "left_outer")
       .select(col("id"), col("label"),
         coalesce(col("modeLabel"), col("label")).as("newLabel"))
   }

@@ -25,13 +25,13 @@ object GraftSqlShims {
     * Why the partitioning: under AQE the leaf of a plain `localCheckpoint`
     * reports UnknownPartitioning (AdaptiveSparkPlanExec does not expose its
     * final partitioning), so every plan that reads it re-exchanges it —
-    * PageRank's adjacency and state and LP's undirected table, every
-    * superstep. Here the leaf reports the final adaptive plan's
-    * partitioning when that is a hash layout a fresh exchange of the same
-    * count would reproduce (see `hashLayout`); then a join against
-    * another input hash-partitioned on the same key runs in place. The
-    * claim keeps its attribute ids when Catalyst canonicalizes the leaf, so
-    * a plan reading a renamed copy of it misses a Dataset cache over it.
+    * every superstep loop's edge table and state, every superstep. Here
+    * the leaf reports the final adaptive plan's hash layouts that a fresh
+    * exchange of the same count would reproduce (see `hashLayout`); then a
+    * join against another input hash-partitioned on one of those keys runs
+    * in place. The claim keeps its attribute ids when Catalyst
+    * canonicalizes the leaf, so a plan reading a renamed copy of it misses
+    * a Dataset cache over it, and two renamed reads share no exchange.
     *
     * Why the cap: the checkpoint's `LogicalRDD` carries the origin plan's
     * statistics, and Catalyst's size-only estimate of a join is the
@@ -111,20 +111,26 @@ object GraftSqlShims {
     * (`followsHash`). A coalesced AQE read also reports a hash
     * partitioning of its keys, but its partitions are ranges of the
     * exchange's buckets: claimed, a join against a fresh exchange of the
-    * coalesced count would pair the wrong rows. */
+    * coalesced count would pair the wrong rows. Every such layout over
+    * `output` is claimed: a plan reports several when one key is also
+    * output under an alias (LP's and CC's initial `label` is `id`) or when
+    * an inner join or a union lines up its children's keys; claiming only
+    * one of them would lose the others' in-place joins. */
   private def hashLayout(plan: SparkPlan, output: Seq[Attribute],
-                         parts: Int): Option[HashPartitioning] = {
+                         parts: Int): Option[Partitioning] = {
     def leaves(p: Partitioning): Seq[Partitioning] = p match {
       case PartitioningCollection(ps) => ps.flatMap(leaves)
       case p => Seq(p)
     }
     val byId = AttributeMap(output.map(a => a -> a))
-    leaves(plan.outputPartitioning).collectFirst {
+    val claims = leaves(plan.outputPartitioning).collect {
       case h: HashPartitioningLike if h.numPartitions == parts &&
-          h.references.subsetOf(AttributeSet(output)) &&
-          (parts == 1 || followsHash(plan)) =>
+          h.references.subsetOf(AttributeSet(output)) =>
         HashPartitioning(h.expressions.map(_.transform { case a: Attribute => byId(a) }), parts)
-    }
+    }.distinct
+    if (claims.isEmpty || !(parts == 1 || followsHash(plan))) None
+    else if (claims.size == 1) Some(claims.head)
+    else Some(PartitioningCollection(claims))
   }
 
   /** True when no AQE shuffle read (coalesced, skew-split or local) sits

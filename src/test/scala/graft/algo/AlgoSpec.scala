@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -190,7 +191,7 @@ class AlgoSpec extends SparkSpec with TimeLimits {
       assert(seen == setup + supersteps,
         s"$what: $seen SQL executions for $supersteps supersteps (setup $setup)")
     val (cc, ccN) = executions(new ConnectedComponents().run(spark, eDF, vDF))
-    // the undirected view's count; the initial labeling's checkpoint
+    // checkpoints of the undirected view and of the initial labeling
     check("cc", 2, cc.iterations, ccN)
     val (lp, lpN) = executions(new LabelPropagation(maxIter = 5).run(spark, eDF, vDF))
     // checkpoints of the undirected view and of the initial labeling
@@ -206,7 +207,7 @@ class AlgoSpec extends SparkSpec with TimeLimits {
     val (depths, bfsN) = executions(Bfs.depths(spark, eDF, Seq(vIds.min).toDF("id")))
     // one level per depth plus the empty level that halts the loop
     val levels = depths.agg(max("depth")).head().getLong(0).toInt + 1
-    // the undirected view's count; the sources' checkpoint
+    // checkpoints of the undirected view and of the sources
     check("bfs", 2, levels, bfsN)
   }
 
@@ -270,17 +271,37 @@ class AlgoSpec extends SparkSpec with TimeLimits {
     val got = pr.state.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(got.size == vIds.size)
     vIds.foreach(v => assert(math.abs(got(v) - want(v)) < 1e-8, s"rank($v)"))
+  }
 
-    // LP exchanges the state and its messages, never the undirected table
-    // (the src side of its src ⋈ id join)
-    val (lp, lpPlans) = superstepPlans(new LabelPropagation(maxIter = 5).run(spark, eDF, vDF))
-    assert(lpPlans.size == lp.iterations)
-    for ((plan, k) <- lpPlans.zipWithIndex; e <- shuffles(plan)) {
-      val keys = e.outputPartitioning match {
-        case h: HashPartitioning => h.references.map(_.name).toSet
-        case _ => Set.empty[String]
+  test("partition-stable supersteps: LP and BFS exchange once, CC at most twice, no leaf by its key") {
+    // und stays hash(src) and the state hash(id): after the first
+    // superstep only messages move (LP's and BFS's by id, CC's by id plus
+    // the state by label for the pointer jump). An exchange keyed on src,
+    // or an exchange keyed on id with no join below it, re-exchanges a
+    // leaf: und, or the state
+    val (vIds, _, vDF, eDF) = fixture
+    import spark.implicits._
+    def keys(e: ShuffleExchangeLike): Set[String] = e.outputPartitioning match {
+      case h: HashPartitioning => h.references.map(_.name).toSet
+      case _ => Set.empty[String]
+    }
+    val runs = Seq[(String, Int, () => Unit)](
+      ("lp", 1, () => { new LabelPropagation(maxIter = 5).run(spark, eDF, vDF); () }),
+      ("bfs", 1, () => { Bfs.depths(spark, eDF, Seq(vIds.min).toDF("id")); () }),
+      ("cc", 2, () => { new ConnectedComponents().run(spark, eDF, vDF); () }))
+    for ((what, most, run) <- runs) {
+      val (_, plans) = superstepPlans(run())
+      assert(plans.size > 2, s"$what ran ${plans.size} supersteps")
+      for ((plan, k) <- plans.zipWithIndex.drop(1)) {
+        val es = shuffles(plan)
+        val where = s"$what superstep ${k + 1}:\n$plan"
+        if (most == 1) assert(es.size == 1, where) else assert(es.size <= most, where)
+        es.foreach { e =>
+          assert(!keys(e).contains("src"), s"und re-exchanged; $where")
+          assert(!(keys(e) == Set("id") && !e.child.exists(_.isInstanceOf[BaseJoinExec])),
+            s"state re-exchanged by id; $where")
+        }
       }
-      assert(!keys.contains("src"), s"LP superstep ${k + 1} re-exchanges und:\n$plan")
     }
   }
 

@@ -1,6 +1,10 @@
 package graft.algo
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.{Oracles, SparkSpec}
 import graft.graph.GraphBuilder
@@ -11,6 +15,8 @@ import graft.pages.PagesFixture
   * independent implementations that must agree within 1e-6, and both must
   * match the plain-Scala power iteration. */
 class CsrPageRankSpec extends SparkSpec {
+
+  private val BuildExchanges = 13
 
   /** build + runPacked + toRows: (id, rank) rows, iterations, metrics. */
   private def packed(edges: DataFrame, vertices: DataFrame, tol: Double, maxIter: Int,
@@ -61,6 +67,40 @@ class CsrPageRankSpec extends SparkSpec {
     // mass of init state = 1
     val mass = blocks.init.collect().map(_.ranks.sum).sum
     assert(math.abs(mass - 1.0) < 1e-9)
+  }
+
+  /** Shuffle exchanges run by the plans `body` executes; a reused
+    * exchange is not one. */
+  private def exchangesRun[T](body: => T): (T, Int) = {
+    def count(plan: SparkPlan): Int = plan match {
+      case a: AdaptiveSparkPlanExec => count(a.executedPlan)
+      case s: QueryStageExec => count(s.plan)
+      case e: ShuffleExchangeLike => 1 + e.children.map(count).sum
+      case p => p.children.map(count).sum
+    }
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        n.addAndGet(count(qe.executedPlan)); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      val r = body
+      org.apache.spark.GraftSparkShims.waitListenerBusEmpty(spark.sparkContext)
+      (r, n.get())
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  test("CSR build: the two renamed reads of the vertex index share one exchange") {
+    // edges ⋈ srcRef on src, then ⋈ dstRef on dst: srcRef and dstRef are
+    // one leaf read twice, so their exchanges are one exchange reused
+    import spark.implicits._
+    val pages = spark.createDataset(PagesFixture.generate(4, 12))
+    val (v, e) = GraphBuilder.buildVerified(spark, pages)
+    val (_, n) = exchangesRun(CsrPageRank.build(spark, e.toDF(), v.toDF()))
+    assert(n == BuildExchanges, s"$n shuffle exchanges in build")
   }
 
   test("CSR PageRank on the star5 golden fixture (hub mass, closed form)") {

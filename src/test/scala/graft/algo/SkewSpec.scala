@@ -43,6 +43,26 @@ class SkewSpec extends SparkSpec {
       "concentrated label distribution should trigger the salted path")
   }
 
+  test("LP on a mega-hub holding half of all in-edges matches the plain-Scala oracle") {
+    import spark.implicits._
+    // 1..300 → hub 0, plus a ring over 1..300: the hub's messages are half
+    // of the superstep's, all on one id
+    val edges = (1L to 300L).map(i => (i, 0L)) ++
+      (1L to 300L).map(i => (i, if (i == 300L) 1L else i + 1))
+    val vIds = 0L to 300L
+    val maxIter = 6
+    var want = vIds.map(v => v -> v).toMap
+    var changed = true
+    for (_ <- 1 to maxIter if changed) {
+      val next = Oracles.lpStep(want, edges)
+      changed = next != want
+      want = next
+    }
+    val got = new LabelPropagation(maxIter).run(spark, edges.toDF("src", "dst"), vIds.toDF("id"))
+      .state.as[(Long, Long)].collect().toMap
+    assert(got == want)
+  }
+
   test("PageRank hub salting fires on a mega-hub and agrees within 1e-9") {
     import spark.implicits._
     // hub 0 -> 1..400 plus a background ring, so one src key dominates

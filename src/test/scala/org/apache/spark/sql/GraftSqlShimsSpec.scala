@@ -1,6 +1,6 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, PartitioningCollection}
 import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -56,6 +56,31 @@ class GraftSqlShimsSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted == want)
       // the leaf joins in place: the only exchange is the other side's
       assert(shuffles(joined.queryExecution.executedPlan) == 1)
+    }
+    GraftSqlShims.release(chk)
+  }
+
+  test("checkpoint claims every hash layout of its rows: a key and its alias") {
+    // LP's and CC's initial state has label = id: both columns lay the
+    // rows out, and a join on either runs in place
+    val chk = GraftSqlShims.checkpoint(skewed.repartition(4, col("key"))
+      .select(col("key"), col("key").as("alias"), col("i")))
+    chk.queryExecution.executedPlan.outputPartitioning match {
+      case PartitioningCollection(ps) =>
+        assert(ps.map(_.asInstanceOf[HashPartitioning].references.map(_.name).toSeq).toSet ==
+          Set(Seq("key"), Seq("alias")))
+      case p => fail(s"leaf reports $p")
+    }
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val other = spark.range(0, 400).select(col("id").as("k"), (col("id") * 2).as("v"))
+        .repartition(4, col("k"))
+      val want = keyPairs(skewed).map { case (k, i) => (k, i, k * 2) }.sorted
+      for (c <- Seq("key", "alias")) {
+        val joined = chk.join(other, chk(c) === other("k")).select(c, "i", "v")
+        assert(joined.collect()
+          .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted == want, c)
+        assert(shuffles(joined.queryExecution.executedPlan) == 1, c)
+      }
     }
     GraftSqlShims.release(chk)
   }
