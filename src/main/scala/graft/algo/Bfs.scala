@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.graph.GraphBuilder
+import graft.graph.GraphBuilder.placed
 
 /** BFS frontier expansion — the access-operator family the reference derives
   * GetDiameter from (ParaCOSM/CSM/graph/graph.cpp:181-215: full BFS per
@@ -12,7 +13,7 @@ import graft.graph.GraphBuilder
   *   next = (frontier ⋈ edges).select(dst).distinct  ANTI-JOIN  visited
   *
   * — the template SURVEY.md §2.3-A5 names for all our supersteps. Scale
-  * shape (Superstep's partition-stable layout): the undirected table is
+  * shape (GraphBuilder.placed's layout): the undirected table is
   * checkpointed hash-partitioned by src and `visited` by id, with the same
   * count, so the frontier join, the anti-join against `visited` and the
   * union run in place; the one exchange per level is the `distinct` of the
@@ -29,7 +30,7 @@ object Bfs {
     * over the UNDIRECTED view of `edges`, up to `maxDepth` levels. */
   def depths(spark: SparkSession, edges: DataFrame, sources: DataFrame,
              maxDepth: Int = 50): DataFrame = {
-    val seeds = Superstep.placed(sources.select(col("id"))).distinct()
+    val seeds = placed(sources.select(col("id")), "id").distinct()
       .withColumn("depth", lit(0L))
     levels(spark, edges, seeds, maxDepth).state
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.graph.GraphBuilder
+import graft.graph.GraphBuilder.placed
 import graft.state.StateStore
 
 /** Connected components by iterative min-label join with pointer jumping.
@@ -21,7 +22,7 @@ import graft.state.StateStore
   * ⇒ label = component-min id (exact, as the north rule requires — not
   * approximate).
   *
-  * Scale notes (Superstep's partition-stable layout): the undirected table
+  * Scale notes (GraphBuilder.placed's layout): the undirected table
   * is checkpointed hash-partitioned by src and the state by id, with the
   * same count, and stay put. A superstep exchanges only messages: the
   * state by `label`, as jump edges label(v) → v that join the state in
@@ -77,10 +78,10 @@ final class ConnectedComponents(maxIter: Int = 50,
   private def loop(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
                    store: Option[StateStore], init: Option[DataFrame]): AlgoResult = {
     // undirected view, hash-partitioned by src (GraphBuilder.undirected);
-    // the initial state by id with the same count (Superstep.placed)
+    // the initial state by id with the same count (GraphBuilder.placed)
     val und = GraftSqlShims.checkpoint(GraphBuilder.undirected(edges))
-    val start = GraftSqlShims.checkpoint(init.map(Superstep.placed(_)).getOrElse(
-      Superstep.placed(vertices.select(col("id"))).distinct().withColumn("label", col("id"))))
+    val start = GraftSqlShims.checkpoint(init.map(placed(_, "id")).getOrElse(
+      placed(vertices.select(col("id")), "id").distinct().withColumn("label", col("id"))))
     saltedSupersteps = 0
     // the last hot-label table, released once its superstep materialized
     var hotChk = Option.empty[DataFrame]
@@ -119,7 +120,7 @@ final class ConnectedComponents(maxIter: Int = 50,
           // label(label(v)) as messages along the edges label(v) → v:
           // the state exchanged by label is the only row movement before
           // the send, and both edge kinds share one in-place join
-          val jumps = Superstep.placed(
+          val jumps = placed(
             state.select(col("label"), col("id").as("dst")), "label")
           send(und.select(col("src"), col("dst")).union(jumps))
         } else {

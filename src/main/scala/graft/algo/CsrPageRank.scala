@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.GraftSqlShims.checkpoint
 import org.apache.spark.sql.functions._
 
+import graft.graph.GraphBuilder.placed
+
 /** PageRank over per-partition CSR blocks — the reference's packed
   * adjacency-array layout (ParaCOSM/CSM/graph/graph.h:63-75: parallel sorted
   * primitive vectors per vertex) reborn as a block-partitioned Dataset, per
@@ -97,14 +99,11 @@ object CsrPageRank {
     // (id, pid, idx): dense index within block, ordered by id for determinism
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("pid")).orderBy(col("id"))
-    // the narrow coalesce leaves the leaf no claimed layout: its hash(pid)
-    // serves no join here, and a claim keeps its attribute ids when the
-    // leaf is canonicalized, so the two renamed reads below (srcRef,
-    // dstRef) would each run their own exchange instead of sharing one
-    val vIdx = checkpoint(vDistinct
+    // placed by id: every join below reads it on id (the degree join, and
+    // the edges' src and dst lookups), so all three run in place on its side
+    val vIdx = checkpoint(placed(vDistinct
       .withColumn("pid", pmod(xxhash64(col("id")), lit(p.toLong)).cast("int"))
-      .withColumn("idx", (row_number().over(w) - 1).cast("int"))
-      .coalesce(maxP))
+      .withColumn("idx", (row_number().over(w) - 1).cast("int")), "id"))
     val n = nVerts
 
     val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).cast("int").as("deg"))

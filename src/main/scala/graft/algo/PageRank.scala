@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.GraftSqlShims.{checkpoint, release}
 import org.apache.spark.sql.functions._
 
+import graft.graph.GraphBuilder.placed
 import graft.state.StateStore
 
 /** PageRank as join-aggregate supersteps (the flagship, SURVEY.md §7.1-4).
@@ -110,13 +111,11 @@ final class PageRank(
                    store: Option[StateStore], startIter: Int,
                    startRanks: Option[DataFrame], ownPrepared: Boolean): AlgoResult = {
     val n = g.n
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val (start, dm0) = PageRank.checkpointObserving(startRanks match {
       // seeds/snapshots carry (id, rank); dangling + outDeg come from the
       // prepared vertex state (ids are verts-exact by construction)
       case Some(df) => g.verts.select(col("id"), col("outDeg"), col("dangling"))
-        .join(df.select(col("id"), col("rank")).repartition(parts, col("id"))
-            .hint("shuffle_hash"),
+        .join(placed(df.select(col("id"), col("rank")), "id").hint("shuffle_hash"),
           Seq("id"), "left_outer")
         .select(col("id"), coalesce(col("rank"), lit(1.0 / n)).as("rank"),
           col("dangling"), col("outDeg"))
@@ -184,12 +183,11 @@ object PageRank {
       else edges.select(col("src"), col("dst"), lit(0L).as("salt"))
     val adj = checkpoint(
       if (hasHot) adjBase.repartition(parts, col("src"), col("salt"))
-      else adjBase.repartition(parts, col("src")))
-    val (verts, n) = checkpointObserving(vertices.select(col("id")).distinct()
+      else placed(adjBase, "src"))
+    val (verts, n) = checkpointObserving(placed(vertices.select(col("id")).distinct()
       .join(outDeg.hint("shuffle_hash"), Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("outDeg"), lit(0L)).as("outDeg"),
-        col("outDeg").isNull.as("dangling"))
-      .repartition(parts, col("id")),
+        col("outDeg").isNull.as("dangling")), "id"),
       count(lit(1)).cast("double"))
     require(n > 0, "empty vertex set")
     val g = Prepared(adj, verts, n, if (hasHot) Some(checkpoint(hot)) else None, saltK)
@@ -215,7 +213,6 @@ object PageRank {
                      newVertexIds: Seq[Long] = Seq.empty,
                      deletedVertexIds: Seq[Long] = Seq.empty): Prepared = {
     import spark.implicits._
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val dd = checkpoint(addedEdges.select(col("src").as("id"), lit(1L).as("d"))
       .unionByName(deletedEdges.select(col("src").as("id"), lit(-1L).as("d")))
       .groupBy(col("id")).agg(sum(col("d")).as("dd")))
@@ -228,9 +225,8 @@ object PageRank {
     val fresh = newVertexIds.toDF("id")
       .join(dd, Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("dd"), lit(0L)).as("outDeg"))
-    val (verts, n) = checkpointObserving(updated.unionByName(fresh)
-      .select(col("id"), col("outDeg"), (col("outDeg") === 0L).as("dangling"))
-      .repartition(parts, col("id")),
+    val (verts, n) = checkpointObserving(placed(updated.unionByName(fresh)
+      .select(col("id"), col("outDeg"), (col("outDeg") === 0L).as("dangling")), "id"),
       count(lit(1)).cast("double"))
     release(dd)
     val deltas = addedEdges.select(col("src"), col("dst"), lit(1L).as("w"))

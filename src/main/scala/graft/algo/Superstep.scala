@@ -1,7 +1,6 @@
 package graft.algo
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, Row, SparkSession}
-import org.apache.spark.sql.functions.col
 
 import graft.state.StateStore
 
@@ -76,14 +75,6 @@ object Superstep {
     }
     AlgoResult(state, it, metrics.toSeq)
   }
-
-  /** `df` exchanged by `key` into the session's shuffle-partition count —
-    * the layout of a partition-stable loop's tables: the state by id, edge
-    * tables by src (GraphBuilder.undirected's layout), so they join in
-    * place, and a checkpoint of the state keeps hash(id). An explicit
-    * count: AQE does not coalesce the exchange. */
-  def placed(df: DataFrame, key: String = "id"): DataFrame =
-    df.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col(key))
 
   private def field[T](row: Row, name: String, absent: T): T = {
     val i = row.schema.fieldNames.indexOf(name)

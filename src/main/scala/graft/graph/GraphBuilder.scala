@@ -139,18 +139,25 @@ object GraphBuilder {
     * (edge labels, delta flags); of duplicate (src, dst) rows one is kept.
     * Callers own materialization (persist or GraftSqlShims.checkpoint). */
   def undirected(edges: DataFrame, carry: String*): DataFrame = {
-    // one exchange (opt round 6): repartition by src FIRST — hash(src)
+    // one exchange (opt round 6): placed by src FIRST — hash(src)
     // satisfies the (src,dst) dedup's clustering, so dropDuplicates runs
     // in place, and the result comes out pre-positioned for every
     // src-keyed consumer (superstep joins, degree groupBy, label joins) that
     // reads it through `persist` or GraftSqlShims.checkpoint (both report
     // the partitioning)
-    val parts = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val rest = carry.map(col)
-    edges.select(col("src") +: col("dst") +: rest: _*)
+    placed(edges.select(col("src") +: col("dst") +: rest: _*)
       .union(edges.select(col("dst").as("src") +: col("src").as("dst") +: rest: _*))
-      .where(col("src") =!= col("dst"))
-      .repartition(parts, col("src"))
+      .where(col("src") =!= col("dst")), "src")
       .dropDuplicates("src", "dst")
   }
+
+  /** `df` exchanged by `key` into the session's shuffle-partition count —
+    * the one layout of the partition-stable superstep loops' tables: edge
+    * tables by src (`undirected`, PageRank's adjacency), vertex state by id.
+    * Two tables placed this way join on those keys in place, and a
+    * GraftSqlShims.checkpoint of either keeps the layout. An explicit
+    * count: AQE does not coalesce the exchange. */
+  def placed(df: DataFrame, key: String): DataFrame =
+    df.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col(key))
 }

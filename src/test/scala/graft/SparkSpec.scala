@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -22,6 +26,32 @@ object SparkTestSession {
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestSession.spark
+
+  /** `body`'s result and the SQL executions it ran to success, in order. */
+  protected def sqlExecutions[T](body: => T): (T, Seq[QueryExecution]) = {
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val l = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        qes.add(qe); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      val r = body
+      org.apache.spark.GraftSparkShims.waitListenerBusEmpty(spark.sparkContext)
+      (r, qes.toArray(Array.empty[QueryExecution]).toSeq)
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  /** The shuffle exchanges that ran for `plan`, query stages included; a
+    * reused exchange is not one. */
+  protected def shuffles(plan: SparkPlan): Seq[ShuffleExchangeLike] = plan match {
+    case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+    case s: QueryStageExec => shuffles(s.plan)
+    case e: ShuffleExchangeLike => e +: e.children.flatMap(shuffles)
+    case p => p.children.flatMap(shuffles)
+  }
 }
 
 /** Plain-Scala oracles (FIXTURES.md §6, SURVEY.md §5): independent

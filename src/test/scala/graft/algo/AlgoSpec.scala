@@ -2,12 +2,10 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.{Seconds, Span}
@@ -236,26 +234,8 @@ class AlgoSpec extends SparkSpec with TimeLimits {
   /** Final adaptive plans of the superstep checkpoints that `body` runs, in
     * superstep order. */
   private def superstepPlans[T](body: => T): (T, Seq[SparkPlan]) = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
-    val l = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (qe.observedMetrics.contains("superstep")) { plans.add(qe.executedPlan); () }
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(l)
-    try {
-      val r = body
-      org.apache.spark.GraftSparkShims.waitListenerBusEmpty(spark.sparkContext)
-      (r, plans.toArray(Array.empty[SparkPlan]).toSeq)
-    } finally spark.listenerManager.unregister(l)
-  }
-
-  /** The shuffle exchanges that ran for `plan`, query stages included. */
-  private def shuffles(plan: SparkPlan): Seq[ShuffleExchangeLike] = plan match {
-    case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
-    case s: QueryStageExec => shuffles(s.plan)
-    case e: ShuffleExchangeLike => e +: e.children.flatMap(shuffles)
-    case p => p.children.flatMap(shuffles)
+    val (r, qes) = sqlExecutions(body)
+    (r, qes.filter(_.observedMetrics.contains("superstep")).map(_.executedPlan))
   }
 
   test("checkpoints keep their hash partitioning: one exchange per PageRank superstep") {

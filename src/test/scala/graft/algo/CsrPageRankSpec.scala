@@ -1,10 +1,6 @@
 package graft.algo
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.{Oracles, SparkSpec}
 import graft.graph.GraphBuilder
@@ -69,37 +65,16 @@ class CsrPageRankSpec extends SparkSpec {
     assert(math.abs(mass - 1.0) < 1e-9)
   }
 
-  /** Shuffle exchanges run by the plans `body` executes; a reused
-    * exchange is not one. */
-  private def exchangesRun[T](body: => T): (T, Int) = {
-    def count(plan: SparkPlan): Int = plan match {
-      case a: AdaptiveSparkPlanExec => count(a.executedPlan)
-      case s: QueryStageExec => count(s.plan)
-      case e: ShuffleExchangeLike => 1 + e.children.map(count).sum
-      case p => p.children.map(count).sum
-    }
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-        n.addAndGet(count(qe.executedPlan)); ()
-      }
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(l)
-    try {
-      val r = body
-      org.apache.spark.GraftSparkShims.waitListenerBusEmpty(spark.sparkContext)
-      (r, n.get())
-    } finally spark.listenerManager.unregister(l)
-  }
-
-  test("CSR build: the two renamed reads of the vertex index share one exchange") {
-    // edges ⋈ srcRef on src, then ⋈ dstRef on dst: srcRef and dstRef are
-    // one leaf read twice, so their exchanges are one exchange reused
+  test("CSR build: the vertex index is exchanged once, and its joins read it in place") {
+    // the index is placed by id: the degree join (on id) and the edges'
+    // lookups (srcRef on src, dstRef on dst: the leaf read twice under
+    // renamed attributes) exchange only their other side. One exchange
+    // more, of the index or of one of its renamed reads, fails the pin
     import spark.implicits._
     val pages = spark.createDataset(PagesFixture.generate(4, 12))
     val (v, e) = GraphBuilder.buildVerified(spark, pages)
-    val (_, n) = exchangesRun(CsrPageRank.build(spark, e.toDF(), v.toDF()))
+    val (_, qes) = sqlExecutions(CsrPageRank.build(spark, e.toDF(), v.toDF()))
+    val n = qes.map(qe => shuffles(qe.executedPlan).size).sum
     assert(n == BuildExchanges, s"$n shuffle exchanges in build")
   }
 

@@ -1,9 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, PartitioningCollection}
-import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -22,13 +20,6 @@ class GraftSqlShimsSpec extends SparkSpec {
 
   private def keyPairs(df: DataFrame): Seq[(Long, Int)] =
     df.select("key", "i").collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-
-  private def shuffles(plan: SparkPlan): Int = plan match {
-    case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
-    case s: QueryStageExec => shuffles(s.plan)
-    case e: ShuffleExchangeLike => 1 + e.children.map(shuffles).sum
-    case p => p.children.map(shuffles).sum
-  }
 
   private def withConf[T](kv: (String, String)*)(body: => T): T = {
     val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
@@ -55,7 +46,7 @@ class GraftSqlShimsSpec extends SparkSpec {
       assert(joined.collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted == want)
       // the leaf joins in place: the only exchange is the other side's
-      assert(shuffles(joined.queryExecution.executedPlan) == 1)
+      assert(shuffles(joined.queryExecution.executedPlan).size == 1)
     }
     GraftSqlShims.release(chk)
   }
@@ -79,7 +70,7 @@ class GraftSqlShimsSpec extends SparkSpec {
         val joined = chk.join(other, chk(c) === other("k")).select(c, "i", "v")
         assert(joined.collect()
           .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted == want, c)
-        assert(shuffles(joined.queryExecution.executedPlan) == 1, c)
+        assert(shuffles(joined.queryExecution.executedPlan).size == 1, c)
       }
     }
     GraftSqlShims.release(chk)
